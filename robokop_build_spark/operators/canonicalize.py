@@ -206,7 +206,7 @@ def connected_components(
 
 def canonical_map(
     normalization: DataFrame,
-    strategy: str = "auto",
+    strategy: str = "local",
     manager=None,
     cc_stage: str = "rep_map_cc",
     cc_commit_every: int = 0,
@@ -221,7 +221,11 @@ def canonical_map(
     createDataFrame — the normalization map is a dimension table, and the
     distributed path costs ~6 scheduler round-trips per CC iteration that
     dwarf the compute at this size. 'distributed' chains the large-star/
-    small-star CC with joins (the 10^12-alias path).
+    small-star CC with joins (the 10^12-alias path). The pipeline picks
+    the strategy from the normalization table's parquet footer row count.
+
+    Both strategies write the component's (min) node_type and name on every
+    row of the component, so rep-level metadata can ride on any alias join.
 
     manager/cc_stage/cc_commit_every: durable loop checkpointing for the
     distributed CC (operators/iterate.LoopCheckpointer) — a preempted
@@ -230,8 +234,8 @@ def canonical_map(
     (its whole cost is one collect). Loop params (op + input fingerprint)
     are validated on resume, so stale state from a different normalization
     map raises instead of silently resuming."""
-    if strategy == "auto":
-        strategy = "local" if normalization.count() <= 2_000_000 else "distributed"
+    if strategy not in ("local", "distributed"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     if strategy == "local":
         rows = normalization.select("alias", "canonical", "node_type", "name").collect()
         rep_map = _local_union_find([(r["alias"], r["canonical"]) for r in rows])
@@ -320,8 +324,12 @@ def resolve_aliases(
     strategy: str = "auto",
     nsalt: int = 8,
     salt_source: Column | None = None,
+    carry: dict[str, str] | None = None,
 ) -> DataFrame:
     """Map fact[key] (a CURIE) to its canonical representative.
+
+    carry: extra rep_map columns to attach in the same join, as
+    {rep_map column: output name}; null where the alias is unknown.
 
     strategy='auto' (default): measure the rep map's Catalyst size estimate
     at plan time and broadcast while it fits the session's
@@ -343,7 +351,11 @@ def resolve_aliases(
             if budget > 0 and _plan_size_bytes(rep_map) <= budget
             else "salted"
         )
-    mapped = rep_map.select(F.col("curie").alias("__alias"), F.col("rep").alias(out))
+    mapped = rep_map.select(
+        F.col("curie").alias("__alias"),
+        F.col("rep").alias(out),
+        *(F.col(c).alias(a) for c, a in (carry or {}).items()),
+    )
     if strategy == "broadcast":
         joined = fact.join(F.broadcast(mapped), fact[key] == F.col("__alias"), "left")
     elif strategy == "salted":

@@ -238,41 +238,16 @@ def expand_edge_starts(
     return out
 
 
-def aggregate_program_triples(
+def _start_docs(
     doc_entities: DataFrame,
-    pm_rep: DataFrame,
     programs: list[list[str]],
-    end_reps: list[str] | None = None,
-    require_complete: bool = False,
-    publication_cap: int = 10_000,
-    ctime: int = 0,
-    start_reps: list[str] | None = None,
+    start_reps: list[str] | None,
 ) -> DataFrame:
-    """Factored expansion+aggregation — produces EXACTLY the rows of
-    aggregate_triples(expand_programs(...), origin_map(...)) (the e2e golden
-    gates prove equality) with the doc×edge event stream eliminated:
-
-    1. per-start doc sets: ONE bounded top-k window over the start-typed
-       (rep, doc) rows — the only corpus-scale aggregation in the build;
-    2. per-start origin sets: entity-bounded groupBy;
-    3. (edge, start) table: dimension-level frontier joins (predicate-map-
-       bounded, corpus-independent);
-    4. per-edge merge: explode the per-start capped arrays and re-cap —
-       valid because the k smallest of a union are contained in the union
-       of each member's k smallest; volume ≤ edges × in-degree × cap, a
-       constant w.r.t. corpus size.
-
-    At 10^12 docs only step 1 scales with the corpus (a narrow distinct +
-    window); the round-1/round-2 event-stream design shuffled O(docs ×
-    mentions × edges) rows instead (26.8M at SF=1, memory-bound at ~100µs
-    of JVM time per row — measured via event-log task metrics).
-    """
-    from .topk import capped_sorted_set
-
+    """Start-typed (node_type, rep, doc_id, orig) rows: the observed path
+    starts of every program."""
     if not programs:
         raise ValueError("no programs to execute (path unreachable in metagraph?)")
     start_types = sorted({prog[0] for prog in programs})
-
     sd = (
         doc_entities.filter(F.col("node_type").isin(start_types))
         .select("node_type", "rep", "doc_id", "orig")
@@ -284,28 +259,99 @@ def aggregate_program_triples(
         if not start_reps:
             raise ValueError("start_reps must be non-empty when given")
         sd = sd.filter(F.col("rep").isin(sorted(set(start_reps))))
-    start_pubs = capped_sorted_set(
+    return sd
+
+
+def program_edge_starts(
+    doc_entities: DataFrame,
+    pm_rep: DataFrame,
+    programs: list[list[str]],
+    end_reps: list[str] | None = None,
+    require_complete: bool = False,
+    start_reps: list[str] | None = None,
+) -> DataFrame:
+    """(subj, pred, obj, edge_source, orig_pred_id, orig_pred_label, start):
+    one row per (hop edge, start rep) over every program, from the start
+    entities observed in doc_entities (expand_edge_starts per program).
+
+    Dimension-sized (predicate-map-bounded): materialized once, because it
+    feeds the publications and inputs merges of aggregate_program_triples,
+    the merge gate's in-degree probe, and the graph node set that the
+    supporters and the node table start from. Without materialization each
+    consumer would re-run the frontier-join DAG."""
+    start_type_reps = (
+        _start_docs(doc_entities, programs, start_reps)
+        .select("node_type", "rep")
+        .distinct()
+    )
+    edge_starts = None
+    for prog in programs:
+        sr = start_type_reps.filter(F.col("node_type") == prog[0]).select("rep")
+        es = expand_edge_starts(sr, pm_rep, prog, end_reps, require_complete)
+        edge_starts = es if edge_starts is None else edge_starts.unionByName(es)
+    return edge_starts.distinct().localCheckpoint(eager=True)
+
+
+def start_publications(
+    doc_entities: DataFrame,
+    programs: list[list[str]],
+    publication_cap: int = 10_000,
+    start_reps: list[str] | None = None,
+) -> DataFrame:
+    """(rep, pubs): the capped sorted publication set of every observed
+    start rep — exactly one row per rep (one capped_sorted_set group per
+    rep). ONE bounded top-k window over the start-typed (rep, doc) rows:
+    the only corpus-scale aggregation in the build."""
+    from .topk import capped_sorted_set
+
+    sd = _start_docs(doc_entities, programs, start_reps)
+    return capped_sorted_set(
         sd.select("rep", F.concat(F.lit("DOC:"), F.col("doc_id")).alias("pub")),
         ["rep"],
         "pub",
         publication_cap,
         out="pubs",
     )
+
+
+def aggregate_program_triples(
+    doc_entities: DataFrame,
+    edge_starts: DataFrame,
+    programs: list[list[str]],
+    publication_cap: int = 10_000,
+    ctime: int = 0,
+    start_reps: list[str] | None = None,
+) -> DataFrame:
+    """Factored expansion+aggregation — produces EXACTLY the rows of
+    aggregate_triples(expand_programs(...), origin_map(...)) (the e2e golden
+    gates prove equality) with the doc×edge event stream eliminated:
+
+    1. per-start doc sets (start_publications);
+    2. per-start origin sets: entity-bounded groupBy;
+    3. (edge, start) table: edge_starts from program_edge_starts
+       (dimension-level frontier joins, predicate-map-bounded, corpus-
+       independent), with the same programs and start_reps;
+    4. per-edge merge: explode the per-start capped arrays and re-cap —
+       valid because the k smallest of a union are contained in the union
+       of each member's k smallest; volume ≤ edges × in-degree × cap, a
+       constant w.r.t. corpus size.
+
+    Every edge of edge_starts is in the output: both start_pubs and
+    start_origins hold a row for every start rep, so the inner joins below
+    drop no edge key. The graph node set is therefore subj ∪ obj of
+    edge_starts.
+
+    At 10^12 docs only step 1 scales with the corpus (a narrow distinct +
+    window); the round-1/round-2 event-stream design shuffled O(docs ×
+    mentions × edges) rows instead (26.8M at SF=1, memory-bound at ~100µs
+    of JVM time per row — measured via event-log task metrics).
+    """
+    sd = _start_docs(doc_entities, programs, start_reps)
+    start_pubs = start_publications(doc_entities, programs, publication_cap, start_reps)
     start_origins = sd.groupBy("rep").agg(
         F.array_sort(F.collect_set("orig")).alias("origs")
     )
-    start_type_reps = sd.select("node_type", "rep").distinct()
-
-    edge_starts = None
-    for prog in programs:
-        sr = start_type_reps.filter(F.col("node_type") == prog[0]).select("rep")
-        es = expand_edge_starts(sr, pm_rep, prog, end_reps, require_complete)
-        edge_starts = es if edge_starts is None else edge_starts.unionByName(es)
     key = ["subj", "pred", "obj", "edge_source"]
-    # dimension-sized (predicate-map-bounded): materialize once — it feeds
-    # THREE consumers (pubs join, inputs join, the in-degree probe below);
-    # without this each broadcast re-runs the frontier-join DAG
-    edge_starts = edge_starts.distinct().localCheckpoint(eager=True)
 
     # per-edge publications: merge the member start arrays and re-cap —
     # array-at-a-time (flatten/dedup/sort/slice on whole arrays), never an
@@ -320,6 +366,10 @@ def aggregate_program_triples(
     # single member array. Both forms compute sorted(set(union))[:cap] —
     # the k smallest of a union are contained in the union of each
     # member's k smallest — so the choice never changes results.
+    # The gate measures in-degree on edge_starts while the buffer grows
+    # with the rows of ep: the two agree because start_pubs has exactly one
+    # row per rep (start_publications), so ep holds one row per
+    # (edge, start) — tests/test_pipeline_e2e.py asserts this invariant.
     nsalt = 16
     max_indeg = (
         edge_starts.groupBy(*key).count().agg(F.max("count")).first()[0] or 0

@@ -57,10 +57,19 @@ def validate_triples(triples: DataFrame, eager: bool = False) -> DataFrame:
     return out
 
 
+def graph_nodes(edges: DataFrame) -> DataFrame:
+    """(id): every distinct node of an edge table (subj ∪ obj)."""
+    return (
+        edges.select(F.col("subj").alias("id"))
+        .union(edges.select(F.col("obj").alias("id")))
+        .distinct()
+    )
+
+
 def build_nodes(
-    triples: DataFrame, rep_map: DataFrame, mesh_labels: DataFrame | None = None
+    ids: DataFrame, rep_map: DataFrame, mesh_labels: DataFrame | None = None
 ) -> DataFrame:
-    """Node table for every id appearing in triples, with sorted
+    """Node table for every graph node id in ids(id), with sorted
     equivalent_identifiers (builder/builder.py:81-82) = all member CURIEs of
     the canonical component, plus the KNode-level extras the reference's
     prepare_node_for_output consumes (builder/builder.py:427-430):
@@ -74,11 +83,6 @@ def build_nodes(
     - properties: open dict; mondo_identifiers (comma-joined MONDO members)
       for disease/genetic_condition components, mirroring builder.py:428-430.
     """
-    ids = (
-        triples.select(F.col("subj").alias("id"))
-        .union(triples.select(F.col("obj").alias("id")))
-        .distinct()
-    )
     mesh_members = rep_map.filter(F.col("curie").startswith("MESH:")).select(
         "rep", F.col("curie").alias("mesh_curie")
     )

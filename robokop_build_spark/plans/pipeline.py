@@ -3,55 +3,138 @@ materialize, with per-stage checkpoints, lineage metrics, and the flagship
 DGX query (disease→gene→genetic_condition, the reference's `-q 1` path,
 builder/builder.py:589-591).
 
-Lifecycle mapping (SURVEY.md §3 rebuild lifecycle): every stage is one
-DataFrame job; the only driver-side loops are plan construction and the
-connected-components fixpoint.
+Lifecycle mapping (SURVEY.md §3 rebuild lifecycle). The reference runs
+execute → enhance → support → export in strict sequence
+(builder/builder.py:473-482); here each stage starts on its own thread as
+soon as the stages it reads have finished ("←" = reads):
+
+    mentions     ← documents, lexicon, entity_embeddings   (committed)
+    rep_map      ← normalization                           (committed)
+    query        ← rep_map      compiled programs + canonicalized seeds
+    pm_rep       ← rep_map      predicate map in rep space (materialized)
+    doc_entities ← mentions, rep_map
+    edge_starts  ← doc_entities, pm_rep, query (materialized)
+    triples_base ← edge_starts, doc_entities   publications + inputs merge
+    support      ← edge_starts, rep_map        supporter edges
+    triples      ← triples_base, support       (committed, by pred)
+    nodes        ← edge_starts, rep_map        (committed, by node_type)
+    metrics      ← mentions, doc_entities, triples, nodes
+
+Overlapping: mentions with rep_map, query and pm_rep; triples_base,
+support and nodes (all three start from the graph node set, subj ∪ obj of
+edge_starts, which is exactly the node set of the triples); the triples
+and nodes commits. Every commit stays atomic on its own, so a resume after
+a failure in one of two concurrent commits recomputes only the missing
+stage. Within a stage the only driver-side loops are plan construction and
+the connected-components fixpoint.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonical_map, maybe_broadcast, resolve_aliases
+from ..operators.canonicalize import canonical_map, resolve_aliases
 from ..operators.expand import (
     aggregate_program_triples,
     canonicalize_predicate_map,
+    program_edge_starts,
 )
 from ..operators.extract import detect_mentions, explode_spans
 from ..operators.materialize import (
     build_nodes,
     enhance_nodes,
+    graph_nodes,
     stage_metrics,
     validate_triples,
 )
 from ..sources.checkpoint import CheckpointManager
-from ..sources.readers import read_fixtures
+from ..sources.readers import fixture_rows, read_fixtures
 from .query import enumerate_programs, tokenize_path
 
 DGX_PATH = ["disease", "gene", "genetic_condition"]
 
+# name prefix of the pipeline's stage threads
+STAGE_THREAD_PREFIX = "kg-stage-"
 
-def _parquet_rows_hint(fixture_dir: str) -> int | None:
-    """Corpus size from parquet footers (metadata-only, no Spark job) —
-    drives the intermediates=auto materialization choice."""
-    import glob as _glob
 
-    try:
-        import pyarrow.parquet as pq
+class _Stages:
+    """Starts each stage on its own thread once its input stages have
+    finished. The threads are pyspark InheritableThreads, so every Spark
+    job a stage runs carries the caller's local properties (job group,
+    scheduler pool)."""
 
-        path = os.path.join(fixture_dir, "documents.parquet")
-        files = (
-            sorted(_glob.glob(os.path.join(path, "*.parquet")))
-            if os.path.isdir(path)
-            else [path]
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._started: list[tuple[InheritableThread, Future]] = []
+
+    def start(self, name: str, fn, *inputs: Future) -> Future:
+        """fn(*input results) on a new thread; a failed input fails it."""
+        out: Future = Future()
+
+        def target() -> None:
+            for f in inputs:
+                if f.exception() is not None:  # blocks until f is done
+                    out.set_exception(f.exception())
+                    return
+            try:
+                out.set_result(fn(*[f.result() for f in inputs]))
+            except BaseException as e:  # noqa: BLE001 — raised by wait()
+                out.set_exception(e)
+
+        th = InheritableThread(
+            target, session=self.spark, name=STAGE_THREAD_PREFIX + name, daemon=True
         )
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
+        th.start()
+        self._started.append((th, out))
+        return out
+
+    def wait(self) -> None:
+        """Joins every stage thread, then raises the first failure in start
+        order (an upstream failure precedes the downstream ones it caused)."""
+        for th, _ in self._started:
+            th.join()
+        for _, out in self._started:
+            out.result()
+
+
+@dataclass
+class _Query:
+    programs: list[list[str]]
+    key: str  # PipelineConfig.query_key suffix of query-dependent stages
+    start_reps: list[str] | None
+    end_reps: list[str] | None
+
+
+def link_doc_entities(
+    mentions: DataFrame, rep_map: DataFrame, strategy: str = "auto", nsalt: int = 8
+) -> DataFrame:
+    """(doc_id, rep, node_type, orig): every mention's canonical rep, typed
+    by its component's node_type (the component's metadata wins, as in
+    reference synonymization), or by the mention's own type for an alias
+    outside the map. One alias join carries both: canonical_map writes the
+    component's node_type on every row of the component."""
+    resolved = resolve_aliases(
+        mentions,
+        rep_map,
+        "curie",
+        out="rep",
+        strategy=strategy,
+        nsalt=nsalt,
+        salt_source=F.xxhash64("doc_id"),
+        carry={"node_type": "rep_type"},
+    )
+    return resolved.select(
+        "doc_id",
+        "rep",
+        F.coalesce("rep_type", "node_type").alias("node_type"),
+        F.col("curie").alias("orig"),
+    ).distinct()
 
 
 @dataclass
@@ -165,243 +248,296 @@ class KGPipeline:
         self.cfg = cfg
         self.ckpt = CheckpointManager(spark, cfg.workdir)
 
-    # -- stages -----------------------------------------------------------
     def run(self) -> dict[str, DataFrame]:
+        """Runs the stage graph of the module docstring. A failure in any
+        stage is raised from here, after every stage thread has ended."""
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         t = read_fixtures(spark, cfg.fixture_dir)
-
-        docs = t["documents"]
-        if cfg.doc_partitions:
-            # bound shuffle width / even out input splits (north_rule:
-            # explicit repartition by doc_id hash)
-            docs = docs.repartition(cfg.doc_partitions, "doc_id")
-        else:
-            # under-split input (few files / giant row groups) would pin the
-            # most expensive stage (mention detection) to a handful of
-            # tasks; one doc_id-hash shuffle buys full-width parallelism.
-            # At cluster scale the input is thousands of files and this
-            # branch never triggers.
-            par = spark.sparkContext.defaultParallelism
-            if docs.rdd.getNumPartitions() < par:
-                docs = docs.repartition(par * 2, "doc_id")
-
-        mentions = ckpt.run_stage(
-            "mentions",
-            lambda: detect_mentions(
-                explode_spans(docs), t["lexicon"], t["entity_embeddings"]
-            ),
-        )
-
+        # scale gates from parquet footer row counts (metadata only, no job)
+        inter = os.environ.get("SPARK_GRAFT_INTERMEDIATES", cfg.intermediates)
+        if inter == "auto":
+            docs_n = fixture_rows(cfg.fixture_dir, "documents")
+            inter = "commit" if docs_n >= 2_000_000 else "local"
+        cc = cfg.cc_strategy
+        if cc == "auto":
+            aliases_n = fixture_rows(cfg.fixture_dir, "normalization")
+            cc = "local" if aliases_n <= 2_000_000 else "distributed"
         cc_every = 5 if cfg.cc_commit_every == "auto" else int(cfg.cc_commit_every)
+        sups = cfg.supporters if cfg.with_support else []
         # surfaced for tests/operators-report: resumed_from/iterations of
         # the CC loop when the distributed path ran durably this run
         self.cc_stats: dict = {}
-        rep_map = ckpt.run_stage(
-            "rep_map",
-            lambda: canonical_map(
-                t["normalization"],
-                cfg.cc_strategy,
-                manager=ckpt,
-                cc_stage="rep_map_cc",
-                cc_commit_every=cc_every,
-                stats=self.cc_stats,
-            ),
-        )
 
-        def _doc_entities() -> DataFrame:
-            resolved = resolve_aliases(
-                mentions,
-                rep_map,
-                "curie",
-                out="rep",
-                strategy=cfg.norm_join_strategy,
-                nsalt=cfg.nsalt,
-                salt_source=F.xxhash64("doc_id"),
-            )
-            # node_type of the canonical component (not the raw candidate):
-            # the component's metadata wins, as in reference synonymization
-            meta = rep_map.select("rep", F.col("node_type").alias("rep_type")).distinct()
-            return (
-                # rep-level metadata is entity-scale at web size: broadcast
-                # only while it fits the session budget (same policy as the
-                # alias-resolution join above it)
-                resolved.join(maybe_broadcast(meta), "rep", "left")
-                .select(
-                    "doc_id",
-                    "rep",
-                    F.coalesce("rep_type", "node_type").alias("node_type"),
-                    F.col("curie").alias("orig"),
+        def materialize(stage: str, compute) -> DataFrame:
+            # doc_entities / triples_base are NOT commit points below ~2M
+            # docs: each is re-derivable from the committed frontier, so a parquet write+read-back cycle only taxed the
+            # fixed floor. localCheckpoint (eager) materializes it once and
+            # truncates lineage to a LogicalRDD — every consumer then
+            # carries a leaf-sized plan instead of re-embedding the join
+            # subtree (plain persist was measured SLOWER fresh-JVM: the
+            # re-analyzed subtrees grow optimization + codegen time past
+            # what the skipped commits saved). Durability is unaffected: on
+            # executor loss past the block's lifetime the job restarts from
+            # the committed frontier. Above ~2M docs they commit (see
+            # PipelineConfig.intermediates).
+            if inter == "commit":
+                return ckpt.run_stage(stage, compute)
+            return compute().localCheckpoint(eager=True)
+
+        def mentions() -> DataFrame:
+            def compute() -> DataFrame:
+                docs = t["documents"]
+                if cfg.doc_partitions:
+                    # bound shuffle width / even out input splits
+                    # (north_rule: explicit repartition by doc_id hash)
+                    docs = docs.repartition(cfg.doc_partitions, "doc_id")
+                else:
+                    # under-split input (few files / giant row groups) would
+                    # pin the most expensive stage (mention detection) to a
+                    # handful of tasks; one doc_id-hash shuffle buys
+                    # full-width parallelism. At cluster scale the input is
+                    # thousands of files and this branch never triggers.
+                    par = spark.sparkContext.defaultParallelism
+                    if docs.rdd.getNumPartitions() < par:
+                        docs = docs.repartition(par * 2, "doc_id")
+                return detect_mentions(
+                    explode_spans(docs), t["lexicon"], t["entity_embeddings"]
                 )
-                .distinct()
+
+            return ckpt.run_stage("mentions", compute)
+
+        def rep_map() -> DataFrame:
+            return ckpt.run_stage(
+                "rep_map",
+                lambda: canonical_map(
+                    t["normalization"],
+                    cc,
+                    manager=ckpt,
+                    cc_stage="rep_map_cc",
+                    cc_commit_every=cc_every,
+                    stats=self.cc_stats,
+                ),
             )
 
-        # NOT a commit point: doc_entities is re-derivable in one narrow
-        # join from the two committed frontier stages above it, so paying a
-        # full parquet write+read-back cycle here only taxed the fixed
-        # floor. localCheckpoint (eager) materializes it once and truncates
-        # lineage to a LogicalRDD — every downstream consumer (one scan per
-        # program + the metrics rollup) then carries a leaf-sized plan
-        # instead of re-embedding the salted-join subtree (plain persist was
-        # measured SLOWER fresh-JVM: the re-analyzed subtrees grow
-        # optimization + codegen time past what the skipped commits saved).
-        # Durability is unaffected: on executor loss past the block's
-        # lifetime the job restarts from the committed frontier.
-        inter = os.environ.get("SPARK_GRAFT_INTERMEDIATES", cfg.intermediates)
-        if inter == "auto":
-            inter = (
-                "commit"
-                if (_parquet_rows_hint(cfg.fixture_dir) or 0) >= 2_000_000
-                else "local"
+        def query(rep_map: DataFrame) -> _Query:
+            # compile the query into concrete programs (driver-side, over
+            # the type-level metagraph = distinct (src,dst) pairs — dimension)
+            if cfg.path:
+                metagraph = {
+                    (r["src_type"], r["dst_type"])
+                    for r in t["predicate_map"]
+                    .select("src_type", "dst_type")
+                    .distinct()
+                    .collect()
+                }
+                programs = enumerate_programs(tokenize_path(cfg.path), metagraph)
+            else:
+                programs = [cfg.path_types]
+
+            def canonize(values: list[str] | None) -> list[str] | None:
+                # canonicalize seed/terminal CURIEs (tiny driver-side lookup)
+                if not values:
+                    return None
+                hits = {
+                    r["curie"]: r["rep"]
+                    for r in rep_map.filter(F.col("curie").isin(values))
+                    .select("curie", "rep")
+                    .collect()
+                }
+                return sorted({hits.get(v, v) for v in values})
+
+            return _Query(
+                programs,
+                cfg.query_key(programs),
+                canonize(cfg.start_values),
+                canonize(cfg.end_values),
             )
-        if inter == "commit":
-            doc_entities = ckpt.run_stage("doc_entities", _doc_entities)
-        else:
-            doc_entities = _doc_entities().localCheckpoint(eager=True)
 
-        # --- compile the query into concrete programs (driver-side, over
-        # the type-level metagraph = distinct (src,dst) pairs — dimension) --
-        if cfg.path:
-            metagraph = {
-                (r["src_type"], r["dst_type"])
-                for r in t["predicate_map"].select("src_type", "dst_type").distinct().collect()
-            }
-            programs = enumerate_programs(tokenize_path(cfg.path), metagraph)
-        else:
-            programs = [cfg.path_types]
-        qk = cfg.query_key(programs)
+        def pm_rep(rep_map: DataFrame) -> DataFrame:
+            # dimension-sized; read by every program's hop joins
+            return canonicalize_predicate_map(
+                t["predicate_map"], rep_map
+            ).localCheckpoint(eager=True)
 
-        def _canonize(values: list[str]) -> list[str]:
-            # canonicalize seed/terminal CURIEs (tiny driver-side lookup)
-            hits = {
-                r["curie"]: r["rep"]
-                for r in rep_map.filter(F.col("curie").isin(values))
-                .select("curie", "rep")
-                .collect()
-            }
-            return sorted({hits.get(v, v) for v in values})
+        def doc_entities(mentions: DataFrame, rep_map: DataFrame) -> DataFrame:
+            return materialize(
+                "doc_entities",
+                lambda: link_doc_entities(
+                    mentions, rep_map, cfg.norm_join_strategy, cfg.nsalt
+                ),
+            )
 
-        start_reps = _canonize(cfg.start_values) if cfg.start_values else None
-        end_reps = _canonize(cfg.end_values) if cfg.end_values else None
+        # on resume, the uncommitted stages that only feed committed ones
+        # are skipped (None)
+        def done(q: _Query, *stages: str) -> bool:
+            return all(ckpt.is_done(s + q.key) for s in stages)
 
-        def _triples_base() -> DataFrame:
-            pm_rep = canonicalize_predicate_map(t["predicate_map"], rep_map)
-            return aggregate_program_triples(
+        def edge_starts(doc_entities: DataFrame, pm_rep: DataFrame, q: _Query):
+            if done(q, "triples", "nodes"):
+                return None
+            return program_edge_starts(
                 doc_entities,
                 pm_rep,
-                programs,
-                end_reps,
+                q.programs,
+                q.end_reps,
                 cfg.require_complete,
-                publication_cap=cfg.publication_cap,
-                ctime=cfg.ctime,
-                start_reps=start_reps,
+                start_reps=q.start_reps,
             )
 
-        # materialized (localCheckpoint, NOT a checkpoint commit): the
-        # support stage derives graph_nodes from the expansion triples AND
-        # unions them back, so without materialization the expand DAG would
-        # run twice — but durability belongs to the triples{qk} frontier
-        # commit just below; a second parquet round-trip here was pure floor
-        if inter == "commit":
-            triples_base = ckpt.run_stage(f"triples_base{qk}", _triples_base)
-        else:
-            triples_base = _triples_base().localCheckpoint(eager=True)
+        def triples_base(doc_entities: DataFrame, edge_starts: DataFrame, q: _Query):
+            if done(q, "triples"):
+                return None
+            return materialize(
+                f"triples_base{q.key}",
+                lambda: aggregate_program_triples(
+                    doc_entities,
+                    edge_starts,
+                    q.programs,
+                    publication_cap=cfg.publication_cap,
+                    ctime=cfg.ctime,
+                    start_reps=q.start_reps,
+                ),
+            )
 
-        def _triples() -> DataFrame:
+        def support(
+            edge_starts: DataFrame,
+            rep_map: DataFrame,
+            pm_rep: DataFrame,
+            doc_entities: DataFrame,
+            q: _Query,
+        ) -> DataFrame:
             from ..operators.supporters import get_supporter
 
-            triples = triples_base
-            sups = cfg.supporters if cfg.with_support else []
-            if sups:
-                graph_nodes = (
-                    triples.select(F.col("subj").alias("id"))
-                    .union(triples.select(F.col("obj").alias("id")))
-                    .distinct()
+            if done(q, "triples"):
+                return None
+            pairs = None
+            if cfg.support_pair_mode == "paths":
+                # contexts mode (builder/builder.py:372-407): restrict
+                # supporter pairs to (node, ancestor) along program paths
+                from ..operators.expand import path_constrained_pairs
+
+                for prog in q.programs:
+                    sr = doc_entities.filter(F.col("node_type") == prog[0]).select("rep")
+                    if q.start_reps is not None:
+                        sr = sr.filter(F.col("rep").isin(q.start_reps))
+                    p = path_constrained_pairs(
+                        sr, pm_rep, prog, q.end_reps, cfg.require_complete
+                    )
+                    pairs = p if pairs is None else pairs.unionByName(p)
+                pairs = pairs.distinct()
+            elif cfg.support_pair_mode != "all":
+                raise ValueError(f"unknown support_pair_mode {cfg.support_pair_mode!r}")
+
+            # supporters pair up graph nodes only, so the node set of
+            # edge_starts is the node set of the finished graph
+            ids = graph_nodes(edge_starts)
+            out = None
+            for name in sups:
+                edges = get_supporter(name).support(
+                    ids,
+                    rep_map,
+                    t,
+                    publication_cap=cfg.publication_cap,
+                    ctime=cfg.ctime,
+                    pairs=pairs,
                 )
-                pairs = None
-                if cfg.support_pair_mode == "paths":
-                    # contexts mode (builder/builder.py:372-407): restrict
-                    # supporter pairs to (node, ancestor) along program paths
-                    from ..operators.expand import path_constrained_pairs
+                out = edges if out is None else out.unionByName(edges)
+            # node-pair-bounded, not doc-scale: never a commit point
+            return out.localCheckpoint(eager=True)
 
-                    pm_rep = canonicalize_predicate_map(t["predicate_map"], rep_map)
-                    for prog in programs:
-                        sr = doc_entities.filter(
-                            F.col("node_type") == prog[0]
-                        ).select("rep")
-                        if start_reps is not None:
-                            sr = sr.filter(F.col("rep").isin(start_reps))
-                        p = path_constrained_pairs(
-                            sr, pm_rep, prog, end_reps, cfg.require_complete
-                        )
-                        pairs = p if pairs is None else pairs.unionByName(p)
-                    pairs = pairs.distinct()
-                elif cfg.support_pair_mode != "all":
-                    raise ValueError(
-                        f"unknown support_pair_mode {cfg.support_pair_mode!r}"
-                    )
-                for name in sups:
-                    triples = triples.unionByName(
-                        get_supporter(name).support(
-                            graph_nodes,
-                            rep_map,
-                            t,
-                            publication_cap=cfg.publication_cap,
-                            ctime=cfg.ctime,
-                            pairs=pairs,
-                        )
-                    )
-            return validate_triples(triples)
+        def triples(triples_base: DataFrame, q: _Query, *support: DataFrame):
+            from ..schemas import TRIPLES
 
-        # cluster rows by the partition column before the partitioned
-        # commit: without this every one of the ~32 writer tasks opens a
-        # file per pred value (measured 65 files for 791 rows at SF=1 —
-        # guide §6 small-files); after, one file per pred per non-empty
-        # partition. Row content unchanged.
-        triples = ckpt.run_stage(
-            f"triples{qk}",
-            lambda: _triples().repartition("pred"),
-            partition_by=["pred"],
-        )
-        # partitioned read-back floats the partition column out of place;
-        # re-assert the contractual column order (schemas.TRIPLES)
-        from ..schemas import TRIPLES
+            def compute() -> DataFrame:
+                out = triples_base
+                for s in support:
+                    out = out.unionByName(s)
+                # cluster rows by the partition column before the
+                # partitioned commit: without this every one of the ~32
+                # writer tasks opens a file per pred value (measured 65
+                # files for 791 rows at SF=1 — guide §6 small-files);
+                # after, one file per pred per non-empty partition. Row
+                # content unchanged.
+                return validate_triples(out).repartition("pred")
 
-        triples = triples.select(*[f.name for f in TRIPLES.fields])
+            committed = ckpt.run_stage(
+                f"triples{q.key}", compute, partition_by=["pred"]
+            )
+            # partitioned read-back floats the partition column out of
+            # place; re-assert the contractual column order (schemas.TRIPLES)
+            return committed.select(*[f.name for f in TRIPLES.fields])
 
-        nodes = ckpt.run_stage(
-            f"nodes{qk}",
-            lambda: enhance_nodes(
-                build_nodes(triples, rep_map, mesh_labels=t.get("mesh_terms")),
-                t["label_lookup"],
-                forbidden_prefixes=cfg.forbidden_id_prefixes,
-            ),
-            partition_by=["node_type"],
-        )
-
-        def _metrics() -> DataFrame:
-            return (
-                stage_metrics(mentions, "mentions")
-                .unionByName(stage_metrics(doc_entities, "doc_entities"))
-                .unionByName(stage_metrics(triples, "triples", by="pred"))
-                .unionByName(stage_metrics(nodes, "nodes", by="node_type"))
+        def nodes(edge_starts: DataFrame, rep_map: DataFrame, q: _Query):
+            return ckpt.run_stage(
+                f"nodes{q.key}",
+                lambda: enhance_nodes(
+                    build_nodes(
+                        graph_nodes(edge_starts),
+                        rep_map,
+                        mesh_labels=t.get("mesh_terms"),
+                    ),
+                    t["label_lookup"],
+                    forbidden_prefixes=cfg.forbidden_id_prefixes,
+                ),
+                partition_by=["node_type"],
             )
 
-        # lazy, uncommitted: a dimension-sized rollup over tables that are
-        # either committed (mentions/triples/nodes) or persisted — computed
-        # only when a consumer actually collects it
-        if inter == "commit":
-            metrics = ckpt.run_stage(f"metrics{qk}", _metrics)
-        else:
-            metrics = _metrics()
-
-        return {
-            "mentions": mentions,
-            "rep_map": rep_map,
-            "doc_entities": doc_entities,
-            "triples": triples,
-            "nodes": nodes,
-            "metrics": metrics,
+        S = _Stages(spark)
+        try:
+            f_mentions = S.start("mentions", mentions)
+            f_rep_map = S.start("rep_map", rep_map)
+            f_query = S.start("query", query, f_rep_map)
+            f_pm_rep = S.start("pm_rep", pm_rep, f_rep_map)
+            f_doc_entities = S.start(
+                "doc_entities", doc_entities, f_mentions, f_rep_map
+            )
+            f_edge_starts = S.start(
+                "edge_starts", edge_starts, f_doc_entities, f_pm_rep, f_query
+            )
+            f_triples_base = S.start(
+                "triples_base", triples_base, f_doc_entities, f_edge_starts, f_query
+            )
+            f_support = [
+                S.start(
+                    "support",
+                    support,
+                    f_edge_starts,
+                    f_rep_map,
+                    f_pm_rep,
+                    f_doc_entities,
+                    f_query,
+                )
+            ] if sups else []
+            f_nodes = S.start("nodes", nodes, f_edge_starts, f_rep_map, f_query)
+            f_triples = S.start(
+                "triples", triples, f_triples_base, f_query, *f_support
+            )
+        finally:
+            S.wait()
+        out = {
+            "mentions": f_mentions.result(),
+            "rep_map": f_rep_map.result(),
+            "doc_entities": f_doc_entities.result(),
+            "triples": f_triples.result(),
+            "nodes": f_nodes.result(),
         }
+
+        def metrics() -> DataFrame:
+            return (
+                stage_metrics(out["mentions"], "mentions")
+                .unionByName(stage_metrics(out["doc_entities"], "doc_entities"))
+                .unionByName(stage_metrics(out["triples"], "triples", by="pred"))
+                .unionByName(stage_metrics(out["nodes"], "nodes", by="node_type"))
+            )
+
+        # lazy, uncommitted below ~2M docs: a dimension-sized rollup over
+        # tables that are either committed (mentions/triples/nodes) or
+        # materialized — computed only when a consumer collects it
+        key = f_query.result().key
+        out["metrics"] = (
+            ckpt.run_stage(f"metrics{key}", metrics) if inter == "commit" else metrics()
+        )
+        return out
 
 
 def run_pipeline(

@@ -4,10 +4,12 @@ formats (CDW pipe/tab files, query lists) re-expressed as spark.read.csv.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 FIXTURE_TABLES = [
     "documents",
@@ -24,8 +26,35 @@ FIXTURE_TABLES = [
 ]
 
 
+def _parquet_files(path: str) -> list[str]:
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
+def parquet_schema(path: str) -> StructType:
+    """Spark schema of a parquet file or directory, from the first file's
+    footer (metadata only). Handing it to the reader skips Spark's schema
+    inference, which runs a one-task job per table."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(pq.read_schema(_parquet_files(path)[0]))
+
+
+def fixture_rows(fixture_dir: str, name: str) -> int:
+    """Row count of a fixture table, summed from its parquet footers
+    (metadata only, no Spark job): the size the pipeline's scale gates
+    (CC strategy, intermediates) read."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(fixture_dir, f"{name}.parquet")
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+
+
 def read_fixture(spark: SparkSession, fixture_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(fixture_dir, f"{name}.parquet"))
+    path = os.path.join(fixture_dir, f"{name}.parquet")
+    return spark.read.schema(parquet_schema(path)).parquet(path)
 
 
 def read_fixtures(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:

@@ -113,9 +113,11 @@ def test_resume_skips_completed_stages_and_is_identical(
 
     _, workdir = pipeline_out
     before = os.path.getmtime(os.path.join(workdir, "mentions", "_STAGE_COMMITTED"))
-    # simulate a crash between 'triples' and 'nodes' (nodes is the last
-    # committed frontier stage; doc_entities/triples_base/metrics flow
-    # uncommitted and are always recomputed from the committed frontier)
+    # simulate a crash during the concurrent 'triples' and 'nodes' commits
+    # (the last committed frontier stages; doc_entities/triples_base/
+    # metrics flow uncommitted and are recomputed from the committed
+    # frontier)
+    shutil.rmtree(os.path.join(workdir, "triples"))
     shutil.rmtree(os.path.join(workdir, "nodes"))
     assert not os.path.exists(os.path.join(workdir, "doc_entities"))
     assert not os.path.exists(os.path.join(workdir, "metrics"))
@@ -125,3 +127,91 @@ def test_resume_skips_completed_stages_and_is_identical(
     got = {_full_key(r.asDict()) for r in out2["triples"].collect()}
     want = {_full_key(t) for t in golden["triples"]}
     assert got == want
+    got_nodes = {
+        (r["id"], r["node_type"], r["name"], tuple(r["equivalent_identifiers"]))
+        for r in out2["nodes"].collect()
+    }
+    want_nodes = {
+        (n["id"], n["node_type"], n["name"], tuple(n["equivalent_identifiers"]))
+        for n in golden["nodes"]
+    }
+    assert got_nodes == want_nodes
+
+
+def test_stage_failure_raised_from_run_and_no_stage_thread_survives(
+    spark, fixture_dir, golden, tmp_path
+):
+    """A fatal guard in the nodes branch fails run_pipeline with that
+    error; the concurrent triples commit completes on its own, and every
+    stage thread has ended when run_pipeline returns."""
+    import os
+    import threading
+
+    from robokop_build_spark.plans.pipeline import STAGE_THREAD_PREFIX, run_pipeline
+
+    prefix = min(n["id"] for n in golden["nodes"]).split(":")[0]
+    with pytest.raises(Exception, match="ForbiddenPrefixError"):
+        run_pipeline(
+            spark, fixture_dir, str(tmp_path), forbidden_id_prefixes=(prefix,)
+        )
+    assert not [t for t in threading.enumerate() if t.name.startswith(STAGE_THREAD_PREFIX)]
+    committed = {
+        d.split("@")[0]
+        for d in os.listdir(tmp_path)
+        if os.path.exists(os.path.join(tmp_path, d, "_STAGE_COMMITTED"))
+    }
+    assert "triples" in committed and "nodes" not in committed
+
+
+def test_stage_jobs_carry_the_callers_job_group(spark, fixture_dir, tmp_path):
+    """Jobs run on stage threads inherit the caller's local properties, so
+    event-log attribution by job group covers the whole build."""
+    from robokop_build_spark.plans.pipeline import run_pipeline
+
+    sc = spark.sparkContext
+    sc.setJobGroup("kg-build-test", "pipeline under a job group")
+    try:
+        run_pipeline(spark, fixture_dir, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    grouped = tracker.getJobIdsForGroup("kg-build-test")
+    assert grouped
+    # job ids grow with submission: no job without a group ran after the
+    # build's first one
+    assert not [j for j in tracker.getJobIdsForGroup(None) if j > min(grouped)]
+
+
+def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
+    spark, fixture_dir, pipeline_out
+):
+    """The single-pass publication merge is gated on the max in-degree of
+    edge_starts, but its buffer holds the rows of ep = start_pubs ⋈
+    edge_starts per edge key. The two agree because start_pubs has
+    exactly one row per start rep (capping must not split a rep)."""
+    from pyspark.sql import functions as F
+
+    from robokop_build_spark.operators.expand import (
+        canonicalize_predicate_map,
+        program_edge_starts,
+        start_publications,
+    )
+    from robokop_build_spark.plans.pipeline import DGX_PATH
+    from robokop_build_spark.sources.readers import read_fixture
+
+    out, _ = pipeline_out
+    de, programs = out["doc_entities"], [DGX_PATH]
+    start_pubs = start_publications(de, programs, publication_cap=2)
+    reps = de.filter(F.col("node_type") == DGX_PATH[0]).select("rep").distinct()
+    assert start_pubs.count() == reps.count() > 0
+    assert start_pubs.groupBy("rep").count().filter("count > 1").count() == 0
+
+    pm_rep = canonicalize_predicate_map(
+        read_fixture(spark, fixture_dir, "predicate_map"), out["rep_map"]
+    )
+    es = program_edge_starts(de, pm_rep, programs)
+    key = ["subj", "pred", "obj", "edge_source"]
+    ep = start_pubs.join(es.select(*key, F.col("start").alias("rep")), "rep")
+    indeg = {tuple(r[:4]): r[4] for r in es.groupBy(*key).count().collect()}
+    buffer = {tuple(r[:4]): r[4] for r in ep.groupBy(*key).count().collect()}
+    assert indeg and buffer == indeg

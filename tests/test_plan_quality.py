@@ -271,3 +271,46 @@ def test_bm25_plan_has_no_explode_and_broadcasts_stats(spark):
     assert "Generate" not in plan  # no explode
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "TakeOrderedAndProject" in plan
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "salted"])
+def test_doc_entities_single_alias_join(spark, strategy):
+    """The alias join carries the component's node_type, so doc_entities
+    needs at least one Exchange fewer than resolving the rep and then joining the
+    distinct (rep, node_type) metadata in a second join."""
+    from robokop_build_spark.operators.canonicalize import (
+        maybe_broadcast,
+        resolve_aliases,
+    )
+    from robokop_build_spark.plans.pipeline import link_doc_entities
+
+    rep_map = spark.createDataFrame(
+        [("A:1", "A:1", "disease", "a"), ("B:1", "A:1", "disease", "a")],
+        "curie string, rep string, node_type string, name string",
+    )
+    mentions = spark.createDataFrame(
+        [(i, "B:1", "gene") for i in range(20)] + [(99, "C:9", "gene")],
+        "doc_id long, curie string, node_type string",
+    )
+    # the two-join form: resolve, then a distinct rep -> node_type join
+    resolved = resolve_aliases(
+        mentions, rep_map, "curie", out="rep", strategy=strategy,
+        salt_source=F.xxhash64("doc_id"),
+    )
+    meta = rep_map.select("rep", F.col("node_type").alias("rep_type")).distinct()
+    two_joins = (
+        resolved.join(maybe_broadcast(meta), "rep", "left")
+        .select(
+            "doc_id",
+            "rep",
+            F.coalesce("rep_type", "node_type").alias("node_type"),
+            F.col("curie").alias("orig"),
+        )
+        .distinct()
+    )
+    one_join = link_doc_entities(mentions, rep_map, strategy=strategy)
+    n_one, n_two = _plan(one_join).count("Exchange"), _plan(two_joins).count("Exchange")
+    assert n_one <= n_two - 1, (n_one, n_two)
+    assert sorted(tuple(r) for r in one_join.collect()) == sorted(
+        [(i, "A:1", "disease", "B:1") for i in range(20)] + [(99, "C:9", "gene", "C:9")]
+    )
