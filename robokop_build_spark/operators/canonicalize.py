@@ -303,6 +303,13 @@ def _plan_size_bytes(df: DataFrame) -> int:
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
+def _fits_broadcast_budget(df: DataFrame) -> bool:
+    """Whether df's measured Catalyst size fits the session broadcast budget
+    (never when broadcasting is disabled)."""
+    budget = _broadcast_budget_bytes(df.sparkSession)
+    return budget > 0 and _plan_size_bytes(df) <= budget
+
+
 def maybe_broadcast(df: DataFrame):
     """F.broadcast(df) while the measured Catalyst size fits the session
     broadcast budget; otherwise return df unhinted and let AQE pick the
@@ -310,10 +317,7 @@ def maybe_broadcast(df: DataFrame):
     ENTITY graph (rep metadata, equivalent-identifier sets, authority
     labels): dimension-sized today, but at web scale they grow with the
     ontology (10^7-10^8 reps) and a hard hint would OOM the driver."""
-    budget = _broadcast_budget_bytes(df.sparkSession)
-    if budget > 0 and _plan_size_bytes(df) <= budget:
-        return F.broadcast(df)
-    return df
+    return F.broadcast(df) if _fits_broadcast_budget(df) else df
 
 
 def resolve_aliases(
@@ -345,12 +349,7 @@ def resolve_aliases(
     hub (SURVEY.md §4 custom piece #1). AQE skew-join remains the backstop.
     """
     if strategy == "auto":
-        budget = _broadcast_budget_bytes(fact.sparkSession)
-        strategy = (
-            "broadcast"
-            if budget > 0 and _plan_size_bytes(rep_map) <= budget
-            else "salted"
-        )
+        strategy = "broadcast" if _fits_broadcast_budget(rep_map) else "salted"
     mapped = rep_map.select(
         F.col("curie").alias("__alias"),
         F.col("rep").alias(out),

@@ -35,26 +35,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def shingles_from_tokens(toks, k: int = 3):
-    """Array of word k-grams from a tokens column, [] when fewer than k.
-
-    slice+array_join (one array access per gram) instead of k element_at
-    calls, and callers pre-project the tokens column so the split() is
-    evaluated once per row, not once per gram — measured 3× cheaper.
-    Stays inside whole-stage codegen either way."""
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(0)))
-    gram = lambda i: F.array_join(F.slice(toks, i, k), " ")  # noqa: E731
-    return F.when(n >= k, F.transform(idx, gram)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def word_shingles(text_col: str, k: int = 3):
-    """Convenience wrapper: shingles straight from a text column."""
-    return shingles_from_tokens(F.split(F.col(text_col), " "), k)
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -306,49 +286,6 @@ def auto_minhash_rows_per_band(
     )
 
 
-def _affine_minhash(sh, num_hashes: int):
-    """num_hashes MinHash values over a shingle array via the affine family
-    g_i = (h1 + i·h2) mod p (Carter–Wegman 2-universal construction): ONE
-    md5 per shingle (split into two 32-bit halves) instead of num_hashes
-    md5s — measured ~2× cheaper at 16 hashes. h1,h2 < 2^32 keep
-    h1 + i·h2 < 2^32·(i+2), exact in int64 for any num_hashes below ~2^30
-    (adaptive banding reaches i≈40 at planetary corpus sizes — nowhere
-    near the bound), and reproducible bit-for-bit in any engine (the
-    DuckDB oracle runs the identical expression)."""
-    digests = F.transform(sh, F.md5)  # one md5 per shingle
-    halves = F.transform(
-        digests,
-        lambda d: F.struct(
-            F.conv(F.substring(d, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(d, 9, 8), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-    # ONE fold over the shingles, all num_hashes minima carried in the
-    # accumulator array (zip_with + least), instead of num_hashes separate
-    # array_min(transform(...)) passes each materializing an intermediate
-    # array — same values, measured ~2× cheaper at 16 hashes. The init
-    # sentinel p is ≥ every pmod result, so it never survives a non-empty
-    # fold; callers filter size(sh) > 0 (empty docs have no signature).
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("long")] * num_hashes)
-    probes = lambda h: F.array(  # noqa: E731
-        *[
-            F.pmod(h["h1"] + F.lit(i) * h["h2"], F.lit(MINHASH_PRIME))
-            for i in range(num_hashes)
-        ]
-    )
-    return F.aggregate(
-        halves,
-        init,
-        lambda acc, h: F.zip_with(acc, probes(h), lambda x, y: F.least(x, y)),
-    )
-
-
-def minhash_signature(text_col: str, k: int = 3, num_hashes: int = 16):
-    """num_hashes-wide MinHash signature over word-k-gram shingles
-    (array<bigint>; see _affine_minhash for the hash family)."""
-    return _affine_minhash(word_shingles(text_col, k), num_hashes)
-
-
 def _shingle_arrays(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
@@ -361,7 +298,7 @@ def _shingle_arrays(
     under every LSH query. Python's str.split / " ".join produce the
     IDENTICAL token and gram strings (java regex " " == literal space,
     both keep empty tokens, array_join == " ".join on non-null arrays),
-    pinned by the unchanged DuckDB twins and the parity tests."""
+    pinned by the unchanged DuckDB twins."""
     id_t = dict(docs.dtypes)[id_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -428,20 +365,22 @@ def _banded_keys(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     table — the projection shared by the batch self-join and the streaming
     stateful detector (parity by construction).
 
-    Arrow-vectorized (round 8): the expression form (md5 per shingle →
-    conv/substring halves → a zip_with/least fold carrying all num_hashes
-    minima) runs through Spark's interpreted higher-order functions — no
-    whole-stage codegen — and was the dominant cost of every LSH query
-    (measured ~90 of dedup_minhash_lsh's 100 s at SF=1). This kernel
-    computes the identical values per batch in numpy: one md5 per UNIQUE
-    shingle (dict-cached across batches, exactly the corpus-repeat
-    structure the simhash kernel already exploits), the affine probes
-    (h1 + i·h2) mod p as one (entries × num_hashes) int64 matrix, and the
-    per-doc minima via np.minimum.reduceat. Bit-for-bit identical to the
-    expression form: h1,h2 < 2^32 so h1 + i·h2 < 2^36 is exact in int64,
+    MinHash family: the affine g_i = (h1 + i·h2) mod MINHASH_PRIME
+    (Carter–Wegman 2-universal construction) over the two 32-bit halves of
+    ONE md5 per shingle, minimized over the doc's shingles. The DuckDB twin
+    (minhash_sql) runs the identical arithmetic.
+
+    Arrow-vectorized (round 8), replacing an interpreted
+    zip_with/least fold that was the dominant cost of every LSH query
+    (measured ~90 of dedup_minhash_lsh's 100 s at SF=1): one md5 per
+    UNIQUE shingle (dict-cached across batches, exactly the corpus-repeat
+    structure the simhash kernel already exploits), the affine probes as
+    one (entries × num_hashes) int64 matrix, and the per-doc minima via
+    np.minimum.reduceat. Exact: h1,h2 < 2^32 so h1 + i·h2 < 2^36 in int64,
     numpy's % on positives equals pmod, str(int) equals the JVM
     long→string cast, and hashlib md5 hex equals Spark's md5 — pinned by
-    tests against _affine_minhash and the unchanged DuckDB twins."""
+    the DuckDB twin on both sides of the band knee
+    (tests/test_queries_oracle.py::test_minhash_generated_oracle_across_band_knee)."""
     if num_hashes % bands:
         # trailing signature components would be silently ignored, weakening
         # recall and desyncing from any oracle built over all hashes
@@ -618,8 +557,8 @@ def cross_doc_spans(
     collisions (2^-128) are the declared approximation, exactly as in the
     MinHash family.
 
-    Tokenization matches word_shingles (split on single space, case
-    preserved). Docs shorter than n tokens have no grams and report
+    Tokenization matches the MinHash shingles (_shingle_arrays: split on
+    single space, case preserved). Docs shorter than n tokens have no grams and report
     coverage 0. Returns one row per input doc:
     (doc_id, n_tokens, dup_tokens, dup_fraction)."""
     from pyspark import StorageLevel

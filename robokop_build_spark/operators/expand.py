@@ -14,24 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .canonicalize import maybe_broadcast, resolve_aliases
-
-
-def input_filter(frontier: DataFrame, node_type: str) -> DataFrame:
-    """S7 caster.input_filter analog (builder/output:368): type-guard the
-    frontier before an op join."""
-    return frontier.filter(F.col("node_type") == F.lit(node_type))
-
-
-def output_filter(expanded: DataFrame, node_type: str) -> DataFrame:
-    """S7 caster.output_filter analog: type-guard op results."""
-    return expanded.filter(F.col("node_type") == F.lit(node_type))
-
-
-def upcast(df: DataFrame, parent_type: str) -> DataFrame:
-    """S7 caster.upcast analog: widen node_type to a supertype (e.g.
-    genetic_condition → disease)."""
-    return df.withColumn("node_type", F.lit(parent_type))
+from .canonicalize import resolve_aliases
 
 
 def canonicalize_predicate_map(pm: DataFrame, rep_map: DataFrame) -> DataFrame:
@@ -79,109 +62,61 @@ def _alive_sets(
         )
         alive[n - 1] = term
     for i in range(n - 2, -1, -1):
-        edges = pm_rep.filter(
-            (F.col("src_type") == path_types[i])
-            & (F.col("dst_type") == path_types[i + 1])
-        ).select(F.col("subj_rep").alias("rep"), F.col("obj_rep"))
-        if alive[i + 1] is not None:
-            edges = edges.join(
-                F.broadcast(alive[i + 1].select(F.col("rep").alias("obj_rep"))),
-                "obj_rep",
-            )
+        edges = _typed_edges(
+            pm_rep,
+            path_types[i],
+            path_types[i + 1],
+            [F.col("subj_rep").alias("rep"), F.col("obj_rep")],
+            alive[i + 1],
+        )
         alive[i] = edges.select("rep").distinct()
     return alive
 
 
-def expand_path(
-    doc_entities: DataFrame,
+def _typed_edges(
+    pm_rep: DataFrame,
+    src_type: str,
+    dst_type: str,
+    cols: list,
+    alive_next: DataFrame | None,
+) -> DataFrame:
+    """The (src_type, dst_type) edges of pm_rep, projected to cols and,
+    when alive_next is given, semi-joined with it on obj_rep — restricting
+    the (broadcast-sized) edge table itself is cheaper than filtering the
+    hop rows after the join."""
+    edges = pm_rep.filter(
+        (F.col("src_type") == src_type) & (F.col("dst_type") == dst_type)
+    ).select(*cols)
+    if alive_next is not None:
+        edges = edges.join(
+            F.broadcast(alive_next.select(F.col("rep").alias("obj_rep"))),
+            "obj_rep",
+        )
+    return edges
+
+
+def _path_hops(
+    frontier: DataFrame,
     pm_rep: DataFrame,
     path_types: list[str],
-    end_reps: list[str] | None = None,
-    require_complete: bool = False,
-) -> DataFrame:
-    """Multi-hop expansion along a typed path (e.g. disease→gene→
-    genetic_condition, the reference's `DGX` query, builder/builder.py:589).
-
-    doc_entities: (doc_id, rep, node_type, orig). The frontier carries only
-    (doc_id, rep, start_rep) — original-mention lineage is re-attached after
-    aggregation via the tiny origin map (see aggregate_triples), which keeps
-    the doc-scale rows narrow through every hop.
-
-    end_reps / require_complete: emit only edges lying on paths that reach a
-    valid terminal (end-bound queries, builder/userquery.py:104-113). The
-    pruning is backward alive-sets over the dimension-sized predicate map +
-    per-hop broadcast semi-joins — never path materialization, so the
-    doc-scale rows stay narrow and no path-count blowup reaches the shuffle.
-    Default (both unset) keeps emit-per-hop semantics: every reachable edge
-    enters the graph even when deeper hops dead-end.
-
-    Returns raw triple events: (doc_id, subj, pred, obj, edge_source, start).
-    """
-    prune = require_complete or end_reps is not None
-    alive = _alive_sets(pm_rep, path_types, end_reps) if prune else None
-
-    frontier = (
-        doc_entities.filter(F.col("node_type") == path_types[0])
-        .select("doc_id", "rep", F.col("rep").alias("start"))
-        .distinct()
-    )
-    if alive is not None and alive[0] is not None:
+    end_reps: list[str] | None,
+    require_complete: bool,
+    cols: list,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The hop walk shared by expand_edge_starts and path_constrained_pairs:
+    the start frontier (rep, ...) restricted to alive[0], and per hop the
+    typed edges (cols) restricted to alive[h + 1]. Without end_reps or
+    require_complete nothing is pruned (emit-per-hop semantics)."""
+    alive: list[DataFrame | None] = [None] * len(path_types)
+    if require_complete or end_reps is not None:
+        alive = _alive_sets(pm_rep, path_types, end_reps)
+    if alive[0] is not None:
         frontier = frontier.join(F.broadcast(alive[0]), "rep")
-    hops = []
-    for h, (src_t, dst_t) in enumerate(zip(path_types, path_types[1:])):
-        edges = pm_rep.filter(
-            (F.col("src_type") == src_t) & (F.col("dst_type") == dst_t)
-        ).select("subj_rep", "obj_rep", "pred", "op_name", "orig_pred_id", "orig_pred_label")
-        if alive is not None and alive[h + 1] is not None:
-            # restrict the (broadcast-sized) edge table itself — cheaper
-            # than filtering doc-scale hop rows after the join
-            edges = edges.join(
-                F.broadcast(alive[h + 1].select(F.col("rep").alias("obj_rep"))),
-                "obj_rep",
-            )
-        # dimension-sized edge partition → broadcast; frontier (doc-scale)
-        # keeps its partitioning, no shuffle per hop
-        hop = frontier.join(F.broadcast(edges), frontier["rep"] == edges["subj_rep"])
-        hops.append(
-            hop.select(
-                "doc_id",
-                F.col("subj_rep").alias("subj"),
-                "pred",
-                F.col("obj_rep").alias("obj"),
-                F.col("op_name").alias("edge_source"),
-                "orig_pred_id",
-                "orig_pred_label",
-                "start",
-            )
-        )
-        frontier = hop.select(
-            "doc_id", F.col("obj_rep").alias("rep"), "start"
-        ).distinct()
-    out = hops[0]
-    for h in hops[1:]:
-        out = out.unionByName(h)
-    return out
-
-
-def expand_programs(
-    doc_entities: DataFrame,
-    pm_rep: DataFrame,
-    programs: list[list[str]],
-    end_reps: list[str] | None = None,
-    require_complete: bool = False,
-) -> DataFrame:
-    """U1 union of per-program expansions (reference: one Program per
-    concrete concept path, graph = union of program results,
-    builder/userquery.py:133-137 + builder/builder.py KnowledgeGraph.merge).
-    Duplicate edges across programs collapse in aggregate_triples' groupBy —
-    the union here stays lazy, one job for all programs."""
-    if not programs:
-        raise ValueError("no programs to execute (path unreachable in metagraph?)")
-    out = None
-    for prog in programs:
-        raw = expand_path(doc_entities, pm_rep, prog, end_reps, require_complete)
-        out = raw if out is None else out.unionByName(raw)
-    return out
+    hops = [
+        _typed_edges(pm_rep, src_t, dst_t, cols, alive[h + 1])
+        for h, (src_t, dst_t) in enumerate(zip(path_types, path_types[1:]))
+    ]
+    return frontier, hops
 
 
 def expand_edge_starts(
@@ -203,22 +138,16 @@ def expand_edge_starts(
     per-start doc sets. start_reps: (rep) — start entities observed in ≥1
     document.
     """
-    prune = require_complete or end_reps is not None
-    alive = _alive_sets(pm_rep, path_types, end_reps) if prune else None
-
-    frontier = start_reps.select(F.col("rep"), F.col("rep").alias("start")).distinct()
-    if alive is not None and alive[0] is not None:
-        frontier = frontier.join(F.broadcast(alive[0]), "rep")
+    frontier, hop_edges = _path_hops(
+        start_reps.select(F.col("rep"), F.col("rep").alias("start")).distinct(),
+        pm_rep,
+        path_types,
+        end_reps,
+        require_complete,
+        ["subj_rep", "obj_rep", "pred", "op_name", "orig_pred_id", "orig_pred_label"],
+    )
     hops = []
-    for h, (src_t, dst_t) in enumerate(zip(path_types, path_types[1:])):
-        edges = pm_rep.filter(
-            (F.col("src_type") == src_t) & (F.col("dst_type") == dst_t)
-        ).select("subj_rep", "obj_rep", "pred", "op_name", "orig_pred_id", "orig_pred_label")
-        if alive is not None and alive[h + 1] is not None:
-            edges = edges.join(
-                F.broadcast(alive[h + 1].select(F.col("rep").alias("obj_rep"))),
-                "obj_rep",
-            )
+    for edges in hop_edges:
         hop = frontier.join(F.broadcast(edges), frontier["rep"] == edges["subj_rep"])
         hops.append(
             hop.select(
@@ -322,9 +251,10 @@ def aggregate_program_triples(
     ctime: int = 0,
     start_reps: list[str] | None = None,
 ) -> DataFrame:
-    """Factored expansion+aggregation — produces EXACTLY the rows of
-    aggregate_triples(expand_programs(...), origin_map(...)) (the e2e golden
-    gates prove equality) with the doc×edge event stream eliminated:
+    """Factored expansion+aggregation: the triples of a per-document
+    frontier walk (datagen/oracle.compute_golden replays one in pure
+    Python; tests/test_pipeline_e2e.py and the kg_* oracles compare the
+    build against it exactly) with the doc×edge event stream eliminated:
 
     1. per-start doc sets (start_publications);
     2. per-start origin sets: entity-bounded groupBy;
@@ -453,22 +383,16 @@ def path_constrained_pairs(
     order depends on dict iteration and is not reproducible; supporters
     normalize to subj<obj anyway. Returns (rep_a, rep_b), rep_a < rep_b.
     """
-    prune = require_complete or end_reps is not None
-    alive = _alive_sets(pm_rep, path_types, end_reps) if prune else None
-
-    frontier = start_reps.select("rep").distinct()
-    if alive is not None and alive[0] is not None:
-        frontier = frontier.join(F.broadcast(alive[0]), "rep")
+    frontier, hop_edges = _path_hops(
+        start_reps.select("rep").distinct(),
+        pm_rep,
+        path_types,
+        end_reps,
+        require_complete,
+        ["subj_rep", "obj_rep"],
+    )
     anc: DataFrame | None = None
-    for h, (src_t, dst_t) in enumerate(zip(path_types, path_types[1:])):
-        edges = pm_rep.filter(
-            (F.col("src_type") == src_t) & (F.col("dst_type") == dst_t)
-        ).select("subj_rep", "obj_rep")
-        if alive is not None and alive[h + 1] is not None:
-            edges = edges.join(
-                F.broadcast(alive[h + 1].select(F.col("rep").alias("obj_rep"))),
-                "obj_rep",
-            )
+    for edges in hop_edges:
         step = (
             frontier.join(F.broadcast(edges), frontier["rep"] == edges["subj_rep"])
             .select("subj_rep", "obj_rep")
@@ -497,89 +421,21 @@ def path_constrained_pairs(
     )
 
 
-def origin_map(doc_entities: DataFrame) -> DataFrame:
-    """rep → sorted distinct pre-canonicalization mention CURIEs, corpus-
-    wide. Entity-bounded (dimension-sized) regardless of corpus size."""
-    return doc_entities.groupBy("rep").agg(
-        F.array_sort(F.collect_set("orig")).alias("origs")
-    )
-
-
-def aggregate_triples(
-    raw: DataFrame,
-    origins: DataFrame,
-    publication_cap: int = 10_000,
-    ctime: int = 0,
+def program_support_pairs(
+    doc_entities: DataFrame,
+    pm_rep: DataFrame,
+    programs: list[list[str]],
+    end_reps: list[str] | None = None,
+    require_complete: bool = False,
+    start_reps: list[str] | None = None,
 ) -> DataFrame:
-    """Dedup on (subj, pred, obj, edge_source) (builder/builder.py:218-226),
-    folding per-doc provenance into sorted publications (capped — the
-    reference's per-pair LIMIT 10000, builder/chemotext.py:53, applied as a
-    bounded two-phase top-k so a hub edge never owns an unbounded
-    aggregation buffer); input_identifiers (the reference's input_id
-    lineage, builder/builder.py:36) = distinct original mention CURIEs of
-    every path-start entity that triggered the edge — identical to
-    accumulating per-row, but computed as one hash agg over narrow rows + a
-    broadcast join against the entity-bounded origin map.
-
-    Output carries the full reference edge schema (export_edge,
-    builder/builder.py:31-41): ctime (unix epoch, injected for determinism),
-    url (op-derived), standard_label, original_predicate_id/label, and an
-    (empty — expansion ops carry none) properties map.
-    """
-    from .topk import capped_sorted_set
-
-    key = ["subj", "pred", "obj", "edge_source"]
-    # Two branches over the raw event stream, each reducing to its OWN
-    # minimal column set with a map-side-combined hash-distinct before any
-    # wide exchange (the event stream is doc-scale — 26.8M rows at SF=1 —
-    # and both distincts collapse it inside the scan stage's codegen; the
-    # join pass runs twice map-side, which is embarrassingly parallel and
-    # beats materializing the events or shuffling them with unpruned
-    # columns). The publications window then sorts only deduped (key, doc)
-    # rows — never the raw stream (tests/test_plan_quality.py asserts the
-    # distinct sits below the window).
-    pubs = capped_sorted_set(
-        raw.select(*key, F.concat(F.lit("DOC:"), F.col("doc_id")).alias("pub")),
-        key,
-        "pub",
-        publication_cap,
-        out="publications",
-    )
-    # inputs + original-predicate metadata on narrow (edge-key, start) rows
-    # so the big publications arrays are never reshuffled; both sides of the
-    # final join are edge-bounded
-    se = raw.select(*key, "orig_pred_id", "orig_pred_label", "start").distinct()
-    inputs = (
-        se.withColumnRenamed("start", "rep")
-        # origins carries one row per start rep with its doc-id array —
-        # entity-scale and fat at web size: budget-gated broadcast
-        .join(maybe_broadcast(origins), "rep")
-        .groupBy(*key)
-        .agg(
-            F.concat_ws(
-                ",",
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("origs")))),
-            ).alias("input_identifiers"),
-            # functionally determined by the edge key in the fixtures; min
-            # for run-to-run determinism if a source ever maps two originals
-            # onto one standard predicate
-            F.min("orig_pred_id").alias("original_predicate_id"),
-            F.min("orig_pred_label").alias("original_predicate_label"),
-        )
-    )
-    return pubs.join(inputs, key).select(
-        *key,
-        "publications",
-        "input_identifiers",
-        F.lit(ctime).cast("long").alias("ctime"),
-        F.concat(F.lit("op://"), F.col("edge_source"), F.lit("/"), F.col("subj")).alias(
-            "url"
-        ),
-        F.substring_index("pred", ":", -1).alias("standard_label"),
-        "original_predicate_id",
-        "original_predicate_label",
-        # every edge added through add_nonsynonymous_edge carries
-        # properties['reversed']=False (builder/builder.py:217; the True
-        # branch is dead code — it hard-exits at :202-204)
-        F.create_map(F.lit("reversed"), F.lit("False")).alias("properties"),
-    )
+    """(rep_a, rep_b): the path-constrained support pairs of every program
+    (path_constrained_pairs per program, from the same observed start reps
+    as program_edge_starts), deduplicated across programs."""
+    sd = _start_docs(doc_entities, programs, start_reps)
+    pairs = None
+    for prog in programs:
+        sr = sd.filter(F.col("node_type") == prog[0]).select("rep")
+        p = path_constrained_pairs(sr, pm_rep, prog, end_reps, require_complete)
+        pairs = p if pairs is None else pairs.unionByName(p)
+    return pairs.distinct()

@@ -12,7 +12,8 @@ Two failure modes threaten an iterative Spark loop:
    lost executor after block eviction kills the job and restarts the WHOLE
    iteration history (round-5 verdict, what's-wrong #3). The document
    pipeline already learned this lesson for stage intermediates
-   (plans/pipeline.py intermediates='auto'); this module gives the graph
+   (plans/pipeline.py commits them from COMMIT_INTERMEDIATES_MIN_DOCS
+   documents on); this module gives the graph
    loops the same durable option: route the loop state through a
    CheckpointManager stage every `commit_every` rounds. A relaunched job
    resumes from the last committed round instead of round zero, and the

@@ -1,10 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — exact, JVM-side arithmetic via
-zip_with/aggregate (no Python in the hot path). Scale path: LSH-bucketed
-(random-hyperplane signatures) candidate generation so a 1000-executor
-cluster never materializes the full cross product; plus embedding-cosine
-near-duplicate detection for corpus curation.
+Baseline: brute-force cosine top-k — exact, sequential-order arithmetic
+in an Arrow kernel. Scale paths: IVF (cluster-pruned) top-k, and
+embedding-cosine near-duplicate detection for corpus curation with
+LSH-bucketed (random-hyperplane signatures) candidate generation, so a
+1000-executor cluster never materializes the full cross product.
 """
 
 from __future__ import annotations
@@ -51,7 +51,11 @@ def brute_force_topk(
     sequential fold (and the twin's list_reduce), so the doubles are
     bit-identical while the per-pair interpreted higher-order functions
     (the dominant cost — 200k pairs × 3 folds at SF=1) disappear; the
-    division and 6dp round stay in the same Spark expression as before."""
+    division and 6dp round stay in the same Spark expression as before.
+
+    A pair with a null or empty vector, vectors of different lengths, or a
+    zero-norm vector scores null (ranked after every scored neighbor)
+    instead of failing the query."""
     import numpy as np
     import pandas as pd
 
@@ -72,11 +76,20 @@ def brute_force_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = np.stack([np.asarray(v, np.float64) for v in pdf["qvec"]])
-            Nv = np.stack([np.asarray(v, np.float64) for v in pdf["nvec"]])
-            dot = np.cumsum(Q * Nv, axis=1)[:, -1]
-            na = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-            nb = np.sqrt(np.cumsum(Nv * Nv, axis=1)[:, -1])
+            qv, nv = pdf["qvec"].to_numpy(), pdf["nvec"].to_numpy()
+            lq = np.array([-1 if v is None else len(v) for v in qv])
+            ln = np.array([-1 if v is None else len(v) for v in nv])
+            # NaN (a null score) unless both vectors are non-empty and of
+            # one length; pairs are stacked per length
+            dot, na, nb = (np.full(len(pdf), np.nan) for _ in range(3))
+            ok = (lq == ln) & (lq > 0)
+            for d in np.unique(lq[ok]):
+                rows = np.flatnonzero(ok & (lq == d))
+                Q = np.stack([np.asarray(qv[i], np.float64) for i in rows])
+                Nv = np.stack([np.asarray(nv[i], np.float64) for i in rows])
+                dot[rows] = np.cumsum(Q * Nv, axis=1)[:, -1]
+                na[rows] = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
+                nb[rows] = np.sqrt(np.cumsum(Nv * Nv, axis=1)[:, -1])
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"],
@@ -97,7 +110,9 @@ def brute_force_topk(
             ),
         )
         .withColumn(
-            "score", F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6)
+            # try_divide: a zero norm scores null (ANSI `/` would fail)
+            "score",
+            F.round(F.try_divide(F.col("dot"), F.col("na") * F.col("nb")), 6),
         )
         .select("query_id", "neighbor_id", "score")
     )
@@ -108,41 +123,6 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "score")
-    )
-
-
-def _dot(a, b):
-    """Sequential-fold dot product (same arithmetic order as the DuckDB
-    oracle's list_reduce, so sign tests can never diverge cross-engine)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def hyperplane_signature(vec_col, planes_col, n_bits: int):
-    """Random-hyperplane LSH signature from a planes ARRAY COLUMN
-    (array<array<double>>, length n_bits): bit i = sign(v · planes[i]),
-    packed into a long (weight 2^i).
-
-    The planes reach the plan as DATA (a one-row broadcast DataFrame
-    cross-joined in — see plane_matrix_frame), not as inlined literals: a
-    768-d × 20-bit production config would otherwise bake ~15k float
-    literals into every task's serialized plan and codegen (VERDICT r3
-    what's-wrong #3). All arithmetic stays in the JVM: sequential-fold dots
-    + exact power-of-two bit sums, bit-identical to the literal form it
-    replaced (plan-size test + unchanged oracle hashes)."""
-    idx = F.sequence(F.lit(1), F.lit(n_bits))
-    bit = lambda i: F.when(  # noqa: E731
-        _dot(F.col(vec_col) if isinstance(vec_col, str) else vec_col,
-             F.element_at(planes_col, i)) >= 0,
-        # 2^(i-1) as a long — exact for any realistic bit width (< 2^52);
-        # shiftleft() can't take a column shift amount
-        F.pow(F.lit(2.0), (i - F.lit(1)).cast("double")).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    return F.aggregate(
-        F.transform(idx, bit), F.lit(0).cast("long"), lambda acc, v: acc + v
     )
 
 
@@ -169,46 +149,6 @@ def make_planes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
 
     rng = random.Random(f"planes:{seed}")
     return [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_bits)]
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    n_bits: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: bucket corpus + queries by hyperplane signature,
-    rank only within matching buckets. At 100 TB this replaces the full
-    scan-per-query with a shuffle on the (small-cardinality) bucket key;
-    recall is tuned by n_bits / multi-probe."""
-    planes = make_planes(dim, n_bits, seed)
-    pf = plane_matrix_frame(embeddings.sparkSession, planes)
-    c = embeddings.crossJoin(F.broadcast(pf)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        hyperplane_signature(vec_col, F.col("__planes"), n_bits).alias("bucket"),
-    )
-    q = queries.crossJoin(F.broadcast(pf)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        hyperplane_signature(vec_col, F.col("__planes"), n_bits).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
 
 
 def auto_signature_bits(
@@ -598,10 +538,11 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the cluster-pruned scale path for top-k search.
 # Beyond-reference LLM-pipeline operator (SURVEY.md §2 similarity-search
-# family; complements lsh_topk the way IVF complements hyperplane LSH in
-# production vector stores): a deterministic k-means coarse quantizer
-# partitions the corpus into nlist cells, queries probe only the nprobe
-# nearest cells, and exact cosine runs on that slice alone.
+# family; the top-k counterpart of the hyperplane-LSH near-dup path, as
+# IVF complements hyperplane LSH in production vector stores): a
+# deterministic k-means coarse quantizer partitions the corpus into nlist
+# cells, queries probe only the nprobe nearest cells, and exact cosine runs
+# on that slice alone.
 
 
 def auto_nlist(n_rows: int, floor: int = 8, cap: int = 65_536) -> int:

@@ -31,7 +31,6 @@ the connected-components fixpoint.
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import Future
 from dataclasses import dataclass, field
 
@@ -44,6 +43,7 @@ from ..operators.expand import (
     aggregate_program_triples,
     canonicalize_predicate_map,
     program_edge_starts,
+    program_support_pairs,
 )
 from ..operators.extract import detect_mentions, explode_spans
 from ..operators.materialize import (
@@ -58,6 +58,25 @@ from ..sources.readers import fixture_rows, read_fixtures
 from .query import enumerate_programs, tokenize_path
 
 DGX_PATH = ["disease", "gene", "genetic_condition"]
+
+# Scale gates, read from parquet footer row counts (metadata only, no job).
+# Connected components of the normalization map: a single-process union-find
+# up to this many aliases, the distributed large-star/small-star loop above.
+LOCAL_CC_MAX_ALIASES = 2_000_000
+# Durable commit cadence (rounds) of the distributed CC loop
+# (operators/iterate.LoopCheckpointer): the measured 2.8-5.0%-overhead
+# cadence (BENCH §0h). A preempted canonicalization resumes from the last
+# committed round instead of round zero.
+CC_COMMIT_EVERY = 5
+# doc_entities, triples_base and metrics are committed stages from this many
+# documents on, eager localCheckpoints below. Measured (interleaved A/B, 4
+# executor JVMs x 2 cores, fresh process per run): at 8M docs commit wins
+# decisively — 179/234s vs 283/322s — because doc-scale localCheckpoint
+# blocks live DESERIALIZED in executor heaps (GC-heavy, single-replica
+# fetches) while the parquet round-trip is compressed, columnar-pruned on
+# re-read, and lands on fast local storage; at <=1M docs the two are
+# statistically equal and local avoids the commit floor.
+COMMIT_INTERMEDIATES_MIN_DOCS = 2_000_000
 
 # name prefix of the pipeline's stage threads
 STAGE_THREAD_PREFIX = "kg-stage-"
@@ -112,7 +131,7 @@ class _Query:
 
 
 def link_doc_entities(
-    mentions: DataFrame, rep_map: DataFrame, strategy: str = "auto", nsalt: int = 8
+    mentions: DataFrame, rep_map: DataFrame, strategy: str = "auto"
 ) -> DataFrame:
     """(doc_id, rep, node_type, orig): every mention's canonical rep, typed
     by its component's node_type (the component's metadata wins, as in
@@ -125,7 +144,6 @@ def link_doc_entities(
         "curie",
         out="rep",
         strategy=strategy,
-        nsalt=nsalt,
         salt_source=F.xxhash64("doc_id"),
         carry={"node_type": "rep_type"},
     )
@@ -155,13 +173,6 @@ class PipelineConfig:
     # emit only edges on paths matching the FULL pattern (cypher semantics);
     # default False preserves emit-per-hop (every reachable edge kept)
     require_complete: bool = False
-    # explicit repartition width after scan: at cluster scale set to
-    # O(input bytes / 128MB); on local[N] a small multiple of cores
-    doc_partitions: int | None = None
-    # 'auto' picks broadcast vs salted from the rep map's measured Catalyst
-    # size vs the session broadcast budget at plan time (canonicalize.py)
-    norm_join_strategy: str = "auto"
-    nsalt: int = 8
     with_support: bool = True
     # supporter modules to run (reference -s flag, builder/builder.py:320-362);
     # with_support=False disables all
@@ -179,27 +190,6 @@ class PipelineConfig:
     # builder/builder.py:314-317); empty by default because this engine's
     # min-CURIE canonical rep legitimately surfaces alias prefixes
     forbidden_id_prefixes: tuple[str, ...] = ()
-    cc_strategy: str = "auto"  # 'local' dim-sized / 'distributed' web-scale
-    # durable commit cadence for the distributed-CC loop inside rep_map
-    # (operators/iterate.LoopCheckpointer): 'auto' = every 5 rounds, the
-    # measured 2.8-5.0%-overhead cadence (BENCH §0h) — a preempted
-    # canonicalization then resumes from the last committed round instead
-    # of round zero. Only the distributed CC path engages it; the local
-    # union-find (every corpus below ~2M aliases) has no loop to protect.
-    # 0 disables (localCheckpoint-only rounds, the pre-round-7 behavior).
-    cc_commit_every: int | str = "auto"
-    # intermediate materialization for doc_entities/triples_base/metrics:
-    # 'local' = eager localCheckpoint (no parquet round-trip),
-    # 'commit' = durable stage commit (the pre-round-5 layout),
-    # 'auto' (default) = local below ~2M docs, commit above. Measured
-    # (interleaved A/B, 4 executor JVMs x 2 cores, fresh process per run):
-    # at 8M docs commit wins decisively — 179/234s vs 283/322s — because
-    # doc-scale localCheckpoint blocks live DESERIALIZED in executor heaps
-    # (GC-heavy, single-replica fetches) while the parquet round-trip is
-    # compressed, columnar-pruned on re-read, and lands on fast local
-    # storage; at <=1M docs the two are statistically equal and local
-    # avoids the commit floor. Env override: SPARK_GRAFT_INTERMEDIATES.
-    intermediates: str = "auto"
 
     def query_key(self, programs: list[list[str]]) -> str:
         """Stage-name suffix for query-dependent stages, so one workdir
@@ -253,16 +243,10 @@ class KGPipeline:
         stage is raised from here, after every stage thread has ended."""
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         t = read_fixtures(spark, cfg.fixture_dir)
-        # scale gates from parquet footer row counts (metadata only, no job)
-        inter = os.environ.get("SPARK_GRAFT_INTERMEDIATES", cfg.intermediates)
-        if inter == "auto":
-            docs_n = fixture_rows(cfg.fixture_dir, "documents")
-            inter = "commit" if docs_n >= 2_000_000 else "local"
-        cc = cfg.cc_strategy
-        if cc == "auto":
-            aliases_n = fixture_rows(cfg.fixture_dir, "normalization")
-            cc = "local" if aliases_n <= 2_000_000 else "distributed"
-        cc_every = 5 if cfg.cc_commit_every == "auto" else int(cfg.cc_commit_every)
+        docs_n = fixture_rows(cfg.fixture_dir, "documents")
+        commit_inter = docs_n >= COMMIT_INTERMEDIATES_MIN_DOCS
+        aliases_n = fixture_rows(cfg.fixture_dir, "normalization")
+        cc = "local" if aliases_n <= LOCAL_CC_MAX_ALIASES else "distributed"
         sups = cfg.supporters if cfg.with_support else []
         # surfaced for tests/operators-report: resumed_from/iterations of
         # the CC loop when the distributed path ran durably this run
@@ -278,28 +262,23 @@ class KGPipeline:
             # re-analyzed subtrees grow optimization + codegen time past
             # what the skipped commits saved). Durability is unaffected: on
             # executor loss past the block's lifetime the job restarts from
-            # the committed frontier. Above ~2M docs they commit (see
-            # PipelineConfig.intermediates).
-            if inter == "commit":
+            # the committed frontier. From COMMIT_INTERMEDIATES_MIN_DOCS on
+            # they commit.
+            if commit_inter:
                 return ckpt.run_stage(stage, compute)
             return compute().localCheckpoint(eager=True)
 
         def mentions() -> DataFrame:
             def compute() -> DataFrame:
                 docs = t["documents"]
-                if cfg.doc_partitions:
-                    # bound shuffle width / even out input splits
-                    # (north_rule: explicit repartition by doc_id hash)
-                    docs = docs.repartition(cfg.doc_partitions, "doc_id")
-                else:
-                    # under-split input (few files / giant row groups) would
-                    # pin the most expensive stage (mention detection) to a
-                    # handful of tasks; one doc_id-hash shuffle buys
-                    # full-width parallelism. At cluster scale the input is
-                    # thousands of files and this branch never triggers.
-                    par = spark.sparkContext.defaultParallelism
-                    if docs.rdd.getNumPartitions() < par:
-                        docs = docs.repartition(par * 2, "doc_id")
+                # under-split input (few files / giant row groups) would pin
+                # the most expensive stage (mention detection) to a handful
+                # of tasks; one doc_id-hash shuffle buys full-width
+                # parallelism. At cluster scale the input is thousands of
+                # files and this branch never triggers.
+                par = spark.sparkContext.defaultParallelism
+                if docs.rdd.getNumPartitions() < par:
+                    docs = docs.repartition(par * 2, "doc_id")
                 return detect_mentions(
                     explode_spans(docs), t["lexicon"], t["entity_embeddings"]
                 )
@@ -314,7 +293,7 @@ class KGPipeline:
                     cc,
                     manager=ckpt,
                     cc_stage="rep_map_cc",
-                    cc_commit_every=cc_every,
+                    cc_commit_every=CC_COMMIT_EVERY,
                     stats=self.cc_stats,
                 ),
             )
@@ -362,9 +341,7 @@ class KGPipeline:
         def doc_entities(mentions: DataFrame, rep_map: DataFrame) -> DataFrame:
             return materialize(
                 "doc_entities",
-                lambda: link_doc_entities(
-                    mentions, rep_map, cfg.norm_join_strategy, cfg.nsalt
-                ),
+                lambda: link_doc_entities(mentions, rep_map),
             )
 
         # on resume, the uncommitted stages that only feed committed ones
@@ -414,17 +391,14 @@ class KGPipeline:
             if cfg.support_pair_mode == "paths":
                 # contexts mode (builder/builder.py:372-407): restrict
                 # supporter pairs to (node, ancestor) along program paths
-                from ..operators.expand import path_constrained_pairs
-
-                for prog in q.programs:
-                    sr = doc_entities.filter(F.col("node_type") == prog[0]).select("rep")
-                    if q.start_reps is not None:
-                        sr = sr.filter(F.col("rep").isin(q.start_reps))
-                    p = path_constrained_pairs(
-                        sr, pm_rep, prog, q.end_reps, cfg.require_complete
-                    )
-                    pairs = p if pairs is None else pairs.unionByName(p)
-                pairs = pairs.distinct()
+                pairs = program_support_pairs(
+                    doc_entities,
+                    pm_rep,
+                    q.programs,
+                    q.end_reps,
+                    cfg.require_complete,
+                    start_reps=q.start_reps,
+                )
             elif cfg.support_pair_mode != "all":
                 raise ValueError(f"unknown support_pair_mode {cfg.support_pair_mode!r}")
 
@@ -535,7 +509,7 @@ class KGPipeline:
         # materialized — computed only when a consumer collects it
         key = f_query.result().key
         out["metrics"] = (
-            ckpt.run_stage(f"metrics{key}", metrics) if inter == "commit" else metrics()
+            ckpt.run_stage(f"metrics{key}", metrics) if commit_inter else metrics()
         )
         return out
 

@@ -3,8 +3,8 @@
 Reference analog: the ply lexer in builder/pathlex.py:10-39 (NODE codes
 `S|G|P|C|A|D|X|T|W|?`, EDGE `(min-max)`) and the QueryDefinition /
 Transition objects in builder/userquery.py:7-50. Here the "compiler" output
-is the list of node types the DataFrame pipeline chains joins over
-(plans/pipeline.py), one stage per transition.
+is the set of concrete node-type chains (enumerate_programs) the DataFrame
+pipeline chains joins over (plans/pipeline.py), one join per transition.
 """
 
 from __future__ import annotations
@@ -71,42 +71,6 @@ def tokenize_path(path: str) -> list[Step]:
     if not steps:
         raise PathSyntaxError("empty path")
     return steps
-
-
-@dataclass
-class QueryDefinition:
-    """builder/userquery.py:38-50 analog: terminal values + typed path."""
-
-    start_values: list[str]
-    steps: list[Step]
-    end_values: list[str] | None = None
-
-    @property
-    def node_types(self) -> list[str]:
-        return [s.node_type for s in self.steps]
-
-
-def compile_path(path: str) -> list[str]:
-    """Path DSL → a single node-type chain (fixed 1-hop transitions only).
-
-    Variable-length transitions and UNSPECIFIED nodes have no single-chain
-    compilation — they expand to a *set* of programs via enumerate_programs
-    (the reference's compile_query, builder/userquery.py:115-137). Raising
-    here (rather than silently executing one hop per transition) is the
-    guard the round-1 ADVICE asked for.
-    """
-    steps = tokenize_path(path)
-    for s in steps:
-        if s.max_path_length != 1 or s.min_path_length != 1:
-            raise PathSyntaxError(
-                f"{path!r} has a variable-length transition; use "
-                "enumerate_programs(steps, metagraph) and run every program"
-            )
-        if s.node_type == "UNSPECIFIED":
-            raise PathSyntaxError(
-                f"{path!r} contains '?'; use enumerate_programs(steps, metagraph)"
-            )
-    return [s.node_type for s in steps]
 
 
 def enumerate_programs(

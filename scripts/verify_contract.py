@@ -2,7 +2,8 @@
 """Drive the grading driver's contract end-to-end: run every queries() entry
 through Spark at sf0.01 and hash-compare against its oracle_sql() DuckDB twin
 (exactly the external driver's compare: sort columns, stringify, sort rows,
-md5). Usage:
+md5). SPARK_GRAFT_ORACLE_SF_DIR, which points the fixture-backed twins at a
+scale, moves the Spark side and the SQL tables there too. Usage:
 
     python scripts/verify_contract.py              # all queries
     python scripts/verify_contract.py q1 dedup_exact   # just these
@@ -11,17 +12,19 @@ md5). Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from robokop_build_spark.plans.benchmark_queries import DRIVER_SF_DIR  # noqa: E402
 from robokop_build_spark.session import get_spark  # noqa: E402
 
-SF = "/root/testdata/sf0.01"
+SF = DRIVER_SF_DIR
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

@@ -1,6 +1,5 @@
 import pytest
 
-from robokop_build_spark.operators.expand import input_filter, output_filter, upcast
 from robokop_build_spark.sources.lookup import lookup_by_name
 
 
@@ -40,14 +39,3 @@ def test_unsupported_type_rejected(spark, lexicon):
     names = spark.createDataFrame([("x",)], ["name"])
     with pytest.raises(ValueError):
         lookup_by_name(names, lexicon, "pathway")
-
-
-def test_caster_ops(spark):
-    df = spark.createDataFrame(
-        [("MONDO:1", "disease"), ("NCBIGENE:2", "gene")], ["rep", "node_type"]
-    )
-    assert input_filter(df, "disease").count() == 1
-    assert output_filter(df, "gene").collect()[0]["rep"] == "NCBIGENE:2"
-    assert {r["node_type"] for r in upcast(df, "named_thing").collect()} == {
-        "named_thing"
-    }

@@ -4,6 +4,8 @@ Correctness gate (BASELINE.json): triple precision AND recall ≥ 0.95 vs
 golden_triples. We assert exact-set equality where possible and the P/R gate
 as the contractual floor."""
 
+import re
+
 import pytest
 
 
@@ -19,6 +21,17 @@ def _full_key(t):
         t["edge_source"],
         tuple(t["publications"]),
         t["input_identifiers"],
+    )
+
+
+def _node_key(n):
+    return (
+        n["id"],
+        n["node_type"],
+        n["name"],
+        tuple(n["equivalent_identifiers"]),
+        tuple((m["curie"], m["label"]) for m in n["mesh_identifiers"]),
+        tuple(sorted((n["properties"] or {}).items())),
     )
 
 
@@ -51,28 +64,8 @@ def test_triples_exact_including_provenance(pipeline_out, golden):
 
 def test_nodes_match_golden(pipeline_out, golden):
     out, _ = pipeline_out
-    got = {
-        (
-            r["id"],
-            r["node_type"],
-            r["name"],
-            tuple(r["equivalent_identifiers"]),
-            tuple((m["curie"], m["label"]) for m in r["mesh_identifiers"]),
-            tuple(sorted((r["properties"] or {}).items())),
-        )
-        for r in out["nodes"].collect()
-    }
-    want = {
-        (
-            n["id"],
-            n["node_type"],
-            n["name"],
-            tuple(n["equivalent_identifiers"]),
-            tuple((m["curie"], m["label"]) for m in n["mesh_identifiers"]),
-            tuple(sorted(n["properties"].items())),
-        )
-        for n in golden["nodes"]
-    }
+    got = {_node_key(r) for r in out["nodes"].collect()}
+    want = {_node_key(n) for n in golden["nodes"]}
     assert got == want
     # the fixture must exercise both extras: some node carries a labeled
     # MESH identifier, some disease carries mondo_identifiers
@@ -215,3 +208,73 @@ def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
     indeg = {tuple(r[:4]): r[4] for r in es.groupBy(*key).count().collect()}
     buffer = {tuple(r[:4]): r[4] for r in ep.groupBy(*key).count().collect()}
     assert indeg and buffer == indeg
+
+
+def test_commit_intermediates_branch_matches_golden(
+    spark, fixture_dir, golden, tmp_path, monkeypatch
+):
+    """Past the docs threshold doc_entities, triples_base and metrics are
+    committed stages instead of localCheckpoints; the build's output is
+    unchanged."""
+    from robokop_build_spark.plans import pipeline as P
+    from robokop_build_spark.sources.checkpoint import CheckpointManager
+
+    monkeypatch.setattr(P, "COMMIT_INTERMEDIATES_MIN_DOCS", 0)
+    workdir = str(tmp_path / "commit")
+    out = P.run_pipeline(spark, fixture_dir, workdir)
+    got = {_full_key(r.asDict()) for r in out["triples"].collect()}
+    assert got == {_full_key(t) for t in golden["triples"]}
+    assert {_node_key(r) for r in out["nodes"].collect()} == {
+        _node_key(n) for n in golden["nodes"]
+    }
+    ckpt = CheckpointManager(spark, workdir)
+    assert all(ckpt.is_done(s) for s in ("doc_entities", "triples_base", "metrics"))
+
+
+def test_salted_publication_merge_on_a_hub_edge(spark):
+    """An edge reached from more than 4×nsalt = 64 start reps takes the
+    salted two-phase publication merge, which must still give every edge
+    the cap smallest of the union of its start reps' documents."""
+    from robokop_build_spark.operators.expand import (
+        aggregate_program_triples,
+        program_edge_starts,
+    )
+    from robokop_build_spark.plans.pipeline import DGX_PATH
+
+    n_starts, cap = 70, 3
+    rows = [
+        (f"doc{(7 * i + 3 * j) % 101:03d}", f"D:{i:02d}", "disease", f"O:{i}")
+        for i in range(n_starts)
+        for j in range(4)
+    ]
+    de = spark.createDataFrame(
+        rows, "doc_id string, rep string, node_type string, orig string"
+    )
+    pm = [
+        ("disease", "gene", "op1", "p:rel", f"D:{i:02d}", "G:1", "RO:1", "rel")
+        for i in range(n_starts)
+    ] + [("gene", "genetic_condition", "op2", "p:causes", "G:1", "X:1", "RO:2", "causes")]
+    pm_rep = spark.createDataFrame(
+        pm,
+        "src_type string, dst_type string, op_name string, pred string, "
+        "subj_rep string, obj_rep string, orig_pred_id string, orig_pred_label string",
+    )
+    es = program_edge_starts(de, pm_rep, [DGX_PATH])
+    triples = aggregate_program_triples(de, es, [DGX_PATH], publication_cap=cap)
+    plan = triples._jdf.queryExecution().executedPlan().toString()
+    # the hub edge's in-degree (70) is above 64: the merge's first phase
+    # aggregates per (edge, salt), the second per edge
+    assert re.search(
+        r"HashAggregate\(keys=\[subj#\d+, pred#\d+, obj#\d+, edge_source#\d+, "
+        r"_salt#\d+\]",
+        plan,
+    )
+
+    docs: dict[str, set] = {}
+    for doc_id, rep, _, _ in rows:
+        docs.setdefault(rep, set()).add("DOC:" + doc_id)
+    got = [(r["subj"], r["obj"], list(r["publications"])) for r in triples.collect()]
+    want = {(rep, "G:1"): sorted(d)[:cap] for rep, d in docs.items()}
+    want[("G:1", "X:1")] = sorted(set().union(*docs.values()))[:cap]
+    assert len(got) == len(want)
+    assert {(s, o): p for s, o, p in got} == want

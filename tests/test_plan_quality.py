@@ -108,24 +108,18 @@ def test_salted_join_spreads_hot_keys(spark):
 
 
 def test_publications_window_sorts_only_deduped_rows(spark):
-    """The capped-top-k window must sit ABOVE a hash-distinct of (key, pub),
-    never directly over the raw event stream — the distinct's map-side
-    partial combine is what keeps 26.8M events (SF=1) from hitting the
-    window's sort exchange un-collapsed."""
-    from robokop_build_spark.operators.expand import aggregate_triples
+    """The capped-top-k window of start_publications must sit ABOVE a
+    hash-distinct of (rep, pub), never directly over the raw (rep, doc)
+    rows of doc_entities — the distinct's map-side partial combine is what
+    keeps repeated mentions from hitting the window's sort exchange
+    un-collapsed."""
+    from robokop_build_spark.operators.expand import start_publications
 
-    raw = spark.createDataFrame(
-        [
-            ("s", "p", "o", "op", "RO:1", "lbl", f"d{i}", "s")
-            for i in range(10)
-        ],
-        [
-            "subj", "pred", "obj", "edge_source",
-            "orig_pred_id", "orig_pred_label", "doc_id", "start",
-        ],
+    de = spark.createDataFrame(
+        [(f"d{i % 3}", "s", "disease", f"o{i}") for i in range(10)],
+        ["doc_id", "rep", "node_type", "orig"],
     )
-    origins = spark.createDataFrame([("s", ["s"])], ["rep", "origs"])
-    plan = _plan(aggregate_triples(raw, origins))
+    plan = _plan(start_publications(de, [["disease", "gene"]]))
     win = plan.index("Window ")
     below_window = plan[win:]
     # a (partial-combined) distinct on the pub column feeds the window

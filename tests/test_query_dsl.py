@@ -6,17 +6,20 @@ import pytest
 from robokop_build_spark.plans.query import (
     PathSyntaxError,
     Step,
-    compile_path,
     tokenize_path,
 )
 
 
+def _node_types(path):
+    return [s.node_type for s in tokenize_path(path)]
+
+
 def test_dgx():
-    assert compile_path("DGX") == ["disease", "gene", "genetic_condition"]
+    assert _node_types("DGX") == ["disease", "gene", "genetic_condition"]
 
 
 def test_sgpcatd():
-    assert compile_path("SGPCATD") == [
+    assert _node_types("SGPCATD") == [
         "chemical_substance",
         "gene",
         "biological_process",

@@ -252,12 +252,3 @@ def test_paths_pair_mode_exact_and_differs_from_all_pairs(
     paths_support = {k for k in want if k[3] == "omnicorp.term_to_term"}
     assert paths_support, "paths mode must still produce support edges"
     assert paths_support < all_support, "modes must observably differ"
-
-
-def test_compile_path_rejects_variable_length():
-    from robokop_build_spark.plans.query import PathSyntaxError, compile_path
-
-    with pytest.raises(PathSyntaxError):
-        compile_path("D(1-2)GX")
-    with pytest.raises(PathSyntaxError):
-        compile_path("D?X")
