@@ -1,10 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k — exact, sequential-order arithmetic
-in an Arrow kernel. Scale paths: IVF (cluster-pruned) top-k, and
-embedding-cosine near-duplicate detection for corpus curation with
-LSH-bucketed (random-hyperplane signatures) candidate generation, so a
-1000-executor cluster never materializes the full cross product.
+in an Arrow kernel. Scale paths: IVF (cluster-pruned) top-k, SemDeDup
+(pairs compared only within an IVF cell), and embedding-cosine
+near-duplicate detection for corpus curation with LSH-bucketed
+(random-hyperplane signatures) candidate generation, so a 1000-executor
+cluster never materializes the full cross product. Every IVF-cell user
+assigns cells through one Arrow kernel (_with_cells) that crosses the
+Python boundary once per batch.
 """
 
 from __future__ import annotations
@@ -17,7 +20,9 @@ from ..caching import register_persisted
 
 def cosine_expr(a, b):
     """cosine(a, b) as a column expression (double), sequential-order
-    arithmetic so external oracles reproduce it exactly."""
+    arithmetic so external oracles reproduce it exactly. A zero norm
+    gives null (try_divide; ANSI `/` would fail the query), as do a null
+    vector and vectors of different lengths."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -29,7 +34,7 @@ def cosine_expr(a, b):
     nb = F.sqrt(
         F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
     )
-    return dot / (na * nb)
+    return F.try_divide(dot, na * nb)
 
 
 def brute_force_topk(
@@ -124,24 +129,6 @@ def brute_force_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", "score")
     )
-
-
-def plane_matrix_frame(spark, nested: list):
-    """One-row DataFrame carrying a (possibly nested) plane matrix as data.
-    Cross-joining its broadcast (1 row) attaches the matrix to every row at
-    zero shuffle cost while keeping the physical plan O(1)-sized."""
-    from pyspark.sql.types import StructType
-
-    depth = 0
-    probe = nested
-    while isinstance(probe, list):
-        depth += 1
-        probe = probe[0]
-    typ = "double"
-    for _ in range(depth):
-        typ = f"array<{typ}>"
-    schema = StructType.fromDDL(f"__planes {typ}")
-    return spark.createDataFrame([(nested,)], schema)
 
 
 def make_planes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
@@ -317,13 +304,11 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pairwise: str = "fold",
-    max_cell_size: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the corpus by a k-means coarse quantizer
-    (the SAME deterministic trainer/assignment kernel IVF uses —
-    ivf_train_centroids / _cell_distances), then compare pairs ONLY within
+    (the SAME deterministic trainer and cell kernel IVF uses —
+    ivf_train_centroids / _with_cells), then compare pairs ONLY within
     a cell, so total pairwise work is sum(|cell|²) ≈ n^1.5 at the √n nlist
     sizing rule instead of n² — the property that makes semantic dedup
     runnable on a 100-TB embedding table. The cell id is the shuffle key;
@@ -339,27 +324,13 @@ def semantic_dedup(
     external SQL engine from the shared centroid literals.
 
     Returns the DROPPED rows: (id, cid, dup_of, score) where dup_of is the
-    strongest dominating near-duplicate (score DESC, id ASC). Zero-norm
-    vectors are undefined under cosine and yield null scores (never pass
-    the threshold) — same in any IEEE SQL engine.
+    strongest dominating near-duplicate (score DESC, id ASC). A degenerate
+    vector (null, empty, of another length, zero norm) has no cell, so it
+    is never compared, dropped or named as dup_of.
 
-    pairwise selects the within-cell kernel: "fold" (default) scores each
-    candidate pair with the JVM sequential-fold cosine — whole-stage
-    codegen, zero Python, and the exact arithmetic order the generated
-    DuckDB twin states, so it is the oracle-parity path; "arrow" runs one
-    normalized numpy matmul per cell via applyInPandas — the big-corpus
-    path (a cell of p rows costs one p×p GEMM instead of p² interpreted
-    array folds; measured order-of-magnitude faster at 100k+ cells of
-    √n population). Both round to 6dp before the threshold and election,
-    and tests assert row-identical output on the real corpora; matmul
-    re-association vs sequential fold can differ near the last ulp of a
-    rounding edge, so the twin-checked driver query stays on "fold".
-
-    max_cell_size (arrow path only): hot-cell skew guard — cells above the
-    bound are split into deterministic id-hash sub-buckets before the
-    per-cell GEMM, bounding one task's memory at max_cell_size² instead of
-    (collapsed cell)²; near-dup pairs across sub-buckets of an over-full
-    cell are the declared recall trade (None = exact).
+    Each candidate pair is scored by the JVM sequential-fold cosine —
+    whole-stage codegen, zero Python, and the exact arithmetic order the
+    generated DuckDB twin states.
 
     Reference analog: none (the reference pipeline has no embedding ops);
     beyond-§2 LLM-pipeline family per SURVEY.md, next to
@@ -368,31 +339,18 @@ def semantic_dedup(
     explicit keep/drop election rather than a pair list.
     """
     import numpy as np
-    import pandas as pd
 
     from pyspark import StorageLevel
 
-    if pairwise not in ("fold", "arrow"):
-        raise ValueError(f"pairwise must be 'fold' or 'arrow', got {pairwise!r}")
-    id_t = dict(embeddings.dtypes)[id_col]
-    vec_t = dict(embeddings.dtypes)[vec_col]
-    C = [[float(v) for v in c] for c in centroids]
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                cid = _cell_distances(X, C).argmin(axis=1).astype("int32")
-            else:
-                cid = pd.Series([], dtype="int32")
-            yield pd.DataFrame(
-                {"id": pdf[id_col], "cid": cid, "vec": pdf[vec_col]}
-            )
-
     from .partitioning import widen_for_kernel
 
-    sig = widen_for_kernel(embeddings.select(id_col, vec_col)).mapInPandas(
-        assign, schema=f"id {id_t}, cid int, vec {vec_t}"
+    C = [[float(v) for v in c] for c in centroids]
+    sig = _with_cells(
+        widen_for_kernel(
+            embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        ),
+        C,
+        "vec",
     )
     # centroid table is nlist(≈√n)-rows — broadcast; cent_sim and the row
     # norm are computed ONCE per row (JVM fold), before the self-join that
@@ -415,75 +373,12 @@ def semantic_dedup(
     sig = (
         sig.join(F.broadcast(cents_df), "cid")
         .withColumn("nrm", nrm)
-        .withColumn("cent_sim", F.round(dot_c / (F.col("nrm") * F.col("cnrm")), 6))
+        .withColumn(
+            "cent_sim",
+            F.round(F.try_divide(dot_c, F.col("nrm") * F.col("cnrm")), 6),
+        )
         .select("id", "cid", "vec", "nrm", "cent_sim")
     )
-    if pairwise == "arrow":
-        # hot-cell guard (round-8 verdict item): one applyInPandas task
-        # materializes an entire cell and runs a p×p GEMM — the √n-sizing
-        # argument assumes balanced cells, but real embedding corpora
-        # cluster, and a collapsed cell (p ≈ n) is quadratic memory in one
-        # executor. Cells above max_cell_size are split into
-        # ceil(p/max_cell_size) sub-buckets by a deterministic id hash
-        # (mirroring embedding_near_duplicates' bucket-size cap); pairs
-        # across sub-buckets of the same cell are the declared recall
-        # trade. None (default) = exact, the oracle-parity configuration.
-        group_keys = ["cid"]
-        if max_cell_size is not None:
-            cw = Window.partitionBy("cid")
-            sig = (
-                sig.withColumn("_p", F.count(F.lit(1)).over(cw))
-                .withColumn(
-                    "_sub",
-                    F.when(
-                        F.col("_p") > max_cell_size,
-                        F.pmod(
-                            F.xxhash64(F.col("id").cast("string")),
-                            F.ceil(F.col("_p") / F.lit(max_cell_size)).cast(
-                                "long"
-                            ),
-                        ).cast("int"),
-                    ).otherwise(F.lit(0)),
-                )
-                .drop("_p")
-            )
-            group_keys = ["cid", "_sub"]
-        out_schema = f"id {id_t}, cid int, dup_of {id_t}, score double"
-
-        def cell_drops(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return pd.DataFrame(
-                    {"id": pdf["id"][:0], "cid": pdf["cid"][:0],
-                     "dup_of": pdf["id"][:0], "score": pd.Series([], dtype="float64")}
-                )
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy()
-            cs = pdf["cent_sim"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            S = np.round((X @ X.T) / np.outer(nrm, nrm), 6)
-            # dominance: score>=θ AND (cs_j < cs_i OR (cs_j == cs_i AND id_j < id_i))
-            dom = (S >= threshold) & (
-                (cs[None, :] < cs[:, None])
-                | ((cs[None, :] == cs[:, None]) & (ids[None, :] < ids[:, None]))
-            )
-            np.fill_diagonal(dom, False)
-            Sm = np.where(dom, S, -np.inf)
-            best = Sm.max(axis=1)
-            rows = np.flatnonzero(best > -np.inf)
-            dup_of, score = [], []
-            for i in rows:
-                ties = np.flatnonzero(Sm[i] == best[i])
-                j = ties[np.argmin(ids[ties])]
-                dup_of.append(ids[j])
-                score.append(S[i, j])
-            return pd.DataFrame(
-                {"id": ids[rows], "cid": pdf["cid"].iloc[0],
-                 "dup_of": dup_of, "score": score}
-            )
-
-        return sig.groupBy(*group_keys).applyInPandas(
-            cell_drops, schema=out_schema
-        )
     # pre-cast the vector to double ONCE per row (identical values to the
     # old per-pair element casts) so the pair fold below runs over doubles
     sig = sig.withColumn("vec", F.col("vec").cast("array<double>"))
@@ -506,7 +401,10 @@ def semantic_dedup(
     pairs = (
         a.join(b, "cid")
         .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn("score", F.round(pair_dot / (F.col("a.nrm") * F.col("b.nrm")), 6))
+        .withColumn(
+            "score",
+            F.round(F.try_divide(pair_dot, F.col("a.nrm") * F.col("b.nrm")), 6),
+        )
         .filter(F.col("score") >= threshold)
         .select(
             "cid",
@@ -602,6 +500,46 @@ def _cell_distances(X, C):
     )
 
 
+def _valid_vectors(vecs, dim: int):
+    """(mask, X) over one Arrow batch's vector column: which rows have a
+    cell — non-null, `dim` long, non-zero norm — and those rows stacked as
+    float64. Any other vector is degenerate: cosine is undefined for it."""
+    import numpy as np
+
+    ok = np.array([v is not None and len(v) == dim for v in vecs], dtype=bool)
+    if not ok.any():
+        return ok, np.empty((0, dim))
+    X = np.stack(vecs[ok]).astype(np.float64)
+    nonzero = (X * X).sum(axis=1) > 0
+    ok[ok] = nonzero
+    return ok, X[nonzero]
+
+
+def _with_cells(
+    df: DataFrame, centroids: list[list[float]], vec_col: str
+) -> DataFrame:
+    """`df` plus `cid int`: each row's cell, the argmin of _cell_distances
+    (lowest cid on ties). The one cell-assignment kernel — ivf_assign,
+    ivf_build_index, ivf_topk and semantic_dedup all call it; it crosses
+    the Arrow boundary once per batch. A degenerate vector (_valid_vectors)
+    gets a null cid, so it falls out of every join on cid."""
+    import pandas as pd
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    dim = len(centroids[0])
+
+    def assign(batches):
+        for pdf in batches:
+            ok, X = _valid_vectors(pdf[vec_col].to_numpy(), dim)
+            cid = pd.Series(pd.NA, index=pdf.index, dtype="Int32")
+            if len(X):
+                cid[ok] = _cell_distances(X, centroids).argmin(axis=1)
+            yield pdf.assign(cid=cid)
+
+    schema = StructType(df.schema.fields + [StructField("cid", IntegerType())])
+    return df.mapInPandas(assign, schema=schema)
+
+
 def ivf_calibrate_nprobe(
     vectors,
     centroids: list[list[float]],
@@ -680,28 +618,15 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cid) cell assignment of a corpus under the matmul kernel's
-    exact rule (6dp-rounded L2, stable argmin → lowest cid) — the reusable
-    half of ivf_topk's corpus pass, also needed by exact calibration for
-    per-cell population counts."""
-    import numpy as np
-    import pandas as pd
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                d = _cell_distances(X, centroids)
-                yield pd.DataFrame(
-                    {"id": pdf[id_col], "cid": d.argmin(axis=1).astype("int32")}
-                )
-            else:
-                yield pd.DataFrame({"id": pdf[id_col], "cid": pd.Series([], dtype="int32")})
-
-    id_t = dict(embeddings.dtypes)[id_col]
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"id {id_t}, cid int"
-    )
+    """(id, cid) cell assignment of a corpus by _with_cells (6dp-rounded
+    L2, stable argmin → lowest cid; null for a degenerate vector) — the
+    reusable half of ivf_topk's corpus pass, also needed by exact
+    calibration for per-cell population counts."""
+    return _with_cells(
+        embeddings.select(F.col(id_col).alias("id"), F.col(vec_col)),
+        centroids,
+        vec_col,
+    ).select("id", "cid")
 
 
 def ivf_calibrate_nprobe_exact(
@@ -798,18 +723,6 @@ def ivf_calibrate_nprobe_exact(
     )
 
 
-def _l2sq(a, b):
-    """Squared L2 distance as a sequential fold (same arithmetic order as
-    the DuckDB twin's list_reduce, so rounded values match exactly)."""
-    diff2 = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _probe_pairs(
     queries: DataFrame,
     centroids: list[list[float]],
@@ -818,30 +731,45 @@ def _probe_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, qvec, cid) — each query expanded to its nprobe nearest
-    cells under the matmul kernel's exact rule (6dp-rounded L2, stable
-    argsort → lower cid on ties); pinned equal to the fold kernel by
-    test_ivf_kernels_agree."""
+    cells by _cell_distances (stable argsort → lower cid on ties). A
+    degenerate query vector (_valid_vectors) has no distances and probes
+    cells 0..nprobe-1; its cosines are null."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    width = min(nprobe, len(centroids))
+    dim = len(centroids[0])
 
     def probe(batches):
         for pdf in batches:
-            rows = {"query_id": [], "qvec": [], "cid": []}
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
+            ok, X = _valid_vectors(pdf["qvec"].to_numpy(), dim)
+            order = np.tile(np.arange(width, dtype=np.int32), (len(pdf), 1))
+            if len(X):
                 d = _cell_distances(X, centroids)
-                order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-                for i in range(len(pdf)):
-                    for cc in order[i]:
-                        rows["query_id"].append(pdf[id_col].iat[i])
-                        rows["qvec"].append(pdf[vec_col].iat[i])
-                        rows["cid"].append(int(cc))
-            yield pd.DataFrame(rows)
+                order[ok] = np.argsort(d, axis=1, kind="stable")[:, :width]
+            rows = np.repeat(np.arange(len(pdf)), width)
+            yield pdf.iloc[rows].assign(cid=order.ravel())
 
-    vec_t = dict(queries.dtypes)[vec_col]
-    id_t = dict(queries.dtypes)[id_col]
-    return queries.select(id_col, vec_col).mapInPandas(
-        probe, schema=f"query_id {id_t}, qvec {vec_t}, cid int"
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    schema = StructType(q.schema.fields + [StructField("cid", IntegerType())])
+    return q.mapInPandas(probe, schema=schema)
+
+
+def _probed_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of each query (probes: query_id, qvec, cid) over
+    the corpus rows (neighbor_id, nvec, cid) of its probed cells; the probe
+    side is broadcast, ranks break ties by (score desc, neighbor_id)."""
+    scored = (
+        corpus.join(F.broadcast(probes), "cid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
+        .select("query_id", "neighbor_id", "score")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "score")
     )
 
 
@@ -855,34 +783,19 @@ def ivf_build_index(
 ) -> DataFrame:
     """Persist the IVF inverted file: the corpus with its cell assignment,
     committed as a CheckpointManager snapshot PARTITIONED BY cid — the
-    100-TB shape ivf_topk's docstring promises ("write the assignment
-    partitioned BY cid so a probe prunes partitions at the scan"), made
-    real. The commit is atomic (snapshot + pointer swap), re-buildable
+    100-TB shape ivf_topk's docstring names (the assignment partitioned
+    BY cid, so a probe prunes partitions at the scan). The commit is atomic (snapshot + pointer swap), re-buildable
     without disturbing readers of the previous index (snapshot isolation),
     and the marker carries per-cell manifest stats — which is exactly what
     lets ivf_topk_indexed plan a probe scan WITHOUT listing the directory
     tree. Pay one corpus pass + one partitioned write per index build;
     every query after that reads nprobe/nlist of the data from disk
-    instead of scanning and re-assigning the corpus per query batch."""
-    import numpy as np
-    import pandas as pd
-
-    vec_t = dict(embeddings.dtypes)[vec_col]
-    id_t = dict(embeddings.dtypes)[id_col]
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                d = _cell_distances(X, centroids)
-                yield pdf.assign(cid=d.argmin(axis=1).astype("int32"))
-            else:
-                yield pdf.assign(cid=pd.Series([], dtype="int32"))
-
-    assigned = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} {id_t}, {vec_col} {vec_t}, cid int"
+    instead of scanning and re-assigning the corpus per query batch.
+    Degenerate vectors (null cid) are left out: no probe reaches them."""
+    assigned = _with_cells(embeddings.select(id_col, vec_col), centroids, vec_col)
+    return manager.commit(
+        stage, assigned.filter(F.col("cid").isNotNull()), partition_by=["cid"]
     )
-    return manager.commit(stage, assigned, partition_by=["cid"])
 
 
 def ivf_topk_indexed(
@@ -919,18 +832,7 @@ def ivf_topk_indexed(
         F.col(vec_col).alias("nvec"),
         "cid",
     )
-    scored = (
-        corpus.join(F.broadcast(q), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _probed_topk(corpus, q, k)
 
 
 def ivf_topk(
@@ -941,132 +843,36 @@ def ivf_topk(
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 4,
-    kernel: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: assign corpus rows to their nearest centroid
-    (one narrow map over a broadcast nlist x dim matrix — no shuffle),
-    expand each query to its nprobe nearest cells, then exact cosine + a
+    (_with_cells, one narrow Arrow map — no shuffle), expand each query to
+    its nprobe nearest cells (_probe_pairs), then exact cosine + a
     per-query top-k window over the probed slice only.
 
-    100-TB shape: the centroid matrix rides as a one-row broadcast
-    DataFrame (plane_matrix_frame — data, not plan literals) or inside the
-    Arrow UDF closure; the corpus pass is a single projection; in a
-    persisted deployment you write the assignment bucketed/partitioned BY
-    cid so a probe prunes partitions at the scan. Work per query is
-    nprobe/nlist of the corpus instead of all of it; with nlist ~ sqrt(n)
-    that is O(nprobe * sqrt(n)) per query. Ties deterministic everywhere:
-    assignment argmin breaks to the lowest cid, probe order (distance,
-    cid), rank order (score desc, neighbor_id) — all on 6dp-rounded
-    doubles so an external engine reproduces them bit-for-bit.
+    100-TB shape: the nlist x dim centroid matrix rides inside the Arrow
+    kernels' closures (||x||^2 + ||c||^2 - 2 X @ C.T per batch, so the
+    cost is O(rows x nlist x dim) BLAS, not a plan that grows with nlist);
+    the corpus pass is a single projection; ivf_build_index persists the
+    assignment partitioned BY cid so a probe prunes partitions at the scan.
+    Work per query is nprobe/nlist of the corpus instead of all of it; with
+    nlist ~ sqrt(n) that is O(nprobe * sqrt(n)) per query. Ties
+    deterministic everywhere: assignment argmin breaks to the lowest cid,
+    probe order (distance, cid), rank order (score desc, neighbor_id) — all
+    on 6dp-rounded doubles. numpy's summation order differs from the
+    DuckDB twin's sequential fold at ~1e-15 relative, nine orders below
+    the 6dp rounding that feeds the argmin; the twin's hash gate pins the
+    rows.
 
-    kernel: 'fold' evaluates per-centroid sequential-fold expressions in
-    the JVM — arithmetic-order-identical to the DuckDB twin, but the
-    expression tree grows with nlist and falls off a cliff past ~10^2
-    centroids (nlist=800 at 640k rows did not finish in minutes).
-    'matmul' runs the assignment as an Arrow-batched mapInPandas numpy
-    kernel (||x||^2 + ||c||^2 - 2 X @ C.T per batch) — O(rows x nlist x
-    dim) BLAS instead of an O(nlist)-deep expression; numpy's pairwise
-    summation differs from the sequential fold at ~1e-15 relative, nine
-    orders below the 6dp rounding that feeds the argmin, and kernel
-    equality on real corpora is pinned by test. 'auto' = fold to 64
-    centroids (the oracle-compared family), matmul above."""
-    spark = embeddings.sparkSession
-    nlist = len(centroids)
-    if kernel == "auto":
-        kernel = "fold" if nlist <= 64 else "matmul"
-    if kernel == "matmul":
-        import numpy as np
-        import pandas as pd
-
-        def _dists(pdf: pd.DataFrame) -> "np.ndarray":
-            return _cell_distances(np.stack(pdf[vec_col].to_numpy()), centroids)
-
-        def assign(batches):
-            for pdf in batches:
-                if len(pdf):
-                    pdf = pdf.assign(cid=_dists(pdf).argmin(axis=1).astype("int32"))
-                else:
-                    pdf = pdf.assign(cid=pd.Series([], dtype="int32"))
-                yield pdf.rename(
-                    columns={id_col: "neighbor_id", vec_col: "nvec"}
-                )
-
-        def probe(batches):
-            for pdf in batches:
-                rows = {"query_id": [], "qvec": [], "cid": []}
-                if len(pdf):
-                    d = _dists(pdf)
-                    # stable argsort by rounded distance: among ties the
-                    # lower cid (= original index) wins, matching the fold
-                    # kernel's (d, cid) struct sort
-                    order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-                    for i in range(len(pdf)):
-                        for cc in order[i]:
-                            rows["query_id"].append(pdf[id_col].iat[i])
-                            rows["qvec"].append(pdf[vec_col].iat[i])
-                            rows["cid"].append(int(cc))
-                yield pd.DataFrame(rows)
-
-        vec_t = dict(embeddings.dtypes)[vec_col]
-        id_t = dict(embeddings.dtypes)[id_col]
-        c = embeddings.select(id_col, vec_col).mapInPandas(
-            assign,
-            schema=f"neighbor_id {id_t}, nvec {vec_t}, cid int",
-        )
-        q = queries.select(id_col, vec_col).mapInPandas(
-            probe, schema=f"query_id {id_t}, qvec {vec_t}, cid int"
-        )
-    else:
-        cf = plane_matrix_frame(spark, centroids).withColumnRenamed(
-            "__planes", "__cents"
-        )
-        c = (
-            embeddings.crossJoin(F.broadcast(cf))
-            .withColumn(
-                "__d",
-                F.transform(
-                    F.col("__cents"),
-                    lambda cc: F.round(_l2sq(F.col(vec_col), cc), 6),
-                ),
-            )
-            .select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("nvec"),
-                (F.array_position(F.col("__d"), F.array_min(F.col("__d"))) - 1)
-                .cast("int")
-                .alias("cid"),
-            )
-        )
-        idx = F.sequence(F.lit(0), F.lit(nlist - 1))
-        probe_structs = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.round(
-                    _l2sq(F.col(vec_col), F.element_at(F.col("__cents"), i + 1)), 6
-                ).alias("d"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        q = (
-            queries.crossJoin(F.broadcast(cf))
-            .withColumn(
-                "__probe", F.slice(F.array_sort(probe_structs), 1, nprobe)
-            )
-            .select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qvec"),
-                F.explode(F.col("__probe.cid")).alias("cid"),
-            )
-        )
-    scored = (
-        c.join(F.broadcast(q), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
+    A degenerate corpus vector (null, empty, of another length, zero norm)
+    has no cell and is never a neighbor; a degenerate query probes cells
+    0..nprobe-1 and its rows score null."""
+    corpus = _with_cells(
+        embeddings.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
+        ),
+        centroids,
+        "nvec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
+    return _probed_topk(
+        corpus, _probe_pairs(queries, centroids, nprobe, id_col, vec_col), k
     )

@@ -27,10 +27,7 @@ from ..operators import similarity as SIM
 from ..operators import sketches as SK
 from ..operators import text as T
 from ..operators.support import chi2_2x2
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from ..sources.readers import parquet_rows, read_fixture
 
 
 def _fresh_work_dir(base: str, sf: float | str, wipe: bool = True) -> str:
@@ -98,24 +95,6 @@ def _symlink_staging(src: str, staging_dir: str) -> str:
     else:
         os.symlink(src, os.path.join(staging_dir, "part-00000.parquet"))
     return staging_dir
-
-
-def _parquet_num_rows(path: str) -> int | None:
-    """Exact row count from parquet footer metadata (no Spark job) — single
-    files and Spark-written directories both. Returns None when unreadable
-    (caller falls back to the operator's own estimate)."""
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        pass
-    try:
-        import pyarrow.dataset as ds
-
-        return ds.dataset(path, format="parquet").count_rows()
-    except Exception:
-        return None
 
 
 # --------------------------------------------------------------------------
@@ -237,7 +216,7 @@ def kg_span_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     single count row; 0 = invariant holds)."""
     from ..operators.extract import explode_spans, reassemble_spans
 
-    docs = _t(spark, _fixture_dir_for(sf_dir), "documents").filter(
+    docs = read_fixture(spark, _fixture_dir_for(sf_dir), "documents").filter(
         F.size("spans") > 0
     )
     back = reassemble_spans(explode_spans(docs))
@@ -255,7 +234,7 @@ def multimodal_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import explode_spans
     from ..operators.multimodal import attach_media_payloads, extract_media_features
 
-    spans = explode_spans(_t(spark, _fixture_dir_for(sf_dir), "documents"))
+    spans = explode_spans(read_fixture(spark, _fixture_dir_for(sf_dir), "documents"))
     feats = extract_media_features(attach_media_payloads(spans))
     return feats.select(
         "doc_id",
@@ -284,14 +263,14 @@ def multimodal_audio_features(spark, sf_dir):
         extract_audio_features,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_fixture(spark, sf_dir, "documents").select("doc_id")
     return extract_audio_features(attach_audio_payloads(docs))
 
 
 def a1_count_by_lang(spark, sf_dir):
     """A1 count-nodes-by-type shape: groupBy + count (map-side combine)."""
     return (
-        _t(spark, sf_dir, "documents")
+        read_fixture(spark, sf_dir, "documents")
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars"))
     )
@@ -306,7 +285,7 @@ FROM documents GROUP BY lang
 def q1_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape (A4/A8): wide agg with exact decimal sums; verifies
     map-side partial aggregation end-to-end."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
     return (
         li.groupBy("l_returnflag", "l_linestatus")
@@ -339,10 +318,10 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 def j5_region_revenue(spark, sf_dir):
     """Multi-way dim join (J-chain): orders⋈customer⋈nation⋈region, dims
     broadcast, single shuffle for the final agg."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = read_fixture(spark, sf_dir, "orders")
+    c = read_fixture(spark, sf_dir, "customer")
+    n = read_fixture(spark, sf_dir, "nation")
+    r = read_fixture(spark, sf_dir, "region")
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -372,8 +351,9 @@ GROUP BY r_name
 def j1_alias_resolution(spark, sf_dir):
     """J1/J10 normalization-join shape: fact left-joins a broadcast alias
     map; unmatched keys keep their own id via coalesce."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 15)  # some misses
+    c = read_fixture(spark, sf_dir, "customer")
+    # some misses
+    n = read_fixture(spark, sf_dir, "nation").filter(F.col("n_nationkey") < 15)
     joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey, "left")
     return joined.select(
         "c_custkey",
@@ -394,7 +374,7 @@ FROM customer LEFT JOIN (SELECT * FROM nation WHERE n_nationkey < 15) n
 def j3_multiedge_dedup(spark, sf_dir):
     """J3 edge-dedup shape: distinct on the composite edge key before
     counting (dropDuplicates on (subj,obj,source,pred) analog)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", "l_partkey", "l_suppkey")
         .distinct()
@@ -413,8 +393,8 @@ GROUP BY l_orderkey
 def j4_upper_triangle_pairs(spark, sf_dir):
     """J4/U4/F9: unordered all-pairs (upper triangle, a<b) within a group —
     the support-pair generator shape (builder/builder.py:364-370)."""
-    n1 = _t(spark, sf_dir, "nation").alias("a")
-    n2 = _t(spark, sf_dir, "nation").alias("b")
+    n1 = read_fixture(spark, sf_dir, "nation").alias("a")
+    n2 = read_fixture(spark, sf_dir, "nation").alias("b")
     return (
         n1.join(n2, F.col("a.n_regionkey") == F.col("b.n_regionkey"))
         .filter(F.col("a.n_nationkey") < F.col("b.n_nationkey"))
@@ -436,7 +416,11 @@ FROM nation a JOIN nation b
 def j6_user_cooccurrence(spark, sf_dir):
     """J6/J7 shared-article co-occurrence shape: (term,article) self-join on
     the article key + pair agg — here (user,event_type) sharing users."""
-    ue = _t(spark, sf_dir, "events").select("user_id", "event_type").distinct()
+    ue = (
+        read_fixture(spark, sf_dir, "events")
+        .select("user_id", "event_type")
+        .distinct()
+    )
     a, b = ue.alias("a"), ue.alias("b")
     return (
         a.join(b, "user_id")
@@ -459,7 +443,7 @@ GROUP BY 1, 2
 def a5_chi2_cooccurrence(spark, sf_dir):
     """A5 chi² contingency from marginals + F8 under-representation filter +
     W3 sort — the CDW CooccurChi2 notebook as closed-form columns."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     ue = ev.select("user_id", "event_type").distinct()
     total = ue.select("user_id").distinct().count()
     marg = ue.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
@@ -543,7 +527,7 @@ def j8_lookup_fallback(spark, sf_dir):
         [("click", "interaction"), ("view", "interaction"), ("purchase", "conversion")],
         ["event_type", "category"],
     )
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     return (
         ev.join(F.broadcast(dim), "event_type", "left")
         .groupBy(F.coalesce("category", F.lit("<other>")).alias("category"))
@@ -571,7 +555,7 @@ GROUP BY 1
 def j9_argmax_per_group(spark, sf_dir):
     """A6/J9 argmax shape: best row per group with deterministic tie-break
     (window rank over (score desc, unique key))."""
-    p = _t(spark, sf_dir, "part")
+    p = read_fixture(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
     return (
         p.withColumn("rn", F.row_number().over(w))
@@ -592,7 +576,7 @@ FROM (
 
 def w2_topk_per_group(spark, sf_dir):
     """W2 per-group LIMIT shape: top-3 orders per customer."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_fixture(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         o.withColumn("rank", F.row_number().over(w))
@@ -613,8 +597,8 @@ FROM (
 
 def u2_union_seeds(spark, sf_dir):
     """U2 seed-list union shape: union + distinct across sources."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_name").alias("name"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_name").alias("name"))
+    c = read_fixture(spark, sf_dir, "customer").select(F.col("c_name").alias("name"))
+    s = read_fixture(spark, sf_dir, "supplier").select(F.col("s_name").alias("name"))
     return c.union(s).distinct()
 
 
@@ -628,7 +612,7 @@ SELECT s_name AS name FROM supplier
 def a2_collect_sorted_set(spark, sf_dir):
     """A2/U3/W1 synonym-set union shape: per-group sorted distinct set,
     emitted as a joined string for engine-portable comparison."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_fixture(spark, sf_dir, "customer")
     return c.groupBy("c_nationkey").agg(
         F.concat_ws(",", F.array_sort(F.collect_set("c_mktsegment"))).alias("segments"),
         F.count(F.lit(1)).alias("n_customers"),
@@ -646,7 +630,7 @@ FROM customer GROUP BY c_nationkey
 def f1_prefix_filter(spark, sf_dir):
     """F1/F2 prefix filter shape: drop rows whose key starts with a prefix
     (the reference drops HP-prefixed MONDO hits)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_fixture(spark, sf_dir, "documents")
     return (
         d.filter(~F.col("source").startswith("src1"))
         .groupBy("source")
@@ -663,7 +647,7 @@ WHERE source NOT LIKE 'src1%' GROUP BY source
 def f3_stopword_tokens(spark, sf_dir):
     """F3/X5 tokenize + length + stopword anti-filter, top-40 tokens."""
     stop = ["the", "a", "and", "of", "to"]
-    d = _t(spark, sf_dir, "documents")
+    d = read_fixture(spark, sf_dir, "documents")
     toks = d.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
     return (
         toks.filter((F.length("tok") > 2) & (~F.col("tok").isin(stop)))
@@ -685,7 +669,7 @@ GROUP BY tok ORDER BY n DESC, tok LIMIT 40
 def x_string_functions(spark, sf_dir):
     """X1-X6/X9 scalar-function parity: prefix extraction, un_curie, munge,
     PMID construction, case ops."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_fixture(spark, sf_dir, "documents")
     curie = F.concat_ws(":", F.col("source"), F.col("doc_id"))
     return d.select(
         "doc_id",
@@ -714,7 +698,7 @@ FROM documents
 
 def x7_epoch_json(spark, sf_dir):
     """X7 epoch conversion + JSON property extraction (props map)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.unix_timestamp("ts").alias("epoch_sec"),
@@ -732,7 +716,11 @@ FROM events
 
 def s9_symmetrized_pairs(spark, sf_dir):
     """S9 symmetrize shape: key both (a,b) and (b,a) (builder/cdw.py:48-62)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    li = (
+        read_fixture(spark, sf_dir, "lineitem")
+        .select("l_partkey", "l_suppkey")
+        .distinct()
+    )
     sym = li.union(
         li.select(F.col("l_suppkey").alias("l_partkey"), F.col("l_partkey").alias("l_suppkey"))
     ).distinct()
@@ -755,7 +743,9 @@ SELECT l_partkey, count(*) AS n_pairs FROM sym GROUP BY l_partkey
 # --------------------------------------------------------------------------
 
 def dedup_exact(spark, sf_dir):
-    return D.exact_duplicates(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return D.exact_duplicates(
+        read_fixture(spark, sf_dir, "documents"), "doc_id", "text"
+    )
 
 
 DEDUP_EXACT_SQL = """
@@ -766,12 +756,12 @@ FROM documents GROUP BY md5(text)
 
 def dedup_ngram_jaccard(spark, sf_dir):
     return D.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"),
+        read_fixture(spark, sf_dir, "documents"),
         "doc_id",
         "text",
         k=3,
         threshold=0.12,
-        n_rows=_parquet_num_rows(os.path.join(sf_dir, "documents.parquet")),
+        n_rows=parquet_rows(os.path.join(sf_dir, "documents.parquet")),
     )
 
 
@@ -808,13 +798,13 @@ def dedup_minhash_lsh(spark, sf_dir):
     any compare scale — adaptivity tested across the r=2→r=3 knee in
     tests/test_queries_oracle.py."""
     return D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
+        read_fixture(spark, sf_dir, "documents"),
         "doc_id",
         "text",
         k=3,
         num_hashes=None,
         bands=8,
-        n_rows=_parquet_num_rows(os.path.join(sf_dir, "documents.parquet")),
+        n_rows=parquet_rows(os.path.join(sf_dir, "documents.parquet")),
     )
 
 
@@ -875,8 +865,11 @@ def _oracle_num_hashes(bands: int = 8) -> int:
     TOGETHER as the corpus grows instead of silently diverging past the
     100k-doc knee."""
     d = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    n = _parquet_num_rows(os.path.join(d, "documents.parquet"))
-    return bands * D.auto_minhash_rows_per_band(n or 0)
+    try:
+        n = parquet_rows(os.path.join(d, "documents.parquet"))
+    except (OSError, ValueError):
+        n = 0  # no readable oracle corpus: keep this module importable
+    return bands * D.auto_minhash_rows_per_band(n)
 
 
 DEDUP_MINHASH_SQL = minhash_sql(_oracle_num_hashes())
@@ -888,14 +881,14 @@ def dedup_neardup_verified(spark, sf_dir):
     params as dedup_minhash_lsh, same threshold as dedup_ngram_jaccard —
     so the output is exactly their intersection."""
     return D.lsh_verified_near_duplicates(
-        _t(spark, sf_dir, "documents"),
+        read_fixture(spark, sf_dir, "documents"),
         "doc_id",
         "text",
         k=3,
         threshold=0.12,
         num_hashes=None,
         bands=8,
-        n_rows=_parquet_num_rows(os.path.join(sf_dir, "documents.parquet")),
+        n_rows=parquet_rows(os.path.join(sf_dir, "documents.parquet")),
     )
 
 
@@ -965,7 +958,7 @@ def streaming_minhash_dedup(spark, sf_dir):
     # first, an O(corpus) step a 100-TB deployment can't pay; there you
     # point readStream at the source table's directory itself)
     docs_src = _symlink_staging(os.path.join(sf_dir, "documents.parquet"), in_dir)
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_fixture(spark, sf_dir, "documents")
     stream = spark.readStream.schema(docs.schema).parquet(docs_src)
     q = (
         # max_bucket_ids=None: this wrapper is exactness-gated against the
@@ -979,8 +972,7 @@ def streaming_minhash_dedup(spark, sf_dir):
             # generated DuckDB twin (this wrapper's oracle IS the batch SQL)
             num_hashes=8
             * D.auto_minhash_rows_per_band(
-                _parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
-                or 0
+                parquet_rows(os.path.join(sf_dir, "documents.parquet"))
             ),
             bands=8,
             max_bucket_ids=None,
@@ -1018,12 +1010,12 @@ def dedup_simhash(spark, sf_dir):
     corpus size), so the hash gate stays exact, while a degenerate-
     vocabulary corpus at millions of docs is bounded instead of quadratic
     (637s / 12.6M pairs measured unguarded at 1.6M docs)."""
-    sim = D.simhash(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    sim = D.simhash(read_fixture(spark, sf_dir, "documents"), "doc_id", "text")
     return D.simhash_near_pairs(sim, max_hamming=2, max_bucket_size=4096)
 
 
 def ann_cosine_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return SIM.brute_force_topk(emb, queries, "vec_id", "embedding", k=5)
 
@@ -1060,7 +1052,7 @@ def ann_embedding_neardup(spark, sf_dir):
     value (the driver embeddings are random gaussians with no planted dups;
     0.35 ≈ 2.8σ of the cosine null so candidate pairs exist)."""
     return SIM.embedding_near_duplicates(
-        _t(spark, sf_dir, "embeddings"),
+        read_fixture(spark, sf_dir, "embeddings"),
         "vec_id",
         "embedding",
         threshold=0.35,
@@ -1068,7 +1060,7 @@ def ann_embedding_neardup(spark, sf_dir):
         # exact row count from the parquet footer (metadata-only read): the
         # call site knows the corpus, so the operator skips its fallback
         # full-scan count() job (one fewer job in the event log)
-        n_rows=_parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet")),
+        n_rows=parquet_rows(os.path.join(sf_dir, "embeddings.parquet")),
     )
 
 
@@ -1091,7 +1083,7 @@ def _ivf_cache_path(sf_dir: str, train_rows: int) -> str | None:
         return None
     key = (
         f"{os.path.abspath(emb)}|{st.st_size}|{st.st_mtime_ns}|"
-        f"{_parquet_num_rows(emb)}|{train_rows}|v{_IVF_CALIB_VERSION}"
+        f"{parquet_rows(emb)}|{train_rows}|v{_IVF_CALIB_VERSION}"
     )
     h = hashlib.md5(key.encode()).hexdigest()
     return f"/tmp/robokop_ivf_cache/{h}.json"
@@ -1151,9 +1143,7 @@ def _ivf_params_for(
     col = tbl.column("embedding").combine_chunks()
     X = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
     X = X[np.argsort(tbl.column("vec_id").to_numpy())]
-    n_corpus = (
-        _parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet")) or len(X)
-    )
+    n_corpus = parquet_rows(os.path.join(sf_dir, "embeddings.parquet"))
     cents = SIM.ivf_train_centroids(X, SIM.auto_nlist(n_corpus))
     exact_spark = None
     if n_corpus > len(X):
@@ -1218,7 +1208,7 @@ def ann_ivf_topk(spark, sf_dir):
     the exact baseline is separately gated in tests/test_similarity.py
     with the scan fraction reported."""
     cents, nprobe, _, _ = _ivf_params_for(sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return SIM.ivf_topk(
         emb, queries, cents, "vec_id", "embedding", k=5, nprobe=nprobe
@@ -1281,7 +1271,7 @@ def pagerank_order_parts(spark, sf_dir):
     (damping, N) so both engines compute identical 8dp-rounded ranks."""
     from ..operators.graph import pagerank as _pr
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     fwd = li.select(
         F.concat(F.lit("o"), F.col("l_orderkey")).alias("src"),
         F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"),
@@ -1335,7 +1325,7 @@ def asof_last_click(spark, sf_dir):
     at or before it (ties: highest click id). Timestamps surface as epoch
     micros and the no-match side coalesces to -1 so the cross-engine hash
     never rides on timestamp/NaN formatting."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     out = EV.asof_join(
         ev.filter(F.col("event_type") == "error"),
         ev.filter(F.col("event_type") == "click"),
@@ -1373,7 +1363,7 @@ LEFT JOIN LATERAL (
 
 def sessionize_events(spark, sf_dir):
     """Gap-based sessionization of the event stream (30-min gap)."""
-    return EV.sessionize(_t(spark, sf_dir, "events"))
+    return EV.sessionize(read_fixture(spark, sf_dir, "events"))
 
 
 SESSIONIZE_SQL = """
@@ -1421,7 +1411,7 @@ def streaming_sessionize(spark, sf_dir):
     # source table is a single file)
     work = _fresh_work_dir("/tmp/robokop_stream_sess", _sf_of(sf_dir))
     in_dir, out_dir, ck = (os.path.join(work, d) for d in ("in", "out", "ck"))
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     ev.write.mode("overwrite").parquet(in_dir)
     stream = (
         spark.readStream.schema(ev.schema)
@@ -1453,7 +1443,7 @@ def streaming_sessionize(spark, sf_dir):
 def scd2_event_intervals(spark, sf_dir):
     """SCD2 interval-ization of the event stream (see
     events.scd2_intervals); -1 closes the open tail interval."""
-    return EV.scd2_intervals(_t(spark, sf_dir, "events"))
+    return EV.scd2_intervals(read_fixture(spark, sf_dir, "events"))
 
 
 SCD2_SQL = """
@@ -1466,7 +1456,7 @@ FROM events
 
 def split_hash_buckets(spark, sf_dir):
     """Deterministic 80/10/10 split over documents by md5-bucket of the id."""
-    return CU.train_test_split(_t(spark, sf_dir, "documents"))
+    return CU.train_test_split(read_fixture(spark, sf_dir, "documents"))
 
 
 SPLIT_SQL = """
@@ -1486,7 +1476,7 @@ def sample_per_lang(spark, sf_dir):
     """Deterministic 20-per-language document sample (md5-rank order —
     stable across reruns/layouts, unlike rand()-based sampleBy)."""
     return CU.stratified_sample(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang"),
+        read_fixture(spark, sf_dir, "documents").select("doc_id", "lang"),
         "lang",
         n_per_stratum=20,
     )
@@ -1506,7 +1496,7 @@ SELECT doc_id, lang, sample_rank FROM (
 def pack_token_shards(spark, sf_dir):
     """Token-budget shard packing over 16 independent md5-bucketed packer
     streams (4096 whitespace tokens per shard)."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_fixture(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
     )
@@ -1532,7 +1522,7 @@ FROM cum
 
 
 def text_langid(spark, sf_dir):
-    return T.language_id(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return T.language_id(read_fixture(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def _sql_stop_hits(words: list[str]) -> str:
@@ -1556,7 +1546,7 @@ FROM documents
 
 
 def text_token_stats(spark, sf_dir):
-    return T.token_stats(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return T.token_stats(read_fixture(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 TOKEN_SQL = """
@@ -1569,7 +1559,7 @@ FROM documents
 
 
 def text_quality(spark, sf_dir):
-    return T.quality_score(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return T.quality_score(read_fixture(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 _STOP_EN = _sql_stop_hits(LANG_STOPWORDS["en"])
@@ -1603,7 +1593,7 @@ FROM r
 
 
 def text_fingerprint(spark, sf_dir):
-    return T.fingerprint(_t(spark, sf_dir, "documents"), "doc_id", "text")
+    return T.fingerprint(read_fixture(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 FINGERPRINT_SQL = """
@@ -1621,7 +1611,7 @@ def decontaminate_docs(spark, sf_dir):
     train side — see operators/curation.decontaminate_ngrams). n=4 on this
     corpus flags ~14% of train docs — a non-vacuous gate (n=5 flags zero,
     n=3 flags nearly everything on the 31-word synthetic vocabulary)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = read_fixture(spark, sf_dir, "documents").select("doc_id", "text")
     b = CU.hash_bucket(F.col("doc_id"), 10)
     return CU.decontaminate_ngrams(
         docs.filter(b != 0), docs.filter(b == 0), n=4
@@ -1659,7 +1649,7 @@ def text_pii_scrub(spark, sf_dir):
     scrub operator must count and redact it. The injection makes the gate
     real — on the PII-free synthetic corpus alone the redaction would be
     an unfalsifiable no-op."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_fixture(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -1703,7 +1693,9 @@ FROM red
 def text_repetition(spark, sf_dir):
     """Within-document repetition ratio (duplicate word 3-grams) — the
     boilerplate/degenerate-text signal. Fully narrow, no shuffle."""
-    return T.repetition_stats(_t(spark, sf_dir, "documents"), "doc_id", "text", n=3)
+    return T.repetition_stats(
+        read_fixture(spark, sf_dir, "documents"), "doc_id", "text", n=3
+    )
 
 
 REPETITION_SQL = """
@@ -1732,7 +1724,7 @@ def dedup_span_coverage(spark, sf_dir):
     linear-at-100-TB shape (digest-keyed shuffle, one window pass for the
     interval union)."""
     return D.cross_doc_spans(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", n=8, min_df=2
+        read_fixture(spark, sf_dir, "documents"), "doc_id", "text", n=8, min_df=2
     )
 
 
@@ -1766,7 +1758,7 @@ def range_window_join(spark, sf_dir):
     semantics as a bare inequality join (its IEJoin handles that natively).
     Per-row milli-unit rounding keeps the value sum integer-exact across
     engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     pts = ev.select("event_id", ts_us.alias("ts_us"), "value")
     win = ev.filter(F.col("event_id") % 200 == 0).select(
@@ -1806,7 +1798,11 @@ def graph_triangles(spark, sf_dir):
     orientation-independent."""
     from ..operators.graph import triangle_count as _tc
 
-    lp = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    lp = (
+        read_fixture(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
     x, y = lp.alias("x"), lp.alias("y")
     edges = x.join(
         y,
@@ -1855,14 +1851,14 @@ def dedup_cluster_canonical(spark, sf_dir):
     from ..operators.canonicalize import connected_components
 
     pairs = D.lsh_verified_near_duplicates(
-        _t(spark, sf_dir, "documents"),
+        read_fixture(spark, sf_dir, "documents"),
         "doc_id",
         "text",
         k=3,
         threshold=0.12,
         num_hashes=None,
         bands=8,
-        n_rows=_parquet_num_rows(os.path.join(sf_dir, "documents.parquet")),
+        n_rows=parquet_rows(os.path.join(sf_dir, "documents.parquet")),
     )
     cc = connected_components(
         pairs.select(
@@ -1921,7 +1917,7 @@ def mix_temperature_sample(spark, sf_dir):
     proportional to sqrt(total chars per source), membership by md5-rank
     (operators/curation.temperature_mix)."""
     return CU.temperature_mix(
-        _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+        read_fixture(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     )
 
 
@@ -1959,7 +1955,7 @@ def sample_weighted_docs(spark, sf_dir):
     """Weighted (by n_chars) deterministic sample of 100 docs — the A-ES
     exp-key scheme with md5-derived uniforms (curation.weighted_sample)."""
     return CU.weighted_sample(
-        _t(spark, sf_dir, "documents").select("doc_id", "n_chars"),
+        read_fixture(spark, sf_dir, "documents").select("doc_id", "n_chars"),
         "n_chars",
         k=100,
     )
@@ -1980,7 +1976,7 @@ def chunk_doc_windows(spark, sf_dir):
     """Context-window chunking at 32 tokens / 8 overlap (docs here are
     10-99 tokens -> 1-4 chunks each); see curation.chunk_documents."""
     return CU.chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=32, overlap=8
+        read_fixture(spark, sf_dir, "documents"), chunk_tokens=32, overlap=8
     )
 
 
@@ -2016,7 +2012,7 @@ def text_bm25_topk(spark, sf_dir):
     operators/text.bm25_topk for the determinism/scale shape). The twin
     states the identical fixed-order arithmetic in SQL."""
     return T.bm25_topk(
-        _t(spark, sf_dir, "documents"), BM25_TERMS, "doc_id", "text", k=20
+        read_fixture(spark, sf_dir, "documents"), BM25_TERMS, "doc_id", "text", k=20
     )
 
 
@@ -2076,8 +2072,8 @@ def j11_bucketed_colocated(spark, sf_dir):
     tag = str(sfl).replace(".", "_")
     o, li = ensure_bucketed_pair(
         spark,
-        _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-        _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"),
+        read_fixture(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
+        read_fixture(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"),
         f"bkt_orders_{tag}",
         f"bkt_lineitem_{tag}",
         # pid-keyed: the external bucketed layout is written once per
@@ -2114,7 +2110,7 @@ def a11_pivot_status(spark, sf_dir):
     scale — without it Spark runs an extra distinct-scan job to discover
     the columns; the twin states the same thing as conditional
     aggregation, which is exactly what both engines lower pivot to."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     dec = F.col("l_extendedprice").cast("decimal(18,2)")
     return (
         li.groupBy("l_returnflag")
@@ -2143,7 +2139,7 @@ def w5_moving_sum(spark, sf_dir):
     (RANGE frame on epoch micros — a true time-range window, not a row
     count). Value summed in per-row milli-units so the running total is
     integer-exact across engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_fixture(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     milli = F.round(F.col("value") * 1000, 0).cast("long")
     w = (
@@ -2175,7 +2171,7 @@ def u6_unpivot_measures(spark, sf_dir):
     """Unpivot (wide → long): per-flag measure columns melt into
     (measure, value) rows via Spark's native unpivot; the twin states the
     portable UNION-ALL lowering."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
     wide = li.groupBy("l_returnflag").agg(
         F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
@@ -2211,7 +2207,11 @@ def graph_kcore(spark, sf_dir):
 
 def _copurchase_edges(spark, sf_dir):
     """Part co-purchase graph: parts sharing an order, upper triangle."""
-    lp = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    lp = (
+        read_fixture(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
     x, y = lp.alias("x"), lp.alias("y")
     return x.join(
         y,
@@ -2240,7 +2240,7 @@ def a9_rollup_revenue(spark, sf_dir):
     and grand total in ONE pass (Spark expands grouping sets map-side; no
     three-scan union). gid is the engine's grouping bitmask — both Spark's
     grouping_id() and DuckDB's GROUPING() put the first column in the MSB."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -2273,7 +2273,7 @@ FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 def a12_cube_counts(spark, sf_dir):
     """CUBE grouping sets (all four subsets of the two keys in one pass
     — the exhaustive sibling of a9's ROLLUP)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -2302,8 +2302,8 @@ def u7_intersect_keys(spark, sf_dir):
     """INTERSECT set op: order keys that appear both in the 1-URGENT
     orders and in lineitems with line number >= 3 (i.e. orders with at
     least a third line) — distinct semantics on both engines."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = read_fixture(spark, sf_dir, "orders")
+    li = read_fixture(spark, sf_dir, "lineitem")
     a = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_orderkey").alias("orderkey")
     )
@@ -2326,7 +2326,7 @@ def a10_percentiles(spark, sf_dir):
     p*(n-1)). Exact is the oracle-checkable form; at 100 TB the same call
     site swaps to approx_percentile(col, p, accuracy) — the t-digest path
     whose error bound is declared, not hash-compared."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
 
     def p(q):
         return F.round(F.percentile(F.col("l_extendedprice"), F.lit(q)), 4)
@@ -2375,7 +2375,7 @@ def a13_hll_distinct(spark, sf_dir):
     operators/sketches.hll_count_distinct for the scale design and the
     cross-engine determinism argument. tests/test_approx_sketches.py gates
     the realized error at sf0.01 and sf0.1."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     approx = SK.hll_count_distinct(li, "l_returnflag", "l_partkey")
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("exact_distinct")
@@ -2434,7 +2434,7 @@ def a14_hist_quantile(spark, sf_dir):
     (p50/p95/p99 of extended price per return flag) — the declared-error
     (≤ (max-min)/K, K=200) swap-out for a10's exact percentile; see
     operators/sketches.histogram_quantiles for the two-pass scale design."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_fixture(spark, sf_dir, "lineitem")
     return SK.histogram_quantiles(
         li, "l_returnflag", "l_extendedprice", ps=(0.5, 0.95, 0.99), k=_HIST_K
     )
@@ -2490,7 +2490,7 @@ def semdedup_embeddings(spark, sf_dir):
     election from the shared centroid literals, so the hash gate covers
     assignment, both cosines, and the keeper election end to end."""
     cents = _ivf_centroids_for(sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_fixture(spark, sf_dir, "embeddings")
     return SIM.semantic_dedup(
         emb, cents, threshold=_SEMDEDUP_THRESHOLD
     )

@@ -35,21 +35,28 @@ def _parquet_files(path: str) -> list[str]:
 def parquet_schema(path: str) -> StructType:
     """Spark schema of a parquet file or directory, from the first file's
     footer (metadata only). Handing it to the reader skips Spark's schema
-    inference, which runs a one-task job per table."""
+    inference, which runs a one-task job per table. A tz-naive timestamp
+    maps to timestamp_ntz, as Spark's own inference maps it."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    return from_arrow_schema(pq.read_schema(_parquet_files(path)[0]))
+    return from_arrow_schema(
+        pq.read_schema(_parquet_files(path)[0]), prefer_timestamp_ntz=True
+    )
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file or directory, summed from its footers
+    (metadata only, no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
 
 
 def fixture_rows(fixture_dir: str, name: str) -> int:
-    """Row count of a fixture table, summed from its parquet footers
-    (metadata only, no Spark job): the size the pipeline's scale gates
+    """Row count of a fixture table: the size the pipeline's scale gates
     (CC strategy, intermediates) read."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(fixture_dir, f"{name}.parquet")
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+    return parquet_rows(os.path.join(fixture_dir, f"{name}.parquet"))
 
 
 def read_fixture(spark: SparkSession, fixture_dir: str, name: str) -> DataFrame:

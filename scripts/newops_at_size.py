@@ -1,15 +1,10 @@
 #!/usr/bin/env python
-"""At-size evidence for the round-7 operators (BENCH/newops_at_size.json).
+"""At-size evidence for the round-7 operators (BENCH/newops_at_size.json):
+cross_doc_spans at SF=32 (1.6M generated docs, ~86M positional grams):
+wall time + docs/s for the full linear pipeline (digest shuffle ->
+document frequency -> flag-back join -> window union).
 
-1. semantic_dedup at 640k vectors on the clustered corpus (the realistic
-   embedding-table shape, same fixture as ivf_at_size): measures the
-   arrow (per-cell GEMM) kernel wall, the pairwise-work fraction
-   sum(|cell|^2)/n^2 actually scanned (the n^1.5 claim, measured), and the
-   arrow-vs-fold kernel speedup on a 40k slice (running fold at 640k is
-   exactly the interpreted-fold cost the arrow kernel exists to avoid).
-2. cross_doc_spans at SF=32 (1.6M driver-shaped docs, ~86M positional
-   grams): wall time + docs/s for the full linear pipeline (digest
-   shuffle -> document frequency -> flag-back join -> window union).
+    python scripts/newops_at_size.py
 """
 
 from __future__ import annotations
@@ -23,77 +18,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 RANDOM_DIR = "/tmp/robokop_driver/sf32.0"
-SLICE_ROWS = 40_000
-
-
-def semdedup_at_size(spark, sf_dir: str, threshold: float) -> dict:
-    import numpy as np
-    import pyarrow.dataset as ds
-    from pyspark.sql import functions as F
-
-    from robokop_build_spark.operators import similarity as S
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    n = emb.count()
-
-    # bounded-sample training, same rule as the driver query
-    tbl = ds.dataset(os.path.join(sf_dir, "embeddings.parquet")).head(
-        65_536, columns=["vec_id", "embedding"]
-    )
-    col = tbl.column("embedding").combine_chunks()
-    X = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
-    X = X[np.argsort(tbl.column("vec_id").to_numpy())]
-    t0 = time.time()
-    cents = S.ivf_train_centroids(X, S.auto_nlist(n))
-    train_s = round(time.time() - t0, 2)
-
-    # measured pairwise-work fraction: sum(|cell|^2) / n^2
-    pops = (
-        S.ivf_assign(emb, cents).groupBy("cid").count().collect()
-    )
-    pair_work = sum(r["count"] ** 2 for r in pops)
-    work_fraction = pair_work / (n * n)
-
-    t0 = time.time()
-    n_drops = S.semantic_dedup(
-        emb, cents, threshold=threshold, pairwise="arrow"
-    ).count()
-    arrow_s = round(time.time() - t0, 2)
-
-    # kernel speedup on a slice small enough that fold finishes politely
-    sl = emb.filter(F.col("vec_id") < SLICE_ROWS)
-    sl_cents = S.ivf_train_centroids(X[:SLICE_ROWS], S.auto_nlist(SLICE_ROWS))
-    t0 = time.time()
-    a_rows = sorted(
-        map(tuple, S.semantic_dedup(sl, sl_cents, threshold=threshold,
-                                    pairwise="arrow").collect())
-    )
-    slice_arrow_s = round(time.time() - t0, 2)
-    t0 = time.time()
-    f_rows = sorted(
-        map(tuple, S.semantic_dedup(sl, sl_cents, threshold=threshold,
-                                    pairwise="fold").collect())
-    )
-    slice_fold_s = round(time.time() - t0, 2)
-
-    return {
-        "op": "semantic_dedup",
-        "corpus": sf_dir,
-        "n_vecs": n,
-        "nlist": len(cents),
-        "threshold": threshold,
-        "train_s": train_s,
-        "pairwise_work_fraction": round(work_fraction, 6),
-        "pairs_scored": pair_work,
-        "pairs_allpairs": n * n,
-        "arrow_s": arrow_s,
-        "n_dropped": n_drops,
-        "slice_rows": SLICE_ROWS,
-        "slice_arrow_s": slice_arrow_s,
-        "slice_fold_s": slice_fold_s,
-        "slice_kernels_agree": a_rows == f_rows,
-        "slice_speedup": round(slice_fold_s / max(slice_arrow_s, 1e-9), 2),
-    }
 
 
 def spans_at_size(spark, sf_dir: str) -> dict:
@@ -126,16 +50,10 @@ def main() -> None:
     from robokop_build_spark.datagen.driver_tables import ensure_driver_tables_spark
     from robokop_build_spark.session import get_spark
 
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from ivf_at_size import ensure_clustered
-
     spark = get_spark(app_name="newops-at-size")
     spark.sparkContext.setLogLevel("ERROR")
     ensure_driver_tables_spark(spark, RANDOM_DIR, 32.0)
-    results = [
-        semdedup_at_size(spark, ensure_clustered(), threshold=0.9),
-        spans_at_size(spark, RANDOM_DIR),
-    ]
+    results = [spans_at_size(spark, RANDOM_DIR)]
     out = {"results": results, "ts": time.time()}
     with open(os.path.join(REPO, "BENCH", "newops_at_size.json"), "w") as f:
         json.dump(out, f, indent=1)

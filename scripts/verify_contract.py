@@ -41,7 +41,7 @@ def vhash(df):
 
 def main() -> int:
     only = set(sys.argv[1:])
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

@@ -46,9 +46,7 @@ def test_indexed_topk_equals_in_memory_ivf(spark, emb_df, vecs, tmp_path):
     S.ivf_build_index(emb_df, cents, mgr, stage="idx")
     queries = emb_df.filter(emb_df.vec_id < 8)
     for nprobe in (2, 3, 6):
-        live = S.ivf_topk(
-            emb_df, queries, cents, k=4, nprobe=nprobe, kernel="matmul"
-        )
+        live = S.ivf_topk(emb_df, queries, cents, k=4, nprobe=nprobe)
         idx = S.ivf_topk_indexed(
             mgr, queries, cents, stage="idx", k=4, nprobe=nprobe
         )

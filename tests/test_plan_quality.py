@@ -214,9 +214,9 @@ def test_pack_token_shards_single_shuffle(spark):
 
 
 def test_ivf_assignment_broadcasts_centroids(spark):
-    """The corpus-side pass must be a broadcast nested-loop over the ONE
-    centroid row (not a shuffle), and the probe join must broadcast the
-    query side."""
+    """The centroids ride inside the Arrow cell kernels, so the corpus
+    side joins nothing to place its rows in cells (no cartesian product),
+    and the probe join on cid broadcasts the query side."""
     from robokop_build_spark.operators.similarity import ivf_topk
     from robokop_build_spark.plans.benchmark_queries import _ivf_centroids_for
 

@@ -12,6 +12,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from robokop_build_spark.sources.readers import parquet_rows  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -117,7 +118,7 @@ def test_minhash_generated_oracle_across_band_knee(spark, ddb):
 
     # the oracle-compared entries and the SQL twin derive their family from
     # the SAME rule over the SAME corpus — alignment by construction
-    n = Q._parquet_num_rows(f"{SF_DIR}/documents.parquet")
+    n = parquet_rows(f"{SF_DIR}/documents.parquet")
     assert Q._oracle_num_hashes() == 8 * D.auto_minhash_rows_per_band(n)
     # knee shape: r=2 up to 100k docs, +1 per 32x growth
     assert D.auto_minhash_rows_per_band(100_000) == 2

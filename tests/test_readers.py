@@ -1,9 +1,14 @@
 """Flat-file source readers: the reference's CDW pipe/tab formats
 (builder/cdw.py:39-62) and newline seed lists (builder/q1-disease-list.txt)."""
 
+import glob
+import os
+
 from robokop_build_spark.sources.readers import (
+    FIXTURE_TABLES,
     read_cdw_counts_csv,
     read_cdw_paircounts_csv,
+    read_fixture,
     read_seed_list,
 )
 
@@ -31,3 +36,19 @@ def test_seed_list(spark, tmp_path):
     p.write_text("Ebola Virus Disease\n\n  Usher Syndrome  \n")
     got = [r["name"] for r in read_seed_list(spark, str(p)).collect()]
     assert sorted(got) == ["Ebola Virus Disease", "Usher Syndrome"]
+
+
+def test_footer_schema_matches_spark_inference(spark, fixture_dir):
+    """read_fixture's footer schema equals the schema Spark infers itself,
+    on every query table at the oracle scale and every KG fixture table; a
+    tz-naive parquet timestamp is timestamp_ntz on both sides."""
+    from robokop_build_spark.plans.benchmark_queries import DRIVER_SF_DIR as sf_dir
+
+    tables = [
+        (sf_dir, os.path.basename(p)[: -len(".parquet")])
+        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))
+    ] + [(fixture_dir, t) for t in FIXTURE_TABLES]
+    assert len(tables) == 10 + len(FIXTURE_TABLES)
+    for d, name in tables:
+        inferred = spark.read.parquet(os.path.join(d, f"{name}.parquet")).schema
+        assert read_fixture(spark, d, name).schema == inferred, name

@@ -226,19 +226,6 @@ def test_ivf_recall_gate_on_driver_corpus(spark, sf_dir):
     assert recall >= 0.9, f"recall {recall} (scan {scan_frac:.3f})"
 
 
-def test_ivf_kernels_agree(spark, emb_df, vecs):
-    """The Arrow matmul assignment kernel must produce exactly the fold
-    kernel's output (numpy pairwise summation differs at ~1e-15, nine
-    orders under the 6dp rounding that feeds every argmin/tie)."""
-    from robokop_build_spark.operators import similarity as S
-
-    cents = S.ivf_train_centroids(vecs, nlist=6)
-    queries = emb_df.filter(emb_df.vec_id < 8)
-    fold = S.ivf_topk(emb_df, queries, cents, k=4, nprobe=3, kernel="fold")
-    mm = S.ivf_topk(emb_df, queries, cents, k=4, nprobe=3, kernel="matmul")
-    assert sorted(map(tuple, fold.collect())) == sorted(map(tuple, mm.collect()))
-
-
 def test_ivf_exact_calibration_matches_independent_replay(spark):
     """ivf_calibrate_nprobe_exact's returned recall must be TRUE by
     construction: replay the capture test in numpy over the full corpus
@@ -293,6 +280,44 @@ def test_ivf_exact_calibration_matches_independent_replay(spark):
     assert abs(hits / tot - recall) < 1e-9
 
 
+@pytest.mark.parametrize(
+    "bad", [None, [], [1.0, 2.0], [0.0] * DIM], ids=["null", "empty", "short", "zero"]
+)
+def test_degenerate_vector_fails_nothing_and_leaves_other_rows(
+    spark, emb_df, vecs, bad
+):
+    """A null, empty, short or zero-norm vector fails neither ivf_topk (as
+    a corpus row or as a query) nor semantic_dedup, and every other row's
+    result equals the run without it. Such a vector has no cell: as a
+    query it probes cells 0..nprobe-1 and its rows score null."""
+    from robokop_build_spark.operators import similarity as S
+
+    cents = S.ivf_train_centroids(vecs, nlist=6)
+    bad_df = spark.createDataFrame([(N, bad)], emb_df.schema)
+    with_bad = emb_df.unionByName(bad_df)
+    queries = emb_df.filter(emb_df.vec_id < 8)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def topk(corpus, q):
+        return rows(S.ivf_topk(corpus, q, cents, k=4, nprobe=3))
+
+    clean = topk(emb_df, queries)
+    assert topk(with_bad, queries) == clean
+    got = topk(emb_df, queries.unionByName(bad_df))
+    assert [r for r in got if r[0] != N] == clean
+    assert [(r[1], r[3]) for r in got if r[0] == N] == [
+        (i, None) for i in range(1, 5)
+    ]
+    probed = S._probe_pairs(bad_df, cents, nprobe=3).select("cid").collect()
+    assert sorted(r["cid"] for r in probed) == [0, 1, 2]
+
+    dedup = rows(S.semantic_dedup(emb_df, cents, threshold=0.6))
+    assert dedup
+    assert rows(S.semantic_dedup(with_bad, cents, threshold=0.6)) == dedup
+
+
 def test_semantic_dedup_keeper_election(spark):
     """SemDeDup contract on a hand-crafted corpus: within a cell, every row
     with a >=threshold neighbor of LOWER centroid-cosine is dropped, the
@@ -333,66 +358,6 @@ def test_semantic_dedup_keeper_election(spark):
 
     assert out[1]["score"] == cos(1, 2)
     assert out[4]["score"] == cos(4, 5)
-
-
-def test_semantic_dedup_kernels_agree(spark):
-    """The arrow (per-cell GEMM) kernel must produce row-identical output
-    to the fold (JVM, oracle-parity) kernel on the real fixture corpus."""
-    from robokop_build_spark.operators.similarity import semantic_dedup
-    from robokop_build_spark.plans.benchmark_queries import _ivf_centroids_for
-
-    sf = "/root/testdata/sf0.1"
-    cents = _ivf_centroids_for(sf)
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    fold = sorted(
-        map(tuple, semantic_dedup(emb, cents, threshold=0.4).collect())
-    )
-    arrow = sorted(
-        map(tuple, semantic_dedup(emb, cents, threshold=0.4, pairwise="arrow").collect())
-    )
-    assert len(fold) > 0
-    assert fold == arrow
-
-
-def test_semantic_dedup_hot_cell_guard(spark):
-    """Adversarial all-one-cell corpus: every vector lands in cell 0, so the
-    unguarded arrow path would run one n×n GEMM in a single task. With
-    max_cell_size the cell splits into deterministic id-hash sub-buckets:
-    the op completes, every reported drop is a genuine >=threshold pair,
-    and every emitted pair's members share a sub-bucket (the declared
-    recall trade). max_cell_size=None stays row-identical to fold."""
-    import numpy as np
-
-    from robokop_build_spark.operators.similarity import semantic_dedup
-
-    rng = np.random.default_rng(7)
-    n = 600
-    base = rng.normal(size=(n, 8))
-    # plant near-duplicates so there is something to drop
-    base[n // 2 :: 7] = base[: (n - n // 2 - 1) // 7 + 1] + 0.01
-    cents = [[1.0] + [0.0] * 7]  # single centroid -> single cell
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in base[i]]) for i in range(n)],
-        "vec_id bigint, embedding array<float>",
-    )
-    guarded = semantic_dedup(
-        emb, cents, threshold=0.99, pairwise="arrow", max_cell_size=100
-    ).collect()
-    exact = semantic_dedup(emb, cents, threshold=0.99, pairwise="arrow").collect()
-    assert len(exact) > 0
-    exact_pairs = {(r["id"], r["dup_of"]) for r in exact}
-    # guarded drops are a subset of the exact drops' id space and every
-    # guarded (id, dup_of) pair is a genuine near-dup pair in-bucket
-    vec = {i: base[i] for i in range(n)}
-
-    def cos(a, b):
-        va, vb = vec[a], vec[b]
-        return float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
-
-    for r in guarded:
-        assert cos(r["id"], r["dup_of"]) >= 0.98  # float32/round slack
-    # sub-bucketing loses only cross-bucket pairs: guarded count <= exact
-    assert 0 < len(guarded) <= len(exact)
 
 
 def test_ivf_param_cache_exact_flag(spark, tmp_path):
