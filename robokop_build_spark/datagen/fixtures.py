@@ -10,7 +10,7 @@ regardless of generation parallelism.
 
 Deliberate stress features (per BASELINE.json north_rule):
 - 3 hub entities receive ~5%% of all mention occurrences and 150 aliases each
-  (exercises the salted normalization join);
+  (exercises hub-key skew on the alias join);
 - normalization map contains synonym chains (a→b→canonical) and rings
   (exercises the connected-components fixpoint);
 - docs with zero spans, duplicate span texts, empty text for media spans

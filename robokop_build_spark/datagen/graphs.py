@@ -16,8 +16,8 @@ comparison (no driver-side ground truth needed):
   ids (xxhash64-selected) — mixes star-ish fan-in into the chains.
 - hub edges: every block whose index b satisfies b % hub_stride == 1 links
   its head to node 0 — one giant skewed component spanning ~n/hub_stride
-  of the graph plus many small ones, exercising the skew the salted /
-  AQE paths are designed for.
+  of the graph plus many small ones, exercising hub skew in the
+  distributed CC rounds.
 
 Expected representative (min member of the component):
   rep(i) = SYN:0 if block(i) == 0 or block(i) % hub_stride == 1

@@ -12,16 +12,15 @@ thing #1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import LoopCheckpointer, input_fingerprint
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+# Above this many alias edges connected components leave the single-process
+# union-find for the distributed large-star/small-star loop (the pipeline
+# reads the count from the normalization table's parquet footer).
+LOCAL_CC_MAX_ALIASES = 2_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -92,7 +91,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 30,
     strategy: str = "auto",
-    local_threshold: int = 2_000_000,
     stats: dict | None = None,
     manager=None,
     stage: str = "connected_components",
@@ -103,8 +101,8 @@ def connected_components(
     Scale-adaptive: a dimension-sized edge list (the usual normalization
     map) is solved with a driver union-find — the same judgment call as
     broadcasting a small join side; paying ~6 shuffle rounds of scheduler
-    latency per iteration for 10^4 edges is pure overhead. Above the
-    threshold, alternating large-star/small-star rounds (O(log n)
+    latency per iteration for 10^4 edges is pure overhead. Above
+    LOCAL_CC_MAX_ALIASES edges, alternating large-star/small-star rounds (O(log n)
     convergence), each localCheckpointed to cut lineage — the driver
     fixpoint loop Catalyst cannot express (SURVEY.md §4 custom piece #2).
     Both paths produce the identical deterministic min-member mapping.
@@ -120,7 +118,6 @@ def connected_components(
     from pyspark import StorageLevel
 
     from ..caching import register_persisted
-    from .iterate import LoopCheckpointer, input_fingerprint
 
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -140,7 +137,7 @@ def connected_components(
     )
     if strategy == "auto":
         n_e = fp[0] if fp is not None else e.count()
-        strategy = "local" if n_e <= local_threshold else "distributed"
+        strategy = "local" if n_e <= LOCAL_CC_MAX_ALIASES else "distributed"
     if strategy == "local":
         rep_map = _local_union_find(
             [(r["src"], r["dst"]) for r in e.collect()]
@@ -173,7 +170,7 @@ def connected_components(
     for i in range(start, max_iter):
         t0 = time.time()
         cur = ckpt.save(i, _small_star(_large_star(cur)))
-        fp = _fingerprint(cur)
+        fp = input_fingerprint(cur, ["src", "dst"])
         iter_secs.append(round(time.time() - t0, 3))
         iter_edges.append(fp[0])
         if fp == prev_fp:
@@ -275,99 +272,29 @@ def canonical_map(
     return reps.join(meta_df, "rep").select("curie", "rep", "node_type", "name")
 
 
-def _broadcast_budget_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (-1 → disabled)."""
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-    mult = 1
-    low = raw.lower().strip()
-    # Spark accepts both '10m' and '10mb' (ditto k/g/t); parse all forms —
-    # a silent fallback here would mis-gate every auto-broadcast decision
-    for suf, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
-        ("b", 1),
-    ):
-        if low.endswith(suf):
-            low = low[: -len(suf)]
-            mult = m
-            break
-    try:
-        return int(float(low) * mult)
-    except ValueError:
-        return 10 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate for a DataFrame (file-size based for
-    parquet-backed stages — exactly what the broadcast planner would see)."""
-    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-
-
-def _fits_broadcast_budget(df: DataFrame) -> bool:
-    """Whether df's measured Catalyst size fits the session broadcast budget
-    (never when broadcasting is disabled)."""
-    budget = _broadcast_budget_bytes(df.sparkSession)
-    return budget > 0 and _plan_size_bytes(df) <= budget
-
-
-def maybe_broadcast(df: DataFrame):
-    """F.broadcast(df) while the measured Catalyst size fits the session
-    broadcast budget; otherwise return df unhinted and let AQE pick the
-    strategy from runtime stats. For joins whose small side scales with the
-    ENTITY graph (rep metadata, equivalent-identifier sets, authority
-    labels): dimension-sized today, but at web scale they grow with the
-    ontology (10^7-10^8 reps) and a hard hint would OOM the driver."""
-    return F.broadcast(df) if _fits_broadcast_budget(df) else df
-
-
 def resolve_aliases(
     fact: DataFrame,
     rep_map: DataFrame,
     key: str,
     out: str = "rep",
-    strategy: str = "auto",
-    nsalt: int = 8,
-    salt_source: Column | None = None,
     carry: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Map fact[key] (a CURIE) to its canonical representative.
+    """Map fact[key] (a CURIE) to its canonical representative; an alias
+    outside the map keeps its own id.
 
     carry: extra rep_map columns to attach in the same join, as
     {rep_map column: output name}; null where the alias is unknown.
 
-    strategy='auto' (default): measure the rep map's Catalyst size estimate
-    at plan time and broadcast while it fits the session's
-    autoBroadcastJoinThreshold, else fall back to the salted shuffle — at
-    100 TB the alias map can outgrow the broadcast budget mid-pipeline and a
-    hard-coded hint would either OOM the driver or silently shuffle-join
-    with hub-key skew.
-    strategy='broadcast': map-side join — the right call while the alias map
-    is dimension-sized (no shuffle, no skew possible).
-    strategy='salted': for when the map outgrows broadcast at 10^12-doc
-    scale — replicate the map ×nsalt and spread fact rows of the same hot key
-    (hub entity) across salt buckets, so no single shuffle partition owns a
-    hub (SURVEY.md §4 custom piece #1). AQE skew-join remains the backstop.
+    One unhinted left join: the planner broadcasts the map while its size
+    estimate fits autoBroadcastJoinThreshold (dimension-sized maps: no
+    shuffle, no skew possible); beyond it the join is a sort-merge join and
+    AQE's skew join (session.py) splits a hub entity's oversized partition
+    from measured partition sizes (SURVEY.md §4 custom piece #1).
     """
-    if strategy == "auto":
-        strategy = "broadcast" if _fits_broadcast_budget(rep_map) else "salted"
     mapped = rep_map.select(
         F.col("curie").alias("__alias"),
         F.col("rep").alias(out),
         *(F.col(c).alias(a) for c, a in (carry or {}).items()),
     )
-    if strategy == "broadcast":
-        joined = fact.join(F.broadcast(mapped), fact[key] == F.col("__alias"), "left")
-    elif strategy == "salted":
-        salted_map = mapped.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1)))
-        )
-        src = salt_source if salt_source is not None else F.xxhash64(*fact.columns)
-        fact_s = fact.withColumn("__salt", F.pmod(src, F.lit(nsalt)).cast("int"))
-        joined = fact_s.join(
-            salted_map,
-            (fact_s[key] == F.col("__alias")) & (fact_s["__salt"] == salted_map["__salt"]),
-            "left",
-        ).drop("__salt")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    joined = fact.join(mapped, fact[key] == F.col("__alias"), "left")
     return joined.withColumn(out, F.coalesce(F.col(out), fact[key])).drop("__alias")

@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .canonicalize import maybe_broadcast
-
 TRIPLE_MERGE_KEY = ["subj", "obj", "edge_source"]
 
 
@@ -121,11 +119,9 @@ def build_nodes(
     )
     empty_mesh = F.array().cast("array<struct<curie:string,label:string>>")
     empty_map = F.create_map().cast("map<string,string>")
-    return ids.join(
-        # members scales with the entity graph (one row per rep, carrying
-        # synonym/mesh arrays) — budget-gated broadcast, AQE above budget
-        maybe_broadcast(members), ids["id"] == members["rep"], "left"
-    ).select(
+    # members scales with the entity graph (one row per rep, carrying
+    # synonym/mesh arrays): no hint, the planner broadcasts it while it fits
+    return ids.join(members, ids["id"] == members["rep"], "left").select(
         "id",
         # non-empty sentinel: the node table is partitionBy(node_type), and
         # an empty-string partition value round-trips as NULL through
@@ -181,8 +177,8 @@ def enhance_nodes(
         auth = label_lookup.select(
             F.col("curie").alias("id"), F.col("label").alias("__auth_label")
         )
-        # authority labels are entity-scale at web size — budget-gated
-        out = out.join(maybe_broadcast(auth), "id", "left")
+        # authority labels are entity-scale at web size: no hint
+        out = out.join(auth, "id", "left")
     else:
         out = out.withColumn("__auth_label", F.lit(None).cast("string"))
     named = out.withColumn(

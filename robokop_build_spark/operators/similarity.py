@@ -241,10 +241,13 @@ def embedding_near_duplicates(
         import pandas as pd
 
         for pdf in batches:
-            if not len(pdf):
+            # a degenerate vector (_valid_vectors) gets no signature, so it
+            # is never a candidate
+            ok, X = _valid_vectors(pdf[vec_col].to_numpy(), dim)
+            if not len(X):
                 continue
+            pdf = pdf[ok]
             vecs = pdf[vec_col]
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
             nrm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
             for t in range(n_tables):
                 # sequential-order dots: cumsum along dim == the JVM fold
@@ -291,7 +294,10 @@ def embedding_near_duplicates(
     return (
         a.join(b, ["tbl", "sig"])
         .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn("score", F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 6))
+        .withColumn(
+            "score",
+            F.round(F.try_divide(dot, F.col("a.nrm") * F.col("b.nrm")), 6),
+        )
         .filter(F.col("score") >= threshold)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "score")
         .distinct()
@@ -509,7 +515,7 @@ def _valid_vectors(vecs, dim: int):
     ok = np.array([v is not None and len(v) == dim for v in vecs], dtype=bool)
     if not ok.any():
         return ok, np.empty((0, dim))
-    X = np.stack(vecs[ok]).astype(np.float64)
+    X = np.stack([v for v, keep in zip(vecs, ok) if keep]).astype(np.float64)
     nonzero = (X * X).sum(axis=1) > 0
     ok[ok] = nonzero
     return ok, X[nonzero]
@@ -668,25 +674,27 @@ def ivf_calibrate_nprobe_exact(
     q = embeddings.filter(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(step)) == 0
     )
-    truth = brute_force_topk(embeddings, q, id_col, vec_col, k=k).collect()
+    # a degenerate vector (_valid_vectors) scores null as a query or as a
+    # neighbor; it has no cell and stays out of the calibration
+    truth = [
+        r
+        for r in brute_force_topk(embeddings, q, id_col, vec_col, k=k).collect()
+        if r["score"] is not None
+    ]
     if not truth:
         return len(centroids), 1.0, 1.0
     nbr_ids = sorted({r["neighbor_id"] for r in truth})
     nlist = len(centroids)
 
     def cells_of(rows):
-        X = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
-        return _cell_distances(X, centroids)
+        ok, X = _valid_vectors([r[vec_col] for r in rows], len(centroids[0]))
+        return [r for r, keep in zip(rows, ok) if keep], _cell_distances(X, centroids)
 
-    nbr_rows = embeddings.filter(F.col(id_col).isin(nbr_ids)).select(
-        id_col, vec_col
-    ).collect()
-    nbr_cell = {
-        r[id_col]: int(c)
-        for r, c in zip(nbr_rows, cells_of(nbr_rows).argmin(axis=1))
-    }
-    q_rows = q.select(id_col, vec_col).collect()
-    dq = cells_of(q_rows)
+    nbr_rows, dn = cells_of(
+        embeddings.filter(F.col(id_col).isin(nbr_ids)).select(id_col, vec_col).collect()
+    )
+    nbr_cell = {r[id_col]: int(c) for r, c in zip(nbr_rows, dn.argmin(axis=1))}
+    q_rows, dq = cells_of(q.select(id_col, vec_col).collect())
     probe_order = {
         r[id_col]: np.argsort(dq[i], kind="stable")
         for i, r in enumerate(q_rows)
@@ -694,6 +702,7 @@ def ivf_calibrate_nprobe_exact(
     pop = dict.fromkeys(range(nlist), 0)
     for row in (
         ivf_assign(embeddings, centroids, id_col, vec_col)
+        .filter(F.col("cid").isNotNull())
         .groupBy("cid").count().collect()
     ):
         pop[int(row["cid"])] = int(row["count"])

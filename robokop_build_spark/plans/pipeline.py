@@ -38,7 +38,11 @@ from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonical_map, resolve_aliases
+from ..operators.canonicalize import (
+    LOCAL_CC_MAX_ALIASES,
+    canonical_map,
+    resolve_aliases,
+)
 from ..operators.expand import (
     aggregate_program_triples,
     canonicalize_predicate_map,
@@ -59,10 +63,10 @@ from .query import enumerate_programs, tokenize_path
 
 DGX_PATH = ["disease", "gene", "genetic_condition"]
 
-# Scale gates, read from parquet footer row counts (metadata only, no job).
-# Connected components of the normalization map: a single-process union-find
-# up to this many aliases, the distributed large-star/small-star loop above.
-LOCAL_CC_MAX_ALIASES = 2_000_000
+# Scale gates, read from parquet footer row counts (metadata only, no job):
+# LOCAL_CC_MAX_ALIASES (operators/canonicalize) for the connected components
+# of the normalization map, COMMIT_INTERMEDIATES_MIN_DOCS below.
+
 # Durable commit cadence (rounds) of the distributed CC loop
 # (operators/iterate.LoopCheckpointer): the measured 2.8-5.0%-overhead
 # cadence (BENCH §0h). A preempted canonicalization resumes from the last
@@ -130,22 +134,14 @@ class _Query:
     end_reps: list[str] | None
 
 
-def link_doc_entities(
-    mentions: DataFrame, rep_map: DataFrame, strategy: str = "auto"
-) -> DataFrame:
+def link_doc_entities(mentions: DataFrame, rep_map: DataFrame) -> DataFrame:
     """(doc_id, rep, node_type, orig): every mention's canonical rep, typed
     by its component's node_type (the component's metadata wins, as in
     reference synonymization), or by the mention's own type for an alias
     outside the map. One alias join carries both: canonical_map writes the
     component's node_type on every row of the component."""
     resolved = resolve_aliases(
-        mentions,
-        rep_map,
-        "curie",
-        out="rep",
-        strategy=strategy,
-        salt_source=F.xxhash64("doc_id"),
-        carry={"node_type": "rep_type"},
+        mentions, rep_map, "curie", out="rep", carry={"node_type": "rep_type"}
     )
     return resolved.select(
         "doc_id",

@@ -44,8 +44,8 @@ def get_spark(
         .config("spark.local.dir", local_dir)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
-        # AQE: runtime re-plan, partition coalescing, skew-join splitting —
-        # the backstop for hub-entity skew (SURVEY.md §4 custom piece #1).
+        # AQE: runtime re-plan, partition coalescing, skew-join splitting of
+        # a hub entity's alias-join partition (SURVEY.md §4 custom piece #1).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -169,21 +169,6 @@ def test_manifest_stats_in_commit_marker(spark, ckpt):
     assert ckpt._pointer("s")["n_rows"] == 3
 
 
-def test_broadcast_budget_suffix_parsing(spark):
-    from robokop_build_spark.operators.canonicalize import _broadcast_budget_bytes
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        for raw, want in [
-            ("10485760", 10 << 20), ("10MB", 10 << 20), ("10m", 10 << 20),
-            ("512k", 512 << 10), ("1g", 1 << 30), ("-1", -1),
-        ]:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
-            assert _broadcast_budget_bytes(spark) == want, raw
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 # ---------------------------------------------------------------------------
 # manifest-planned reads: the stats in the commit marker drive the scan, not
 # directory listings (the Iceberg scan-planning half)

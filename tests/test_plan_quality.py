@@ -46,20 +46,20 @@ def test_alias_resolution_broadcasts(spark, tmp_path):
     fact = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
         F.col("source").alias("curie")
     )
-    plan = _plan(resolve_aliases(fact, rep_map, "curie", strategy="broadcast"))
-    assert "BroadcastHashJoin" in plan
-
-    # 'auto' (the pipeline default) broadcasts a parquet-backed map whose
-    # measured size fits the budget — but goes salted for an in-memory map
-    # with no size estimate (conservative: never broadcast what you can't
-    # size; Catalyst's default estimate for ExistingRDD is 'huge')
+    # a parquet-backed map (the pipeline's committed rep_map) is sized from
+    # its files and broadcast at plan time
     rep_map.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "rm"))
-    plan_auto = _plan(
+    plan = _plan(
         resolve_aliases(fact, spark.read.parquet(str(tmp_path / "rm")), "curie")
     )
-    assert "BroadcastHashJoin" in plan_auto
-    plan_unsized = _plan(resolve_aliases(fact, rep_map, "curie"))
-    assert "__salt" in plan_unsized
+    assert "BroadcastHashJoin" in plan
+    # an in-memory map has no size estimate: the plan starts as a sort-merge
+    # join and AQE broadcasts the map once its shuffle has measured it
+    unsized = resolve_aliases(fact, rep_map, "curie")
+    assert "BroadcastHashJoin" not in _plan(unsized)
+    unsized.collect()
+    final = _plan(unsized).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final and "BroadcastHashJoin" in final
 
 
 def test_aggregation_has_partial_combine(spark):
@@ -86,25 +86,43 @@ def test_text_ops_python_boundary_is_arrow_only(spark):
     assert "round(" in plan and "__stop" in plan
 
 
-def test_salted_join_spreads_hot_keys(spark):
-    """The salted variant joins on (alias, salt): same hot alias lands in
-    nsalt different buckets."""
+def test_alias_join_hub_key_split_by_aqe_skew_join(spark):
+    """Beyond the broadcast budget the alias join is a sort-merge join, and
+    AQE's skew join (session.py) splits a hub entity's partition: with
+    broadcasting off and the skew thresholds lowered to this input's size,
+    the final plan is a skew-split SortMergeJoin and every row resolves."""
     from robokop_build_spark.operators.canonicalize import resolve_aliases
 
-    rep_map = spark.createDataFrame([("hub", "R")], ["curie", "rep"])
+    rep_map = spark.createDataFrame(
+        [("hub", "R")] + [(f"a{i}", f"R{i}") for i in range(400)], ["curie", "rep"]
+    )
     fact = spark.createDataFrame(
-        [(f"d{i}", "hub") for i in range(64)], ["doc_id", "curie"]
+        [(f"d{i}", f"a{i % 400}" if i % 50 == 0 else "hub") for i in range(20_000)],
+        ["doc_id", "curie"],
     )
-    out = resolve_aliases(
-        fact, rep_map, "curie", strategy="salted", nsalt=8,
-        salt_source=F.xxhash64("doc_id"),
+    conf = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+    }
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        out = resolve_aliases(fact, rep_map, "curie")
+        rows = out.collect()
+        final = _plan(out).split("== Initial Plan ==")[0]
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "SortMergeJoin(skew=true)" in final and "LeftOuter" in final
+    assert sorted((r["doc_id"], r["rep"]) for r in rows) == sorted(
+        (f"d{i}", f"R{i % 400}" if i % 50 == 0 else "R") for i in range(20_000)
     )
-    assert all(r["rep"] == "R" for r in out.collect())
-    salts = (
-        fact.withColumn("s", F.pmod(F.xxhash64("doc_id"), F.lit(8)))
-        .select("s").distinct().count()
-    )
-    assert salts >= 6  # hot key actually spread across buckets
 
 
 def test_publications_window_sorts_only_deduped_rows(spark):
@@ -267,15 +285,11 @@ def test_bm25_plan_has_no_explode_and_broadcasts_stats(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "salted"])
-def test_doc_entities_single_alias_join(spark, strategy):
+def test_doc_entities_single_alias_join(spark):
     """The alias join carries the component's node_type, so doc_entities
     needs at least one Exchange fewer than resolving the rep and then joining the
     distinct (rep, node_type) metadata in a second join."""
-    from robokop_build_spark.operators.canonicalize import (
-        maybe_broadcast,
-        resolve_aliases,
-    )
+    from robokop_build_spark.operators.canonicalize import resolve_aliases
     from robokop_build_spark.plans.pipeline import link_doc_entities
 
     rep_map = spark.createDataFrame(
@@ -287,13 +301,10 @@ def test_doc_entities_single_alias_join(spark, strategy):
         "doc_id long, curie string, node_type string",
     )
     # the two-join form: resolve, then a distinct rep -> node_type join
-    resolved = resolve_aliases(
-        mentions, rep_map, "curie", out="rep", strategy=strategy,
-        salt_source=F.xxhash64("doc_id"),
-    )
+    resolved = resolve_aliases(mentions, rep_map, "curie", out="rep")
     meta = rep_map.select("rep", F.col("node_type").alias("rep_type")).distinct()
     two_joins = (
-        resolved.join(maybe_broadcast(meta), "rep", "left")
+        resolved.join(meta, "rep", "left")
         .select(
             "doc_id",
             "rep",
@@ -302,7 +313,7 @@ def test_doc_entities_single_alias_join(spark, strategy):
         )
         .distinct()
     )
-    one_join = link_doc_entities(mentions, rep_map, strategy=strategy)
+    one_join = link_doc_entities(mentions, rep_map)
     n_one, n_two = _plan(one_join).count("Exchange"), _plan(two_joins).count("Exchange")
     assert n_one <= n_two - 1, (n_one, n_two)
     assert sorted(tuple(r) for r in one_join.collect()) == sorted(

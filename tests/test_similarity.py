@@ -287,9 +287,11 @@ def test_degenerate_vector_fails_nothing_and_leaves_other_rows(
     spark, emb_df, vecs, bad
 ):
     """A null, empty, short or zero-norm vector fails neither ivf_topk (as
-    a corpus row or as a query) nor semantic_dedup, and every other row's
-    result equals the run without it. Such a vector has no cell: as a
-    query it probes cells 0..nprobe-1 and its rows score null."""
+    a corpus row or as a query), semantic_dedup, embedding_near_duplicates
+    nor ivf_calibrate_nprobe_exact, and every other row's result equals the
+    run without it. Such a vector has no cell: as a query it probes cells
+    0..nprobe-1 and its rows score null. It has no LSH signature either,
+    so it is never a near-dup candidate."""
     from robokop_build_spark.operators import similarity as S
 
     cents = S.ivf_train_centroids(vecs, nlist=6)
@@ -316,6 +318,21 @@ def test_degenerate_vector_fails_nothing_and_leaves_other_rows(
     dedup = rows(S.semantic_dedup(emb_df, cents, threshold=0.6))
     assert dedup
     assert rows(S.semantic_dedup(with_bad, cents, threshold=0.6)) == dedup
+
+    # one-bit signatures share a bucket with about half the corpus per table
+    def near_dups(corpus):
+        return rows(
+            S.embedding_near_duplicates(corpus, dim=DIM, bits_per_table=1)
+        )
+
+    assert (0, 1, pytest.approx(1.0, abs=0.01)) in near_dups(emb_df)
+    assert near_dups(with_bad) == near_dups(emb_df)
+
+    # n_rows=N: every row, the degenerate one too, is a calibration query
+    def calibrate(corpus):
+        return S.ivf_calibrate_nprobe_exact(corpus, cents, n_rows=N)
+
+    assert calibrate(with_bad) == calibrate(emb_df)
 
 
 def test_semantic_dedup_keeper_election(spark):
