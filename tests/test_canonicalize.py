@@ -54,6 +54,75 @@ def test_hub_star(spark, strategy):
     assert all(v == "ALIAS:0000" for v in got.values())
 
 
+@cc_strategies
+def test_resolve_aliases_broadcast_vs_salted(spark, strategy):
+    """A hub rep map from either CC path resolves to the same rows whether
+    the planner broadcasts it or, with broadcasting off, sort-merge joins it
+    — the join that covers a hub key beyond the budget now that the salted
+    branch is gone (AQE's skew join splits its partition) — and a miss keeps
+    its own id."""
+    pairs = [(f"a{i}", "hub") for i in range(40)] + [("b1", "b2")]
+    rep_map = connected_components(
+        spark.createDataFrame(pairs, ["src", "dst"]), strategy=strategy
+    )
+    fact = spark.createDataFrame(
+        [(f"d{i}", f"a{i % 40}") for i in range(200)]
+        + [("h", "hub"), ("b", "b2"), ("z", "zz")],
+        ["doc_id", "curie"],
+    )
+    want = sorted(
+        [(f"d{i}", "a0") for i in range(200)]
+        + [("h", "a0"), ("b", "b1"), ("z", "zz")]
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    got = {}
+    try:
+        for budget in ("10MB", "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", budget)
+            out = resolve_aliases(fact, rep_map, "curie")
+            got[budget] = sorted((r["doc_id"], r["rep"]) for r in out.collect())
+            got[budget, "plan"] = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "SortMergeJoin" in got["-1", "plan"]
+    assert "BroadcastHashJoin" not in got["-1", "plan"]
+    assert got["10MB"] == got["-1"] == want
+
+
+@cc_strategies
+def test_resolve_aliases_auto_flips_strategy_without_output_change(
+    spark, strategy, tmp_path
+):
+    """The rep map each CC path commits is broadcast under a roomy budget
+    and sort-merge joined under a 1-byte budget: the planner flips the join
+    on its own size estimate, and the rows do not change."""
+    pairs = [(f"A:{i}", f"A:{i // 5 * 5}") for i in range(100)]
+    connected_components(
+        spark.createDataFrame(pairs, ["src", "dst"]), strategy=strategy
+    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "rep_map"))
+    rep_map = spark.read.parquet(str(tmp_path / "rep_map"))
+    fact = spark.createDataFrame(
+        [(f"d{i}", f"A:{i % 110}") for i in range(600)], ["doc_id", "curie"]
+    )
+    want = sorted(
+        (f"d{i}", f"A:{i % 110 // 5 * 5}" if i % 110 < 100 else f"A:{i % 110}")
+        for i in range(600)
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    got = {}
+    try:
+        for budget in ("10MB", "1b"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", budget)
+            out = resolve_aliases(fact, rep_map, "curie")
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            got[budget] = plan, sorted((r["doc_id"], r["rep"]) for r in out.collect())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" in got["10MB"][0]
+    assert "SortMergeJoin" in got["1b"][0]
+    assert got["10MB"][1] == got["1b"][1] == want
+
+
 def test_resolve_aliases_budget_picks_join_with_identical_rows(spark, tmp_path):
     """resolve_aliases is one unhinted left join: a roomy broadcast budget
     plans a BroadcastHashJoin, a 1-byte budget a SortMergeJoin, and the

@@ -285,17 +285,22 @@ def test_bm25_plan_has_no_explode_and_broadcasts_stats(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_doc_entities_single_alias_join(spark):
+@pytest.mark.parametrize("join", ["broadcast", "salted"])
+def test_doc_entities_single_alias_join(spark, join, tmp_path):
     """The alias join carries the component's node_type, so doc_entities
     needs at least one Exchange fewer than resolving the rep and then joining the
-    distinct (rep, node_type) metadata in a second join."""
+    distinct (rep, node_type) metadata in a second join. 'broadcast' plans
+    under the session budget; 'salted' turns broadcasting off, the case the
+    salted alias join once covered and a sort-merge join now plans."""
     from robokop_build_spark.operators.canonicalize import resolve_aliases
     from robokop_build_spark.plans.pipeline import link_doc_entities
 
-    rep_map = spark.createDataFrame(
+    # parquet-backed, as the pipeline's committed rep_map: sized from its files
+    spark.createDataFrame(
         [("A:1", "A:1", "disease", "a"), ("B:1", "A:1", "disease", "a")],
         "curie string, rep string, node_type string, name string",
-    )
+    ).write.parquet(str(tmp_path / "rep_map"))
+    rep_map = spark.read.parquet(str(tmp_path / "rep_map"))
     mentions = spark.createDataFrame(
         [(i, "B:1", "gene") for i in range(20)] + [(99, "C:9", "gene")],
         "doc_id long, curie string, node_type string",
@@ -314,8 +319,17 @@ def test_doc_entities_single_alias_join(spark):
         .distinct()
     )
     one_join = link_doc_entities(mentions, rep_map)
-    n_one, n_two = _plan(one_join).count("Exchange"), _plan(two_joins).count("Exchange")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        if join == "salted":
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan_one, plan_two = _plan(one_join), _plan(two_joins)
+        rows = one_join.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert ("BroadcastHashJoin" in plan_one) == (join == "broadcast")
+    n_one, n_two = plan_one.count("Exchange"), plan_two.count("Exchange")
     assert n_one <= n_two - 1, (n_one, n_two)
-    assert sorted(tuple(r) for r in one_join.collect()) == sorted(
+    assert sorted(tuple(r) for r in rows) == sorted(
         [(i, "A:1", "disease", "B:1") for i in range(20)] + [(99, "C:9", "gene", "C:9")]
     )
