@@ -485,40 +485,15 @@ def _link_batch(scan: _BatchScan, emb_map):
     return curies.tolist(), ntypes.tolist(), scores
 
 
-def mention_frame(doc_ids, span_poss, span_offsets, texts, trie, emb_map):
-    """The full mention-UDF body, batch-vectorized end to end: detect →
-    link → column assembly. Returns a dict of equal-length columns
-    (doc_id, span_pos, span_offset, mention_start, surface, curie,
-    node_type, score) in the exact emit order — and the exact values — of
-    the scalar detect() + link_mentions() loop (parity-tested)."""
-    scan = _BatchScan(texts, trie)
-    n_m = len(scan.m_row)
-    m_row = np.asarray(scan.m_row, np.int64) if n_m else np.empty(0, np.int64)
-    curies, ntypes, scores = _link_batch(scan, emb_map)
-
-    doc_np = np.asarray(doc_ids, dtype=object)
-    pos_np = np.asarray(span_poss)
-    off_np = np.asarray(span_offsets)
-    return {
-        "doc_id": doc_np[m_row],
-        "span_pos": pos_np[m_row],
-        "span_offset": off_np[m_row],
-        "mention_start": np.asarray(scan.m_start, np.int64),
-        "surface": scan.m_surface,
-        "curie": curies,
-        "node_type": ntypes,
-        "score": scores,
-    }
-
-
 def mention_record_batch(batch, trie, emb_map):
-    """mention_frame over a pyarrow RecordBatch (doc_id, span_pos, offset,
-    text) → pyarrow RecordBatch in the mention-UDF schema. The Arrow-native
-    twin of mention_frame for mapInArrow: input columns are never converted
-    to pandas — texts go straight into the Arrow-kernel scan, and the
-    output doc_id/span_pos/span_offset columns are pc.take gathers on the
-    input buffers. Emission order and values are identical to
-    mention_frame (shared scan + _link_batch, parity-tested)."""
+    """The mention-UDF body for mapInArrow, batch-vectorized end to end:
+    detect → link → column assembly over a pyarrow RecordBatch (doc_id,
+    span_pos, offset, text) → pyarrow RecordBatch in the mention-UDF
+    schema. Input columns are never converted to pandas — texts go straight
+    into the Arrow-kernel scan, and the output doc_id/span_pos/span_offset
+    columns are pc.take gathers on the input buffers. Emission order and
+    values are those of the scalar detect() + link_mentions() loop (the
+    shared _BatchScan is parity-tested through detect_batch)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -3,10 +3,13 @@ validation, lineage and metrics.
 
 Reference analog: export_node / export_edge over a Neo4j bolt session
 (builder/builder.py:76-96, 16-41). Spark-first: triples written
-partitionBy('pred') (partition pruning for per-predicate consumers);
-"delete old edge then create" (builder/builder.py:24-25) becomes an
-idempotent merge keyed on (subj, obj, edge_source) so resume never
-duplicates (SURVEY.md §7 hard thing #4).
+partitionBy('pred') (partition pruning for per-predicate consumers).
+Resume never duplicates (SURVEY.md §7 hard thing #4) because each stage
+commits atomically as a whole snapshot and a relaunch skips every stage
+that `CheckpointManager.is_done` reports, not because the build merges
+into earlier output. The reference's "delete old edge then create"
+(builder/builder.py:24-25) is `merge_triples`, an idempotent merge keyed
+on (subj, obj, edge_source) for sinks that accumulate across builds.
 """
 
 from __future__ import annotations
@@ -17,28 +20,15 @@ from pyspark.sql import functions as F
 TRIPLE_MERGE_KEY = ["subj", "obj", "edge_source"]
 
 
-class NullPredicateError(ValueError):
-    """standard_predicate_id IS NULL is fatal in the reference
-    (builder/builder.py:27-30) — modeled as a validation stage that fails
-    the job, not a silent drop (SURVEY.md §7 hard thing #5)."""
+def validate_triples(triples: DataFrame) -> DataFrame:
+    """Fatal NULL-key guard: standard_predicate_id IS NULL is fatal in the
+    reference (builder/builder.py:27-30) — modeled as a check that fails
+    the job, not a silent drop (SURVEY.md §7 hard thing #5).
 
-
-def validate_triples(triples: DataFrame, eager: bool = False) -> DataFrame:
-    """Fatal NULL-key guard.
-
-    Default (lazy): the check rides inside the write job itself — the key
-    columns are wrapped in a raise_error branch, so a NULL aborts the job at
-    the row that carries it with ZERO extra passes (the previous .count()
-    forced a full second scan of the fact table before every write).
-    eager=True keeps the old behavior (separate counting job, raises
-    NullPredicateError before any write starts) for callers that want the
-    typed error without an action."""
+    The check rides inside the write job itself: the key columns are
+    wrapped in a raise_error branch, so a NULL aborts the job at the row
+    that carries it with ZERO extra passes over the fact table."""
     bad = F.col("pred").isNull() | F.col("subj").isNull() | F.col("obj").isNull()
-    if eager:
-        n = triples.filter(bad).count()
-        if n:
-            raise NullPredicateError(f"{n} triples with NULL pred/subj/obj")
-        return triples
     msg = F.concat(
         F.lit("NullPredicateError: NULL pred/subj/obj in triple subj="),
         F.coalesce(F.col("subj"), F.lit("NULL")),
@@ -81,41 +71,31 @@ def build_nodes(
     - properties: open dict; mondo_identifiers (comma-joined MONDO members)
       for disease/genetic_condition components, mirroring builder.py:428-430.
     """
-    mesh_members = rep_map.filter(F.col("curie").startswith("MESH:")).select(
-        "rep", F.col("curie").alias("mesh_curie")
-    )
+    members = rep_map
+    label = F.lit("")
     if mesh_labels is not None:
-        mesh_members = mesh_members.join(
-            F.broadcast(mesh_labels.select("mesh_curie", "term_name")),
-            "mesh_curie",
-            "left",
-        )
-    else:
-        mesh_members = mesh_members.withColumn("term_name", F.lit(None).cast("string"))
-    mesh_agg = mesh_members.groupBy("rep").agg(
+        labels = mesh_labels.select(F.col("mesh_curie").alias("curie"), "term_name")
+        members = members.join(F.broadcast(labels), "curie", "left")
+        label = F.coalesce("term_name", label)
+    # one per-rep aggregate: collect_set skips the nulls that the prefix
+    # filters leave for non-MESH / non-MONDO members
+    members = members.groupBy("rep").agg(
+        F.array_sort(F.collect_set("curie")).alias("equivalent_identifiers"),
+        F.min("node_type").alias("node_type"),
+        F.min("name").alias("name"),
         F.array_sort(
             F.collect_set(
-                F.struct(
-                    F.col("mesh_curie").alias("curie"),
-                    F.coalesce("term_name", F.lit("")).alias("label"),
+                F.when(
+                    F.col("curie").startswith("MESH:"),
+                    F.struct(F.col("curie"), label.alias("label")),
                 )
             )
-        ).alias("mesh_identifiers")
-    )
-    mondo_agg = (
-        rep_map.filter(F.col("curie").startswith("MONDO:"))
-        .groupBy("rep")
-        .agg(F.array_sort(F.collect_set("curie")).alias("mondos"))
-    )
-    members = (
-        rep_map.groupBy("rep")
-        .agg(
-            F.array_sort(F.collect_set("curie")).alias("equivalent_identifiers"),
-            F.min("node_type").alias("node_type"),
-            F.min("name").alias("name"),
-        )
-        .join(mesh_agg, "rep", "left")
-        .join(mondo_agg, "rep", "left")
+        ).alias("mesh_identifiers"),
+        F.array_sort(
+            F.collect_set(
+                F.when(F.col("curie").startswith("MONDO:"), F.col("curie"))
+            )
+        ).alias("mondos"),
     )
     empty_mesh = F.array().cast("array<struct<curie:string,label:string>>")
     empty_map = F.create_map().cast("map<string,string>")

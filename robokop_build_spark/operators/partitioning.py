@@ -14,14 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_for_kernel(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition `df` up to defaultParallelism × factor when
-    its plan currently has fewer partitions; no-op otherwise (and for
-    streaming inputs, where partition math is per-microbatch)."""
+def widen_for_kernel(df: DataFrame) -> DataFrame:
+    """Round-robin repartition `df` up to defaultParallelism when its plan
+    currently has fewer partitions; no-op otherwise (and for streaming
+    inputs, where partition math is per-microbatch)."""
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism * factor
+    par = df.sparkSession.sparkContext.defaultParallelism
     try:
         cur = df.rdd.getNumPartitions()
     except Exception:

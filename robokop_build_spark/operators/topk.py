@@ -14,13 +14,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# phase-1 salt buckets per group: a hub group's rows spread over NSALT
+# partitions, and phase 2 aggregates at most NSALT × cap values per group
+NSALT = 16
+
 
 def capped_sorted_set(
     df: DataFrame,
     keys: list[str],
     val_col: str,
     cap: int,
-    nsalt: int = 16,
     out: str | None = None,
     skip_dedup: bool = False,
 ) -> DataFrame:
@@ -36,17 +39,17 @@ def capped_sorted_set(
     dedup correctness-wise, the flag only skips the extra shuffle.
 
     Phase 1 salts the group key by hash(val): a hub group's rows spread
-    across nsalt partitions, each keeping its own cap smallest distinct
+    across NSALT partitions, each keeping its own cap smallest distinct
     values (dense_rank so duplicates don't consume rank slots); the sort is
     streaming, never an in-memory set of the whole group. Phase 2
-    aggregates ≤ nsalt×cap distinct values per group — bounded regardless
+    aggregates ≤ NSALT×cap distinct values per group — bounded regardless
     of corpus size — and slices the global smallest cap.
     """
     out = out or val_col + "s"
     d = df.select(*keys, val_col)
     if not skip_dedup:
         d = d.distinct()
-    salt = F.pmod(F.xxhash64(F.col(val_col)), F.lit(nsalt)).cast("int")
+    salt = F.pmod(F.xxhash64(F.col(val_col)), F.lit(NSALT)).cast("int")
     w1 = Window.partitionBy(*keys, "_salt").orderBy(val_col)
     phase1 = (
         d.withColumn("_salt", salt)

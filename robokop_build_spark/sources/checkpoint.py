@@ -1,4 +1,4 @@
-"""Per-stage checkpointing with snapshot isolation + time travel.
+"""Per-stage checkpointing with snapshot isolation.
 
 Reference analog: the Redis memo cache (builder/builder.py:348-356) — here
 replaced by durable per-stage tables with Iceberg's commit contract,
@@ -10,17 +10,16 @@ actually depends on):
   `<stage>/snap-<n>/` and never touches previous snapshots' files.
 - **Atomic metadata-pointer swap**: the commit point is one atomic
   os.replace of `<stage>/_STAGE_COMMITTED`, whose JSON names the current
-  snapshot id + schema — exactly Iceberg's version-hint/metadata swap. A
-  reader that resolved the pointer before a re-commit keeps reading its
-  (untouched) snapshot: snapshot isolation without locks.
-- **Time travel**: `read(stage, snapshot_id=k)` / `snapshots(stage)` replay
-  any retained snapshot with its commit-time schema; `expire_snapshots`
-  is the retention sweep (never expires the current snapshot).
+  snapshot id, schema and manifest stats — exactly Iceberg's
+  version-hint/metadata swap. A reader that resolved the pointer before a
+  re-commit keeps reading its (untouched) snapshot: snapshot isolation
+  without locks. `expire_snapshots` is the retention sweep (never expires
+  the current snapshot).
 - **Resumability**: a killed job relaunches and skips every stage whose
-  pointer exists (north_rule "resumable from checkpoint") — unchanged.
+  pointer exists (north_rule "resumable from checkpoint").
 
-Legacy layout (data files at the stage root, marker without a "snapshot"
-field) remains readable, so pre-existing workdirs resume as before.
+The pointer is the only metadata file: the snapshot ids a stage holds are
+its `snap-*` directories on disk.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 MARKER = "_STAGE_COMMITTED"
-HISTORY = "_snapshots.jsonl"
 
 
 class CheckpointManager:
@@ -60,57 +58,39 @@ class CheckpointManager:
         commit) — None when the stage has never committed."""
         return self._pointer(stage)
 
-    def snapshots(self, stage: str) -> list[dict]:
-        """Commit history, oldest first: [{snapshot, ts, wall_sec, ...}].
+    def _snapshot_ids(self, stage: str) -> list[int]:
+        """Ids of the snapshot directories on disk, ascending — including a
+        directory no pointer names (a commit that crashed after its data
+        write), so that id is never reused."""
+        p = self.path(stage)
+        if not os.path.isdir(p):
+            return []
+        return sorted(
+            int(name[5:])
+            for name in os.listdir(p)
+            if name.startswith("snap-") and name[5:].isdigit()
+        )
 
-        A torn FINAL line is SKIPPED, not fatal: the history append is a
-        plain write (only the pointer swap is the atomic commit point), so a
-        crash mid-append leaves a half-written last JSON line. Raising there
-        would make the stage permanently unwritable — commit() calls this to
-        allocate the next id — for a crash the commit contract explicitly
-        tolerates (the torn row's snapshot never became current). An
-        undecodable line ANYWHERE ELSE is genuine corruption (partial disk
-        failure, concurrent writer) that must not silently vanish from the
-        audit surface, so it raises."""
-        hist = os.path.join(self.path(stage), HISTORY)
-        if not os.path.exists(hist):
-            meta = self._pointer(stage)
-            return [meta] if meta else []
-        with open(hist) as f:
-            lines = [ln for ln in f if ln.strip()]
-        out = []
-        for i, ln in enumerate(lines):
-            try:
-                out.append(json.loads(ln))
-            except json.JSONDecodeError:
-                if i == len(lines) - 1:
-                    continue  # torn trailing append (crash window)
-                raise ValueError(
-                    f"corrupt snapshot history for stage {stage!r}: "
-                    f"undecodable line {i + 1} of {len(lines)} in {hist} "
-                    "(mid-file corruption, not a torn trailing append)"
-                )
-        return out
+    def read(self, stage: str, partitions: list[str] | None = None) -> DataFrame:
+        """Read the current snapshot of a committed stage with its
+        commit-time schema.
 
-    def _commit_schema(self, meta: dict):
+        partitions: optional list of hive partition dirs (e.g.
+        ['pred=treats']) — the scan is planned from the commit marker's
+        partition manifest: named dirs absent from the manifest are skipped
+        as zero rows, present ones are read directly, and nothing is
+        discovered by listing the directory tree."""
         from pyspark.sql.types import StructType
 
-        if "schema" not in meta:
-            return None
-        return StructType.fromJson(json.loads(meta["schema"]))
-
-    def _read_meta(
-        self, stage: str, meta: dict, partitions: list[str] | None = None
-    ) -> DataFrame:
-        p = self.path(stage)
-        if meta.get("snapshot") is not None:
-            p = os.path.join(p, f"snap-{meta['snapshot']}")
-            if not os.path.isdir(p):
-                raise FileNotFoundError(
-                    f"stage {meta['stage']!r} snapshot {meta['snapshot']} "
-                    "data expired (see expire_snapshots)"
-                )
-        schema = self._commit_schema(meta)
+        meta = self._pointer(stage)
+        if meta is None:
+            raise FileNotFoundError(f"stage {stage!r} has no committed snapshot")
+        p = os.path.join(self.path(stage), f"snap-{meta['snapshot']}")
+        # schema recorded at commit time, applied explicitly: an empty stage
+        # output writes zero part-files, and schema inference over a
+        # fileless directory fails even though the stage legitimately
+        # produced 0 rows (e.g. an end-bound query with no matches)
+        schema = StructType.fromJson(json.loads(meta["schema"]))
         # manifest-planned read paths (the Iceberg scan-planning half): the
         # commit marker's stats say what the data layer holds, so a reader
         # can skip it without listing anything —
@@ -119,160 +99,35 @@ class CheckpointManager:
         # (b) a partition-scoped read scans exactly the partition dirs the
         #     manifest names (absent = zero rows = skipped), never trusting
         #     a directory listing that may see foreign/leftover dirs.
-        if schema is not None and meta.get("n_rows") == 0:
+        if meta.get("n_rows") == 0:
             return self.spark.createDataFrame([], schema)
-        if partitions is not None:
-            manifest = meta.get("partitions")
-            if manifest is None:
-                raise ValueError(
-                    f"stage {stage!r} snapshot was not committed with "
-                    "partition_by; no partition manifest to plan from"
-                )
-            # prefix semantics for multi-column layouts: a selector 'a=1'
-            # matches manifest leaves 'a=1' AND 'a=1/b=2' — without this a
-            # single-level selector over partition_by=['a','b'] data would
-            # silently return zero rows (round-6 review finding)
-            keep = sorted(
-                {
-                    d
-                    for d in manifest
-                    for p in partitions
-                    if d == p or d.startswith(p + "/")
-                }
+        if partitions is None:
+            return self.spark.read.schema(schema).parquet(p)
+        manifest = meta.get("partitions")
+        if manifest is None:
+            raise ValueError(
+                f"stage {stage!r} snapshot was not committed with "
+                "partition_by; no partition manifest to plan from"
             )
-            if not keep:
-                if schema is None:
-                    raise ValueError(
-                        f"stage {stage!r}: no schema recorded; cannot build "
-                        "an empty frame for a fully-pruned partition read"
-                    )
-                return self.spark.createDataFrame([], schema)
-            reader = self.spark.read.option("basePath", p)
-            if schema is not None:
-                reader = reader.schema(schema)
-            return reader.parquet(*(os.path.join(p, d) for d in keep))
-        reader = self.spark.read
-        if schema is not None:
-            # schema recorded at commit time, applied explicitly: an empty
-            # stage output writes zero part-files, and schema inference over
-            # a fileless directory fails even though the stage legitimately
-            # produced 0 rows (e.g. an end-bound query with no matches)
-            reader = reader.schema(schema)
-        return reader.parquet(p)
-
-    def read(
-        self,
-        stage: str,
-        snapshot_id: int | None = None,
-        partitions: list[str] | None = None,
-    ) -> DataFrame:
-        """Read a committed stage — the current snapshot by default, or any
-        retained snapshot by id (time travel, with that commit's schema).
-
-        partitions: optional list of hive partition dirs (e.g.
-        ['pred=treats']) — the scan is planned from the commit marker's
-        partition manifest: named dirs absent from the manifest are skipped
-        as zero rows, present ones are read directly, and nothing is
-        discovered by listing the directory tree."""
-        if snapshot_id is None:
-            meta = self._pointer(stage)
-            if meta is None:
-                raise FileNotFoundError(f"stage {stage!r} has no committed snapshot")
-            return self._read_meta(stage, meta, partitions)
-        # newest-first so a duplicate id (orphaned pre-crash history row)
-        # resolves to the row whose schema matches the surviving data
-        for meta in reversed(self.snapshots(stage)):
-            if meta.get("snapshot") == snapshot_id:
-                return self._read_meta(stage, meta, partitions)
-        raise FileNotFoundError(
-            f"stage {stage!r} has no snapshot {snapshot_id} (expired or never committed)"
+        # prefix semantics for multi-column layouts: a selector 'a=1'
+        # matches manifest leaves 'a=1' AND 'a=1/b=2' — without this a
+        # single-level selector over partition_by=['a','b'] data would
+        # silently return zero rows
+        keep = sorted(
+            {
+                d
+                for d in manifest
+                for sel in partitions
+                if d == sel or d.startswith(sel + "/")
+            }
         )
-
-    def _migrate_legacy(self, stage: str) -> None:
-        """Upgrade a legacy-layout stage (data part-files at the stage root,
-        pointer without a "snapshot" field) in place: move the root data
-        files into snap-0 and rewrite the pointer/history to name it.
-
-        Without this, the first re-commit over a legacy stage writes
-        snap-1/ UNDER a root that still holds the legacy part-files — a
-        reader resolving the legacy pointer then lists data files both at
-        the root and in a non-partition subdirectory (partition discovery
-        fails / double-reads), and the superseded legacy files would never
-        be expired. After migration the stage is a normal snapshot stage:
-        snapshot-isolated re-commits and expire_snapshots both apply."""
-        p = self.path(stage)
-        prev = self._pointer(stage)
-        if prev is None or prev.get("snapshot") is not None:
-            return  # no pointer, or already snapshot layout
-        snap_dir = os.path.join(p, "snap-0")
-        os.makedirs(snap_dir, exist_ok=True)
-        for name in os.listdir(p):
-            full = os.path.join(p, name)
-            if name.startswith("snap-") or name in (MARKER, HISTORY):
-                continue
-            if os.path.isfile(full) or os.path.isdir(full):  # part files,
-                os.replace(full, os.path.join(snap_dir, name))  # _SUCCESS,
-                # hive partition dirs (pred=...) all move wholesale
-        meta = dict(prev, snapshot=0, migrated_from="legacy-root-layout")
-        with open(os.path.join(p, HISTORY), "a") as f:
-            f.write(json.dumps(meta) + "\n")
-        tmp = os.path.join(p, MARKER + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(p, MARKER))
-
-    def _repair_torn_tail(self, stage: str) -> None:
-        """Repair the history before a commit appends to it.
-
-        Two cases, both rewritten atomically (tmp + os.replace — a crash
-        mid-repair leaves either the old or the repaired file, both valid):
-        - a half-written TRAILING line (this code's crash window) is
-          dropped silently, exactly as snapshots() tolerates it;
-        - an undecodable MID-FILE line (a torn line buried by an append
-          from a pre-round-6 build, whose snapshots() skipped torn lines
-          anywhere) is dropped WITH an audit trail: the original file is
-          preserved as <history>.corrupt-<n> and a warning names it.
-          Without this, upgrading a legacy workdir would make the stage
-          permanently unwritable — commit() calls snapshots() to allocate
-          ids, and the strict read path raises on mid-file garbage (the
-          round-6 review finding). Read-only callers (snapshots()/read)
-          still raise on mid-file corruption they encounter first: repair
-          happens only at the next WRITE, where the caller has already
-          decided to move the stage forward."""
-        hist = os.path.join(self.path(stage), HISTORY)
-        if not os.path.exists(hist):
-            return
-        with open(hist) as f:
-            lines = [ln for ln in f if ln.strip()]
-        if not lines:
-            return
-        bad = []
-        for i, ln in enumerate(lines):
-            try:
-                json.loads(ln)
-            except json.JSONDecodeError:
-                bad.append(i)
-        if not bad:
-            return
-        if any(i != len(lines) - 1 for i in bad):
-            import shutil
-            import sys
-
-            n = 0
-            while os.path.exists(f"{hist}.corrupt-{n}"):
-                n += 1
-            shutil.copyfile(hist, f"{hist}.corrupt-{n}")
-            print(
-                f"[checkpoint] stage {stage!r}: dropped {len(bad)} undecodable "
-                f"history line(s) (legacy buried torn append or corruption); "
-                f"original preserved at {hist}.corrupt-{n}",
-                file=sys.stderr,
-            )
-        keep = [ln for i, ln in enumerate(lines) if i not in set(bad)]
-        tmp = hist + ".tmp"
-        with open(tmp, "w") as f:
-            f.writelines(ln if ln.endswith("\n") else ln + "\n" for ln in keep)
-        os.replace(tmp, hist)
+        if not keep:
+            return self.spark.createDataFrame([], schema)
+        return (
+            self.spark.read.option("basePath", p)
+            .schema(schema)
+            .parquet(*(os.path.join(p, d) for d in keep))
+        )
 
     @staticmethod
     def _manifest_stats(data_dir: str) -> dict:
@@ -280,9 +135,9 @@ class CheckpointManager:
         parquet footers (metadata-only reads — no data scan, no Spark job):
         file count, total bytes, exact row count, plus the same rollup per
         partition directory for partitioned commits. Recorded in the commit
-        marker so snapshots() doubles as a lineage/size audit surface AND
-        the read path can plan scans from the manifest instead of listing
-        directories (read(partitions=...) / the zero-row short-circuit)."""
+        marker so the read path can plan scans from the manifest instead of
+        listing directories (read(partitions=...) / the zero-row
+        short-circuit), and callers can audit a stage's size."""
         import pyarrow.parquet as pq
 
         n_files = n_rows = n_bytes = 0
@@ -324,23 +179,7 @@ class CheckpointManager:
         snapshot are unaffected — its files are never rewritten."""
         p = self.path(stage)
         os.makedirs(p, exist_ok=True)
-        self._repair_torn_tail(stage)
-        self._migrate_legacy(stage)
-        # allocate past the pointer, any orphaned history rows, AND any
-        # snap-* directory on disk: a crash after the data write but before
-        # the history append leaves a dir no metadata names — reusing its id
-        # would half-overwrite it
-        prev = self._pointer(stage)
-        ids = [prev.get("snapshot", -1) if prev else -1]
-        ids += [
-            m.get("snapshot", -1)
-            for m in self.snapshots(stage)
-            if m is not None
-        ]
-        for name in os.listdir(p):
-            if name.startswith("snap-") and name[5:].isdigit():
-                ids.append(int(name[5:]))
-        snap = max((i for i in ids if i is not None), default=-1) + 1
+        snap = max(self._snapshot_ids(stage), default=-1) + 1
         data_dir = os.path.join(p, f"snap-{snap}")
         t0 = time.time()
         writer = df.write.mode("overwrite")
@@ -356,8 +195,6 @@ class CheckpointManager:
             **self._manifest_stats(data_dir),
             **(extra_meta or {}),
         }
-        with open(os.path.join(p, HISTORY), "a") as f:
-            f.write(json.dumps(meta) + "\n")
         tmp = os.path.join(p, MARKER + ".tmp")
         with open(tmp, "w") as f:
             json.dump(meta, f)
@@ -365,37 +202,26 @@ class CheckpointManager:
         return self.read(stage)
 
     def expire_snapshots(self, stage: str, keep_last: int = 1) -> int:
-        """Retention sweep: delete all but the newest keep_last snapshots'
-        data (the current snapshot is always kept). Returns count removed.
-        History rows are retained (tombstoned reads raise FileNotFoundError
-        — same observable behavior as an expired Iceberg snapshot)."""
+        """Retention sweep: delete all but the newest keep_last snapshot
+        directories (the current snapshot is always kept). Returns the
+        number removed."""
         import shutil
 
-        metas = [m for m in self.snapshots(stage) if m.get("snapshot") is not None]
+        ids = self._snapshot_ids(stage)
+        keep = set(ids[-max(keep_last, 1):])
         cur = self._pointer(stage)
-        cur_id = cur.get("snapshot") if cur else None
-        keep = {m["snapshot"] for m in metas[-max(keep_last, 1):]}
-        if cur_id is not None:
-            keep.add(cur_id)
-        n = 0
-        for m in metas:
-            sid = m["snapshot"]
-            d = os.path.join(self.path(stage), f"snap-{sid}")
-            if sid not in keep and os.path.isdir(d):
-                shutil.rmtree(d)
-                n += 1
-        return n
+        if cur is not None:
+            keep.add(cur["snapshot"])
+        gone = [i for i in ids if i not in keep]
+        for i in gone:
+            shutil.rmtree(os.path.join(self.path(stage), f"snap-{i}"))
+        return len(gone)
 
     def run_stage(
-        self,
-        stage: str,
-        compute,
-        partition_by: list[str] | None = None,
-        force: bool = False,
+        self, stage: str, compute, partition_by: list[str] | None = None
     ) -> DataFrame:
         """compute: () -> DataFrame; skipped entirely when already
-        committed (resume path). force=True re-computes into a NEW
-        snapshot (the previous one stays readable via time travel)."""
-        if self.is_done(stage) and not force:
+        committed (resume path)."""
+        if self.is_done(stage):
             return self.read(stage)
         return self.commit(stage, compute(), partition_by)

@@ -1,5 +1,5 @@
-"""Source readers: fixture parquet tables + the reference's flat-file
-formats (CDW pipe/tab files, query lists) re-expressed as spark.read.csv.
+"""Source readers: fixture parquet tables, with their schema and row
+counts taken from the parquet footers (metadata only, no Spark job).
 """
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 FIXTURE_TABLES = [
@@ -66,36 +65,3 @@ def read_fixture(spark: SparkSession, fixture_dir: str, name: str) -> DataFrame:
 
 def read_fixtures(spark: SparkSession, fixture_dir: str) -> dict[str, DataFrame]:
     return {n: read_fixture(spark, fixture_dir, n) for n in FIXTURE_TABLES}
-
-
-def read_cdw_counts_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Pipe-delimited `code|count` with header (builder/cdw.py:39-46,
-    SURVEY.md S8)."""
-    df = spark.read.csv(path, sep="|", header=True)
-    code, cnt = df.columns[0], df.columns[1]
-    return df.select(
-        F.col(code).alias("icd9"), F.col(cnt).cast("long").alias("count")
-    )
-
-
-def read_cdw_paircounts_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Tab-delimited, positional columns x[3]=c1, x[4]=c2, x[6]=c, x[9]=p
-    (builder/cdw.py:48-62, SURVEY.md S9)."""
-    df = spark.read.csv(path, sep="\t", header=False)
-    c = df.columns
-    return df.select(
-        F.col(c[1]).alias("icd9_a"),
-        F.col(c[2]).alias("icd9_b"),
-        F.col(c[3]).cast("long").alias("c1"),
-        F.col(c[4]).cast("long").alias("c2"),
-        F.col(c[6]).cast("long").alias("c"),
-        F.col(c[9]).cast("double").alias("p"),
-    )
-
-
-def read_seed_list(spark: SparkSession, path: str) -> DataFrame:
-    """Newline-delimited seed name list (builder/q1-disease-list.txt,
-    SURVEY.md S11)."""
-    return spark.read.text(path).select(F.trim("value").alias("name")).filter(
-        F.col("name") != ""
-    )

@@ -1,111 +1,18 @@
-"""Incremental document ingest via Structured Streaming.
+"""Stateful Structured Streaming operators.
 
 The reference is strictly batch (SURVEY.md §2.9: no streaming anywhere in
 the tree), and the KG build itself stays batch with Iceberg-style
-checkpoints. This module is the *ingest front door* a production corpus
-needs anyway: new document files landing in a directory are incrementally
-exploded + mention-detected exactly once (file-source + checkpointLocation),
-with Trigger.AvailableNow so a scheduled batch job drains the backlog and
-exits — the standard Spark pattern for continuous corpus growth without
-reprocessing 10^12 historical docs.
+checkpoints. The two operators here are the streaming twins of batch doc-
+and event-table operators, and each backs a declared query that drains a
+file stream and is hash-checked against its batch operator's DuckDB twin:
+MinHash-LSH candidate detection with per-bucket state
+(`streaming_lsh_candidates`) and session rollup with session_window state
+(`streaming_sessions`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import DOCUMENTS
-
-
-def read_document_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream over a directory of documents parquet files.
-    Schema pinned (streams cannot infer), new files discovered per batch."""
-    return (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
-
-def incremental_mentions(
-    stream_docs: DataFrame,
-    lexicon: DataFrame,
-    entity_embeddings: DataFrame | None = None,
-) -> DataFrame:
-    """Same extract+link stages as batch (explode_spans + Arrow UDF) applied
-    to the stream — transformations are identical DataFrame code."""
-    from ..operators.extract import detect_mentions, explode_spans
-
-    return detect_mentions(explode_spans(stream_docs), lexicon, entity_embeddings)
-
-
-def windowed_mention_rates(
-    mentions_stream: DataFrame,
-    event_time_col: str = "event_time",
-    window_duration: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Late-data-tolerant ingest telemetry: mentions per (window, node_type)
-    with a watermark bounding state — the standard Structured Streaming
-    windowed-aggregation pattern (state for windows older than the watermark
-    is dropped, so state size is bounded regardless of stream lifetime).
-
-    The batch pipeline's stage_metrics rows are the at-rest equivalent; this
-    is the in-flight view a continuously-ingesting deployment monitors.
-    """
-    from pyspark.sql import functions as F
-
-    return (
-        mentions_stream.withWatermark(event_time_col, watermark)
-        .groupBy(F.window(event_time_col, window_duration), "node_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.approx_count_distinct("doc_id").alias("n_docs_est"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "node_type",
-            "n_mentions",
-            "n_docs_est",
-        )
-    )
-
-
-def dedup_stream_exact(
-    stream_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    event_time_col: str = "event_time",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: keep the first arrival of each content hash,
-    drop replays within the watermark horizon. dropDuplicatesWithinWatermark
-    keeps per-key state only until the watermark passes — bounded state, the
-    streaming twin of operators/dedup.exact_duplicates."""
-    from pyspark.sql import functions as F
-
-    hashed = stream_docs.withColumn("content_hash", F.md5(F.col(text_col)))
-    return hashed.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_hash"]
-    )
-
-
-def run_available_now(
-    mentions_stream: DataFrame, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain everything currently unprocessed, exactly once, then stop.
-    Re-running after new files land processes only the new files (offsets
-    tracked in checkpoint_dir)."""
-    q = (
-        mentions_stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+from pyspark.sql import DataFrame
 
 
 # sentinel id_a marking a bucket whose state hit max_bucket_ids (see

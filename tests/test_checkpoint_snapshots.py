@@ -1,9 +1,7 @@
-"""Snapshot isolation + time travel for the checkpoint layer — the
-Iceberg-commit contract (immutable snapshots, atomic pointer swap,
-read-at-snapshot, retention) on plain parquet. Closes the round-3
-'snapshot isolation/time-travel semantics unexercised' gap."""
+"""Snapshot isolation for the checkpoint layer — the Iceberg-commit
+contract (immutable snapshots, atomic pointer swap, manifest-planned reads,
+retention) on plain parquet."""
 
-import json
 import os
 
 import pytest
@@ -20,17 +18,6 @@ def _df(spark, vals):
     return spark.createDataFrame([(v,) for v in vals], ["x"])
 
 
-def test_commit_and_time_travel(spark, ckpt):
-    ckpt.commit("s", _df(spark, [1, 2]))
-    ckpt.run_stage("s", lambda: _df(spark, [3, 4]), force=True)
-    assert sorted(r["x"] for r in ckpt.read("s").collect()) == [3, 4]
-    # time travel to the first commit
-    assert sorted(r["x"] for r in ckpt.read("s", snapshot_id=0).collect()) == [1, 2]
-    hist = ckpt.snapshots("s")
-    assert [m["snapshot"] for m in hist] == [0, 1]
-    assert all("schema" in m and m["ts"] > 0 for m in hist)
-
-
 def test_snapshot_isolation_for_inflight_readers(spark, ckpt):
     """A reader that resolved the pointer before a re-commit keeps reading
     its snapshot: the new commit writes a NEW directory and only swaps the
@@ -42,44 +29,22 @@ def test_snapshot_isolation_for_inflight_readers(spark, ckpt):
     assert [r["x"] for r in ckpt.read("s").collect()] == [9]
 
 
-def test_resume_skips_and_force_creates_new_snapshot(spark, ckpt):
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return _df(spark, [7])
-
-    ckpt.run_stage("s", compute)
-    ckpt.run_stage("s", compute)  # resume: skipped
-    assert len(calls) == 1
-    ckpt.run_stage("s", compute, force=True)
-    assert len(calls) == 2
-    assert [m["snapshot"] for m in ckpt.snapshots("s")] == [0, 1]
-
-
 def test_expire_snapshots_retention(spark, ckpt):
-    for vals in ([1], [2], [3]):
+    def snap_dirs():
+        return sorted(n for n in os.listdir(ckpt.path("s")) if n.startswith("snap-"))
+
+    for vals in ([1], [2], [3], [4]):
         ckpt.commit("s", _df(spark, vals))
-    assert ckpt.expire_snapshots("s", keep_last=1) == 2
-    assert [r["x"] for r in ckpt.read("s").collect()] == [3]
-    with pytest.raises(FileNotFoundError):
-        ckpt.read("s", snapshot_id=0)
-    # history rows survive expiry (audit trail), data is gone
-    assert [m["snapshot"] for m in ckpt.snapshots("s")] == [0, 1, 2]
+    assert snap_dirs() == ["snap-0", "snap-1", "snap-2", "snap-3"]
+    assert ckpt.expire_snapshots("s", keep_last=2) == 2
+    assert snap_dirs() == ["snap-2", "snap-3"]
+    assert ckpt.expire_snapshots("s", keep_last=1) == 1
+    assert snap_dirs() == ["snap-3"]
+    assert [r["x"] for r in ckpt.read("s").collect()] == [4]
     # current snapshot is never expired, even with keep_last=1 again
     assert ckpt.expire_snapshots("s", keep_last=1) == 0
-
-
-def test_legacy_layout_still_readable(spark, ckpt):
-    """Pre-snapshot workdirs (data at stage root, marker without a
-    'snapshot' field) must keep resuming byte-identically."""
-    df = _df(spark, [5, 6])
-    p = ckpt.path("legacy")
-    df.write.mode("overwrite").parquet(p)
-    with open(os.path.join(p, MARKER), "w") as f:
-        json.dump({"stage": "legacy", "schema": df.schema.json()}, f)
-    assert ckpt.is_done("legacy")
-    assert sorted(r["x"] for r in ckpt.read("legacy").collect()) == [5, 6]
+    # the pointer is the only metadata file beside the snapshot dirs
+    assert sorted(os.listdir(ckpt.path("s"))) == [MARKER, "snap-3"]
 
 
 def test_empty_stage_snapshot_roundtrip(spark, ckpt):
@@ -90,38 +55,9 @@ def test_empty_stage_snapshot_roundtrip(spark, ckpt):
     assert out.count() == 0 and out.columns == ["x"]
 
 
-def test_orphaned_history_row_never_reused(spark, ckpt):
-    """Crash window: history row appended but pointer swap never happened.
-    The next commit must allocate PAST the orphan's id (never half-
-    overwrite it), and time travel to a duplicated id resolves newest-first."""
-    import json as _json
-
-    ckpt.commit("s", _df(spark, [1]))  # snap-0, pointer → 0
-    # simulate the crashed commit: orphan history row for snap-1, no pointer
-    with open(os.path.join(ckpt.path("s"), "_snapshots.jsonl"), "a") as f:
-        f.write(_json.dumps({"stage": "s", "snapshot": 1, "ts": 0}) + "\n")
-    ckpt.commit("s", _df(spark, [2]))  # must become snap-2, not reuse 1
-    assert ckpt._pointer("s")["snapshot"] == 2
-    assert [r["x"] for r in ckpt.read("s").collect()] == [2]
-    assert [r["x"] for r in ckpt.read("s", snapshot_id=0).collect()] == [1]
-
-
-def test_torn_history_line_is_skipped_not_fatal(spark, ckpt):
-    """Crash mid-append to _snapshots.jsonl leaves a half-written trailing
-    line. snapshots() must skip it (not raise JSONDecodeError), and the next
-    commit must still allocate a fresh id — the stage stays writable."""
-    ckpt.commit("s", _df(spark, [1]))
-    with open(os.path.join(ckpt.path("s"), "_snapshots.jsonl"), "a") as f:
-        f.write('{"stage": "s", "snapshot": 1, "ts"')  # torn mid-append
-    assert [m["snapshot"] for m in ckpt.snapshots("s")] == [0]
-    ckpt.commit("s", _df(spark, [2]))  # must not raise, must not reuse ids
-    assert ckpt._pointer("s")["snapshot"] >= 1
-    assert [r["x"] for r in ckpt.read("s").collect()] == [2]
-
-
 def test_unnamed_snap_dir_never_half_overwritten(spark, ckpt):
-    """Crash between data write and history append: a snap dir exists that
-    no metadata names. The next commit must allocate past it."""
+    """Crash between data write and pointer swap: a snap dir exists that
+    no pointer names. The next commit must allocate past it."""
     ckpt.commit("s", _df(spark, [1]))  # snap-0
     orphan = os.path.join(ckpt.path("s"), "snap-1")
     os.makedirs(orphan)
@@ -133,40 +69,18 @@ def test_unnamed_snap_dir_never_half_overwritten(spark, ckpt):
     assert os.path.exists(os.path.join(orphan, "part-orphan.parquet"))
 
 
-def test_legacy_layout_migrates_on_first_recommit(spark, ckpt):
-    """Re-committing over a legacy-root-layout stage must first migrate the
-    legacy part-files into snap-0: afterwards no data file sits at the stage
-    root, the old data stays time-travelable as snapshot 0, and
-    expire_snapshots can reclaim it."""
-    df = _df(spark, [5, 6])
-    p = ckpt.path("legacy")
-    df.write.mode("overwrite").parquet(p)
-    with open(os.path.join(p, MARKER), "w") as f:
-        json.dump({"stage": "legacy", "schema": df.schema.json()}, f)
-    ckpt.commit("legacy", _df(spark, [7]))  # snap-1 after migration
-    root_files = [
-        n for n in os.listdir(p)
-        if not n.startswith("snap-") and n not in (MARKER, "_snapshots.jsonl")
-    ]
-    assert root_files == [], root_files  # no stray legacy data at the root
-    assert [r["x"] for r in ckpt.read("legacy").collect()] == [7]
-    assert sorted(
-        r["x"] for r in ckpt.read("legacy", snapshot_id=0).collect()
-    ) == [5, 6]
-    # retention now reclaims the superseded legacy files too
-    assert ckpt.expire_snapshots("legacy", keep_last=1) == 1
-    assert not os.path.isdir(os.path.join(p, "snap-0"))
-
-
 def test_manifest_stats_in_commit_marker(spark, ckpt):
     """Every commit records manifest-style stats (file/row/byte counts from
-    the parquet footers) so snapshots() doubles as a lineage/size audit."""
+    the parquet footers) in the pointer, readable through current_meta."""
     ckpt.commit("s", _df(spark, [1, 2, 3]))
-    (meta,) = ckpt.snapshots("s")
+    meta = ckpt.current_meta("s")
+    assert meta["snapshot"] == 0
     assert meta["n_rows"] == 3
     assert meta["n_files"] >= 1
     assert meta["total_bytes"] > 0
-    assert ckpt._pointer("s")["n_rows"] == 3
+    ckpt.commit("s", _df(spark, [4]), extra_meta={"iteration": 7})
+    meta = ckpt.current_meta("s")
+    assert (meta["snapshot"], meta["n_rows"], meta["iteration"]) == (1, 1, 7)
 
 
 # ---------------------------------------------------------------------------
@@ -239,22 +153,3 @@ def test_partition_prefix_matches_multi_level_layout(spark, ckpt):
     assert sorted(r["v"] for r in got.collect()) == [1, 2]
     exactly = ckpt.read("m", partitions=["a=x/b=q"])
     assert [r["v"] for r in exactly.collect()] == [2]
-
-
-def test_legacy_buried_torn_line_repaired_at_commit(spark, ckpt):
-    """A torn history line buried mid-file by a pre-round-6 append (old
-    code tolerated torn lines anywhere) must not make the stage
-    permanently unwritable: the next commit repairs it, preserving the
-    original file for audit; read-only snapshots() still raises first."""
-    ckpt.commit("lg", _df(spark, [1]))
-    ckpt.commit("lg", _df(spark, [2]))
-    hist = os.path.join(ckpt.path("lg"), "_snapshots.jsonl")
-    lines = open(hist).read().splitlines()
-    lines.insert(1, '{"stage": "lg", "snapsho')  # buried torn line
-    open(hist, "w").write("\n".join(lines) + "\n")
-    with pytest.raises(ValueError, match="corrupt snapshot history"):
-        ckpt.snapshots("lg")
-    ckpt.commit("lg", _df(spark, [3]))  # repairs, then commits
-    assert [m["snapshot"] for m in ckpt.snapshots("lg")] == [0, 1, 2]
-    assert sorted(r["x"] for r in ckpt.read("lg").collect()) == [3]
-    assert os.path.exists(hist + ".corrupt-0")  # audit trail preserved

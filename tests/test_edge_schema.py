@@ -46,7 +46,7 @@ def test_capped_sorted_set_unit(spark):
     )
     got = {
         r["k"]: r["vals"]
-        for r in capped_sorted_set(df, ["k"], "v", cap=5, nsalt=4, out="vals").collect()
+        for r in capped_sorted_set(df, ["k"], "v", cap=5, out="vals").collect()
     }
     assert got["k1"] == ["v00", "v01", "v02", "v03", "v04"]
     assert got["k2"] == ["z"]

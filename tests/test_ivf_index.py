@@ -78,15 +78,15 @@ def test_indexed_probe_reads_only_probed_cells(spark, emb_df, vecs, tmp_path):
 
 
 def test_index_rebuild_is_snapshot_isolated(spark, emb_df, vecs, tmp_path):
-    """Re-building the index (new centroids) commits a NEW snapshot; the
-    old one remains readable by id — an in-flight reader of the previous
-    index is never broken mid-query."""
+    """Re-building the index (new centroids) commits a NEW snapshot; a
+    reader that resolved the index before the rebuild keeps reading the
+    old one — an in-flight reader is never broken mid-query."""
     mgr = CheckpointManager(spark, str(tmp_path))
     c1 = S.ivf_train_centroids(vecs, nlist=6)
     S.ivf_build_index(emb_df, c1, mgr, stage="idx")
+    old = mgr.read("idx")  # resolves the pointer to the first snapshot
     c2 = S.ivf_train_centroids(vecs, nlist=4)
     S.ivf_build_index(emb_df, c2, mgr, stage="idx")
-    old = mgr.read("idx", snapshot_id=0)
     new = mgr.read("idx")
     assert old.count() == new.count() == N
     # the two snapshots are genuinely different indexes (6 vs 4 cells)

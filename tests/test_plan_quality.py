@@ -333,3 +333,42 @@ def test_doc_entities_single_alias_join(spark, join, tmp_path):
     assert sorted(tuple(r) for r in rows) == sorted(
         [(i, "A:1", "disease", "B:1") for i in range(20)] + [(99, "C:9", "gene", "C:9")]
     )
+
+
+def test_nodes_frame_one_per_rep_aggregate(spark, tmp_path):
+    """build_nodes collects every per-rep column (members, MESH structs,
+    MONDO curies) in ONE aggregate over rep_map: its plan has two joins —
+    mesh labels onto rep_map, and the node ids onto the aggregate — two
+    fewer than aggregating each column separately and joining the three
+    per-rep results back together."""
+    import re
+
+    from robokop_build_spark.operators.materialize import build_nodes
+
+    spark.createDataFrame(
+        [
+            ("MONDO:1", "MONDO:1", "disease", "d"),
+            ("MESH:1", "MONDO:1", "disease", "d"),
+            ("MESH:2", "MONDO:1", "disease", "d"),
+            ("NCBIGENE:1", "NCBIGENE:1", "gene", "g"),
+        ],
+        "curie string, rep string, node_type string, name string",
+    ).write.parquet(str(tmp_path / "rep_map"))
+    rep_map = spark.read.parquet(str(tmp_path / "rep_map"))
+    labels = spark.createDataFrame(
+        [("MESH:1", "one")], "mesh_curie string, term_name string"
+    )
+    ids = spark.createDataFrame([("MONDO:1",), ("NCBIGENE:1",), ("X:9",)], ["id"])
+    nodes = build_nodes(ids, rep_map, labels)
+    logical = nodes._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bJoin\b", logical)) == 2, logical
+    assert logical.count("Aggregate") == 1, logical
+    got = {r["id"]: r for r in nodes.collect()}
+    assert [tuple(m) for m in got["MONDO:1"]["mesh_identifiers"]] == [
+        ("MESH:1", "one"), ("MESH:2", ""),
+    ]
+    assert got["MONDO:1"]["properties"] == {"mondo_identifiers": "MONDO:1"}
+    assert got["NCBIGENE:1"]["mesh_identifiers"] == []
+    assert got["NCBIGENE:1"]["properties"] == {}
+    assert got["X:9"]["equivalent_identifiers"] == ["X:9"]
+    assert got["X:9"]["node_type"] == "unknown"

@@ -1,140 +1,8 @@
-"""Incremental ingest: two file drops, two availableNow drains, exactly-once
-per file (offsets in the stream checkpoint)."""
+"""The stateful streaming operators: state carried across availableNow
+drains (through the stream checkpoint) reproduces the batch operator."""
 
 import os
 import shutil
-
-from robokop_build_spark.sources.readers import read_fixture
-from robokop_build_spark.streaming.incremental import (
-    incremental_mentions,
-    read_document_stream,
-    run_available_now,
-)
-
-
-def test_incremental_exactly_once(spark, fixture_dir, tmp_path):
-    docs = read_fixture(spark, fixture_dir, "documents").limit(200).cache()
-    lex = read_fixture(spark, fixture_dir, "lexicon")
-    emb = read_fixture(spark, fixture_dir, "entity_embeddings")
-
-    in_dir = str(tmp_path / "incoming")
-    out_dir = str(tmp_path / "mentions_out")
-    ckpt = str(tmp_path / "stream_ckpt")
-    os.makedirs(in_dir)
-
-    first, second = docs.limit(120), docs.subtract(docs.limit(120))
-    first.write.mode("overwrite").parquet(str(tmp_path / "chunk1"))
-    for f in os.listdir(str(tmp_path / "chunk1")):
-        if f.endswith(".parquet"):
-            shutil.copy(str(tmp_path / "chunk1" / f), os.path.join(in_dir, "a_" + f))
-
-    stream = incremental_mentions(read_document_stream(spark, in_dir), lex, emb)
-    run_available_now(stream, out_dir, ckpt)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 > 0
-
-    # second drop: only the new files are processed on the next drain
-    second.write.mode("overwrite").parquet(str(tmp_path / "chunk2"))
-    for f in os.listdir(str(tmp_path / "chunk2")):
-        if f.endswith(".parquet"):
-            shutil.copy(str(tmp_path / "chunk2" / f), os.path.join(in_dir, "b_" + f))
-    stream2 = incremental_mentions(read_document_stream(spark, in_dir), lex, emb)
-    run_available_now(stream2, out_dir, ckpt)
-    n2 = spark.read.parquet(out_dir).count()
-    assert n2 > n1
-
-    # batch-equivalence: streamed mentions == batch mentions over all docs
-    from robokop_build_spark.operators.extract import detect_mentions, explode_spans
-
-    batch = detect_mentions(explode_spans(docs), lex, emb)
-    streamed = spark.read.parquet(out_dir)
-    assert streamed.count() == batch.count()
-    key = ["doc_id", "span_pos", "mention_start", "curie"]
-    assert streamed.select(*key).subtract(batch.select(*key)).count() == 0
-
-    # third drain with no new files: nothing reprocessed
-    stream3 = incremental_mentions(read_document_stream(spark, in_dir), lex, emb)
-    run_available_now(stream3, out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == n2
-
-
-def test_windowed_mention_rates_matches_batch(spark, tmp_path):
-    """Watermarked windowed agg (update mode): streamed per-window counts
-    equal the batch groupBy over the same events."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from robokop_build_spark.streaming.incremental import windowed_mention_rates
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = [
-        (f"d{i}", "disease" if i % 2 else "gene", base + dt.timedelta(minutes=7 * i))
-        for i in range(40)
-    ]
-    batch_df = spark.createDataFrame(rows, ["doc_id", "node_type", "event_time"])
-    src = str(tmp_path / "events_in")
-    batch_df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(batch_df.schema).parquet(src)
-    q = (
-        windowed_mention_rates(stream)
-        .writeStream.format("memory")
-        .queryName("rates")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"], r["node_type"]): r["n_mentions"]
-        for r in spark.sql("SELECT * FROM rates").collect()
-    }
-    want = {
-        (r["window"]["start"], r["node_type"]): r["n"]
-        for r in batch_df.groupBy(
-            F.window("event_time", "10 minutes"), "node_type"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select("window", "node_type", "n")
-        .collect()
-    }
-    assert got == want and got
-
-
-def test_dedup_stream_drops_replays(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: replayed content within the horizon is
-    dropped across drains; bounded state."""
-    import datetime as dt
-
-    from robokop_build_spark.streaming.incremental import dedup_stream_exact
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    src = str(tmp_path / "dd_in")
-    out = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    schema_rows = [
-        ("a", "same text", base),
-        ("b", "same text", base + dt.timedelta(minutes=1)),  # replay
-        ("c", "other text", base + dt.timedelta(minutes=2)),
-    ]
-    df = spark.createDataFrame(schema_rows, ["doc_id", "text", "event_time"])
-    df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    q = (
-        dedup_stream_exact(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    kept = spark.read.parquet(out)
-    hashes = [r["content_hash"] for r in kept.collect()]
-    assert len(hashes) == 2 and len(set(hashes)) == 2  # one per distinct text
 
 
 def test_streaming_lsh_candidates_stateful_cross_batch(spark, tmp_path):

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from robokop_build_spark.operators.materialize import (
-    NullPredicateError,
     merge_triples,
     upsert_nodes,
     validate_triples,
@@ -101,11 +100,8 @@ def test_edge_replace_is_idempotent_merge(spark, tmp_path):
 def test_null_predicate_is_fatal(spark):
     """standard predicate None → hard failure (builder/builder.py:27-30)."""
     bad = _triples(spark, [("A", None, "B", "src1", [], "")])
-    # eager: typed error before any write
-    with pytest.raises(NullPredicateError):
-        validate_triples(bad, eager=True)
-    # lazy (the pipeline path): the check rides the action itself — no
-    # extra pass over the fact table, job aborts at the offending row
+    # the check rides the action itself — no extra pass over the fact
+    # table, the job aborts at the offending row
     with pytest.raises(Exception, match="NullPredicateError"):
         validate_triples(bad).collect()
     # clean triples flow through the lazy guard unchanged
