@@ -165,10 +165,10 @@ def main() -> None:
     # would be run-twice-report-second, not warm-up)
     if os.path.isdir(warm_dir) and not os.path.samefile(warm_dir, sf_dir):
         # the pipeline warms at TWO scales: some plan branches are
-        # scale-adaptive (local vs distributed CC, broadcast vs salted),
-        # so sf0.001 alone leaves sf0.1-only codegen cold (measured: first
-        # sf0.1 run after sf0.001-only warm-up still ~32s; after the
-        # sf0.001+sf0.01 ladder, ~16s steady)
+        # scale-adaptive (local vs distributed CC; the planner's broadcast
+        # vs sort-merge alias join), so sf0.001 alone leaves sf0.1-only
+        # codegen cold (measured: first sf0.1 run after sf0.001-only
+        # warm-up still ~32s; after the sf0.001+sf0.01 ladder, ~16s steady)
         for i, wd in enumerate([warm_dir, "/root/testdata/sf0.01"]):
             if not os.path.isdir(wd) or os.path.samefile(wd, sf_dir):
                 continue

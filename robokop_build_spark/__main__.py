@@ -123,7 +123,6 @@ def main(argv: list[str] | None = None) -> int:
         start_values=start_identifiers,
         end_values=end_identifiers,
         supporters=list(dict.fromkeys(args.support)),
-        with_support=bool(args.support),
         support_pair_mode=args.support_pair_mode,
     )
     n_triples = out["triples"].count()

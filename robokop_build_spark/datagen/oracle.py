@@ -163,7 +163,6 @@ def compute_golden(
     start_values: list[str] | None = None,
     end_values: list[str] | None = None,
     require_complete: bool = False,
-    with_support: bool = True,
     supporters: tuple[str, ...] = ("omnicorp",),
     publication_cap: int = 10_000,
     ctime: int = 0,
@@ -171,7 +170,8 @@ def compute_golden(
 ):
     """Returns (nodes, triples): lists of dicts matching schemas.NODES /
     schemas.TRIPLES for the given programs (default: the flagship DGX
-    chain) + the requested supporters' edges.
+    chain) + the requested supporters' edges (none when supporters is
+    empty).
 
     programs: list of concrete node-type chains (the output of
     plans.query.enumerate_programs — U1 union semantics across programs).
@@ -279,7 +279,7 @@ def compute_golden(
     ]
 
     # --- supporter edges over the expansion graph nodes ---
-    if with_support and supporters:
+    if supporters:
         graph_nodes = sorted({t["subj"] for t in triples} | {t["obj"] for t in triples})
         allowed_pairs: set[tuple[str, str]] | None = None
         if support_pair_mode == "paths":

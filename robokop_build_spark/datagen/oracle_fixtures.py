@@ -91,7 +91,7 @@ def _kg_query_params(fixture_dir: str) -> dict[str, dict]:
         "kg_end_bound": dict(
             programs=[["disease", "gene"]],
             end_values=["NCBIGENE:7000001"],
-            with_support=False,
+            supporters=(),
         ),
         "kg_contexts_mode": dict(support_pair_mode="paths"),
     }

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .canonicalize import resolve_aliases
+from .topk import NSALT, capped_sorted_set
 
 
 def canonicalize_predicate_map(pm: DataFrame, rep_map: DataFrame) -> DataFrame:
@@ -204,10 +205,10 @@ def program_edge_starts(
     entities observed in doc_entities (expand_edge_starts per program).
 
     Dimension-sized (predicate-map-bounded): materialized once, because it
-    feeds the publications and inputs merges of aggregate_program_triples,
-    the merge gate's in-degree probe, and the graph node set that the
-    supporters and the node table start from. Without materialization each
-    consumer would re-run the frontier-join DAG."""
+    feeds the publications and inputs merges of aggregate_program_triples
+    and the graph node set that the supporters and the node table start
+    from. Without materialization each consumer would re-run the
+    frontier-join DAG."""
     start_type_reps = (
         _start_docs(doc_entities, programs, start_reps)
         .select("node_type", "rep")
@@ -231,8 +232,6 @@ def start_publications(
     start rep — exactly one row per rep (one capped_sorted_set group per
     rep). ONE bounded top-k window over the start-typed (rep, doc) rows:
     the only corpus-scale aggregation in the build."""
-    from .topk import capped_sorted_set
-
     sd = _start_docs(doc_entities, programs, start_reps)
     return capped_sorted_set(
         sd.select("rep", F.concat(F.lit("DOC:"), F.col("doc_id")).alias("pub")),
@@ -261,7 +260,8 @@ def aggregate_program_triples(
     3. (edge, start) table: edge_starts from program_edge_starts
        (dimension-level frontier joins, predicate-map-bounded, corpus-
        independent), with the same programs and start_reps;
-    4. per-edge merge: explode the per-start capped arrays and re-cap —
+    4. per-edge merge: union the per-start capped arrays in two phases
+       salted by start rep and re-cap —
        valid because the k smallest of a union are contained in the union
        of each member's k smallest; volume ≤ edges × in-degree × cap, a
        constant w.r.t. corpus size.
@@ -286,24 +286,14 @@ def aggregate_program_triples(
     # per-edge publications: merge the member start arrays and re-cap —
     # array-at-a-time (flatten/dedup/sort/slice on whole arrays), never an
     # explode: re-windowing the exploded elements measured 55s/1240 CPU-s/
-    # 25% GC at SF=1 for work these vector expressions do in ~2s. The merge
-    # buffer is in_degree×cap arrays; when the measured max in-degree (a
-    # one-row agg over the dimension-sized edge_starts, plan-time) is small
-    # — the common case — a single merge pass suffices, and the salted
-    # pre-merge pass (which bounds the buffer at (in_degree/nsalt)×cap and
-    # nsalt×cap for hub edges) would only re-shuffle and re-sort the full
-    # array payload for nothing: each (edge, salt) group then holds a
-    # single member array. Both forms compute sorted(set(union))[:cap] —
-    # the k smallest of a union are contained in the union of each
-    # member's k smallest — so the choice never changes results.
-    # The gate measures in-degree on edge_starts while the buffer grows
-    # with the rows of ep: the two agree because start_pubs has exactly one
-    # row per rep (start_publications), so ep holds one row per
-    # (edge, start) — tests/test_pipeline_e2e.py asserts this invariant.
-    nsalt = 16
-    max_indeg = (
-        edge_starts.groupBy(*key).count().agg(F.max("count")).first()[0] or 0
-    )
+    # 25% GC at SF=1 for work these vector expressions do in ~2s. Two
+    # phases salted by start rep bound every group's buffer at any
+    # in-degree: an (edge, salt) group merges ~in_degree/NSALT member
+    # arrays, an edge at most NSALT, each of ≤ cap elements. ep holds one
+    # row per (edge, start) because start_pubs has exactly one row per rep
+    # (start_publications; tests/test_pipeline_e2e.py asserts it). Each
+    # phase computes sorted(set(union))[:cap], and the k smallest of a
+    # union are contained in the union of each member's k smallest.
     merge = lambda c: F.slice(  # noqa: E731
         F.array_sort(F.array_distinct(F.flatten(F.collect_list(c)))),
         1,
@@ -311,19 +301,13 @@ def aggregate_program_triples(
     )
     ep = start_pubs.join(
         F.broadcast(edge_starts.select(*key, F.col("start").alias("rep"))), "rep"
+    ).withColumn("_salt", F.pmod(F.xxhash64("rep"), F.lit(NSALT)).cast("int"))
+    pubs = (
+        ep.groupBy(*key, "_salt")
+        .agg(merge("pubs").alias("_part"))
+        .groupBy(*key)
+        .agg(merge("_part").alias("publications"))
     )
-    if max_indeg <= 4 * nsalt:
-        pubs = ep.groupBy(*key).agg(merge("pubs").alias("publications"))
-    else:
-        ep = ep.withColumn(
-            "_salt", F.pmod(F.xxhash64("rep"), F.lit(nsalt)).cast("int")
-        )
-        pubs = (
-            ep.groupBy(*key, "_salt")
-            .agg(merge("pubs").alias("_part"))
-            .groupBy(*key)
-            .agg(merge("_part").alias("publications"))
-        )
     inputs = (
         start_origins.join(
             F.broadcast(

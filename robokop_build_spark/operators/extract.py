@@ -77,7 +77,8 @@ def detect_mentions(
 
     The lexicon trie and embedding matrix are dimension tables (fixed size,
     not SF-scaled) → driver-collected and broadcast once; the scan side
-    streams through mapInPandas in Arrow batches.
+    streams through mapInArrow in Arrow batches. An empty lexicon yields
+    zero rows (the kernel matches nothing).
     """
     sc = spans.sparkSession.sparkContext
     trie = build_trie(
@@ -104,55 +105,5 @@ def detect_mentions(
     textual = spans.filter(F.col("kind").isin("text", "caption")).select(
         "doc_id", "span_pos", "offset", "text"
     )
-    textual = _with_start_prefilter(textual, trie)
     return textual.mapInArrow(run, schema=MENTION_UDF_SCHEMA)
 
-
-# above this many start tokens the literal-array prefilter is disabled (see
-# _with_start_prefilter); tests override it to exercise the gate.
-# Round 8: lowered 2048 → 256 on measurement — arrays_overlap rebuilds the
-# hash probe of the smaller side per ROW, so the filter costs
-# O(|starts| + |tokens|) per span: at 899 starts it cost 3.7 s of JVM time
-# at SF=1 to remove rows the Arrow kernel rejects in ~1 s (detect noop
-# 5.5 s with prefilter vs 2.8 s without, identical 6 118 934 rows). The
-# filter only pays for itself when the start set is small.
-START_PREFILTER_MAX_LITERALS = 256
-
-
-def _with_start_prefilter(textual: DataFrame, trie) -> DataFrame:
-    """JVM-side prefilter: a span with NO surface-start token produces zero
-    mentions (detect() returns [] — semantics-preserving), so drop it inside
-    whole-stage codegen BEFORE the Arrow exchange. arrays_overlap hash-probes
-    the (dimension-sized) start set per token; on natural corpora this
-    removes the vast majority of rows from the Python path (~25% on the
-    deliberately mention-dense fixture).
-
-    Three guards keep it an optimization and never a semantics change:
-    - empty lexicon → no span can match: short-circuit the whole Arrow
-      exchange (F.array() of zero literals also fails analysis);
-    - >START_PREFILTER_MAX_LITERALS start tokens → skip the prefilter: a
-      production lexicon (10^5-10^6 surfaces) inlined as literals blows up
-      plan serialization + codegen on every task, and at that surface count
-      nearly every span contains SOME start token so selectivity tends to
-      zero. (A broadcast semi-join variant was rejected: it adds a full
-      shuffle of the fact table to save an Arrow exchange it no longer
-      meaningfully shrinks.)
-    - non-ASCII anywhere → route to Python untouched: Spark's lower() and
-      Python's str.lower() can disagree on locale/Unicode-special characters
-      (e.g. U+0130), so the prefilter only drops rows whose text is pure
-      ASCII compared against a pure-ASCII start set — where the two case
-      mappings are identical by construction.
-    """
-    starts = trie.starts
-    if not starts:
-        return textual.filter(F.lit(False))
-    if len(starts) > START_PREFILTER_MAX_LITERALS:
-        return textual
-    if any(not s.isascii() for s in starts):
-        return textual
-    start_arr = F.array(*[F.lit(s) for s in sorted(starts)])
-    has_non_ascii = F.col("text").rlike(r"[^\x00-\x7F]")
-    return textual.filter(
-        has_non_ascii
-        | F.arrays_overlap(F.split(F.lower("text"), " "), start_arr)
-    )

@@ -196,7 +196,7 @@ def kg_end_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         path_types=["disease", "gene"],
         end_values=["NCBIGENE:7000001"],
-        with_support=False,
+        supporters=[],
     )
 
 

@@ -57,6 +57,7 @@ from ..operators.materialize import (
     stage_metrics,
     validate_triples,
 )
+from ..operators.partitioning import widen_for_kernel
 from ..sources.checkpoint import CheckpointManager
 from ..sources.readers import fixture_rows, read_fixtures
 from .query import enumerate_programs, tokenize_path
@@ -169,9 +170,8 @@ class PipelineConfig:
     # emit only edges on paths matching the FULL pattern (cypher semantics);
     # default False preserves emit-per-hop (every reachable edge kept)
     require_complete: bool = False
-    with_support: bool = True
     # supporter modules to run (reference -s flag, builder/builder.py:320-362);
-    # with_support=False disables all
+    # an empty list builds no support edges
     supporters: list[str] = field(default_factory=lambda: ["omnicorp"])
     # support-pair generator: 'all' = unordered all-pairs over graph nodes
     # (generate_all_links, builder/builder.py:364-370 — the reference's live
@@ -196,7 +196,7 @@ class PipelineConfig:
         import hashlib
         import json
 
-        sups = sorted(self.supporters) if self.with_support else []
+        sups = sorted(self.supporters)
         if (
             programs == [DGX_PATH]
             and not self.start_values
@@ -243,7 +243,6 @@ class KGPipeline:
         commit_inter = docs_n >= COMMIT_INTERMEDIATES_MIN_DOCS
         aliases_n = fixture_rows(cfg.fixture_dir, "normalization")
         cc = "local" if aliases_n <= LOCAL_CC_MAX_ALIASES else "distributed"
-        sups = cfg.supporters if cfg.with_support else []
         # surfaced for tests/operators-report: resumed_from/iterations of
         # the CC loop when the distributed path ran durably this run
         self.cc_stats: dict = {}
@@ -266,17 +265,12 @@ class KGPipeline:
 
         def mentions() -> DataFrame:
             def compute() -> DataFrame:
-                docs = t["documents"]
                 # under-split input (few files / giant row groups) would pin
-                # the most expensive stage (mention detection) to a handful
-                # of tasks; one doc_id-hash shuffle buys full-width
-                # parallelism. At cluster scale the input is thousands of
-                # files and this branch never triggers.
-                par = spark.sparkContext.defaultParallelism
-                if docs.rdd.getNumPartitions() < par:
-                    docs = docs.repartition(par * 2, "doc_id")
+                # the most expensive stage to a handful of tasks
                 return detect_mentions(
-                    explode_spans(docs), t["lexicon"], t["entity_embeddings"]
+                    explode_spans(widen_for_kernel(t["documents"])),
+                    t["lexicon"],
+                    t["entity_embeddings"],
                 )
 
             return ckpt.run_stage("mentions", compute)
@@ -402,7 +396,7 @@ class KGPipeline:
             # edge_starts is the node set of the finished graph
             ids = graph_nodes(edge_starts)
             out = None
-            for name in sups:
+            for name in cfg.supporters:
                 edges = get_supporter(name).support(
                     ids,
                     rep_map,
@@ -477,7 +471,7 @@ class KGPipeline:
                     f_doc_entities,
                     f_query,
                 )
-            ] if sups else []
+            ] if cfg.supporters else []
             f_nodes = S.start("nodes", nodes, f_edge_starts, f_rep_map, f_query)
             f_triples = S.start(
                 "triples", triples, f_triples_base, f_query, *f_support

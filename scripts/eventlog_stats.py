@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Summarize Spark event logs per stage: task count, wall span, executor
-CPU, GC, shuffle fetch wait, remote/local bytes, spill, ser/deser time.
+CPU, GC, shuffle fetch wait, remote/local bytes, spill, ser/deser time;
+then the Spark job count, in total and per job group (spark.jobGroup.id,
+"-" for jobs outside any group).
 
 Usage: python scripts/eventlog_stats.py <eventlog file or dir> [top_n]
 """
@@ -20,6 +22,9 @@ def load_events(path: str):
         # rolling event-log dir (eventlog_v2_*): concatenate events_* parts
         parts = [p for p in entries if os.path.basename(p).startswith("events_")]
         paths = parts or [max(entries, key=os.path.getmtime)]
+        if os.path.isdir(paths[0]):  # an eventLog.dir: its newest log
+            yield from load_events(paths[0])
+            return
     for p in paths:
         print(f"# {p}", file=sys.stderr)
         if p.endswith(".zstd"):
@@ -64,9 +69,14 @@ def main() -> None:
         }
     )
 
+    jobs: dict[str, int] = defaultdict(int)
+
     for ev in load_events(path):
         et = ev.get("Event")
-        if et == "SparkListenerStageSubmitted":
+        if et == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[props.get("spark.jobGroup.id") or "-"] += 1
+        elif et == "SparkListenerStageSubmitted":
             info = ev["Stage Info"]
             key = (info["Stage ID"], info["Stage Attempt ID"])
             stages[key]["name"] = info["Stage Name"].split("\n")[0][:60]
@@ -116,6 +126,10 @@ def main() -> None:
             f"{s['local_mb']:>7.0f} {s['spill_mb']:>8.0f} "
             f"{s['deser_ms']/1000:>7.1f}  {s['name']}"
         )
+
+    print(f"\njobs {sum(jobs.values()):>5}  total")
+    for group, n in sorted(jobs.items()):
+        print(f"jobs {n:>5}  {group}")
 
 
 if __name__ == "__main__":

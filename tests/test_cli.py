@@ -62,7 +62,7 @@ def test_cli_end_to_end_exact_golden(fixture_dir, tmp_path):
     }
     _, want_t = compute_golden(
         fixture_dir, [["disease", "gene"]], start_values=curies,
-        with_support=False,
+        supporters=(),
     )
     want = {
         (t["subj"], t["pred"], t["obj"], t["edge_source"],

@@ -148,34 +148,15 @@ def _mk_spans(spark, rows):
 
 
 def test_prefilter_empty_lexicon_short_circuits(spark):
-    """Empty lexicon → zero mentions, no analysis error from F.array()."""
+    """Empty lexicon → zero mentions (the kernel's trie matches nothing)."""
     lex = spark.createDataFrame([], "surface string, curie string, node_type string")
     spans = _mk_spans(spark, [("d1", 0, "text", "aspirin treats pain", "", 0)])
     assert detect_mentions(spans, lex).count() == 0
 
 
 def test_prefilter_non_ascii_rows_pass_to_python(spark):
-    """Rows containing ANY non-ASCII char bypass the JVM lowercase prefilter
-    (Spark lower() vs str.lower() can disagree on locale-special chars), and
-    a non-ASCII START SET disables the prefilter entirely — both paths must
-    still match via the Python scan."""
-    from robokop_build_spark.operators.extract import _with_start_prefilter
-    from robokop_build_spark.operators.matching import build_trie
-
-    # ASCII starts, non-ASCII text with no ASCII start token: row must be
-    # KEPT by the prefilter (routed to Python; semantics decided there)
-    trie = build_trie([("aspirin", "C:1", "chem")])
-    textual = _mk_spans(
-        spark,
-        [
-            ("d1", 0, "text", "İstanbul über nichts", "", 0),
-            ("d2", 0, "text", "plain ascii no match", "", 0),
-        ],
-    ).select("doc_id", "span_pos", "offset", "text")
-    kept = {r["doc_id"] for r in _with_start_prefilter(textual, trie).collect()}
-    assert kept == {"d1"}  # non-ASCII kept; ASCII non-match dropped
-
-    # non-ASCII surface in the lexicon: prefilter disabled, match still found
+    """A non-ASCII lexicon surface in non-ASCII text is matched by the
+    Python scan (CPython's str.lower(), not the JVM's lower())."""
     lex = spark.createDataFrame(
         [("über", "C:2", "chem")], "surface string, curie string, node_type string"
     )
@@ -186,8 +167,8 @@ def test_prefilter_non_ascii_rows_pass_to_python(spark):
 
 def test_prefilter_large_lexicon_degates_literals(spark, fixture_dir):
     """A production-size lexicon (100k surfaces) must NOT be inlined as plan
-    literals (plan-serialization/codegen blowup); above the size gate the
-    prefilter is skipped and output is unchanged vs the small-lexicon run
+    literals (plan-serialization/codegen blowup): it reaches the kernel as
+    a broadcast trie, and output is unchanged vs the small-lexicon run
     (VERDICT r3 item 3a)."""
     import pyarrow.parquet as pq
 

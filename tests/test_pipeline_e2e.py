@@ -178,10 +178,12 @@ def test_stage_jobs_carry_the_callers_job_group(spark, fixture_dir, tmp_path):
 def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
     spark, fixture_dir, pipeline_out
 ):
-    """The single-pass publication merge is gated on the max in-degree of
-    edge_starts, but its buffer holds the rows of ep = start_pubs ⋈
-    edge_starts per edge key. The two agree because start_pubs has
-    exactly one row per start rep (capping must not split a rep)."""
+    """The salted publication merge bounds each group by the edge's
+    in-degree in edge_starts (start reps per edge, spread over the salts),
+    but its buffer holds the rows of ep = start_pubs ⋈ edge_starts per edge
+    key. The bound holds because start_pubs has exactly one row per start
+    rep (capping must not split a rep), so ep has as many rows per edge as
+    edge_starts."""
     from pyspark.sql import functions as F
 
     from robokop_build_spark.operators.expand import (
@@ -232,9 +234,10 @@ def test_commit_intermediates_branch_matches_golden(
 
 
 def test_salted_publication_merge_on_a_hub_edge(spark):
-    """An edge reached from more than 4×nsalt = 64 start reps takes the
-    salted two-phase publication merge, which must still give every edge
-    the cap smallest of the union of its start reps' documents."""
+    """A hub edge reached from 70 start reps, more than the NSALT = 16
+    salts: the two-phase publication merge salted by start rep must still
+    give every edge the cap smallest of the union of its start reps'
+    documents."""
     from robokop_build_spark.operators.expand import (
         aggregate_program_triples,
         program_edge_starts,
@@ -262,8 +265,8 @@ def test_salted_publication_merge_on_a_hub_edge(spark):
     es = program_edge_starts(de, pm_rep, [DGX_PATH])
     triples = aggregate_program_triples(de, es, [DGX_PATH], publication_cap=cap)
     plan = triples._jdf.queryExecution().executedPlan().toString()
-    # the hub edge's in-degree (70) is above 64: the merge's first phase
-    # aggregates per (edge, salt), the second per edge
+    # the merge's first phase aggregates per (edge, salt), the second per
+    # edge
     assert re.search(
         r"HashAggregate\(keys=\[subj#\d+, pred#\d+, obj#\d+, edge_source#\d+, "
         r"_salt#\d+\]",

@@ -167,8 +167,11 @@ def test_chemotext_articles_join_not_hint_broadcast(spark, fixture_dir):
 
 
 def test_mentions_single_python_exchange(spark, fixture_dir):
-    """Doc-side data crosses the Python boundary exactly once."""
+    """Doc-side data crosses the Python boundary exactly once, and the
+    pipeline's widened (under-split) document input adds exactly one
+    round-robin exchange in front of it."""
     from robokop_build_spark.operators.extract import detect_mentions, explode_spans
+    from robokop_build_spark.operators.partitioning import widen_for_kernel
     from robokop_build_spark.sources.readers import read_fixture
 
     docs = read_fixture(spark, fixture_dir, "documents")
@@ -176,6 +179,29 @@ def test_mentions_single_python_exchange(spark, fixture_dir):
     plan = _plan(detect_mentions(explode_spans(docs), lex))
     assert plan.count("MapInArrow") == 1
     assert "MapInPandas" not in plan  # no pandas round-trip in the scan
+
+    # the KG pipeline's mentions stage input: the fixture is one file
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    plan = _plan(detect_mentions(explode_spans(widen_for_kernel(docs)), lex))
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert plan.count("Exchange") == 1
+    assert plan.count("MapInArrow") == 1
+
+
+def test_widen_for_kernel_round_robins_only_under_split_frames(spark):
+    """An under-split frame becomes defaultParallelism round-robin
+    partitions; a frame already that wide comes back unchanged."""
+    from robokop_build_spark.operators.partitioning import widen_for_kernel
+
+    par = spark.sparkContext.defaultParallelism
+    narrow = spark.range(0, 100, 1, numPartitions=1)
+    wide = widen_for_kernel(narrow)
+    assert wide.rdd.getNumPartitions() == par
+    assert f"RoundRobinPartitioning({par})" in _plan(wide)
+    assert sorted(r.id for r in wide.collect()) == list(range(100))
+
+    already = spark.range(0, 100, 1, numPartitions=par)
+    assert widen_for_kernel(already) is already
 
 
 def test_lsh_self_joins_reuse_materialized_signatures(spark):

@@ -94,7 +94,7 @@ def _run(spark, fixture_dir, tmp_path_factory, **kwargs):
 def _golden(fixture_dir, programs, **kwargs):
     from robokop_build_spark.datagen.oracle import compute_golden
 
-    kwargs.setdefault("with_support", False)
+    kwargs.setdefault("supporters", ())
     _, triples = compute_golden(fixture_dir, programs=programs, **kwargs)
     return triples
 
@@ -110,7 +110,7 @@ def fixture_metagraph(spark, fixture_dir):
 
 def test_var_length_exact_vs_golden(spark, fixture_dir, fixture_metagraph, tmp_path_factory):
     out = _run(
-        spark, fixture_dir, tmp_path_factory, path="D(1-2)G", with_support=False
+        spark, fixture_dir, tmp_path_factory, path="D(1-2)G", supporters=[]
     )
     programs = enumerate_programs(tokenize_path("D(1-2)G"), fixture_metagraph)
     assert len(programs) == 2  # direct + via-phenotype
@@ -128,7 +128,7 @@ def test_multi_program_union_exceeds_each_program(
     spark, fixture_dir, fixture_metagraph, tmp_path_factory
 ):
     out = _run(
-        spark, fixture_dir, tmp_path_factory, path="D(1-3)X", with_support=False
+        spark, fixture_dir, tmp_path_factory, path="D(1-3)X", supporters=[]
     )
     programs = enumerate_programs(tokenize_path("D(1-3)X"), fixture_metagraph)
     assert len(programs) >= 2
@@ -153,7 +153,7 @@ def test_end_bound_exact_and_pruned(spark, fixture_dir, tmp_path_factory):
         tmp_path_factory,
         path_types=["disease", "gene"],
         end_values=end,
-        with_support=False,
+        supporters=[],
     )
     got = {_full_key(r.asDict()) for r in out["triples"].collect()}
     want = {
@@ -171,6 +171,18 @@ def test_end_bound_exact_and_pruned(spark, fixture_dir, tmp_path_factory):
         _full_key(t) for t in _golden(fixture_dir, [["disease", "gene"]])
     }
     assert got < unbound
+    # kg_end_bound's config (benchmark_queries): its stage key names the
+    # query's committed stages in the shared oracle workdir
+    from robokop_build_spark.plans.pipeline import PipelineConfig
+
+    cfg = PipelineConfig(
+        fixture_dir,
+        "",
+        path_types=["disease", "gene"],
+        end_values=end,
+        supporters=[],
+    )
+    assert cfg.query_key([["disease", "gene"]]) == "@eee38056"
 
 
 def test_require_complete_prunes_dead_ends(spark, fixture_dir, tmp_path_factory):
@@ -182,7 +194,7 @@ def test_require_complete_prunes_dead_ends(spark, fixture_dir, tmp_path_factory)
         tmp_path_factory,
         path_types=["disease", "gene", "genetic_condition"],
         require_complete=True,
-        with_support=False,
+        supporters=[],
     )
     got = {_full_key(r.asDict()) for r in out["triples"].collect()}
     want = {
@@ -211,7 +223,7 @@ def test_start_bound_exact_and_restricted(spark, fixture_dir, tmp_path_factory):
         tmp_path_factory,
         path_types=["disease", "gene"],
         start_values=start,
-        with_support=False,
+        supporters=[],
     )
     got = {_full_key(r.asDict()) for r in out["triples"].collect()}
     want = {
