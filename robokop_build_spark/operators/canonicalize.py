@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .iterate import LoopCheckpointer, input_fingerprint
 
@@ -21,6 +22,15 @@ from .iterate import LoopCheckpointer, input_fingerprint
 # union-find for the distributed large-star/small-star loop (the pipeline
 # reads the count from the normalization table's parquet footer).
 LOCAL_CC_MAX_ALIASES = 2_000_000
+
+
+def _schema(df: DataFrame, **fields: str) -> StructType:
+    """Schema of a driver-built frame: each output field takes the type of
+    the named `df` column, so an empty input still has a schema (inferring
+    it from zero rows fails) and ids keep their input type."""
+    return StructType(
+        [StructField(out, df.schema[col].dataType) for out, col in fields.items()]
+    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -143,7 +153,7 @@ def connected_components(
             [(r["src"], r["dst"]) for r in e.collect()]
         )
         return e.sparkSession.createDataFrame(
-            sorted(rep_map.items()), ["curie", "rep"]
+            sorted(rep_map.items()), _schema(e, curie="src", rep="src")
         )
     params = (
         {"op": "connected_components", "input": fp}
@@ -251,7 +261,14 @@ def canonical_map(
             for curie, rep in sorted(rep_map.items())
         ]
         return normalization.sparkSession.createDataFrame(
-            out, ["curie", "rep", "node_type", "name"]
+            out,
+            _schema(
+                normalization,
+                curie="alias",
+                rep="alias",
+                node_type="node_type",
+                name="name",
+            ),
         )
     reps = connected_components(
         normalization,

@@ -12,6 +12,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -101,6 +102,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Python workers import pyspark from Spark's zip archives, and the
+        # worker invalidates import caches at every task: on Python
+        # 3.11/3.12 each zip importer then re-reads its archive directory
+        # (~26.7k entries, 30-60 ms per task on 4 CPUs; 3.13 made that
+        # lazy). This daemon drops the archives when an installed pyspark
+        # of the same version is on the path (robokop_build_spark/
+        # pyworker.py); the package's parent directory on PYTHONPATH lets
+        # workers import it from any working directory
+        .config("spark.python.daemon.module", "robokop_build_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Summarize Spark event logs per stage: task count, wall span, executor
-CPU, GC, shuffle fetch wait, remote/local bytes, spill, ser/deser time;
-then the Spark job count, in total and per job group (spark.jobGroup.id,
-"-" for jobs outside any group).
+run time, JVM CPU time and run minus CPU (off_s: time the task threads
+spent off the JVM CPU, e.g. waiting on a Python worker, I/O or a lock), GC,
+shuffle fetch wait, remote/local bytes, spill, ser/deser time; then the
+Spark job count, in total and per job group (spark.jobGroup.id, "-" for
+jobs outside any group).
 
 Usage: python scripts/eventlog_stats.py <eventlog file or dir> [top_n]
 """
@@ -114,14 +116,15 @@ def main() -> None:
 
     hdr = (
         f"{'stage':>5} {'span_s':>7} {'tasks':>5} {'run_s':>7} {'cpu_s':>7} "
-        f"{'gc_s':>6} {'fwait_s':>7} {'rem_MB':>7} {'loc_MB':>7} "
+        f"{'off_s':>7} {'gc_s':>6} {'fwait_s':>7} {'rem_MB':>7} {'loc_MB':>7} "
         f"{'spill_MB':>8} {'deser_s':>7}  name"
     )
     print(hdr)
     for span, sid, att, s in rows[:top_n]:
         print(
             f"{sid:>5} {span:>7.1f} {s['tasks']:>5} {s['run_ms']/1000:>7.1f} "
-            f"{s['cpu_ms']/1000:>7.1f} {s['gc_ms']/1000:>6.1f} "
+            f"{s['cpu_ms']/1000:>7.1f} {(s['run_ms'] - s['cpu_ms'])/1000:>7.1f} "
+            f"{s['gc_ms']/1000:>6.1f} "
             f"{s['fetch_wait_ms']/1000:>7.1f} {s['remote_mb']:>7.0f} "
             f"{s['local_mb']:>7.0f} {s['spill_mb']:>8.0f} "
             f"{s['deser_ms']/1000:>7.1f}  {s['name']}"

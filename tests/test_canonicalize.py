@@ -5,6 +5,7 @@ hubs, long chains — deterministic min representative at any parallelism
 import pytest
 
 from robokop_build_spark.operators.canonicalize import (
+    canonical_map,
     connected_components,
     resolve_aliases,
 )
@@ -53,6 +54,38 @@ def test_hub_star(spark, strategy):
     got = _cc(spark, pairs, strategy)
     assert all(v == "ALIAS:0000" for v in got.values())
 
+
+
+@cc_strategies
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_empty_edges_give_zero_rows_of_input_types(spark, strategy, id_type):
+    """No edge (a corpus with no verified near-duplicate pair) is zero
+    (curie, rep) rows whose ids keep the input's type: long doc ids in the
+    dedup query, string CURIEs in the KG."""
+    edges = spark.createDataFrame([], f"src {id_type}, dst {id_type}")
+    out = connected_components(edges, strategy=strategy)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("curie", id_type),
+        ("rep", id_type),
+    ]
+
+
+@pytest.mark.parametrize("strategy", ["local", "distributed"])
+def test_empty_normalization_gives_empty_rep_map(spark, strategy):
+    """An empty normalization table is a zero-row rep_map with the
+    pipeline's string columns."""
+    norm = spark.createDataFrame(
+        [], "alias string, canonical string, node_type string, name string"
+    )
+    out = canonical_map(norm, strategy)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("curie", "string"),
+        ("rep", "string"),
+        ("node_type", "string"),
+        ("name", "string"),
+    ]
 
 @cc_strategies
 def test_resolve_aliases_broadcast_vs_salted(spark, strategy):
