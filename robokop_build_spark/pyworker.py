@@ -7,16 +7,13 @@ importlib.invalidate_caches() at the start of every task, and on Python
 3.11/3.12 each zip importer then re-reads its whole archive directory:
 ~26.7k central-directory entries per task before the first row is read.
 
-session.get_spark sets this module as spark.python.daemon.module. At start
-it drops those archives from sys.path (and the zip importers already cached
-for them) when the rest of sys.path imports pyspark and py4j from
-directories and that pyspark is the archive's version; otherwise sys.path is
-left as it is. Then it runs pyspark's own daemon unchanged.
+session.get_spark sets this module as spark.python.daemon.module on local
+masters. At start it drops those archives from sys.path (and the importers
+already cached for them) when the rest of sys.path imports pyspark and py4j
+from directories and that pyspark is the archive's version; otherwise
+sys.path is left as it is. Then it runs pyspark's own daemon unchanged.
 
-Run by Spark as: python -m robokop_build_spark.pyworker <worker module>
-Executors must be able to import this package when the daemon starts
-(installed, or on the executor PYTHONPATH that get_spark sets): files
-shipped with --py-files reach a worker's sys.path only per task.
+Run by Spark as: python -m robokop_build_spark.pyworker
 """
 
 from __future__ import annotations
@@ -25,75 +22,71 @@ import os
 import re
 import sys
 import zipfile
+import zipimport
+from importlib.machinery import ModuleSpec, PathFinder
 
-# the packages Spark ships in its archives; an archive holding nothing
-# else importable is redundant once both resolve from a directory
-_SHIPPED = frozenset({"pyspark", "py4j"})
+# the jar Spark puts on the workers' path next to its zips holds no Python:
+# it is the jar of this class (PythonUtils.sparkPythonPath)
+_SPARK_JAR_CLASS = "org/apache/spark/api/python/PythonUtils.class"
 _VERSION = re.compile(r"""__version__\s*(?::\s*str\s*)?=\s*["']([^"']+)["']""")
 
 
-def _archive_packages(entry: str) -> set[str] | None:
-    """Top-level module names a zip entry of sys.path can import, or None
-    when the entry is not a zip archive."""
-    if not os.path.isfile(entry) or not zipfile.is_zipfile(entry):
-        return None
-    with zipfile.ZipFile(entry) as z:
-        return {
-            os.path.splitext(name.split("/", 1)[0])[0]
-            for name in z.namelist()
-            if name.endswith((".py", ".pyc"))
-        }
+def _zipped(spec: ModuleSpec | None) -> bool:
+    return spec is not None and isinstance(spec.loader, zipimport.zipimporter)
 
 
-def _pyspark_version(source: str) -> str | None:
-    """__version__ of pyspark/version.py in a directory or zip archive."""
+def _from_dir(spec: ModuleSpec | None) -> bool:
+    """A regular package imported from a directory (not an archive, not a
+    namespace package)."""
+    return spec is not None and spec.has_location and not _zipped(spec)
+
+
+def _version(spec: ModuleSpec) -> str | None:
+    """__version__ of the version.py next to a pyspark spec's __init__."""
     try:
-        if os.path.isdir(source):
-            with open(os.path.join(source, "pyspark", "version.py")) as f:
-                text = f.read()
-        else:
-            with zipfile.ZipFile(source) as z:
-                text = z.read("pyspark/version.py").decode()
-    except (OSError, KeyError):
+        text = spec.loader.get_data(
+            os.path.join(os.path.dirname(spec.origin), "version.py")
+        ).decode()
+    except OSError:
         return None
     m = _VERSION.search(text)
     return m.group(1) if m else None
 
 
-def _import_dir(path: list[str], package: str) -> str | None:
-    """The directory `import package` resolves from over `path`, or None
-    when it resolves from an archive or not at all."""
-    for entry in path:
-        if os.path.isfile(os.path.join(entry or ".", package, "__init__.py")):
-            return entry or "."
-        packages = _archive_packages(entry)
-        if packages is not None and package in packages:
-            return None
-    return None
+def _is_spark_jar(entry: str) -> bool:
+    if not entry.endswith(".jar"):
+        return False
+    try:
+        with zipfile.ZipFile(entry) as z:
+            z.getinfo(_SPARK_JAR_CLASS)
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return False
+    return True
 
 
 def use_installed_pyspark(path: list[str], importer_cache: dict) -> None:
     """Drop Spark's archives from `path` and their importers from
-    `importer_cache` when the remaining entries import pyspark and py4j from
-    directories and that pyspark has the archive's version. Otherwise both
-    are left untouched."""
-    archives, rest = [], []
-    for entry in path:
-        packages = _archive_packages(entry)
-        shipped_only = packages is not None and packages <= _SHIPPED
-        (archives if shipped_only else rest).append(entry)
-    shipped = {_pyspark_version(a) for a in archives} - {None}
-    installed = _import_dir(rest, "pyspark")
+    `importer_cache` when `path` imports pyspark and py4j from zips, the
+    remaining entries import both from directories and that pyspark has the
+    archive's version. Otherwise both are left untouched."""
+    shipped = PathFinder.find_spec("pyspark", path)
+    shipped_py4j = PathFinder.find_spec("py4j", path)
+    if not (_zipped(shipped) and _zipped(shipped_py4j)):
+        return
+    zips = {shipped.loader.archive, shipped_py4j.loader.archive}
+    rest = [e for e in path if e not in zips and not _is_spark_jar(e)]
+    installed = PathFinder.find_spec("pyspark", rest)
     if (
-        len(shipped) != 1
-        or installed is None
-        or _import_dir(rest, "py4j") is None
-        or _pyspark_version(installed) not in shipped
+        not _from_dir(installed)
+        or not _from_dir(PathFinder.find_spec("py4j", rest))
+        or _version(shipped) is None
+        or _version(installed) != _version(shipped)
     ):
         return
+    dropped = [e for e in path if e not in rest]
     path[:] = rest
     for key in list(importer_cache):
-        if any(key == a or key.startswith(a + os.sep) for a in archives):
+        if any(key == d or key.startswith(d + os.sep) for d in dropped):
             del importer_cache[key]
 
 

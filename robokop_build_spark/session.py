@@ -102,17 +102,25 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+    )
+    conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
         # Python workers import pyspark from Spark's zip archives, and the
         # worker invalidates import caches at every task: on Python
         # 3.11/3.12 each zip importer then re-reads its archive directory
         # (~26.7k entries, 30-60 ms per task on 4 CPUs; 3.13 made that
         # lazy). This daemon drops the archives when an installed pyspark
         # of the same version is on the path (robokop_build_spark/
-        # pyworker.py); the package's parent directory on PYTHONPATH lets
-        # workers import it from any working directory
-        .config("spark.python.daemon.module", "robokop_build_spark.pyworker")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
-    )
-    for k, v in (extra_conf or {}).items():
+        # pyworker.py). The daemon must import this package before any
+        # task runs, so only local masters get it: their workers share the
+        # driver's filesystem, and the package's parent directory on
+        # PYTHONPATH lets them import it from any working directory.
+        # Executors elsewhere (local-cluster, a cluster with --py-files)
+        # keep Spark's own daemon
+        conf.setdefault("spark.python.daemon.module", "robokop_build_spark.pyworker")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            filter(None, [_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")])
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

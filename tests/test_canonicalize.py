@@ -55,7 +55,6 @@ def test_hub_star(spark, strategy):
     assert all(v == "ALIAS:0000" for v in got.values())
 
 
-
 @cc_strategies
 @pytest.mark.parametrize("id_type", ["bigint", "string"])
 def test_empty_edges_give_zero_rows_of_input_types(spark, strategy, id_type):
@@ -86,6 +85,7 @@ def test_empty_normalization_gives_empty_rep_map(spark, strategy):
         ("node_type", "string"),
         ("name", "string"),
     ]
+
 
 @cc_strategies
 def test_resolve_aliases_broadcast_vs_salted(spark, strategy):

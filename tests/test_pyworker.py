@@ -6,10 +6,11 @@ import os
 import subprocess
 import sys
 import zipfile
+from importlib.machinery import PathFinder
 
 import pytest
 
-from robokop_build_spark.pyworker import _pyspark_version, use_installed_pyspark
+from robokop_build_spark.pyworker import _version, use_installed_pyspark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -32,9 +33,12 @@ def _installed(root, version, py4j=True):
     return str(root)
 
 
-def _jar(path):
+def _jar(path, spark=True):
+    """A jar holding no Python; Spark's own holds PythonUtils."""
     with zipfile.ZipFile(path, "w") as z:
         z.writestr("META-INF/MANIFEST.MF", "")
+        if spark:
+            z.writestr("org/apache/spark/api/python/PythonUtils.class", "")
     return str(path)
 
 
@@ -45,7 +49,13 @@ def _choose(path):
     cache = {p: object() for p in path}
     cache.update({os.path.join(p, "pyspark"): object() for p in path})
     path = list(path)
-    use_installed_pyspark(path, cache)
+    # the import machinery caches a finder for every entry it probes
+    saved = dict(sys.path_importer_cache)
+    try:
+        use_installed_pyspark(path, cache)
+    finally:
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved)
     return path, set(cache)
 
 
@@ -82,12 +92,13 @@ def test_matching_version_drops_archives_and_their_importers(tmp_path):
     site = _installed(tmp_path / "site", "4.1.2")
     archive = _archive(tmp_path / "pyspark.zip", "4.1.2")
     jar = _jar(tmp_path / "spark-core.jar")
-    path = [str(tmp_path), archive, jar, str(user_zip), "/nonexistent", site]
+    other_jar = _jar(tmp_path / "other.jar", spark=False)
+    path = [str(tmp_path), archive, jar, other_jar, str(user_zip), "/nonexistent", site]
     got, cache = _choose(path)
-    assert got == [str(tmp_path), str(user_zip), "/nonexistent", site]
+    assert got == [str(tmp_path), other_jar, str(user_zip), "/nonexistent", site]
     for gone in (archive, jar):
         assert gone not in cache and os.path.join(gone, "pyspark") not in cache
-    assert str(user_zip) in cache and site in cache
+    assert str(user_zip) in cache and other_jar in cache and site in cache
 
 
 def _worker_import_source(spark):
@@ -114,9 +125,8 @@ def _worker_import_source(spark):
 
 
 def _need_installed_pyspark(spark):
-    if not any(
-        os.path.isdir(p) and _pyspark_version(p) == spark.version for p in sys.path
-    ):
+    spec = PathFinder.find_spec("pyspark", [p for p in sys.path if os.path.isdir(p)])
+    if spec is None or _version(spec) != spark.version:
         pytest.skip(f"no installed pyspark {spark.version} on the path")
 
 
