@@ -42,7 +42,8 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     block_target: int = 4096,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """Near-dup pairs by word-k-gram Jaccard ≥ threshold — the EXHAUSTIVE
     form: every pair of docs sharing ≥1 distinct shingle is scored with
@@ -53,191 +54,103 @@ def ngram_jaccard_pairs(
     instead: identical jaccard values, computed only on MinHash-LSH
     candidate pairs — linear end-to-end.
 
-    Round-8 shape: block-decomposed intersection counting instead of the
-    shingle self-join. The old plan (explode distinct shingles →
-    self-equi-join on shingle → groupBy pair) emitted one JVM row per
-    (pair, shared shingle) — ~113M rows at SF=1 through an Exchange and a
-    130M-group hash aggregate, 225 s of the driver suite. Here the
-    distinct-shingle sets are integer-coded once (dictionary join against
-    the distinct-shingle vocabulary), docs are hashed into ⌈n/block⌉
-    blocks, and every block PAIR is one task that counts intersections
-    with numpy (sort + searchsorted + unique — C speed, no per-row JVM
-    overhead). The kernel emits exact integer (n_shared, n_a, n_b)
-    triples for a conservatively prefiltered candidate set, and the final
-    jaccard division/round/threshold runs in the SAME Spark expression as
-    before — so results are bit-identical (integers are exact; no float
-    crosses the Python boundary). Work and shuffle volume are both
+    Shape: block-decomposed intersection counting instead of a shingle
+    self-join (which emitted one JVM row per (pair, shared shingle): ~113M
+    rows at SF=1). Each doc's distinct-shingle set comes from the Arrow
+    shingler once, is tagged with its block b = xxhash64(id) mod
+    ⌈n_rows/block_target⌉ (≤96 blocks; n_rows is the caller's footer
+    count, so planning runs no job) and is sent to every block pair
+    (least(b, j), greatest(b, j)) it belongs to. ONE shuffle on the block
+    pair then feeds a grouped Arrow kernel that integer-codes the group's
+    shingles (pyarrow dictionary_encode) and counts intersections with
+    numpy (sort + searchsorted + unique). The kernel emits exact integer
+    (n_shared, n_a, n_b) triples for a conservatively prefiltered
+    candidate set; the jaccard division/round/threshold runs in Spark, so
+    no float crosses the Python boundary. Work and shuffle volume are both
     quadratic in blocks — the honest cost of an exhaustive audit — but at
-    memory bandwidth rather than shuffle machinery speed (measured 225 s
-    → ~8 s at SF=1). The vocabulary dictionary is corpus-sized at true
-    web scale, which is one more reason this op stays the AUDIT path
-    (lsh_verified_near_duplicates is the 100-TB path).
+    memory bandwidth rather than shuffle machinery speed. No intermediate
+    is persisted: the shingler runs once, upstream of the one shuffle.
     """
-    from pyspark import StorageLevel
-
     id_t = dict(docs.dtypes)[id_col]
-    # per-doc distinct shingle SETS straight from the Arrow shingler — no
-    # explode, no global distinct, no vocabulary join: one narrow kernel
-    # pass and ONE shuffle (the block groupBy below). Shingles travel as
-    # strings; each block-pair task integer-codes its own two payloads
-    # with pd.factorize (~5 ms), which replaced a 4-shuffle prep chain
-    # (explode+persist, vocabulary distinct, single-partition row_number,
-    # dictionary join, per-doc collect) measured at ~8 s of the SF=1 wall.
-    sets = _shingle_arrays(docs, id_col, text_col, k).select(
-        "id", F.array_distinct("sh").alias("ss")
-    )
-    if n_rows is None:
-        n_rows = docs.count()
     n_blocks = max(1, min(96, -(-int(n_rows) // block_target)))
-    blocks = (
-        sets.withColumn("b", F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int"))
-        .groupBy("b")
-        .agg(F.collect_list(F.struct("id", "ss")).alias("docs"))
-        # flatten the payload into parallel flat arrays (ids / per-doc
-        # counts / concatenated shingles): the kernel then gets numpy
-        # arrays straight from Arrow instead of unpacking ~10^6 per-doc
-        # structs through Python dicts (measured ~2× kernel-side win); the
-        # HOF transforms here run over n_blocks rows only
+    b = F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int")
+    j = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
+    tagged = (
+        _shingle_arrays(docs, id_col, text_col, k)
+        .select("id", F.array_distinct("sh").alias("ss"), b.alias("b"), j.alias("j"))
         .select(
+            "id",
+            "ss",
             "b",
-            F.transform("docs", lambda d: d["id"]).alias("ids"),
-            F.transform("docs", lambda d: F.size(d["ss"])).alias("cnts"),
-            F.flatten(F.transform("docs", lambda d: d["ss"])).alias("sids"),
+            F.least("b", "j").alias("bx"),
+            F.greatest("b", "j").alias("by"),
         )
-        # consumed by BOTH sides of the block-pair join: without
-        # materialization each side re-runs the shingler + block agg
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    register_persisted(blocks)
-    bx = blocks.select(
-        F.col("b").alias("bx"),
-        F.col("ids").alias("ids_x"),
-        F.col("cnts").alias("cnts_x"),
-        F.col("sids").alias("sids_x"),
-    )
-    by = blocks.select(
-        F.col("b").alias("by"),
-        F.col("ids").alias("ids_y"),
-        F.col("cnts").alias("cnts_y"),
-        F.col("sids").alias("sids_y"),
-    )
-    # every unordered block pair exactly once. The pair set is enumerated
-    # DRIVER-SIDE (n_blocks is plan-time known and ≤96 — dimension-sized)
-    # and attached with two equi-joins on the int block id: the earlier
-    # non-equi `bx <= by` self-join left the planner choosing between
-    # broadcast-nested-loop and cartesian on a payload sitting right at
-    # the autoBroadcast threshold, and the cartesian fallback measured
-    # ~10× slower (bimodal 9 s vs 96 s bench samples at SF=1). Equi-joins
-    # on a kB-sized pair list are deterministic; the repartition spreads
-    # the O(B²/2) pair tasks over the cluster.
-    pairs_df = docs.sparkSession.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "bx int, by int",
-    )
-    bpairs = (
-        pairs_df.join(bx, "bx")
-        .join(by, "by")
-        .repartition(n_blocks * (n_blocks + 1) // 2, "bx", "by")
     )
     # conservative kernel-side prefilter: true ratio of every emitted pair
     # is ≥ threshold − 1e−6; the exact round+filter happens in Spark below,
     # so borderline extras are dropped by the same arithmetic as always
     pre = float(threshold) - 1e-6
 
-    def count_pairs(batches):
-        # mapInArrow: the block payloads stay Arrow buffers end to end —
-        # pyarrow dictionary_encode integer-codes the shingle strings in
-        # C++ (per task, over exactly the two payloads it compares), so no
-        # Python string object is ever materialized for the ~10^8 shingle
-        # occurrences crossing these tasks
+    def count_pairs(key, table):
+        # one block pair per call: the x side is block bx, the y side block
+        # by (the same rows when bx == by). Shingles stay Arrow buffers:
+        # dictionary_encode integer-codes them in C++, so no Python string
+        # is materialized for the shingle occurrences
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        def col_np(rb, name, i, dtype=None):
-            v = rb.column(name).slice(i, 1).flatten().to_numpy(
-                zero_copy_only=False
-            )
-            return v if dtype is None else v.astype(dtype)
+        bx, by = key[0].as_py(), key[1].as_py()
+        same = bx == by
+        x = table.filter(pc.equal(table.column("b"), bx))
+        y = x if same else table.filter(pc.equal(table.column("b"), by))
+        ss_x = x.column("ss").combine_chunks()
+        ss_y = ss_x if same else y.column("ss").combine_chunks()
+        cnt_x = pc.list_value_length(ss_x).to_numpy().astype(np.int64)
+        cnt_y = pc.list_value_length(ss_y).to_numpy().astype(np.int64)
+        sx = ss_x.flatten()
+        sh = sx if same else pa.concat_arrays([sx, ss_y.flatten()])
+        codes = (
+            pc.dictionary_encode(sh).indices.to_numpy(zero_copy_only=False)
+        ).astype(np.int64)
+        ex_sid = codes[: len(sx)]
+        ey_sid = codes if same else codes[len(sx) :]
+        ex_doc = np.repeat(np.arange(len(cnt_x)), cnt_x)
+        ey_doc = np.repeat(np.arange(len(cnt_y)), cnt_y)
+        order = np.argsort(ey_sid, kind="stable")
+        ys, yd = ey_sid[order], ey_doc[order]
+        lo = np.searchsorted(ys, ex_sid, "left")
+        m = np.searchsorted(ys, ex_sid, "right") - lo
+        tot = int(m.sum())
+        starts = np.concatenate(([0], np.cumsum(m)[:-1])).astype(np.int64)
+        idx = np.repeat(lo - starts, m) + np.arange(tot)
+        ny = max(len(cnt_y), 1)
+        key = np.repeat(ex_doc, m) * ny + yd[idx]
+        ukey, shared = np.unique(key, return_counts=True)
+        xi, yi = ukey // ny, ukey % ny
+        na, nb = cnt_x[xi], cnt_y[yi]
+        cand = shared >= pre * (na + nb - shared)
+        xi, yi, na, nb, shared = xi[cand], yi[cand], na[cand], nb[cand], shared[cand]
+        ida = x.column("id").take(pa.array(xi, pa.int64()))
+        idb = y.column("id").take(pa.array(yi, pa.int64()))
+        # same block: every pair arrives in both orders (and as a self
+        # pair); different blocks: once, in either order
+        lt = pc.less(ida, idb)
+        keep = (lt if same else pc.not_equal(ida, idb)).to_numpy(zero_copy_only=False)
+        swap = ~lt.to_numpy(zero_copy_only=False)
+        mask = pa.array(keep, pa.bool_())
+        return pa.table(
+            {
+                "id_a": pc.if_else(lt, ida, idb).filter(mask),
+                "id_b": pc.if_else(lt, idb, ida).filter(mask),
+                "n_shared": shared[keep],
+                "n_a": np.where(swap, nb, na)[keep],
+                "n_b": np.where(swap, na, nb)[keep],
+            }
+        )
 
-        for rb in batches:
-            bxs = rb.column("bx").to_pylist()
-            bys = rb.column("by").to_pylist()
-            for i in range(rb.num_rows):
-                same = bxs[i] == bys[i]
-                ids_x = col_np(rb, "ids_x", i)
-                cnt_x = col_np(rb, "cnts_x", i, np.int64)
-                sx = rb.column("sids_x").slice(i, 1).flatten()
-                ex_doc = np.repeat(np.arange(len(ids_x)), cnt_x)
-                if same:
-                    ids_y, cnt_y = ids_x, cnt_x
-                    ex_sid = (
-                        pc.dictionary_encode(sx)
-                        .indices.to_numpy(zero_copy_only=False)
-                        .astype(np.int64)
-                    )
-                    ey_sid, ey_doc = ex_sid, ex_doc
-                else:
-                    ids_y = col_np(rb, "ids_y", i)
-                    cnt_y = col_np(rb, "cnts_y", i, np.int64)
-                    sy = rb.column("sids_y").slice(i, 1).flatten()
-                    codes = (
-                        pc.dictionary_encode(pa.concat_arrays([sx, sy]))
-                        .indices.to_numpy(zero_copy_only=False)
-                        .astype(np.int64)
-                    )
-                    ex_sid = codes[: len(sx)]
-                    ey_sid = codes[len(sx) :]
-                    ey_doc = np.repeat(np.arange(len(ids_y)), cnt_y)
-                if not len(ex_sid) or not len(ey_sid):
-                    continue
-                order = np.argsort(ey_sid, kind="stable")
-                ys, yd = ey_sid[order], ey_doc[order]
-                lo = np.searchsorted(ys, ex_sid, "left")
-                hi = np.searchsorted(ys, ex_sid, "right")
-                m = hi - lo
-                tot = int(m.sum())
-                if not tot:
-                    continue
-                starts = np.concatenate(([0], np.cumsum(m)[:-1]))
-                idx = np.repeat(lo - starts, m) + np.arange(tot)
-                xd = np.repeat(ex_doc, m)
-                ny = len(ids_y)
-                key = xd * ny + yd[idx]
-                ukey, shared = np.unique(key, return_counts=True)
-                xi, yi = ukey // ny, ukey % ny
-                ida, idb = ids_x[xi], ids_y[yi]
-                na, nb = cnt_x[xi], cnt_y[yi]
-                keep = shared >= pre * (na + nb - shared)
-                if same:
-                    keep &= ida < idb
-                else:
-                    keep &= ida != idb
-                if not keep.any():
-                    continue
-                ida, idb = ida[keep], idb[keep]
-                na, nb = na[keep], nb[keep]
-                shared = shared[keep]
-                swap = idb < ida
-                out_a = np.where(swap, idb, ida)
-                out_b = np.where(swap, ida, idb)
-                out_na = np.where(swap, nb, na)
-                out_nb = np.where(swap, na, nb)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_a),
-                        pa.array(out_b),
-                        pa.array(shared.astype(np.int64)),
-                        pa.array(out_na.astype(np.int64)),
-                        pa.array(out_nb.astype(np.int64)),
-                    ],
-                    names=["id_a", "id_b", "n_shared", "n_a", "n_b"],
-                )
-
-    counted = bpairs.mapInArrow(
+    counted = tagged.groupBy("bx", "by").applyInArrow(
         count_pairs,
-        schema=(
-            f"id_a {id_t}, id_b {id_t}, n_shared long, n_a long, n_b long"
-        ),
+        schema=f"id_a {id_t}, id_b {id_t}, n_shared long, n_a long, n_b long",
     )
     return (
         counted.withColumn(
@@ -325,15 +238,14 @@ def _shingle_arrays(
     )
 
 
-def _resolve_num_hashes(
-    docs: DataFrame, num_hashes: int | None, bands: int, n_rows: int | None
-) -> int:
+def _resolve_num_hashes(num_hashes: int | None, bands: int, n_rows: int | None) -> int:
     """num_hashes=None → corpus-adaptive band width (auto_minhash_rows_per_band
-    × bands); n_rows from the caller avoids a count() job."""
+    × bands) over the caller's row count (a footer count: planning runs no
+    job)."""
     if num_hashes is not None:
         return num_hashes
     if n_rows is None:
-        n_rows = docs.count()
+        raise ValueError("num_hashes=None needs n_rows to pick the band width")
     return bands * auto_minhash_rows_per_band(n_rows)
 
 
@@ -347,7 +259,7 @@ def minhash_lsh_pairs(
     n_rows: int | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash-LSH — the scale path:
-    cost is (docs × bands) rows hashed into buckets + an equi-join per
+    cost is (docs × bands) rows hashed into buckets + the pairs within each
     bucket, never an all-pairs comparison.
 
     bands of rows r = num_hashes/bands; band key = md5(concat of the band's
@@ -355,15 +267,16 @@ def minhash_lsh_pairs(
     num_hashes=None picks r from the corpus size (auto_minhash_rows_per_band)
     so candidate volume stays O(n) as the corpus grows.
     """
-    num_hashes = _resolve_num_hashes(docs, num_hashes, bands, n_rows)
+    num_hashes = _resolve_num_hashes(num_hashes, bands, n_rows)
     sh = _shingle_arrays(docs, id_col, text_col, k)
     return _lsh_candidate_pairs(sh, num_hashes, bands)
 
 
 def _banded_keys(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bkey) banded-signature table from a (id, sh) shingle-array
-    table — the projection shared by the batch self-join and the streaming
-    stateful detector (parity by construction).
+    table — the projection shared by the batch bucket grouping
+    (_lsh_candidate_pairs) and the streaming stateful detector (parity by
+    construction).
 
     MinHash family: the affine g_i = (h1 + i·h2) mod MINHASH_PRIME
     (Carter–Wegman 2-universal construction) over the two 32-bit halves of
@@ -452,21 +365,25 @@ def _banded_keys(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 
 
 def _lsh_candidate_pairs(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """Banded-LSH candidate pairs from a (id, sh) shingle-array table."""
-    banded = _banded_keys(sh, num_hashes, bands)
-    # materialize the (id, band, bkey) table before the self-join: both
-    # join sides otherwise recompute the full signature DAG (shingles +
-    # md5 + affine probes — measured 43 s of a 95 s wall at SF=1, and AQE
-    # exchange reuse does not collapse the two sides); the banded table is
-    # docs × bands rows of three scalar columns — linear, spill-safe
-    from pyspark import StorageLevel
+    """Banded-LSH candidate pairs from a (id, sh) shingle-array table.
 
-    banded = register_persisted(banded.persist(StorageLevel.MEMORY_AND_DISK))
-    x, y = banded.alias("x"), banded.alias("y")
+    One shuffle on the band key: each (band, bkey) bucket collects its
+    sorted distinct ids, and a bucket of m ids emits its C(m, 2) pairs
+    (id_a < id_b) by pairing each id with the ids after it. The signature
+    kernel runs once, upstream of that shuffle, so nothing is persisted;
+    `distinct` folds pairs that share more than one band."""
+    buckets = (
+        _banded_keys(sh, num_hashes, bands)
+        .groupBy("band", "bkey")
+        .agg(F.array_sort(F.collect_set("id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
     return (
-        x.join(y, ["band", "bkey"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        buckets.select(F.posexplode("ids").alias("i", "id_a"), "ids")
+        .select(
+            "id_a",
+            F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("id_b"),
+        )
         .distinct()
     )
 
@@ -485,8 +402,8 @@ def lsh_verified_near_duplicates(
     candidate pairs — the composition that retires ngram_jaccard_pairs'
     all-pairs self-join as the scale path while keeping exact scores.
 
-    Cost shape: LSH is linear (docs × bands bucket rows + per-bucket
-    equi-joins), and the verify stage is linear in |candidates| — two hash
+    Cost shape: LSH is linear (docs × bands bucket rows + the pairs within
+    each bucket), and the verify stage is linear in |candidates| — two hash
     joins pulling each candidate's distinct-shingle SET (array_intersect
     inside codegen, no explode blowup), never a shingle self-join whose hot
     keys go quadratic. Output equals
@@ -501,7 +418,7 @@ def lsh_verified_near_duplicates(
     """
     from pyspark import StorageLevel
 
-    num_hashes = _resolve_num_hashes(docs, num_hashes, bands, n_rows)
+    num_hashes = _resolve_num_hashes(num_hashes, bands, n_rows)
     sh = _shingle_arrays(docs, id_col, text_col, k)
     # consumed twice (signature path + shingle-set verify side); persist so
     # the split/slice scan runs once. Registered for post-action release.
@@ -547,21 +464,22 @@ def cross_doc_spans(
 
     Shape at 100 TB: the positional gram stream is one row per token
     (linear; grams are md5-hashed BEFORE the shuffle so the shuffle key is
-    a fixed-width digest, never the n-word string), document frequency is
-    one groupBy with map-side partial aggregation, and the flag-back join
-    is hash-on-digest with both sides already partitioned by it. Coverage
-    union-length needs no interval explode: flagged start positions are
-    sorted per doc once and each contributes min(n, gap-to-next) tokens —
-    a single window pass. md5 rather than xxhash64 because the digest must
-    be reproducible by external engines (same rule as the sampling ops);
-    collisions (2^-128) are the declared approximation, exactly as in the
-    MinHash family.
+    a fixed-width digest, never the n-word string). Document frequency is
+    a window over one shuffle on the digest: the highest dense rank of
+    doc_id within a digest is the number of distinct docs holding it, so the
+    stream is flagged in place — no aggregate joined back to it, and the
+    gram kernel runs once with nothing persisted. Coverage union-length
+    needs no interval explode: flagged start positions are sorted per doc
+    once and each contributes min(n, gap-to-next) tokens — a single window
+    pass. md5 rather than xxhash64 because the digest must be reproducible
+    by external engines (same rule as the sampling ops); collisions
+    (2^-128) are the declared approximation, exactly as in the MinHash
+    family.
 
     Tokenization matches the MinHash shingles (_shingle_arrays: split on
     single space, case preserved). Docs shorter than n tokens have no grams and report
     coverage 0. Returns one row per input doc:
     (doc_id, n_tokens, dup_tokens, dup_fraction)."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     toks = docs.select(
@@ -571,12 +489,10 @@ def cross_doc_spans(
 
     # Arrow-kernel positional gram stream (round 8): the expression form
     # (posexplode over interpreted HOF shingles → md5) was the dominant
-    # cost — and ran TWICE, once per consumer (document frequency + the
-    # flag-back join). The kernel emits the identical grams with the digest
-    # as 16-byte BINARY (md5 bytes == unhex of Spark's md5 hex — digests
-    # are internal join/group keys only, so the narrower key halves the
-    # shuffle; the twin recomputes its own), dict-cached per unique gram,
-    # and the stream is persisted so it computes once.
+    # cost. The kernel emits the identical grams with the digest as 16-byte
+    # BINARY (md5 bytes == unhex of Spark's md5 hex — digests are internal
+    # group keys only, so the narrower key halves the shuffle; the twin
+    # recomputes its own), dict-cached per unique gram.
     def gram_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
@@ -608,22 +524,21 @@ def cross_doc_spans(
 
     from .partitioning import widen_for_kernel
 
-    grams = register_persisted(
-        widen_for_kernel(docs.select(id_col, text_col))
-        .mapInPandas(gram_rows, schema=f"doc_id {id_t}, pos int, h binary")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    flagged = (
-        grams.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") >= min_df)
-        .select("h")
-    )
+    # a doc with a null id joins back to no row and counts toward no
+    # document frequency (the twin's count(DISTINCT doc_id) skips nulls,
+    # a dense rank would not): it emits no grams
+    grams = widen_for_kernel(
+        docs.select(id_col, text_col).where(F.col(id_col).isNotNull())
+    ).mapInPandas(gram_rows, schema=f"doc_id {id_t}, pos int, h binary")
+    by_gram = Window.partitionBy("h")
+    doc_rank = F.dense_rank().over(by_gram.orderBy("doc_id"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     cov = (
-        grams.join(flagged, "h")
-        # digest served as the join key only: drop it before the per-doc
-        # window shuffle (guide §2.3 — project before the exchange)
+        grams.withColumn("r", doc_rank)
+        .withColumn("df", F.max("r").over(by_gram))
+        .filter(F.col("df") >= min_df)
+        # digest served as the grouping key only: drop it before the
+        # per-doc window shuffle (guide §2.3 — project before the exchange)
         .select("doc_id", "pos")
         .withColumn(
             "contrib",

@@ -2,9 +2,10 @@
 """Summarize Spark event logs per stage: task count, wall span, executor
 run time, JVM CPU time and run minus CPU (off_s: time the task threads
 spent off the JVM CPU, e.g. waiting on a Python worker, I/O or a lock), GC,
-shuffle fetch wait, remote/local bytes, spill, ser/deser time; then the
-Spark job count, in total and per job group (spark.jobGroup.id, "-" for
-jobs outside any group).
+shuffle fetch wait, remote/local bytes, spill, ser/deser time; then, in
+total and per job group (spark.jobGroup.id, "-" for jobs outside any
+group), the Spark jobs, the stages that ran tasks, their tasks and the
+summed job wall time (submission to completion).
 
 Usage: python scripts/eventlog_stats.py <eventlog file or dir> [top_n]
 """
@@ -72,12 +73,24 @@ def main() -> None:
     )
 
     jobs: dict[str, int] = defaultdict(int)
+    job_start: dict[int, tuple[str, int]] = {}  # job id: (group, submitted)
+    job_ms: dict[str, int] = defaultdict(int)
+    # a stage belongs to the first job that lists it: later jobs of an
+    # adaptive query list it again, as skipped
+    stage_group: dict[int, str] = {}
 
     for ev in load_events(path):
         et = ev.get("Event")
         if et == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
-            jobs[props.get("spark.jobGroup.id") or "-"] += 1
+            group = props.get("spark.jobGroup.id") or "-"
+            jobs[group] += 1
+            job_start[ev["Job ID"]] = (group, ev.get("Submission Time", 0))
+            for sid in ev.get("Stage IDs", []):
+                stage_group.setdefault(sid, group)
+        elif et == "SparkListenerJobEnd" and ev["Job ID"] in job_start:
+            group, submitted = job_start[ev["Job ID"]]
+            job_ms[group] += ev.get("Completion Time", 0) - submitted
         elif et == "SparkListenerStageSubmitted":
             info = ev["Stage Info"]
             key = (info["Stage ID"], info["Stage Attempt ID"])
@@ -130,9 +143,19 @@ def main() -> None:
             f"{s['deser_ms']/1000:>7.1f}  {s['name']}"
         )
 
-    print(f"\njobs {sum(jobs.values()):>5}  total")
-    for group, n in sorted(jobs.items()):
-        print(f"jobs {n:>5}  {group}")
+    ran: dict[str, list[int]] = defaultdict(lambda: [0, 0])  # stages, tasks
+    for (sid, _), s in stages.items():
+        if s["tasks"]:
+            r = ran[stage_group.get(sid, "-")]
+            r[0] += 1
+            r[1] += s["tasks"]
+    groups = [
+        (g, n, *ran[g], job_ms[g] / 1000) for g, n in sorted(jobs.items())
+    ]
+    total = tuple(sum(row[i] for row in groups) for i in range(1, 5))
+    print(f"\n{'jobs':>5} {'stages':>6} {'tasks':>6} {'job_s':>7}  group")
+    for g, n, n_stages, n_tasks, secs in [("total", *total), *groups]:
+        print(f"{n:>5} {n_stages:>6} {n_tasks:>6} {secs:>7.2f}  {g}")
 
 
 if __name__ == "__main__":

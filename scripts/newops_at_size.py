@@ -2,7 +2,7 @@
 """At-size evidence for the round-7 operators (BENCH/newops_at_size.json):
 cross_doc_spans at SF=32 (1.6M generated docs, ~86M positional grams):
 wall time + docs/s for the full linear pipeline (digest shuffle ->
-document frequency -> flag-back join -> window union).
+per-digest document-frequency window -> per-doc window union).
 
     python scripts/newops_at_size.py
 """

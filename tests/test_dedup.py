@@ -1,7 +1,12 @@
+import itertools
+import random
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
 from robokop_build_spark.operators.dedup import (
+    cross_doc_spans,
     exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -36,7 +41,7 @@ def test_exact_duplicates(docs):
 def test_ngram_jaccard(docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.5, n_rows=6).collect()
     }
     assert pairs[("d1", "d2")] == 1.0
     assert 0.5 <= pairs[("d1", "d3")] < 1.0
@@ -122,7 +127,12 @@ def test_lsh_verified_equals_exact_restricted_to_candidates(spark):
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            fixture_docs, "doc_id", "text", k=3, threshold=0.12
+            fixture_docs,
+            "doc_id",
+            "text",
+            k=3,
+            threshold=0.12,
+            n_rows=fixture_docs.count(),
         ).collect()
     }
     cands = {
@@ -144,6 +154,13 @@ def test_lsh_verified_equals_exact_restricted_to_candidates(spark):
     # must be an LSH candidate at 8 bands × 2 rows on the fixture corpus
     high = {p for p, j in exact.items() if j >= 0.5}
     assert high <= set(got)
+
+
+def test_adaptive_band_width_needs_row_count(docs):
+    """num_hashes=None picks the band width from the caller's row count;
+    without one it raises instead of running a count() job."""
+    with pytest.raises(ValueError, match="n_rows"):
+        minhash_lsh_pairs(docs, num_hashes=None)
 
 
 def test_auto_minhash_rows_per_band_scaling():
@@ -208,3 +225,149 @@ def test_cross_doc_spans_coverage(spark):
         "d4": (9, 9, 1.0),
         "d5": (10, 9, 0.9),
     }
+
+
+def _shingles(text, k):
+    toks = (text or "").split(" ")
+    return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+
+
+def _spark_round6(x):
+    """Spark's round(x, 6) on a double: HALF_UP on its shortest decimal
+    form (Python's round works on the binary value)."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def brute_jaccard(rows, k, threshold):
+    """{(id_a, id_b): jaccard} over every pair sharing ≥1 distinct shingle."""
+    sets = {i: _shingles(t, k) for i, t in rows}
+    out = {}
+    for a, b in itertools.combinations(sorted(i for i in sets if sets[i]), 2):
+        shared = len(sets[a] & sets[b])
+        if shared:
+            j = _spark_round6(shared / len(sets[a] | sets[b]))
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def brute_spans(rows, n, min_df):
+    """{doc_id: (n_tokens, dup_tokens, dup_fraction)}: tokens inside a word
+    n-gram that min_df or more distinct docs hold."""
+    grams = {}
+    for i, t in rows:
+        toks = (t or "").split(" ")
+        grams[i] = [" ".join(toks[p : p + n]) for p in range(len(toks) - n + 1)]
+    df = {}
+    for i, gs in grams.items():
+        for g in set(gs):
+            df[g] = df.get(g, 0) + 1
+    out = {}
+    for i, t in rows:
+        n_tok = len((t or "").split(" "))
+        covered = {
+            p + q for p, g in enumerate(grams[i]) if df[g] >= min_df for q in range(n)
+        }
+        out[i] = (n_tok, len(covered), _spark_round6(len(covered) / n_tok))
+    return out
+
+
+def _jaccard(df):
+    return {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}
+
+
+def test_ngram_jaccard_multi_block_matches_one_block_and_brute_force(spark):
+    """240 docs, each a few word edits away from one of 30 seed texts, with
+    block_target=64: 4 hash blocks, so the grouped kernel sees both
+    same-block and cross-block pairs. Pairs and values equal the
+    one-block run and a Python brute force."""
+    rng = random.Random(7)
+    seeds = [[f"w{rng.randrange(80)}" for _ in range(24)] for _ in range(30)]
+    rows = []
+    for i in range(240):
+        toks = list(rng.choice(seeds))
+        for _ in range(rng.randrange(8)):
+            toks[rng.randrange(len(toks))] = f"w{rng.randrange(80)}"
+        rows.append((i, " ".join(toks)))
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    kw = dict(k=3, threshold=0.12, n_rows=len(rows))
+    multi = _jaccard(ngram_jaccard_pairs(docs, block_target=64, **kw))
+    one = _jaccard(ngram_jaccard_pairs(docs, **kw))
+    assert multi == one == brute_jaccard(rows, 3, 0.12)
+    assert len(multi) > 240
+
+
+@pytest.fixture(params=["bigint", "string"])
+def make_docs(spark, request):
+    """(rows, DataFrame) builder with bigint or string doc ids."""
+    id_t = request.param
+
+    def make(texts):
+        ids = [i + 1 if id_t == "bigint" else f"d{i:02d}" for i in range(len(texts))]
+        rows = list(zip(ids, texts))
+        return rows, spark.createDataFrame(rows, f"doc_id {id_t}, text string")
+
+    return make
+
+
+def _check_pair_ops(rows, docs, threshold=0.12):
+    """Each rewritten operator against its brute force, the ngram one at
+    one block and at ⌈n/2⌉ blocks; returns the LSH candidate pairs."""
+    id_t = dict(docs.dtypes)["doc_id"]
+    want = brute_jaccard(rows, 3, threshold)
+    for block_target in (4096, 2):
+        out = ngram_jaccard_pairs(
+            docs, k=3, threshold=threshold, block_target=block_target, n_rows=len(rows)
+        )
+        assert out.dtypes == [("id_a", id_t), ("id_b", id_t), ("jaccard", "double")]
+        assert _jaccard(out) == want
+    spans = cross_doc_spans(docs, n=8, min_df=2)
+    assert spans.dtypes == [
+        ("doc_id", id_t),
+        ("n_tokens", "bigint"),
+        ("dup_tokens", "bigint"),
+        ("dup_fraction", "double"),
+    ]
+    got = {
+        r["doc_id"]: (r["n_tokens"], r["dup_tokens"], r["dup_fraction"])
+        for r in spans.collect()
+    }
+    assert got == brute_spans(rows, 8, 2)
+    lsh = minhash_lsh_pairs(docs, k=3, num_hashes=16, bands=8)
+    assert lsh.dtypes == [("id_a", id_t), ("id_b", id_t)]
+    return {(r["id_a"], r["id_b"]) for r in lsh.collect()}
+
+
+def test_pair_ops_on_empty_docs(make_docs):
+    rows, docs = make_docs([])
+    assert _check_pair_ops(rows, docs) == set()
+
+
+def test_pair_ops_on_identical_docs(make_docs):
+    """Every LSH bucket holds every doc and every gram is shared."""
+    rows, docs = make_docs([BASE] * 6)
+    assert len(brute_jaccard(rows, 3, 0.12)) == 15
+    lsh = _check_pair_ops(rows, docs)
+    assert lsh == set(itertools.combinations(sorted(i for i, _ in rows), 2))
+
+
+def test_pair_ops_on_docs_shorter_than_k_and_n(make_docs):
+    """No doc reaches k=3 tokens; then one doc does, alone in its group.
+    No doc reaches the spans' n=8: coverage 0 everywhere."""
+    short = ["", "tiny", "two words", "a b"]
+    for texts in (short, short + ["a b c d e f g"]):
+        rows, docs = make_docs(texts)
+        assert _check_pair_ops(rows, docs) == set()
+
+
+def test_ngram_groups_without_pairs(make_docs):
+    """Docs that share no shingle, spread over ≥3 blocks: every block-pair
+    group returns an empty Arrow table of the declared types."""
+    texts = [f"w{i} x{i} y{i} z{i}" for i in range(8)]
+    rows, docs = make_docs(texts)
+    out = ngram_jaccard_pairs(docs, threshold=0.0, block_target=2, n_rows=len(rows))
+    assert out.collect() == []
+    # mixed: one shared pair among the no-pair groups
+    rows, docs = make_docs(texts + [texts[0]])
+    out = ngram_jaccard_pairs(docs, threshold=0.0, block_target=2, n_rows=len(rows))
+    assert _jaccard(out) == {(rows[0][0], rows[8][0]): 1.0}

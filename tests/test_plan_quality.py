@@ -205,13 +205,12 @@ def test_widen_for_kernel_round_robins_only_under_split_frames(spark):
 
 
 def test_lsh_self_joins_reuse_materialized_signatures(spark):
-    """Both LSH pair ops self-join a signature table; without explicit
-    materialization each join side re-runs the full signature DAG
+    """embedding_near_duplicates self-joins a signature table; without
+    explicit materialization each join side re-runs the full signature DAG
     (measured 2× the signature cost at SF=1 — AQE exchange reuse does not
     collapse the two sides). The plan must read both sides from the same
     InMemoryRelation."""
     from robokop_build_spark.caching import release_operator_caches
-    from robokop_build_spark.operators.dedup import minhash_lsh_pairs
     from robokop_build_spark.operators.similarity import embedding_near_duplicates
 
     # earlier tests may have left cached signature subtrees; Spark's
@@ -220,16 +219,34 @@ def test_lsh_self_joins_reuse_materialized_signatures(spark):
     release_operator_caches()
     spark.catalog.clearCache()
 
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    plan = _plan(minhash_lsh_pairs(docs, "doc_id", "text"))
-    assert plan.count("InMemoryTableScan") == 2, plan
-    # the expensive part (md5 + affine probes) runs once, inside the
-    # cached relation, not once per join side
-    assert "md5" not in plan.split("InMemoryTableScan")[0]
-
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     plan = _plan(embedding_near_duplicates(emb, "vec_id", "embedding"))
     assert plan.count("InMemoryTableScan") == 2, plan
+
+
+def test_pair_operators_read_their_input_once(spark):
+    """The grouped pair operators shuffle once on their pairing key and
+    emit from that pass: no persisted intermediate, and each Python kernel
+    (shingler, MinHash signature, gram digests, block-pair counter) appears
+    exactly once in the plan."""
+    from robokop_build_spark.caching import release_operator_caches
+    from robokop_build_spark.operators import dedup as D
+    from robokop_build_spark.sources.readers import parquet_rows
+
+    release_operator_caches()
+    spark.catalog.clearCache()
+
+    path = os.path.join(SF_DIR, "documents.parquet")
+    docs = spark.read.parquet(path)
+    for df, map_in_pandas, grouped_arrow in (
+        (D.ngram_jaccard_pairs(docs, n_rows=parquet_rows(path)), 1, 1),
+        (D.minhash_lsh_pairs(docs, "doc_id", "text"), 2, 0),
+        (D.cross_doc_spans(docs, "doc_id", "text"), 1, 0),
+    ):
+        plan = _plan(df)
+        assert "InMemoryTableScan" not in plan, plan
+        assert plan.count("MapInPandas") == map_in_pandas, plan
+        assert plan.count("FlatMapGroupsInArrow") == grouped_arrow, plan
 
 
 def test_split_is_pure_projection_no_shuffle(spark):
