@@ -111,9 +111,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 200,
-    manager=None,
-    stage: str = "k_core",
-    commit_every: int = 0,
     stats: dict | None = None,
 ) -> DataFrame:
     """The k-core of an undirected graph: the (unique) maximal subgraph in
@@ -132,34 +129,17 @@ def k_core(
     (datagen/oracle_fixtures.py) — a data-dependent fixpoint has no
     fixed-unroll SQL twin.
 
-    manager/stage/commit_every: optional durable loop checkpointing
-    (operators/iterate.LoopCheckpointer) — every commit_every-th round's
-    edge set commits as a CheckpointManager snapshot, and a relaunched
-    call resumes peeling from the last committed round instead of round
-    zero (preemption safety at 100-TB scale; localCheckpoint blocks are
-    single-replica executor memory)."""
-    from .iterate import LoopCheckpointer, input_fingerprint
-
+    stats: when given, receives rounds_run (the peeling rounds that
+    removed nodes)."""
     a, b = F.col(src), F.col(dst)
     und = (
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    params = (
-        {"op": "k_core", "k": k, "input": input_fingerprint(und, ["a", "b"])}
-        if manager is not None
-        else None
-    )
-    ckpt = LoopCheckpointer(manager, stage, commit_every, params=params)
-    start = 0
-    resumed = ckpt.resume()
-    if resumed is not None:
-        start, e = resumed
-    else:
-        e = und.localCheckpoint(eager=True)
+    e = und.localCheckpoint(eager=True)
     rounds_run = 0
-    for i in range(start, max_iter):
+    for _ in range(max_iter):
         deg = (
             e.select(F.col("a").alias("node"))
             .unionByName(e.select(F.col("b").alias("node")))
@@ -169,16 +149,15 @@ def k_core(
         bad = deg.filter(F.col("deg") < k).select("node")
         if bad.isEmpty():
             break
-        e = ckpt.save(
-            i,
+        e = (
             e.join(bad.withColumnRenamed("node", "a"), "a", "left_anti")
-            .join(bad.withColumnRenamed("node", "b"), "b", "left_anti"),
+            .join(bad.withColumnRenamed("node", "b"), "b", "left_anti")
+            .localCheckpoint(eager=True)
         )
         rounds_run += 1
     else:
         raise RuntimeError(f"k_core did not converge in {max_iter} rounds")
     if stats is not None:
-        stats["resumed_from"] = start
         stats["rounds_run"] = rounds_run
     return (
         e.select(F.col("a").alias("node"))
@@ -193,9 +172,6 @@ def core_number(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 200,
-    manager=None,
-    stage: str = "core_number",
-    commit_every: int = 0,
     stats: dict | None = None,
 ) -> DataFrame:
     """Full core decomposition: (node, core) where core is the largest k
@@ -220,46 +196,28 @@ def core_number(
     est ≥ t). Rounds are data-dependent (a path graph tightens one node
     per round from each end, same worst case as peeling) so the loop is
     driver-driven with one scalar changed-count per round as the stop
-    test; per-round estimates are lineage-truncated like the peeling loop
-    (or durably committed — manager/stage/commit_every route the estimate
-    table through a CheckpointManager snapshot every commit_every rounds
-    so a relaunched run resumes from the last committed round; see
-    operators/iterate.LoopCheckpointer)."""
-    from .iterate import LoopCheckpointer, input_fingerprint
+    test; per-round estimates are lineage-truncated like the peeling loop.
 
+    stats: when given, receives rounds_run (the rounds up to and including
+    the one that changed no estimate)."""
     a, b = F.col(src), F.col(dst)
     und = (
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    params = (
-        {"op": "core_number", "input": input_fingerprint(und, ["a", "b"])}
-        if manager is not None
-        else None
-    )
-    ckpt = LoopCheckpointer(manager, stage, commit_every, params=params)
-    # static per-invocation table, deterministically re-derived from the
-    # input on a resumed run (only the evolving estimate table needs to be
-    # durable)
     nbr = (
         und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .localCheckpoint(eager=True)
     )
-    start = 0
-    resumed = ckpt.resume()
-    if resumed is not None:
-        start, est = resumed
-        est = est.select("node", "est")
-    else:
-        est = (
-            nbr.groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("est"))
-            .localCheckpoint(eager=True)
-        )
+    est = (
+        nbr.groupBy("node")
+        .agg(F.count(F.lit(1)).cast("long").alias("est"))
+        .localCheckpoint(eager=True)
+    )
     w = Window.partitionBy("node").orderBy(F.desc("nbr_est"))
-    for i in range(start, max_iter):
+    for i in range(max_iter):
         h = (
             nbr.join(
                 est.select(F.col("node").alias("nbr"), F.col("est").alias("nbr_est")),
@@ -271,20 +229,20 @@ def core_number(
             .groupBy("node")
             .agg(F.max(F.least(F.col("nbr_est"), F.col("cum"))).alias("h"))
         )
-        new_est = ckpt.save(
-            i,
-            est.join(h, "node").select(
+        new_est = (
+            est.join(h, "node")
+            .select(
                 "node",
                 F.least(F.col("est"), F.col("h")).cast("long").alias("est"),
                 (F.col("h") < F.col("est")).cast("int").alias("__chg"),
-            ),
+            )
+            .localCheckpoint(eager=True)
         )
         changed = new_est.agg(F.sum("__chg")).first()[0] or 0
         est = new_est.drop("__chg")
         if changed == 0:
             if stats is not None:
-                stats["resumed_from"] = start
-                stats["rounds_run"] = i - start + 1
+                stats["rounds_run"] = i + 1
             return est.select("node", F.col("est").alias("core"))
     raise RuntimeError(f"core_number did not converge in {max_iter} rounds")
 
@@ -296,9 +254,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     round_dp: int = 8,
-    manager=None,
-    stage: str = "pagerank",
-    commit_every: int = 0,
     stats: dict | None = None,
 ) -> DataFrame:
     """Fixed-iteration power-iteration PageRank.
@@ -314,29 +269,11 @@ def pagerank(
     canonicalize.py shows the fingerprint-fixpoint pattern where
     convergence detection matters.
 
-    manager/stage/commit_every: optional durable loop checkpointing — the
-    rank table commits as a CheckpointManager snapshot (tagged with its
-    iteration) every commit_every rounds; a relaunched call resumes from
-    the last committed iteration with hash-identical output (ranks are
-    rounded to round_dp each round, and doubles round-trip parquet
-    bit-exactly). See operators/iterate.LoopCheckpointer.
+    stats: when given, receives rounds_run (= iterations).
     """
     from pyspark import StorageLevel
 
-    from .iterate import LoopCheckpointer, input_fingerprint
-
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    params = (
-        {
-            "op": "pagerank",
-            "damping": damping,
-            "round_dp": round_dp,
-            "input": input_fingerprint(e, ["src", "dst"]),
-        }
-        if manager is not None
-        else None
-    )
-    ckpt = LoopCheckpointer(manager, stage, commit_every, params=params)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -354,24 +291,10 @@ def pagerank(
     # reproduces the literals exactly (Python's round() is banker's and
     # must not leak into the contract)
     n_d = F.lit(float(n))
-    start = 0
-    resumed = ckpt.resume()
-    if resumed is not None:
-        start, ranks = resumed
-        if start > iterations:
-            # a checkpoint from a LONGER run: silently returning its ranks
-            # as the requested shorter result would be wrong values with a
-            # matching schema — fail loudly like the peeling loops do
-            raise ValueError(
-                f"pagerank stage {stage!r} holds iteration {start - 1}, past "
-                f"the requested iterations={iterations}; use a fresh stage "
-                "or request at least that many iterations"
-            )
-    else:
-        ranks = nodes.withColumn(
-            "rank", F.round(F.lit(1.0) / n_d, round_dp)
-        ).localCheckpoint(eager=True)
-    for i in range(start, iterations):
+    ranks = nodes.withColumn(
+        "rank", F.round(F.lit(1.0) / n_d, round_dp)
+    ).localCheckpoint(eager=True)
+    for _ in range(iterations):
         contribs = (
             contrib_edges.join(
                 ranks.select(F.col("node").alias("src"), "rank"), "src"
@@ -379,20 +302,20 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("s"))
         )
-        ranks = ckpt.save(
-            i,
-            nodes.join(contribs, "node", "left").select(
+        ranks = (
+            nodes.join(contribs, "node", "left")
+            .select(
                 "node",
                 F.round(
                     F.lit(1.0 - damping) / n_d
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0)),
                     round_dp,
                 ).alias("rank"),
-            ),
+            )
+            .localCheckpoint(eager=True)
         )
     if stats is not None:
-        stats["resumed_from"] = start
-        stats["rounds_run"] = iterations - start
+        stats["rounds_run"] = iterations
     out = ranks.select("node", F.round("rank", 6).alias("rank"))
     nodes.unpersist()
     contrib_edges.unpersist()

@@ -1,5 +1,5 @@
-"""Lineage control for driver-driven iterative fixpoint loops (PageRank,
-k-core peeling, core decomposition, large/small-star CC).
+"""Lineage control for the distributed connected-components loop
+(operators/canonicalize.connected_components, large/small-star rounds).
 
 Two failure modes threaten an iterative Spark loop:
 
@@ -10,22 +10,18 @@ Two failure modes threaten an iterative Spark loop:
 2. **Executor loss** — localCheckpoint stores blocks in executor memory
    with no lineage to rebuild them. On a preemptible 100-TB cluster, one
    lost executor after block eviction kills the job and restarts the WHOLE
-   iteration history (round-5 verdict, what's-wrong #3). The document
-   pipeline already learned this lesson for stage intermediates
-   (plans/pipeline.py commits them from COMMIT_INTERMEDIATES_MIN_DOCS
-   documents on); this module gives the graph
-   loops the same durable option: route the loop state through a
-   CheckpointManager stage every `commit_every` rounds. A relaunched job
+   iteration history (round-5 verdict, what's-wrong #3). The KG pipeline
+   routes its canonicalization CC through a CheckpointManager stage every
+   `commit_every` rounds once the normalization map is past
+   LOCAL_CC_MAX_ALIASES (plans/pipeline.CC_COMMIT_EVERY). A relaunched job
    resumes from the last committed round instead of round zero, and the
    committed state is a parquet snapshot (compressed, columnar,
    re-readable by any executor) rather than single-replica executor
    blocks.
 
-The per-round state these loops carry is exact under a parquet round-trip
-(integer edge/estimate tables; PageRank ranks are rounded to fixed dp each
-round, and doubles round-trip bit-exactly), so a resumed run's output is
-hash-identical to an uninterrupted one — the resume tests assert exactly
-that.
+The CC loop state is an edge table of node ids, exact under a parquet
+round-trip, so a resumed run's output is hash-identical to an
+uninterrupted one — the resume tests assert exactly that.
 """
 
 from __future__ import annotations
@@ -38,10 +34,11 @@ from pyspark.sql import DataFrame
 def input_fingerprint(df: DataFrame, cols: list[str]) -> list[int]:
     """Order-insensitive identity of a loop's normalized input frame:
     (row count, xor of per-row xxhash64 over `cols`). One agg pass with a
-    commutative combiner — computed only when durable mode is on, so the
-    non-durable path pays nothing. Feeds LoopCheckpointer params so a
-    resume against a DIFFERENT input (same stage name) fails loudly
-    instead of silently contracting someone else's state."""
+    commutative combiner. connected_components compares it between rounds
+    as its fixpoint test, and in durable mode feeds the input's into the
+    LoopCheckpointer params, so a resume against a DIFFERENT input (same
+    stage name) fails loudly instead of silently contracting someone
+    else's state."""
     from pyspark.sql import functions as F
 
     row = df.agg(
@@ -63,13 +60,12 @@ class LoopCheckpointer:
     disk, not O(rounds).
 
     `params` (JSON-able dict) is the loop's identity — operator name, its
-    output-affecting arguments (k, damping, round_dp, ...), and an input
-    fingerprint. It is stamped into every commit's metadata and validated
-    on resume: default stage names ('k_core', 'pagerank') encode neither
-    the operator's arguments nor the input identity, so without this check
-    reusing a manager workdir across calls with a different k or different
-    edges would silently resume the WRONG state (round-6 advice). A
-    mismatch raises instead.
+    output-affecting arguments, and an input fingerprint. It is stamped
+    into every commit's metadata and validated on resume: a stage name
+    encodes neither the operator's arguments nor the input identity, so
+    without this check reusing a manager workdir across calls with
+    different edges would silently resume the WRONG state (round-6
+    advice). A mismatch raises instead.
     """
 
     def __init__(

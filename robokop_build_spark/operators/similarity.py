@@ -152,20 +152,6 @@ def auto_signature_bits(
     return max(floor_bits, math.ceil(math.log2(max(n_rows, 1) / target_bucket)))
 
 
-def _estimated_rows(df: DataFrame) -> int:
-    """Corpus row count without a dedicated scan job when possible:
-    Catalyst's optimized-plan stats carry an exact rowCount for analyzed /
-    cached relations; otherwise fall back to count() (one metadata-cheap
-    job over a parquet scan)."""
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-    except Exception:
-        pass
-    return df.count()
-
-
 def near_duplicate_planes(
     dim: int, n_tables: int, bits_per_table: int, seed: int = 42
 ) -> list[tuple[int, int, list[float]]]:
@@ -205,7 +191,8 @@ def embedding_near_duplicates(
     bucket still surface through the other n_tables-1 tables.
 
     bits_per_table=None (default) sizes the signature from the corpus
-    row count (auto_signature_bits), keeping expected bucket population —
+    row count n_rows (auto_signature_bits; the caller passes it, so the
+    operator runs no count() job), keeping expected bucket population —
     and therefore candidate volume per row — constant as the corpus
     grows. Recall per table is p^bits (p = 1 - θ/π), so wider signatures
     trade recall for candidate discipline; at true web scale the recall
@@ -213,11 +200,8 @@ def embedding_near_duplicates(
     banded layout is the on-ramp for.
     """
     if bits_per_table is None:
-        # n_rows from the caller (or table stats) avoids an extra full-scan
-        # count() job before the real query; count() is the fallback when
-        # the corpus size is genuinely unknown
         if n_rows is None:
-            n_rows = _estimated_rows(embeddings)
+            raise ValueError("bits_per_table=None needs the corpus row count n_rows")
         bits_per_table = auto_signature_bits(n_rows)
     by_table = near_duplicate_planes(dim, n_tables, bits_per_table, seed)
     # Arrow-vectorized signature kernel (round 8): the expression form
@@ -493,9 +477,9 @@ def _cell_distances(X, C):
     """The ONE cell-distance kernel every IVF code path shares: 6dp-rounded
     squared L2 of each row of X to each centroid (argmin / stable argsort
     over it = the assignment and probe tie rules). Centralized because the
-    bit-exact parity between the live operator, the persisted index, the
-    calibrators, and the generated DuckDB twin all ride on this exact
-    arithmetic — a drifted copy would break them silently."""
+    bit-exact parity between the live operator, the calibrators and the
+    generated DuckDB twin rides on this exact arithmetic — a drifted
+    copy would break them silently."""
     import numpy as np
 
     X = np.asarray(X, dtype=np.float64)
@@ -526,9 +510,9 @@ def _with_cells(
 ) -> DataFrame:
     """`df` plus `cid int`: each row's cell, the argmin of _cell_distances
     (lowest cid on ties). The one cell-assignment kernel — ivf_assign,
-    ivf_build_index, ivf_topk and semantic_dedup all call it; it crosses
-    the Arrow boundary once per batch. A degenerate vector (_valid_vectors)
-    gets a null cid, so it falls out of every join on cid."""
+    ivf_topk and semantic_dedup all call it; it crosses the Arrow boundary
+    once per batch. A degenerate vector (_valid_vectors) gets a null cid,
+    so it falls out of every join on cid."""
     import pandas as pd
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -644,7 +628,8 @@ def ivf_calibrate_nprobe_exact(
     target_recall: float = 0.9,
     margin: float = 0.02,
     n_calibration: int = 128,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> tuple[int, float, float]:
     """Exact (corpus-truth) probe-depth calibration — the production path
     for corpora much larger than the training sample.
@@ -657,20 +642,19 @@ def ivf_calibrate_nprobe_exact(
     biased toward shared cells; clustered corpus generalized fine, and a
     held-out split over-probed it 1.8x instead — BENCH §0i). The only
     estimator that cannot drift is ground truth: run the DISTRIBUTED
-    exact top-k for ~n_calibration hash-strided queries (ONE corpus pass,
-    the same scan any index build already pays for assignment), collect
-    the (query, true-neighbor) pairs plus the neighbors' cell assignments
-    and per-cell populations (one narrow aggregate), and walk nprobe up
-    the TRUE recall curve driver-side. Per index build this costs two
-    corpus passes and returns a (nprobe, recall, scan_fraction) that is
-    exact by construction — what FAISS-style systems report as
+    exact top-k for ~n_calibration hash-strided queries (ONE corpus
+    pass), collect the (query, true-neighbor) pairs plus the neighbors'
+    cell assignments and per-cell populations (one narrow aggregate), and
+    walk nprobe up the TRUE recall curve driver-side. Per calibration this
+    costs two corpus passes and returns a (nprobe, recall, scan_fraction)
+    that is exact by construction — what FAISS-style systems report as
     recall@nprobe. Deterministic throughout (hash-strided query choice,
     the kernels' 6dp/stable tie rules), so the result is a shareable
-    literal like the centroid table."""
+    literal like the centroid table. n_rows is the corpus row count (the
+    caller's footer count), which sets the query stride."""
     import numpy as np
 
-    spark_n = n_rows if n_rows is not None else _estimated_rows(embeddings)
-    step = max(1, spark_n // n_calibration)
+    step = max(1, n_rows // n_calibration)
     q = embeddings.filter(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(step)) == 0
     )
@@ -728,7 +712,7 @@ def ivf_calibrate_nprobe_exact(
         for order in probe_order.values()
     )
     return nprobe, float(recall_at[nprobe]), float(
-        scanned / (n_q * max(spark_n, 1))
+        scanned / (n_q * max(n_rows, 1))
     )
 
 
@@ -764,86 +748,6 @@ def _probe_pairs(
     return q.mapInPandas(probe, schema=schema)
 
 
-def _probed_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """Exact cosine top-k of each query (probes: query_id, qvec, cid) over
-    the corpus rows (neighbor_id, nvec, cid) of its probed cells; the probe
-    side is broadcast, ranks break ties by (score desc, neighbor_id)."""
-    scored = (
-        corpus.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
-
-
-def ivf_build_index(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    manager,
-    stage: str = "ivf_index",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Persist the IVF inverted file: the corpus with its cell assignment,
-    committed as a CheckpointManager snapshot PARTITIONED BY cid — the
-    100-TB shape ivf_topk's docstring names (the assignment partitioned
-    BY cid, so a probe prunes partitions at the scan). The commit is atomic (snapshot + pointer swap), re-buildable
-    without disturbing readers of the previous index (snapshot isolation),
-    and the marker carries per-cell manifest stats — which is exactly what
-    lets ivf_topk_indexed plan a probe scan WITHOUT listing the directory
-    tree. Pay one corpus pass + one partitioned write per index build;
-    every query after that reads nprobe/nlist of the data from disk
-    instead of scanning and re-assigning the corpus per query batch.
-    Degenerate vectors (null cid) are left out: no probe reaches them."""
-    assigned = _with_cells(embeddings.select(id_col, vec_col), centroids, vec_col)
-    return manager.commit(
-        stage, assigned.filter(F.col("cid").isNotNull()), partition_by=["cid"]
-    )
-
-
-def ivf_topk_indexed(
-    manager,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    stage: str = "ivf_index",
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k over a PERSISTED index (ivf_build_index): expand queries
-    to their nprobe cells, then read ONLY those cells' partitions through
-    the commit marker's manifest (CheckpointManager.read(partitions=...) —
-    no directory listing, absent cells skipped as zero rows) and run the
-    exact cosine + per-query top-k on that slice. Same (distance, cid) and
-    (score desc, neighbor_id) tie rules as ivf_topk, so for identical
-    centroids/nprobe the two return identical rows (pinned by test); the
-    difference is purely physical — the corpus scan is partition-pruned
-    I/O on a prebuilt table instead of a full scan plus per-batch
-    re-assignment."""
-    # materialized once: the probe pairs feed BOTH the distinct-cid collect
-    # below and the broadcast join — without this the mapInPandas probe
-    # kernel would run twice (round-6 review finding)
-    q = _probe_pairs(queries, centroids, nprobe, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    # the probed-cell set is bounded by nlist (dimension-sized), so the
-    # driver-side collect here is a constant, never corpus-scale
-    cids = sorted(r["cid"] for r in q.select("cid").distinct().collect())
-    corpus = manager.read(stage, partitions=[f"cid={c}" for c in cids]).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        "cid",
-    )
-    return _probed_topk(corpus, q, k)
-
-
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -861,13 +765,12 @@ def ivf_topk(
     100-TB shape: the nlist x dim centroid matrix rides inside the Arrow
     kernels' closures (||x||^2 + ||c||^2 - 2 X @ C.T per batch, so the
     cost is O(rows x nlist x dim) BLAS, not a plan that grows with nlist);
-    the corpus pass is a single projection; ivf_build_index persists the
-    assignment partitioned BY cid so a probe prunes partitions at the scan.
-    Work per query is nprobe/nlist of the corpus instead of all of it; with
-    nlist ~ sqrt(n) that is O(nprobe * sqrt(n)) per query. Ties
-    deterministic everywhere: assignment argmin breaks to the lowest cid,
-    probe order (distance, cid), rank order (score desc, neighbor_id) — all
-    on 6dp-rounded doubles. numpy's summation order differs from the
+    the corpus pass is a single projection. Work per query is nprobe/nlist
+    of the corpus instead of all of it; with nlist ~ sqrt(n) that is
+    O(nprobe * sqrt(n)) per query. Ties deterministic everywhere:
+    assignment argmin breaks to the lowest cid, probe order (distance,
+    cid), rank order (score desc, neighbor_id) — all on 6dp-rounded
+    doubles. numpy's summation order differs from the
     DuckDB twin's sequential fold at ~1e-15 relative, nine orders below
     the 6dp rounding that feeds the argmin; the twin's hash gate pins the
     rows.
@@ -882,6 +785,17 @@ def ivf_topk(
         centroids,
         "nvec",
     )
-    return _probed_topk(
-        corpus, _probe_pairs(queries, centroids, nprobe, id_col, vec_col), k
+    probes = _probe_pairs(queries, centroids, nprobe, id_col, vec_col)
+    # the probe side is small: broadcast it onto the corpus cells
+    scored = (
+        corpus.join(F.broadcast(probes), "cid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
+        .select("query_id", "neighbor_id", "score")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "score")
     )

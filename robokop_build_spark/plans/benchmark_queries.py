@@ -1057,36 +1057,10 @@ def ann_embedding_neardup(spark, sf_dir):
         "embedding",
         threshold=0.35,
         dim=64,
-        # exact row count from the parquet footer (metadata-only read): the
-        # call site knows the corpus, so the operator skips its fallback
-        # full-scan count() job (one fewer job in the event log)
+        # exact row count from the parquet footer (metadata-only read):
+        # sizes the signature width without a count() job
         n_rows=parquet_rows(os.path.join(sf_dir, "embeddings.parquet")),
     )
-
-
-# bump when the calibration rule changes — invalidates the disk cache
-_IVF_CALIB_VERSION = 1
-
-
-def _ivf_cache_path(sf_dir: str, train_rows: int) -> str | None:
-    """Fingerprint-keyed disk-cache path for the IVF params: the driver
-    compares each query in a FRESH process (lru_cache never survives), and
-    the Spark query and its generated DuckDB twin may be built in different
-    processes — the disk cache makes both read the identical literals and
-    pays the k-means + calibration once per corpus, not once per process."""
-    import hashlib
-
-    emb = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(emb)
-    except OSError:
-        return None
-    key = (
-        f"{os.path.abspath(emb)}|{st.st_size}|{st.st_mtime_ns}|"
-        f"{parquet_rows(emb)}|{train_rows}|v{_IVF_CALIB_VERSION}"
-    )
-    h = hashlib.md5(key.encode()).hexdigest()
-    return f"/tmp/robokop_ivf_cache/{h}.json"
 
 
 @functools.lru_cache(maxsize=4)
@@ -1107,35 +1081,16 @@ def _ivf_params_for(
     Calibrator choice follows the round-6 at-size finding (BENCH §0i): when
     the sample IS the corpus (every driver scale: ≤2000 vectors vs the 65k
     sample cap) the in-sample estimate is corpus truth by construction and
-    needs no Spark; when the corpus exceeds the sample, in-sample recall
-    estimates drift with corpus structure (measured 0.92 est → 0.64 true at
-    640k unclustered), so the exact corpus-truth calibrator runs instead
-    (one distributed brute pass over ~128 hash-strided queries + one
-    assignment aggregate). Results are disk-cached keyed by the corpus
-    fingerprint, so cross-process callers (driver per-query processes, the
-    Spark-less oracle generator) share identical literals and the cost is
-    paid once per corpus."""
-    import json
-
+    needs no Spark, so every process — the Spark query's and the Spark-less
+    oracle generator's — computes the identical literals (measured 13 ms
+    at 500 vectors, 33 ms at 2,000, on 4 CPUs); when the corpus exceeds the sample, in-sample
+    recall estimates drift with corpus structure (measured 0.92 est → 0.64
+    true at 640k unclustered), so the exact corpus-truth calibrator runs
+    instead (one distributed brute pass over ~128 hash-strided queries +
+    one assignment aggregate). lru_cache reuses the result within a
+    process; nothing is kept across processes."""
     import numpy as np
     import pyarrow.dataset as ds
-
-    cache = _ivf_cache_path(sf_dir, train_rows)
-    if cache and os.path.exists(cache):
-        try:
-            with open(cache) as f:
-                d = json.load(f)
-            # ADVICE r7 #1: an entry computed by a Spark-less process on a
-            # corpus larger than the sample carries the known-drifting
-            # in-sample calibration. Honor it only if it is exact, or if
-            # this process too lacks a SparkSession (same best-effort);
-            # otherwise fall through and recompute exactly, overwriting
-            # the cache. Entries predating the flag recompute once and
-            # self-heal.
-            if d.get("exact", False) or SparkSession.getActiveSession() is None:
-                return d["cents"], d["nprobe"], d["recall"], d["scan"]
-        except (OSError, ValueError, KeyError):
-            pass  # unreadable/torn cache: recompute and rewrite below
 
     tbl = ds.dataset(os.path.join(sf_dir, "embeddings.parquet")).head(
         train_rows, columns=["vec_id", "embedding"]
@@ -1156,41 +1111,16 @@ def _ivf_params_for(
                 f"({len(X)}) but no active SparkSession is available for "
                 "exact calibration — falling back to the in-sample "
                 "estimate, which is measured to drift at this regime "
-                "(BENCH §0i); run the Spark query first so the exact "
-                "params land in the disk cache",
+                "(BENCH §0i); call this with an active SparkSession for "
+                "the exact probe depth",
                 file=sys.stderr,
             )
     if exact_spark is not None:
         emb = exact_spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        nprobe, cal_recall, scan_frac = SIM.ivf_calibrate_nprobe_exact(
+        return cents, *SIM.ivf_calibrate_nprobe_exact(
             emb, cents, k=5, n_rows=n_corpus
         )
-    else:
-        nprobe, cal_recall, scan_frac = SIM.ivf_calibrate_nprobe(X, cents, k=5)
-
-    if cache:
-        try:
-            os.makedirs(os.path.dirname(cache), exist_ok=True)
-            tmp = f"{cache}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "cents": [[float(v) for v in c] for c in cents],
-                        "nprobe": int(nprobe),
-                        "recall": float(cal_recall),
-                        "scan": float(scan_frac),
-                        # exact ⇔ the sample WAS the corpus, or the exact
-                        # distributed calibrator ran (ADVICE r7 #1)
-                        "exact": bool(
-                            n_corpus <= len(X) or exact_spark is not None
-                        ),
-                    },
-                    f,
-                )
-            os.replace(tmp, cache)  # atomic: readers see whole files only
-        except OSError:
-            pass  # cache is an optimization; never fail the query for it
-    return cents, nprobe, cal_recall, scan_frac
+    return cents, *SIM.ivf_calibrate_nprobe(X, cents, k=5)
 
 
 def _ivf_centroids_for(sf_dir: str) -> list[list[float]]:
@@ -2482,9 +2412,9 @@ _SEMDEDUP_THRESHOLD = 0.4
 def semdedup_embeddings(spark, sf_dir):
     """Semantic dedup over the embedding corpus (beyond §2, LLM-pipeline
     family; SemDeDup, arXiv:2303.09540): k-means cells from the SAME
-    fingerprint-cached trainer the IVF index uses (_ivf_params_for), exact
-    pairwise cosine only WITHIN a cell (n^1.5 total work at the √n nlist
-    rule — the reason this runs at 100 TB), keeper = lowest
+    trainer ann_ivf_topk uses (_ivf_params_for), exact pairwise cosine
+    only WITHIN a cell (n^1.5 total work at the √n nlist rule — the
+    reason this runs at 100 TB), keeper = lowest
     centroid-cosine member (ties: lowest id). Returns dropped rows with
     their strongest dominating duplicate. The DuckDB twin replays the
     election from the shared centroid literals, so the hash gate covers

@@ -71,15 +71,9 @@ class CheckpointManager:
             if name.startswith("snap-") and name[5:].isdigit()
         )
 
-    def read(self, stage: str, partitions: list[str] | None = None) -> DataFrame:
+    def read(self, stage: str) -> DataFrame:
         """Read the current snapshot of a committed stage with its
-        commit-time schema.
-
-        partitions: optional list of hive partition dirs (e.g.
-        ['pred=treats']) — the scan is planned from the commit marker's
-        partition manifest: named dirs absent from the manifest are skipped
-        as zero rows, present ones are read directly, and nothing is
-        discovered by listing the directory tree."""
+        commit-time schema."""
         from pyspark.sql.types import StructType
 
         meta = self._pointer(stage)
@@ -91,43 +85,12 @@ class CheckpointManager:
         # fileless directory fails even though the stage legitimately
         # produced 0 rows (e.g. an end-bound query with no matches)
         schema = StructType.fromJson(json.loads(meta["schema"]))
-        # manifest-planned read paths (the Iceberg scan-planning half): the
-        # commit marker's stats say what the data layer holds, so a reader
-        # can skip it without listing anything —
-        # (a) a zero-row snapshot resolves to a LocalRelation: no directory
-        #     listing, no FileScan, no job;
-        # (b) a partition-scoped read scans exactly the partition dirs the
-        #     manifest names (absent = zero rows = skipped), never trusting
-        #     a directory listing that may see foreign/leftover dirs.
+        # the commit marker's stats say what the data layer holds: a
+        # zero-row snapshot resolves to a LocalRelation — no directory
+        # listing, no FileScan, no job
         if meta.get("n_rows") == 0:
             return self.spark.createDataFrame([], schema)
-        if partitions is None:
-            return self.spark.read.schema(schema).parquet(p)
-        manifest = meta.get("partitions")
-        if manifest is None:
-            raise ValueError(
-                f"stage {stage!r} snapshot was not committed with "
-                "partition_by; no partition manifest to plan from"
-            )
-        # prefix semantics for multi-column layouts: a selector 'a=1'
-        # matches manifest leaves 'a=1' AND 'a=1/b=2' — without this a
-        # single-level selector over partition_by=['a','b'] data would
-        # silently return zero rows
-        keep = sorted(
-            {
-                d
-                for d in manifest
-                for sel in partitions
-                if d == sel or d.startswith(sel + "/")
-            }
-        )
-        if not keep:
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.option("basePath", p)
-            .schema(schema)
-            .parquet(*(os.path.join(p, d) for d in keep))
-        )
+        return self.spark.read.schema(schema).parquet(p)
 
     @staticmethod
     def _manifest_stats(data_dir: str) -> dict:
@@ -135,9 +98,9 @@ class CheckpointManager:
         parquet footers (metadata-only reads — no data scan, no Spark job):
         file count, total bytes, exact row count, plus the same rollup per
         partition directory for partitioned commits. Recorded in the commit
-        marker so the read path can plan scans from the manifest instead of
-        listing directories (read(partitions=...) / the zero-row
-        short-circuit), and callers can audit a stage's size."""
+        marker so read() can short-circuit a zero-row snapshot without
+        listing directories, and callers can audit a stage's size and
+        per-partition lineage."""
         import pyarrow.parquet as pq
 
         n_files = n_rows = n_bytes = 0

@@ -1,5 +1,5 @@
 """Snapshot isolation for the checkpoint layer — the Iceberg-commit
-contract (immutable snapshots, atomic pointer swap, manifest-planned reads,
+contract (immutable snapshots, atomic pointer swap, manifest stats,
 retention) on plain parquet."""
 
 import os
@@ -71,7 +71,8 @@ def test_unnamed_snap_dir_never_half_overwritten(spark, ckpt):
 
 def test_manifest_stats_in_commit_marker(spark, ckpt):
     """Every commit records manifest-style stats (file/row/byte counts from
-    the parquet footers) in the pointer, readable through current_meta."""
+    the parquet footers, and per partition directory for a partition_by
+    commit) in the pointer, readable through current_meta."""
     ckpt.commit("s", _df(spark, [1, 2, 3]))
     meta = ckpt.current_meta("s")
     assert meta["snapshot"] == 0
@@ -81,16 +82,15 @@ def test_manifest_stats_in_commit_marker(spark, ckpt):
     ckpt.commit("s", _df(spark, [4]), extra_meta={"iteration": 7})
     meta = ckpt.current_meta("s")
     assert (meta["snapshot"], meta["n_rows"], meta["iteration"]) == (1, 1, 7)
-
-
-# ---------------------------------------------------------------------------
-# manifest-planned reads: the stats in the commit marker drive the scan, not
-# directory listings (the Iceberg scan-planning half)
-# ---------------------------------------------------------------------------
-
-
-def _pdf(spark, rows):
-    return spark.createDataFrame(rows, ["pred", "x"])
+    # a partition_by commit rolls the same stats up per partition directory
+    ckpt.commit(
+        "t",
+        spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], ["pred", "x"]),
+        partition_by=["pred"],
+    )
+    parts = ckpt.current_meta("t")["partitions"]
+    assert sorted(parts) == ["pred=a", "pred=b"]
+    assert (parts["pred=a"]["n_rows"], parts["pred=b"]["n_rows"]) == (2, 1)
 
 
 def test_zero_row_snapshot_reads_as_local_relation(spark, ckpt):
@@ -106,50 +106,3 @@ def test_zero_row_snapshot_reads_as_local_relation(spark, ckpt):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in plan and "Scan parquet" not in plan
     assert out.count() == 0  # commit() itself returns the planned read
-
-
-def test_partition_scoped_read_plans_from_manifest_not_listing(spark, ckpt):
-    df = _pdf(spark, [("a", 1), ("a", 2), ("b", 3)])
-    ckpt.commit("t", df, partition_by=["pred"])
-    meta = ckpt.current_meta("t")
-    assert meta["partitions"]["pred=a"]["n_rows"] == 2
-    assert meta["partitions"]["pred=b"]["n_rows"] == 1
-
-    # plant a DECOY partition dir inside the snapshot: a listing-based
-    # reader would pick it up; the manifest-planned one must not
-    snap = os.path.join(ckpt.path("t"), f"snap-{meta['snapshot']}")
-    decoy = os.path.join(snap, "pred=zzz")
-    os.makedirs(decoy)
-    _pdf(spark, [("zzz", 99)]).drop("pred").write.parquet(
-        os.path.join(decoy, "junk")
-    )
-
-    got = ckpt.read("t", partitions=["pred=a", "pred=zzz"])
-    assert sorted((r["pred"], r["x"]) for r in got.collect()) == [
-        ("a", 1), ("a", 2),
-    ]
-    # fully-pruned selection: every requested dir absent from the manifest
-    none = ckpt.read("t", partitions=["pred=zzz"])
-    assert none.count() == 0
-    assert set(none.columns) == {"pred", "x"}
-    plan = none._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan" not in plan and "Scan parquet" not in plan
-
-
-def test_partition_read_on_unpartitioned_stage_raises(spark, ckpt):
-    ckpt.commit("u", _df(spark, [1]))
-    with pytest.raises(ValueError, match="partition manifest"):
-        ckpt.read("u", partitions=["pred=a"])
-
-
-def test_partition_prefix_matches_multi_level_layout(spark, ckpt):
-    """A single-level selector over a two-column partition layout must
-    match by prefix ('a=1' → 'a=1/b=2'), not return silent zero rows."""
-    df = spark.createDataFrame(
-        [("x", "p", 1), ("x", "q", 2), ("y", "p", 3)], ["a", "b", "v"]
-    )
-    ckpt.commit("m", df, partition_by=["a", "b"])
-    got = ckpt.read("m", partitions=["a=x"])
-    assert sorted(r["v"] for r in got.collect()) == [1, 2]
-    exactly = ckpt.read("m", partitions=["a=x/b=q"])
-    assert [r["v"] for r in exactly.collect()] == [2]

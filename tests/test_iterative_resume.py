@@ -1,13 +1,14 @@
-"""Durable-commit resume for the iterative fixpoint loops (pagerank,
-k_core, core_number, connected_components): kill mid-iteration, relaunch,
-and the loop must resume from the last committed round with output
-hash-identical to an uninterrupted run (round-5 verdict #3 — on a
-preemptible cluster localCheckpoint blocks die with their executor)."""
+"""Durable-commit resume for the distributed connected-components loop:
+kill mid-contraction, relaunch, and the loop must resume from the last
+committed round with output hash-identical to an uninterrupted run
+(round-5 verdict #3 — on a preemptible cluster localCheckpoint blocks die
+with their executor)."""
+
+import os
 
 import pytest
 
 from robokop_build_spark.operators.canonicalize import connected_components
-from robokop_build_spark.operators.graph import core_number, k_core, pagerank
 from robokop_build_spark.operators.iterate import LoopCheckpointer
 from robokop_build_spark.sources.checkpoint import CheckpointManager
 
@@ -16,10 +17,12 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _path_edges(spark, n=14):
-    return spark.createDataFrame(
-        [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(n)], ["src", "dst"]
-    )
+def _two_chains(spark):
+    # two chains -> two components
+    edges = [(f"x{i}", f"x{i + 1}") for i in range(9)] + [
+        (f"y{i}", f"y{i + 1}") for i in range(7)
+    ]
+    return spark.createDataFrame(edges, ["src", "dst"])
 
 
 def test_loop_checkpointer_rejects_partial_config(spark, tmp_path):
@@ -30,82 +33,10 @@ def test_loop_checkpointer_rejects_partial_config(spark, tmp_path):
         LoopCheckpointer(mgr, stage="s", commit_every=0)
 
 
-def test_pagerank_resumes_from_last_committed_iteration(spark, tmp_path):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "a")],
-        ["src", "dst"],
-    )
-    want = _rows(pagerank(edges, iterations=6))
-
-    mgr = CheckpointManager(spark, str(tmp_path))
-    # "kill" after 4 of 6 rounds: run a 4-iteration job that commits at
-    # rounds 1 and 3, exactly the on-disk state a preempted 6-round job
-    # leaves behind
-    pagerank(edges, iterations=4, manager=mgr, stage="pr", commit_every=2)
-    assert mgr.current_meta("pr")["iteration"] == 3
-
-    stats: dict = {}
-    got = pagerank(
-        edges, iterations=6, manager=mgr, stage="pr", commit_every=2,
-        stats=stats,
-    )
-    assert stats["resumed_from"] == 4 and stats["rounds_run"] == 2
-    assert _rows(got) == want
-
-
-def test_pagerank_resume_past_target_iterations_runs_zero_rounds(
-    spark, tmp_path
-):
-    edges = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
-    mgr = CheckpointManager(spark, str(tmp_path))
-    pagerank(edges, iterations=4, manager=mgr, stage="pr", commit_every=4)
-    stats: dict = {}
-    got = pagerank(
-        edges, iterations=4, manager=mgr, stage="pr", commit_every=4,
-        stats=stats,
-    )
-    assert stats["rounds_run"] == 0
-    assert _rows(got) == _rows(pagerank(edges, iterations=4))
-
-
-def test_k_core_kill_mid_peel_resumes_and_matches(spark, tmp_path):
-    edges = _path_edges(spark)  # k=2 core is empty; peels one layer/round
-    want = _rows(k_core(edges, k=2))
-    mgr = CheckpointManager(spark, str(tmp_path))
-    with pytest.raises(RuntimeError, match="did not converge"):
-        k_core(edges, k=2, max_iter=4, manager=mgr, stage="kc", commit_every=2)
-    assert mgr.current_meta("kc")["iteration"] == 3
-    stats: dict = {}
-    got = k_core(
-        edges, k=2, manager=mgr, stage="kc", commit_every=2, stats=stats
-    )
-    assert stats["resumed_from"] == 4
-    assert _rows(got) == want
-
-
-def test_core_number_kill_mid_propagation_resumes_and_matches(spark, tmp_path):
-    edges = _path_edges(spark)  # estimates tighten inward from the ends
-    want = _rows(core_number(edges))
-    mgr = CheckpointManager(spark, str(tmp_path))
-    with pytest.raises(RuntimeError, match="did not converge"):
-        core_number(edges, max_iter=3, manager=mgr, stage="cn", commit_every=2)
-    assert mgr.current_meta("cn")["iteration"] == 1
-    stats: dict = {}
-    got = core_number(
-        edges, manager=mgr, stage="cn", commit_every=2, stats=stats
-    )
-    assert stats["resumed_from"] == 2
-    assert _rows(got) == want
-
-
 def test_connected_components_kill_mid_contraction_resumes_and_matches(
     spark, tmp_path
 ):
-    # two chains -> two components; force the distributed star path
-    edges = [(f"x{i}", f"x{i + 1}") for i in range(9)] + [
-        (f"y{i}", f"y{i + 1}") for i in range(7)
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
+    df = _two_chains(spark)  # force the distributed star path below
     want = _rows(connected_components(df, strategy="distributed"))
     mgr = CheckpointManager(spark, str(tmp_path))
     with pytest.raises(RuntimeError, match="no fixpoint"):
@@ -123,57 +54,42 @@ def test_connected_components_kill_mid_contraction_resumes_and_matches(
 
 
 def test_durable_loop_retention_keeps_bounded_snapshots(spark, tmp_path):
-    edges = _path_edges(spark)
     mgr = CheckpointManager(spark, str(tmp_path))
-    import os
-
-    k_core(edges, k=2, manager=mgr, stage="kc", commit_every=1)
+    stats: dict = {}
+    connected_components(
+        _two_chains(spark), strategy="distributed", manager=mgr, stage="cc",
+        commit_every=1, stats=stats,
+    )
+    assert stats["iterations"] > 2  # more rounds committed than kept
     snap_dirs = [
-        d for d in os.listdir(mgr.path("kc")) if d.startswith("snap-")
+        d for d in os.listdir(mgr.path("cc")) if d.startswith("snap-")
     ]
     # expire_snapshots(keep_last=2) runs after every commit: at most the
-    # two newest rounds' data survives however many rounds the peel took
+    # two newest rounds' data survives however many rounds the loop took
     assert len(snap_dirs) <= 2
 
 
-def test_k_core_refuses_resume_under_different_k_or_input(spark, tmp_path):
-    """Default stage names encode neither operator args nor input identity
-    (round-6 advice): the committed loop_params (op, k, input fingerprint)
-    must be validated on resume, raising instead of silently contracting
-    the wrong state."""
-    edges = _path_edges(spark)
+def test_connected_components_refuses_resume_under_different_input(
+    spark, tmp_path
+):
+    """A stage name does not encode the input identity (round-6 advice):
+    the committed loop_params (op, input fingerprint) must be validated on
+    resume, raising instead of silently contracting the wrong state."""
     mgr = CheckpointManager(spark, str(tmp_path))
-    with pytest.raises(RuntimeError, match="did not converge"):
-        k_core(edges, k=2, max_iter=4, manager=mgr, stage="kc", commit_every=2)
-    with pytest.raises(ValueError, match="loop params"):
-        k_core(edges, k=3, manager=mgr, stage="kc", commit_every=2)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(
+            _two_chains(spark), strategy="distributed", max_iter=1,
+            manager=mgr, stage="cc", commit_every=1,
+        )
     other = spark.createDataFrame(
         [("q1", "q2"), ("q2", "q3"), ("q3", "q1"), ("q3", "q4"), ("q4", "q1")],
         ["src", "dst"],
     )
     with pytest.raises(ValueError, match="loop params"):
-        k_core(other, k=2, manager=mgr, stage="kc", commit_every=2)
-
-
-def test_pagerank_refuses_resume_under_different_damping(spark, tmp_path):
-    edges = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
-    mgr = CheckpointManager(spark, str(tmp_path))
-    pagerank(edges, iterations=4, manager=mgr, stage="pr", commit_every=2)
-    with pytest.raises(ValueError, match="loop params"):
-        pagerank(
-            edges, iterations=6, damping=0.5, manager=mgr, stage="pr",
-            commit_every=2,
+        connected_components(
+            other, strategy="distributed", manager=mgr, stage="cc",
+            commit_every=1,
         )
-
-
-def test_pagerank_refuses_checkpoint_past_requested_iterations(
-    spark, tmp_path
-):
-    edges = spark.createDataFrame([("a", "b"), ("b", "a")], ["src", "dst"])
-    mgr = CheckpointManager(spark, str(tmp_path))
-    pagerank(edges, iterations=6, manager=mgr, stage="pr", commit_every=3)
-    with pytest.raises(ValueError, match="past the requested"):
-        pagerank(edges, iterations=3, manager=mgr, stage="pr", commit_every=3)
 
 
 def _triple_keys(out):

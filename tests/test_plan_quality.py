@@ -212,6 +212,7 @@ def test_lsh_self_joins_reuse_materialized_signatures(spark):
     InMemoryRelation."""
     from robokop_build_spark.caching import release_operator_caches
     from robokop_build_spark.operators.similarity import embedding_near_duplicates
+    from robokop_build_spark.sources.readers import parquet_rows
 
     # earlier tests may have left cached signature subtrees; Spark's
     # CacheManager would substitute them into THIS plan and skew the
@@ -219,8 +220,11 @@ def test_lsh_self_joins_reuse_materialized_signatures(spark):
     release_operator_caches()
     spark.catalog.clearCache()
 
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    plan = _plan(embedding_near_duplicates(emb, "vec_id", "embedding"))
+    path = os.path.join(SF_DIR, "embeddings.parquet")
+    emb = spark.read.parquet(path)
+    plan = _plan(
+        embedding_near_duplicates(emb, "vec_id", "embedding", n_rows=parquet_rows(path))
+    )
     assert plan.count("InMemoryTableScan") == 2, plan
 
 

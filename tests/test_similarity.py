@@ -82,7 +82,9 @@ def test_brute_force_degenerate_vectors_score_null(spark):
 def test_embedding_near_duplicates(spark, emb_df):
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_duplicates(emb_df, threshold=0.95, dim=DIM).collect()
+        for r in embedding_near_duplicates(
+            emb_df, threshold=0.95, dim=DIM, n_rows=N
+        ).collect()
     }
     assert (0, 1) in pairs
     assert all(a == 0 and b == 1 for a, b in pairs) or len(pairs) < 5
@@ -100,14 +102,16 @@ def test_near_dup_bucket_cap_drops_degenerate_bucket(spark, vecs):
     capped = {
         (r["id_a"], r["id_b"])
         for r in embedding_near_duplicates(
-            df, threshold=0.95, dim=DIM, max_bucket_size=10
+            df, threshold=0.95, dim=DIM, max_bucket_size=10, n_rows=len(rows)
         ).collect()
     }
     assert (0, 1) in capped
     assert not any(a >= 100 and b >= 100 for a, b in capped)  # cluster dropped
     uncapped = {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_duplicates(df, threshold=0.95, dim=DIM).collect()
+        for r in embedding_near_duplicates(
+            df, threshold=0.95, dim=DIM, n_rows=len(rows)
+        ).collect()
     }
     assert any(a >= 100 and b >= 100 for a, b in uncapped)  # cap was the cause
 
@@ -125,6 +129,13 @@ def test_auto_signature_bits_tracks_corpus_size():
     assert auto_signature_bits(20_000_000) == 23
     # doubling the corpus adds exactly one bit in the un-floored regime
     assert auto_signature_bits(40_000) == auto_signature_bits(20_000) + 1
+
+
+def test_auto_signature_bits_needs_row_count(emb_df):
+    """The auto width is sized from the caller's row count; the operator
+    runs no count() job to find it."""
+    with pytest.raises(ValueError, match="n_rows"):
+        embedding_near_duplicates(emb_df, dim=DIM)
 
 
 def test_hyperplane_planes_not_inlined_in_plan(spark):
@@ -280,6 +291,55 @@ def test_ivf_exact_calibration_matches_independent_replay(spark):
     assert abs(hits / tot - recall) < 1e-9
 
 
+def test_ivf_params_identical_across_processes():
+    """The Spark query and its DuckDB twin may be built in different
+    processes, and nothing carries the IVF literals between them: each
+    process trains and calibrates from the corpus itself. On the
+    oracle-compare corpus (sf0.01 unless SPARK_GRAFT_ORACLE_SF_DIR says
+    otherwise) the training sample is the whole corpus, so a fresh
+    computation (after cache_clear, and in a Spark-less subprocess)
+    returns identical (centroids, nprobe), and no file is written to the
+    former disk cache."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from robokop_build_spark.plans import benchmark_queries as Q
+
+    sf_dir = Q.DRIVER_SF_DIR
+    old_cache = "/tmp/robokop_ivf_cache"
+
+    def cache_files():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, files in os.walk(old_cache)
+            for f in files
+        )
+
+    before = cache_files()
+    cents, nprobe, _, _ = Q._ivf_params_for(sf_dir)
+    Q._ivf_params_for.cache_clear()
+    assert Q._ivf_params_for(sf_dir)[:2] == (cents, nprobe)
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = (
+        "import json, sys\n"
+        "from pyspark.sql import SparkSession\n"
+        "from robokop_build_spark.plans import benchmark_queries as Q\n"
+        f"cents, nprobe, _, _ = Q._ivf_params_for({sf_dir!r})\n"
+        "assert SparkSession.getActiveSession() is None\n"
+        "json.dump([cents, nprobe], sys.stdout)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", child], cwd=root, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    # JSON floats round-trip exactly (shortest repr)
+    assert json.loads(out) == [cents, nprobe]
+    assert cache_files() == before
+
+
 @pytest.mark.parametrize(
     "bad", [None, [], [1.0, 2.0], [0.0] * DIM], ids=["null", "empty", "short", "zero"]
 )
@@ -375,41 +435,3 @@ def test_semantic_dedup_keeper_election(spark):
 
     assert out[1]["score"] == cos(1, 2)
     assert out[4]["score"] == cos(4, 5)
-
-
-def test_ivf_param_cache_exact_flag(spark, tmp_path):
-    """ADVICE r7 #1: a cached calibration carrying exact=False must be
-    recomputed (and re-cached exact) by a Spark-capable process instead of
-    silently adopted; an exact entry is trusted as-is."""
-    import json
-    import os
-    import shutil
-
-    from robokop_build_spark.plans import benchmark_queries as Q
-
-    d = str(tmp_path / "corpus")
-    os.makedirs(d)
-    shutil.copy("/root/testdata/sf0.01/embeddings.parquet",
-                os.path.join(d, "embeddings.parquet"))
-    cache = Q._ivf_cache_path(d, 65_536)
-    os.makedirs(os.path.dirname(cache), exist_ok=True)
-    bogus = {"cents": [[0.0] * 64], "nprobe": 999, "recall": 0.0,
-             "scan": 0.0, "exact": False}
-    with open(cache, "w") as f:
-        json.dump(bogus, f)
-    Q._ivf_params_for.cache_clear()
-    cents, nprobe, recall, scan = Q._ivf_params_for(d)
-    assert nprobe != 999  # the inexact entry was NOT adopted
-    with open(cache) as f:
-        healed = json.load(f)
-    assert healed["exact"] is True  # rewritten exact (sample == corpus)
-
-    # an exact entry, even a bogus one, is trusted without recompute
-    bogus["exact"] = True
-    bogus["nprobe"] = 7
-    with open(cache, "w") as f:
-        json.dump(bogus, f)
-    Q._ivf_params_for.cache_clear()
-    _, nprobe2, _, _ = Q._ivf_params_for(d)
-    assert nprobe2 == 7
-    Q._ivf_params_for.cache_clear()
