@@ -4,9 +4,9 @@
 (lookup_identifier → generate_query → run_query, builder.py:500-522),
 chained here as lookup_by_name → tokenize_path → run_pipeline.
 
-Example:
+Example (fixture tables from datagen.fixtures.ensure_fixtures(dir, sf)):
     python -m robokop_build_spark -p "D(1-2)GX" --start "Fanconi Anemia" \
-        -s omnicorp -s cdw --fixtures /tmp/robokop_fixtures/sf0.003 \
+        -s omnicorp -s cdw --fixtures /tmp/robokop_cli_fixtures \
         --workdir /tmp/robokop_cli_work --output /tmp/robokop_cli_out
 """
 

@@ -34,7 +34,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-DRIVER_TABLES_VERSION = 2
+from .fixtures import source_key
+
 SEED = 0x5EED
 
 _VOCAB = (
@@ -134,12 +135,12 @@ def ensure_driver_tables(out_dir: str, sf: float, seed: int = SEED) -> str:
     """Generate (once, marker-guarded) driver-shaped documents/embeddings
     parquet at `out_dir` for scale `sf`. Safe to call repeatedly.
 
-    The marker records (version, sf, seed); calling with different values
+    The marker records (source_key(), sf, seed); calling with different values
     against an existing dir regenerates rather than silently serving
     stale tables at the wrong scale (a mis-sized bench run is a silent
     wrong-answer for throughput numbers)."""
     marker = os.path.join(out_dir, "_DRIVER_TABLES_DONE")
-    stamp = f"v{DRIVER_TABLES_VERSION} sf={sf} seed={seed}\n"
+    stamp = f"src={source_key()} sf={sf} seed={seed}\n"
     if os.path.exists(marker):
         with open(marker) as f:
             if f.read() == stamp:
@@ -201,7 +202,7 @@ def ensure_driver_tables_spark(
     if partitions is None:
         partitions = max(16, min(512, n_docs // 50_000))
     stamp = json.dumps(
-        {"gen": "spark", "v": DRIVER_TABLES_VERSION, "sf": sf, "seed": seed,
+        {"gen": "spark", "src": source_key(), "sf": sf, "seed": seed,
          "partitions": partitions}
     )
     if os.path.exists(marker):

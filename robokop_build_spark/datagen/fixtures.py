@@ -19,6 +19,7 @@ Deliberate stress features (per BASELINE.json north_rule):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 import os
@@ -450,14 +451,33 @@ def generate_fixtures(out_dir: str, sf: float, seed: int = SEED) -> None:
     )
 
 
-FIXTURE_VERSION = 7  # bump on any generator change: invalidates /tmp caches
+@functools.cache
+def source_key() -> str:
+    """md5 of the package's *.py sources, the one key under which a cached
+    check artifact (fixtures, driver tables, goldens, kg_* workdirs) is
+    reused: no check reads what other code wrote."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    h = hashlib.md5()
+    for d, dirs, files in os.walk(pkg):
+        dirs[:] = sorted(x for x in dirs if x != "__pycache__")
+        for f in sorted(x for x in files if x.endswith(".py")):
+            path = os.path.join(d, f)
+            h.update(os.path.relpath(path, pkg).encode())
+            with open(path, "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()[:10]
+
+
+def fixture_dir(sf: float) -> str:
+    """The fixture corpus at `sf` that this source generates, under /tmp."""
+    return ensure_fixtures(f"/tmp/robokop_fixtures/sf{sf}_{source_key()}", sf)
 
 
 def ensure_fixtures(out_dir: str, sf: float, seed: int = SEED) -> str:
-    """Generate once, reuse across runs; regenerate when the generator
-    version changes (a stale cache would silently desync from the oracle)."""
+    """Generate once, reuse across runs; regenerate when the source changes
+    (a stale cache would silently desync from the oracle)."""
     marker = os.path.join(out_dir, "_FIXTURES_DONE")
-    stamp = f"v={FIXTURE_VERSION} sf={sf} seed={seed}"
+    stamp = f"src={source_key()} sf={sf} seed={seed}"
     if os.path.exists(marker):
         with open(marker) as f:
             if f.read().strip() == stamp:

@@ -1,7 +1,7 @@
 """Oracle-side fixtures: deterministic parquet artifacts that let DuckDB
 reproduce the non-SQL-expressible queries bit-for-bit.
 
-Three artifact families, all version-keyed under /tmp/robokop_oracle:
+Three artifact families, under /tmp/robokop_oracle keyed by fixtures.source_key():
 - golden_<kg query>.parquet — the pure-Python golden oracle's triples for
   each KG pipeline query (flattened to the driver-facing column set), so the
   driver's hash compare becomes Spark-pipeline vs independent-python-replay.
@@ -20,10 +20,6 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-
-# bump when any generation rule here changes (independent of fixture data
-# version, which is folded into the directory key as well)
-ORACLE_FIXTURE_VERSION = 8
 
 # driver-facing flattened edge columns (arrays/maps stringified so the
 # cross-engine value hash sees identical primitives)
@@ -57,9 +53,9 @@ def flatten_triple(t: dict) -> dict:
 
 
 def oracle_dir(sf: float) -> str:
-    from .fixtures import FIXTURE_VERSION
+    from .fixtures import source_key
 
-    return f"/tmp/robokop_oracle/sf{sf}_v{FIXTURE_VERSION}_o{ORACLE_FIXTURE_VERSION}"
+    return f"/tmp/robokop_oracle/sf{sf}_{source_key()}"
 
 
 def _write(path: str, rows: list[dict], schema: pa.schema) -> None:
@@ -104,7 +100,7 @@ def ensure_oracle_fixtures(sf: float, sf_dir: str) -> str:
     in sf_dir."""
     from ..operators.dedup import simhash_py
     from ..operators.similarity import near_duplicate_planes
-    from .fixtures import ensure_fixtures
+    from . import fixtures
     from .oracle import compute_golden
 
     out = oracle_dir(sf)
@@ -113,7 +109,7 @@ def ensure_oracle_fixtures(sf: float, sf_dir: str) -> str:
         return out
     os.makedirs(out, exist_ok=True)
 
-    fixture_dir = ensure_fixtures(f"/tmp/robokop_fixtures/sf{sf}", sf)
+    fixture_dir = fixtures.fixture_dir(sf)
     for name, params in _kg_query_params(fixture_dir).items():
         _, triples = compute_golden(fixture_dir, **params)
         _write(

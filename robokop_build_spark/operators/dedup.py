@@ -167,14 +167,13 @@ def ngram_jaccard_pairs(
 
 
 MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
+# the auto_minhash_rows_per_band rule (see its docstring)
+MINHASH_BASE_ROWS_PER_BAND = 2
+MINHASH_BASE_CORPUS = 100_000
+MINHASH_ROWS_GROWTH = 32
 
 
-def auto_minhash_rows_per_band(
-    n_rows: int,
-    base_rows_per_band: int = 2,
-    base_corpus: int = 100_000,
-    growth: int = 32,
-) -> int:
+def auto_minhash_rows_per_band(n_rows: int) -> int:
     """Rows-per-band r that scales with the corpus so background-similarity
     collisions stay ~linear in n.
 
@@ -185,17 +184,17 @@ def auto_minhash_rows_per_band(
     outgrew the band width, the same failure mode auto_signature_bits fixed
     for hyperplane LSH in round 3. Raising r by 1 multiplies the background
     rate by s_bg (≲1e-3 for natural corpora at near-dup thresholds) while
-    n² grows only ~10^3 per 32× corpus growth, so r += 1 per `growth`×
-    over `base_corpus` keeps candidates O(n). Recall trade: per-band match
+    n² grows only ~10^3 per 32× corpus growth, so r += 1 per 32× over the
+    100k-doc base corpus keeps candidates O(n). Recall trade: per-band match
     probability for TRUE near-dups at similarity s is s^r — at s ≥ 0.8 and
     8 bands, recall stays >0.97 even at r=5; tune bands upward if hunting
     lower-similarity pairs at huge n."""
     import math
 
-    if n_rows <= base_corpus:
-        return base_rows_per_band
-    return base_rows_per_band + math.ceil(
-        math.log(n_rows / base_corpus) / math.log(growth)
+    if n_rows <= MINHASH_BASE_CORPUS:
+        return MINHASH_BASE_ROWS_PER_BAND
+    return MINHASH_BASE_ROWS_PER_BAND + math.ceil(
+        math.log(n_rows / MINHASH_BASE_CORPUS) / math.log(MINHASH_ROWS_GROWTH)
     )
 
 

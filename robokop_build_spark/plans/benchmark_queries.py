@@ -110,11 +110,9 @@ def _sf_of(sf_dir: str) -> float:
 
 
 def _fixture_dir_for(sf_dir: str) -> str:
-    from ..datagen.fixtures import ensure_fixtures
+    from ..datagen.fixtures import fixture_dir
 
-    sf = _sf_of(sf_dir)
-    d = f"/tmp/robokop_fixtures/sf{sf}"
-    return ensure_fixtures(d, sf)
+    return fixture_dir(_sf_of(sf_dir))
 
 
 def kg_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,8 +121,6 @@ def kg_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     a golden-triples parquet produced by the independent pure-Python replay
     (datagen/oracle.py), exported for DuckDB by datagen/oracle_fixtures.py;
     exactness is additionally pytest-gated (tests/test_pipeline_e2e.py)."""
-    # workdir is version-keyed inside _kg_query: checkpoints from an older
-    # fixture generation must never be resumed against newer fixtures
     return _kg_query(spark, sf_dir)
 
 
@@ -151,22 +147,24 @@ def _kg_select(triples: DataFrame) -> DataFrame:
     )
 
 
+def _kg_work_dir(sf_dir: str) -> str:
+    """The kg_* queries' workdir: this process's and this source's
+    (fixtures.source_key()). The kg_* queries of one run share its base
+    stages (mentions / rep_map), so only expansion stages recompute, and no
+    run resumes stages that other code wrote."""
+    from ..datagen.fixtures import source_key
+
+    return _fresh_work_dir(
+        "/tmp/robokop_work", f"{_sf_of(sf_dir)}_{source_key()}", wipe=False
+    )
+
+
 def _kg_query(spark: SparkSession, sf_dir: str, **pipeline_kwargs) -> DataFrame:
-    """Run the KG pipeline with a query variant; base stages (mentions /
-    rep_map / doc_entities) are shared with kg_end_to_end via the common
-    version-keyed workdir, only expansion stages recompute."""
-    from ..datagen.fixtures import FIXTURE_VERSION
-    from ..datagen.oracle_fixtures import ORACLE_FIXTURE_VERSION
+    """Run the KG pipeline with a query variant in _kg_work_dir."""
     from .pipeline import run_pipeline
 
-    sf = _sf_of(sf_dir)
     fx = _fixture_dir_for(sf_dir)
-    # keyed by BOTH the fixture-generator version and the output-semantics
-    # version (ORACLE_FIXTURE_VERSION bumps whenever triple/node output
-    # changes): checkpoints written by an older engine must never be
-    # resumed against a newer golden
-    work = f"/tmp/robokop_work/sf{sf}_v{FIXTURE_VERSION}_o{ORACLE_FIXTURE_VERSION}"
-    out = run_pipeline(spark, fx, work, **pipeline_kwargs)
+    out = run_pipeline(spark, fx, _kg_work_dir(sf_dir), **pipeline_kwargs)
     return _kg_select(out["triples"])
 
 
@@ -2592,7 +2590,7 @@ _KG_ORACLE_COLS = (
 
 def fixture_backed_oracles() -> dict[str, str]:
     """SQL twins that read generated oracle artifacts. Generation is
-    marker-guarded and version-keyed; safe to call repeatedly."""
+    marker-guarded and keyed by source_key(); safe to call repeatedly."""
     import sys
 
     from ..datagen.oracle_fixtures import ensure_oracle_fixtures

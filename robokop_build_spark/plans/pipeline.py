@@ -191,34 +191,19 @@ class PipelineConfig:
         """Stage-name suffix for query-dependent stages, so one workdir
         shares the expensive doc-scale stages (mentions, rep_map,
         doc_entities) across query variants while expansion outputs stay
-        isolated per query. Empty for the default DGX config (layout
-        backward-compatible)."""
+        isolated per query. Every parameter that changes stage output is
+        part of the key, or a rerun in the same workdir would resume stages
+        computed under other parameters."""
         import hashlib
         import json
 
-        sups = sorted(self.supporters)
-        if (
-            programs == [DGX_PATH]
-            and not self.start_values
-            and not self.end_values
-            and not self.require_complete
-            and sups == ["omnicorp"]
-            # parameters that change stage OUTPUT must be part of the stage
-            # identity, or a rerun in the same workdir silently resumes
-            # checkpoints computed under the old parameters
-            and self.publication_cap == 10_000
-            and self.ctime == 0
-            and not self.forbidden_id_prefixes
-            and self.support_pair_mode == "all"
-        ):
-            return ""
         sig = json.dumps(
             [
                 programs,
                 sorted(self.start_values or []),
                 sorted(self.end_values or []),
                 self.require_complete,
-                sups,
+                sorted(self.supporters),
                 self.publication_cap,
                 self.ctime,
                 sorted(self.forbidden_id_prefixes),

@@ -34,14 +34,11 @@ def write_bucketed(
     path: str,
     bucket_col: str,
     num_buckets: int = 8,
-    sort: bool = True,
 ) -> None:
-    """Write df as an external bucketed table (overwrite)."""
+    """Write df as an external bucketed table, sorted per bucket (overwrite)."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    w = df.write.bucketBy(num_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
+    w = df.write.bucketBy(num_buckets, bucket_col).sortBy(bucket_col)
     w.option("path", path).mode("overwrite").saveAsTable(name)
 
 

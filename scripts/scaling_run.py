@@ -42,8 +42,7 @@ from robokop_build_spark.plans.pipeline import run_pipeline
 
 master = sys.argv[1]
 total_cores = int(sys.argv[2])
-sf = sys.argv[3]
-fx = f"/tmp/robokop_fixtures/sf{{sf}}"
+fx, warm_fx = sys.argv[3], sys.argv[4]
 workbase = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
 tag = master.replace("[", "_").replace("]", "").replace(",", "_")
 work = f"{{workbase}}/robokop_scaling_work/{{tag}}"
@@ -84,14 +83,10 @@ spark.sparkContext.setLogLevel("ERROR")
 # that vanishes when hot). A cluster job amortizes both over hours, so
 # timing them against a 1-10 minute sandbox run would only measure JVM
 # startup, not the design.
-warm_fx = "/tmp/robokop_fixtures/sf0.1"
-if not os.path.exists(os.path.join(warm_fx, "_FIXTURES_DONE")):
-    warm_fx = "/tmp/robokop_fixtures/sf0.001"
-if os.path.exists(os.path.join(warm_fx, "_FIXTURES_DONE")):
-    warm_work = f"{{workbase}}/robokop_scaling_warm/{{tag}}"
-    shutil.rmtree(warm_work, ignore_errors=True)
-    run_pipeline(spark, warm_fx, warm_work)["triples"].count()
-    shutil.rmtree(warm_work, ignore_errors=True)
+warm_work = f"{{workbase}}/robokop_scaling_warm/{{tag}}"
+shutil.rmtree(warm_work, ignore_errors=True)
+run_pipeline(spark, warm_fx, warm_work)["triples"].count()
+shutil.rmtree(warm_work, ignore_errors=True)
 t0 = time.time()
 out = run_pipeline(spark, fx, work)
 n = out["triples"].count()
@@ -146,10 +141,10 @@ def build_zip() -> None:
                     zf.write(full, os.path.relpath(full, REPO))
 
 
-def run_once(master: str, total_cores: int, sf: str) -> dict:
+def run_once(master: str, total_cores: int, fx: str, warm_fx: str) -> dict:
     script = CHILD.format(repo=REPO)
     out = subprocess.run(
-        [sys.executable, "-c", script, master, str(total_cores), sf],
+        [sys.executable, "-c", script, master, str(total_cores), fx, warm_fx],
         capture_output=True, text=True, timeout=3600, cwd=REPO,
     )
     if not out.stdout.strip():
@@ -198,15 +193,15 @@ def main() -> None:
     cal_workers = {k: v[1] for k, v in masters.items()}
 
     sys.path.insert(0, REPO)
-    from robokop_build_spark.datagen.fixtures import ensure_fixtures
+    from robokop_build_spark.datagen.fixtures import fixture_dir
 
-    ensure_fixtures(f"/tmp/robokop_fixtures/sf{sf}", float(sf))
-    ensure_fixtures("/tmp/robokop_fixtures/sf0.1", 0.1)  # JVM/JIT warmup corpus
+    fx = fixture_dir(float(sf))
+    warm_fx = fixture_dir(0.1)  # JVM/JIT warmup corpus
 
     # warm the page cache so neither level pays cold-read penalties
     import glob
 
-    for f in glob.glob(f"/tmp/robokop_fixtures/sf{sf}/*.parquet"):
+    for f in glob.glob(f"{fx}/*.parquet"):
         with open(f, "rb") as fh:
             while fh.read(1 << 22):
                 pass
@@ -228,7 +223,7 @@ def main() -> None:
     for r, level in enumerate(schedule):
         master, cores = masters[level]
         cal_pre = {k: calibrate(w) for k, w in cal_workers.items()}
-        res = run_once(master, cores, sf)
+        res = run_once(master, cores, fx, warm_fx)
         cal_post = {k: calibrate(w) for k, w in cal_workers.items()}
         res["cal_pre"] = cal_pre
         res["cal_post"] = cal_post

@@ -21,7 +21,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from robokop_build_spark.plans.benchmark_queries import DRIVER_SF_DIR  # noqa: E402
+from robokop_build_spark.datagen.fixtures import source_key  # noqa: E402
+from robokop_build_spark.plans.benchmark_queries import (  # noqa: E402
+    DRIVER_SF_DIR,
+    _kg_work_dir,
+)
 from robokop_build_spark.session import get_spark  # noqa: E402
 
 SF = DRIVER_SF_DIR
@@ -41,6 +45,7 @@ def vhash(df):
 
 def main() -> int:
     only = set(sys.argv[1:])
+    print(f"source_key {source_key()}, kg_* workdir {_kg_work_dir(SF)}")
     spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

@@ -35,6 +35,14 @@ def _node_key(n):
     )
 
 
+def _default_key(fixture_dir):
+    """query_key of the default DGX build: the suffix of its triples,
+    triples_base, nodes and metrics stages."""
+    from robokop_build_spark.plans.pipeline import DGX_PATH, PipelineConfig
+
+    return PipelineConfig(fixture_dir, "").query_key([DGX_PATH])
+
+
 @pytest.fixture(scope="session")
 def pipeline_out(spark, fixture_dir, tmp_path_factory):
     from robokop_build_spark.plans.pipeline import run_pipeline
@@ -73,12 +81,12 @@ def test_nodes_match_golden(pipeline_out, golden):
     assert any(k[5] for k in want)
 
 
-def test_triples_partitioned_by_pred(pipeline_out):
+def test_triples_partitioned_by_pred(pipeline_out, fixture_dir):
     import os
 
     _, workdir = pipeline_out
     # hive-style pred= dirs live inside the stage's current snapshot dir
-    stage = os.path.join(workdir, "triples")
+    stage = os.path.join(workdir, "triples" + _default_key(fixture_dir))
     snaps = sorted(d for d in os.listdir(stage) if d.startswith("snap-"))
     parts = [
         d for d in os.listdir(os.path.join(stage, snaps[-1])) if d.startswith("pred=")
@@ -110,10 +118,11 @@ def test_resume_skips_completed_stages_and_is_identical(
     # (the last committed frontier stages; doc_entities/triples_base/
     # metrics flow uncommitted and are recomputed from the committed
     # frontier)
-    shutil.rmtree(os.path.join(workdir, "triples"))
-    shutil.rmtree(os.path.join(workdir, "nodes"))
+    key = _default_key(fixture_dir)
+    shutil.rmtree(os.path.join(workdir, "triples" + key))
+    shutil.rmtree(os.path.join(workdir, "nodes" + key))
     assert not os.path.exists(os.path.join(workdir, "doc_entities"))
-    assert not os.path.exists(os.path.join(workdir, "metrics"))
+    assert not os.path.exists(os.path.join(workdir, "metrics" + key))
     out2 = run_pipeline(spark, fixture_dir, workdir)
     after = os.path.getmtime(os.path.join(workdir, "mentions", "_STAGE_COMMITTED"))
     assert before == after  # mentions stage skipped on resume
@@ -230,7 +239,10 @@ def test_commit_intermediates_branch_matches_golden(
         _node_key(n) for n in golden["nodes"]
     }
     ckpt = CheckpointManager(spark, workdir)
-    assert all(ckpt.is_done(s) for s in ("doc_entities", "triples_base", "metrics"))
+    key = _default_key(fixture_dir)
+    assert all(
+        ckpt.is_done(s) for s in ("doc_entities", "triples_base" + key, "metrics" + key)
+    )
 
 
 def test_salted_publication_merge_on_a_hub_edge(spark):

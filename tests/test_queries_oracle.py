@@ -1,18 +1,20 @@
 """Local replica of the driver's correctness harness: run every queries()
 entry at sf0.001/sf0.01 and compare against oracle_sql() in DuckDB —
-row count, column names, and order-insensitive values."""
+row count, column names, and the driver's value hash."""
 
-import math
 import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from robokop_build_spark.sources.readers import parquet_rows  # noqa: E402
+from verify_contract import vhash  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -31,51 +33,20 @@ def ddb():
     return con
 
 
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return round(v, 9)
-    try:  # Decimal → float-ish canonical
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return round(float(v), 9)
-    except Exception:
-        pass
-    return v
-
-
 ORACLE_NAMES = sorted(entrymod.oracle_sql().keys())
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_query_matches_duckdb_oracle(spark, ddb, name):
-    q = entrymod.queries()[name]
-    sdf = q(spark, SF_DIR)
-    cols = sorted(sdf.columns)
-    spark_rows = sorted(
-        tuple(_norm(r[c]) for c in cols) for r in sdf.collect()
-    )
-    res = ddb.execute(entrymod.oracle_sql()[name])
-    dcols = [d[0] for d in res.description]
-    assert sorted(dcols) == cols, f"column mismatch: {sorted(dcols)} vs {cols}"
-    idx = [dcols.index(c) for c in cols]
-    duck_rows = sorted(
-        tuple(_norm(row[i]) for i in idx) for row in res.fetchall()
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    mismatches = [
-        (a, b) for a, b in zip(spark_rows, duck_rows) if a != b
-    ]
-    assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"
-    assert len(spark_rows) > 0, f"{name}: empty result is a weak check"
+    """The driver's compare (verify_contract.vhash): columns sorted, every
+    value stringified, rows sorted, md5."""
+    sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
+    odf = ddb.execute(entrymod.oracle_sql()[name]).df()
+    cols, dcols = sorted(sdf.columns), sorted(odf.columns)
+    assert dcols == cols, f"column mismatch: {dcols} vs {cols}"
+    assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} vs {len(odf)}"
+    assert len(sdf) > 0, f"{name}: empty result is a weak check"
+    assert vhash(sdf) == vhash(odf), f"{name}: value hash differs from the oracle's"
 
 
 NO_ORACLE = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))

@@ -172,8 +172,8 @@ def test_end_bound_exact_and_pruned(spark, fixture_dir, tmp_path_factory):
     }
     assert got < unbound
     # kg_end_bound's config (benchmark_queries): its stage key names the
-    # query's committed stages in the shared oracle workdir
-    from robokop_build_spark.plans.pipeline import PipelineConfig
+    # query's committed stages in the kg_* workdir
+    from robokop_build_spark.plans.pipeline import DGX_PATH, PipelineConfig
 
     cfg = PipelineConfig(
         fixture_dir,
@@ -183,6 +183,8 @@ def test_end_bound_exact_and_pruned(spark, fixture_dir, tmp_path_factory):
         supporters=[],
     )
     assert cfg.query_key([["disease", "gene"]]) == "@eee38056"
+    # the default DGX build (kg_end_to_end) is keyed like every other config
+    assert PipelineConfig(fixture_dir, "").query_key([DGX_PATH]) == "@d8d1abec"
 
 
 def test_require_complete_prunes_dead_ends(spark, fixture_dir, tmp_path_factory):

@@ -45,9 +45,6 @@ ALLOWED_PARAMS = {
         "file count of the generated tables; derived from the doc count "
         "unless a test pins it small"
     ),
-    ("operators/dedup.py", "auto_minhash_rows_per_band", "base_corpus"): (
-        "the corpus size of the band-width knee, a constant of the rule"
-    ),
     ("operators/similarity.py", "embedding_near_duplicates", "bits_per_table"): (
         "fixed signature width for callers that know their buckets; the "
         "query sizes it from n_rows"
@@ -58,9 +55,6 @@ ALLOWED_PARAMS = {
     ),
     ("plans/query.py", "enumerate_programs", "max_programs"): (
         "blow-up guard on variable-length path expansion"
-    ),
-    ("sources/bucketed.py", "write_bucketed", "sort"): (
-        "sort-within-bucket switch of the bucketed writer; every caller sorts"
     ),
     ("streaming/incremental.py", "streaming_lsh_candidates", "state_ttl_ms"): (
         "state TTL for continuously running streams; the declared query is "

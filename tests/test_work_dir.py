@@ -97,3 +97,77 @@ def test_non_pid_dirs_never_touched(tmp_path):
     other = _mkdir_with_age(base, "unrelated_dir", age_s=10 * 86400)
     _fresh_work_dir(base, "0.01")
     assert os.path.exists(other)
+
+
+def _committed(workdir: str) -> list[str]:
+    if not os.path.isdir(workdir):
+        return []
+    return sorted(
+        d
+        for d in os.listdir(workdir)
+        if os.path.exists(os.path.join(workdir, d, "_STAGE_COMMITTED"))
+    )
+
+
+def test_kg_queries_build_fresh_under_a_new_source_key(spark, fixture_dir, monkeypatch):
+    """A new source_key() gives the kg_* queries a new workdir and the
+    goldens a new directory, and the build there starts from no committed
+    stage; the same key in the same process reuses the workdir."""
+    import shutil
+
+    from robokop_build_spark.datagen import fixtures
+    from robokop_build_spark.datagen.oracle_fixtures import oracle_dir
+    from robokop_build_spark.plans import benchmark_queries as BQ
+    from robokop_build_spark.plans import pipeline as P
+
+    run_pipeline = P.run_pipeline
+    seen = []  # (workdir, stages committed there when the build starts)
+
+    def spy(spark, fx, workdir, **kwargs):
+        seen.append((workdir, _committed(workdir)))
+        return run_pipeline(spark, fx, workdir, **kwargs)
+
+    monkeypatch.setattr(P, "run_pipeline", spy)
+    monkeypatch.setattr(BQ, "_fixture_dir_for", lambda sf_dir: fixture_dir)
+    goldens = []
+    try:
+        for key in ("keyA", "keyB", "keyB"):
+            monkeypatch.setattr(fixtures, "source_key", lambda k=key: k)
+            assert BQ.kg_end_to_end(spark, "/root/testdata/sf0.001").count() > 0
+            goldens.append(oracle_dir(0.001))
+    finally:
+        for work in {w for w, _ in seen}:
+            shutil.rmtree(work, ignore_errors=True)
+    (work_a, before_a), (work_b, before_b), (work_b2, before_b2) = seen
+    assert work_a.endswith(f"_keyA_pid{os.getpid()}") and before_a == []
+    assert work_b.endswith(f"_keyB_pid{os.getpid()}") and before_b == []
+    assert work_b2 == work_b and "mentions" in before_b2
+    assert goldens[0].endswith("_keyA") and goldens[1] == goldens[2]
+    assert goldens[1].endswith("_keyB")
+
+
+def test_source_key_covers_every_package_source(tmp_path):
+    """source_key() covers sources outside datagen/: editing
+    operators/expand.py in a copy of the package changes it."""
+    import shutil
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(
+        os.path.join(root, "robokop_build_spark"),
+        tmp_path / "robokop_build_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+
+    def key() -> str:
+        return subprocess.run(
+            [sys.executable, "-c", "from robokop_build_spark.datagen.fixtures "
+             "import source_key; print(source_key())"],
+            cwd=tmp_path, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    before = key()
+    with open(tmp_path / "robokop_build_spark/operators/expand.py", "a") as f:
+        f.write("# edited\n")
+    assert key() != before
