@@ -93,6 +93,7 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     pathway = resolve_pathway(args)
 
+    from .operators.materialize import write_triples
     from .plans.pipeline import run_pipeline
     from .plans.query import tokenize_path
     from .session import get_spark
@@ -130,9 +131,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"Wrote {n_nodes} nodes.")  # mirrors builder.py export logging
     print(f"Wrote {n_triples} edges.")
     if args.output:
-        out["triples"].write.mode("overwrite").partitionBy("pred").parquet(
-            f"{args.output}/triples"
-        )
+        write_triples(out["triples"], f"{args.output}/triples")
         out["nodes"].write.mode("overwrite").partitionBy("node_type").parquet(
             f"{args.output}/nodes"
         )

@@ -178,7 +178,6 @@ def ensure_driver_tables_spark(
     out_dir: str,
     sf: float,
     seed: int = SEED,
-    partitions: int | None = None,
 ) -> str:
     """Driver-shaped tables at big SF, generated IN PARALLEL with Spark:
     spark.range over partition indices → mapInPandas, each task running the
@@ -189,8 +188,9 @@ def ensure_driver_tables_spark(
     generates SF=32 (1.6M docs) in about a minute on local[32] and scales
     with the cluster.
 
-    Deterministic for (sf, seed, partitions); dup/near-dup positive classes
-    are planted per partition chunk (same rates as the single-file path).
+    Deterministic for (sf, seed): the chunk count derives from the doc
+    count; dup/near-dup positive classes are planted per partition chunk
+    (same rates as the single-file path).
     Output is a parquet DIRECTORY named documents.parquet/embeddings.parquet
     (Spark-written part files) — spark.read.parquet handles both layouts,
     so bench queries are layout-agnostic."""
@@ -199,11 +199,9 @@ def ensure_driver_tables_spark(
     marker = os.path.join(out_dir, "_DRIVER_TABLES_DONE")
     n_docs = max(100, int(50_000 * sf))
     n_vecs = max(100, int(20_000 * sf))
-    if partitions is None:
-        partitions = max(16, min(512, n_docs // 50_000))
+    partitions = max(16, min(512, n_docs // 50_000))
     stamp = json.dumps(
-        {"gen": "spark", "src": source_key(), "sf": sf, "seed": seed,
-         "partitions": partitions}
+        {"gen": "spark", "src": source_key(), "sf": sf, "seed": seed}
     )
     if os.path.exists(marker):
         with open(marker) as f:

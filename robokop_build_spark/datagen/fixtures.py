@@ -24,6 +24,9 @@ import hashlib
 import math
 import os
 import random
+import re
+import shutil
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -468,9 +471,38 @@ def source_key() -> str:
     return h.hexdigest()[:10]
 
 
+# a cache or scratch directory nobody has modified for this long is stale
+STALE_AFTER_S = 86400.0
+
+
+def older_than(path: str, age_s: float) -> bool:
+    """Whether `path` was last modified over `age_s` seconds ago (False once
+    it is gone: a concurrent reaper got there first)."""
+    try:
+        return time.time() - os.stat(path).st_mtime > age_s
+    except OSError:
+        return False
+
+
+def keyed_cache_dir(base: str, sf: float) -> str:
+    """`<base>/sf<sf>_<source_key()>`, where this source caches a check
+    artifact at scale `sf`. Until it exists, the directories that other
+    sources (`sf<sf>_<key>`) or the unkeyed layouts of older versions
+    (`sf<sf>`, `sf<sf>_v<n>_o<n>`) left at that scale are deleted once
+    STALE_AFTER_S old."""
+    path = os.path.join(base, f"sf{sf}_{source_key()}")
+    if not os.path.isdir(path) and os.path.isdir(base):
+        stale = re.compile(rf"sf{re.escape(str(sf))}(_[0-9a-f]{{10}}|_v\d+_o\d+)?")
+        for name in os.listdir(base):
+            other = os.path.join(base, name)
+            if stale.fullmatch(name) and older_than(other, STALE_AFTER_S):
+                shutil.rmtree(other, ignore_errors=True)
+    return path
+
+
 def fixture_dir(sf: float) -> str:
     """The fixture corpus at `sf` that this source generates, under /tmp."""
-    return ensure_fixtures(f"/tmp/robokop_fixtures/sf{sf}_{source_key()}", sf)
+    return ensure_fixtures(keyed_cache_dir("/tmp/robokop_fixtures", sf), sf)
 
 
 def ensure_fixtures(out_dir: str, sf: float, seed: int = SEED) -> str:
@@ -482,8 +514,6 @@ def ensure_fixtures(out_dir: str, sf: float, seed: int = SEED) -> str:
         with open(marker) as f:
             if f.read().strip() == stamp:
                 return out_dir
-        import shutil
-
         shutil.rmtree(out_dir, ignore_errors=True)
     generate_fixtures(out_dir, sf, seed)
     with open(marker, "w") as f:

@@ -53,9 +53,9 @@ def flatten_triple(t: dict) -> dict:
 
 
 def oracle_dir(sf: float) -> str:
-    from .fixtures import source_key
+    from .fixtures import keyed_cache_dir
 
-    return f"/tmp/robokop_oracle/sf{sf}_{source_key()}"
+    return keyed_cache_dir("/tmp/robokop_oracle", sf)
 
 
 def _write(path: str, rows: list[dict], schema: pa.schema) -> None:
@@ -299,9 +299,7 @@ def ensure_oracle_fixtures(sf: float, sf_dir: str) -> str:
     n_vecs = pq.read_metadata(os.path.join(sf_dir, "embeddings.parquet")).num_rows
     plane_rows = [
         {"tbl": t, "bit": b, "vec": p}
-        for t, b, p in near_duplicate_planes(
-            dim=64, n_tables=4, bits_per_table=auto_signature_bits(n_vecs)
-        )
+        for t, b, p in near_duplicate_planes(64, 4, auto_signature_bits(n_vecs))
     ]
     _write(
         os.path.join(out, "neardup_planes.parquet"),

@@ -19,9 +19,13 @@ from pyspark.sql.types import StructField, StructType
 from .iterate import LoopCheckpointer, input_fingerprint
 
 # Above this many alias edges connected components leave the single-process
-# union-find for the distributed large-star/small-star loop (the pipeline
-# reads the count from the normalization table's parquet footer).
+# union-find for the distributed large-star/small-star loop: canonical_map
+# reads the count from the normalization table's parquet footer,
+# connected_components from the count it takes of its deduplicated edges.
 LOCAL_CC_MAX_ALIASES = 2_000_000
+# durable commit cadence (rounds) of canonical_map's distributed CC loop:
+# the measured 2.8-5.0%-overhead cadence (BENCH §0h)
+CC_COMMIT_EVERY = 5
 
 
 def _schema(df: DataFrame, **fields: str) -> StructType:
@@ -100,7 +104,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    strategy: str = "auto",
     stats: dict | None = None,
     manager=None,
     stage: str = "connected_components",
@@ -108,14 +111,15 @@ def connected_components(
 ) -> DataFrame:
     """Undirected CC → (curie, rep) with rep = min member of the component.
 
-    Scale-adaptive: a dimension-sized edge list (the usual normalization
-    map) is solved with a driver union-find — the same judgment call as
+    Scale-adaptive, decided from the distinct edge count this call takes
+    anyway: up to LOCAL_CC_MAX_ALIASES edges (the usual normalization map)
+    are solved with a driver union-find — the same judgment call as
     broadcasting a small join side; paying ~6 shuffle rounds of scheduler
-    latency per iteration for 10^4 edges is pure overhead. Above
-    LOCAL_CC_MAX_ALIASES edges, alternating large-star/small-star rounds (O(log n)
-    convergence), each localCheckpointed to cut lineage — the driver
-    fixpoint loop Catalyst cannot express (SURVEY.md §4 custom piece #2).
-    Both paths produce the identical deterministic min-member mapping.
+    latency per iteration for 10^4 edges is pure overhead. Above it,
+    alternating large-star/small-star rounds (O(log n) convergence), each
+    localCheckpointed to cut lineage — the driver fixpoint loop Catalyst
+    cannot express (SURVEY.md §4 custom piece #2). Both paths produce the
+    identical deterministic min-member mapping.
 
     manager/stage/commit_every: optional durable loop checkpointing for
     the distributed path (operators/iterate.LoopCheckpointer) — the
@@ -140,15 +144,13 @@ def connected_components(
     )
     register_persisted(e)
     # one shared agg: the fingerprint's first component IS the row count,
-    # so durable mode decides the strategy from the same pass instead of a
+    # so durable mode decides the path from the same pass instead of a
     # second full count() job; non-durable mode pays count() only
     fp = (
         input_fingerprint(e, ["src", "dst"]) if manager is not None else None
     )
-    if strategy == "auto":
-        n_e = fp[0] if fp is not None else e.count()
-        strategy = "local" if n_e <= LOCAL_CC_MAX_ALIASES else "distributed"
-    if strategy == "local":
+    n_e = fp[0] if fp is not None else e.count()
+    if n_e <= LOCAL_CC_MAX_ALIASES:
         rep_map = _local_union_find(
             [(r["src"], r["dst"]) for r in e.collect()]
         )
@@ -213,10 +215,8 @@ def connected_components(
 
 def canonical_map(
     normalization: DataFrame,
-    strategy: str = "local",
+    n_aliases: int,
     manager=None,
-    cc_stage: str = "rep_map_cc",
-    cc_commit_every: int = 0,
     stats: dict | None = None,
 ) -> DataFrame:
     """normalization(alias, canonical, node_type, name) →
@@ -224,26 +224,23 @@ def canonical_map(
     deterministic representative, carrying component metadata (min name/type
     for determinism; fixture components are metadata-consistent).
 
-    strategy='local': single collect + driver union-find + one
-    createDataFrame — the normalization map is a dimension table, and the
-    distributed path costs ~6 scheduler round-trips per CC iteration that
-    dwarf the compute at this size. 'distributed' chains the large-star/
-    small-star CC with joins (the 10^12-alias path). The pipeline picks
-    the strategy from the normalization table's parquet footer row count.
+    n_aliases (the table's parquet footer count) ≤ LOCAL_CC_MAX_ALIASES:
+    single collect + driver union-find + one createDataFrame — the
+    normalization map is a dimension table, and the distributed path costs
+    ~6 scheduler round-trips per CC iteration that dwarf the compute at
+    this size. Above it, connected_components (the 10^12-alias path) and a
+    metadata join. Both paths write the component's (min) node_type and
+    name on every row of the component, so rep-level metadata can ride on
+    any alias join.
 
-    Both strategies write the component's (min) node_type and name on every
-    row of the component, so rep-level metadata can ride on any alias join.
-
-    manager/cc_stage/cc_commit_every: durable loop checkpointing for the
-    distributed CC (operators/iterate.LoopCheckpointer) — a preempted
-    10^12-alias canonicalization resumes contraction from the last
-    committed round instead of round zero. The local path ignores them
-    (its whole cost is one collect). Loop params (op + input fingerprint)
-    are validated on resume, so stale state from a different normalization
-    map raises instead of silently resuming."""
-    if strategy not in ("local", "distributed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "local":
+    manager: durable loop checkpointing of the distributed CC
+    (operators/iterate.LoopCheckpointer) — a preempted 10^12-alias
+    canonicalization resumes contraction from the last round committed to
+    stage rep_map_cc (every CC_COMMIT_EVERY rounds) instead of round zero.
+    Loop params (op + input fingerprint) are validated on resume, so stale
+    state from a different normalization map raises instead of silently
+    resuming."""
+    if n_aliases <= LOCAL_CC_MAX_ALIASES:
         rows = normalization.select("alias", "canonical", "node_type", "name").collect()
         rep_map = _local_union_find([(r["alias"], r["canonical"]) for r in rows])
         # per-field min, independently, to match the distributed agg exactly
@@ -274,10 +271,11 @@ def canonical_map(
         normalization,
         src="alias",
         dst="canonical",
-        strategy="distributed",
-        manager=manager if cc_commit_every > 0 else None,
-        stage=cc_stage,
-        commit_every=cc_commit_every,
+        manager=manager,
+        # the loop's stage; perfbench reads the name from the workdir
+        # layout to tell which CC path a build took
+        stage="rep_map_cc",
+        commit_every=CC_COMMIT_EVERY,
         stats=stats,
     )
     meta_df = (

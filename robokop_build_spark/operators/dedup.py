@@ -559,6 +559,8 @@ def cross_doc_spans(
 
 
 SIMHASH_SCHEMA = "id string, simhash long"
+# largest (chunk, ckey) bucket simhash_near_pairs self-joins (skew guard)
+SIMHASH_MAX_BUCKET = 4096
 
 
 def simhash_py(text: str) -> int:
@@ -648,24 +650,24 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     ).mapInPandas(run, schema=SIMHASH_SCHEMA)
 
 
-def simhash_near_pairs(
-    sim: DataFrame, max_hamming: int = 3, max_bucket_size: int | None = None
-) -> DataFrame:
+def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-pairs by Hamming distance ≤ max_hamming over 64-bit simhashes,
     banded into 4×16-bit chunks (pigeonhole: distance ≤3 ⇒ ≥1 identical
     chunk) — bucket-join, not all-pairs.
 
-    max_bucket_size: optional skew guard, mirroring
-    similarity.embedding_near_duplicates — (chunk, ckey) buckets larger
-    than the bound are dropped before the self-join. A boilerplate-heavy
-    corpus (many documents sharing near-identical token distributions)
-    drives some 16-bit chunk values degenerate, and one such bucket goes
-    quadratic (measured: 637s / 12.6M pairs at 1.6M synthetic docs over a
-    31-word vocabulary). Pairs in a dropped bucket still surface through
-    the other chunks: at max_hamming ≤ 2 a pair matches ≥ 2 of the 4
-    chunks, so single-bucket drops lose nothing unless BOTH shared chunks
-    are degenerate; at max_hamming == 3 only one match is guaranteed and a
-    drop is a genuine recall trade (the knob is opt-in and None = exact)."""
+    Skew guard: (chunk, ckey) buckets larger than SIMHASH_MAX_BUCKET are
+    dropped before the self-join. A boilerplate-heavy corpus (many
+    documents sharing near-identical token distributions) drives some
+    16-bit chunk values degenerate, and one such bucket goes quadratic
+    (measured: 637s / 12.6M pairs at 1.6M synthetic docs over a 31-word
+    vocabulary). Pairs in a dropped bucket still surface through the other
+    chunks: at max_hamming ≤ 2 a pair matches ≥ 2 of the 4 chunks, so
+    single-bucket drops lose nothing unless BOTH shared chunks are
+    degenerate; at max_hamming == 3 only one match is guaranteed and a
+    drop is a genuine recall trade. A corpus of at most SIMHASH_MAX_BUCKET
+    documents is never trimmed, so the pairs are exact there."""
+    from pyspark.sql import Window
+
     chunks = sim.select(
         "id",
         "simhash",
@@ -681,15 +683,12 @@ def simhash_near_pairs(
             )
         ).alias("ck"),
     ).select("id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("chunk", "ckey")
-        chunks = (
-            chunks.withColumn("_n", F.count(F.lit(1)).over(w))
-            .filter(F.col("_n") <= max_bucket_size)
-            .drop("_n")
-        )
+    w = Window.partitionBy("chunk", "ckey")
+    chunks = (
+        chunks.withColumn("_n", F.count(F.lit(1)).over(w))
+        .filter(F.col("_n") <= SIMHASH_MAX_BUCKET)
+        .drop("_n")
+    )
     a, b = chunks.alias("a"), chunks.alias("b")
     # hamming filter BEFORE the dedup shuffle: on homogeneous corpora the
     # bucket join can emit tens of millions of candidates; filtering inline

@@ -10,14 +10,14 @@ Two failure modes threaten an iterative Spark loop:
 2. **Executor loss** — localCheckpoint stores blocks in executor memory
    with no lineage to rebuild them. On a preemptible 100-TB cluster, one
    lost executor after block eviction kills the job and restarts the WHOLE
-   iteration history (round-5 verdict, what's-wrong #3). The KG pipeline
-   routes its canonicalization CC through a CheckpointManager stage every
-   `commit_every` rounds once the normalization map is past
-   LOCAL_CC_MAX_ALIASES (plans/pipeline.CC_COMMIT_EVERY). A relaunched job
-   resumes from the last committed round instead of round zero, and the
-   committed state is a parquet snapshot (compressed, columnar,
-   re-readable by any executor) rather than single-replica executor
-   blocks.
+   iteration history (round-5 verdict, what's-wrong #3). Once the
+   normalization map is past LOCAL_CC_MAX_ALIASES, canonical_map
+   (operators/canonicalize) commits the KG pipeline's CC state to the
+   pipeline's CheckpointManager stage rep_map_cc every CC_COMMIT_EVERY
+   rounds. A relaunched job resumes from the last committed round instead
+   of round zero, and the committed state is a parquet snapshot
+   (compressed, columnar, re-readable by any executor) rather than
+   single-replica executor blocks.
 
 The CC loop state is an edge table of node ids, exact under a parquet
 round-trip, so a resumed run's output is hash-identical to an

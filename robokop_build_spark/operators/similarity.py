@@ -172,37 +172,35 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
     dim: int = 64,
     n_tables: int = 4,
-    bits_per_table: int | None = None,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (cos ≥ threshold), banded multi-table
     LSH (mirrors the MinHash banding design, dedup.py): a pair is a
     candidate when ANY table's full signature matches — recall compounds
     across tables (1-(1-p^bits)^tables) while each table's bucket population
-    shrinks geometrically with bits_per_table, so per-bucket self-joins stay
-    small as the corpus grows (the round-1 single-table design had a FIXED
-    1024 buckets → linear bucket growth → quadratic join at 100 TB).
+    shrinks geometrically with the signature width, so per-bucket
+    self-joins stay small as the corpus grows (the round-1 single-table
+    design had a FIXED 1024 buckets → linear bucket growth → quadratic join
+    at 100 TB).
 
     max_bucket_size: optional skew guard — buckets larger than the bound are
     dropped before the self-join (a degenerate bucket, e.g. all-zero
     embeddings, would otherwise go quadratic); near-dup pairs in a dropped
     bucket still surface through the other n_tables-1 tables.
 
-    bits_per_table=None (default) sizes the signature from the corpus
-    row count n_rows (auto_signature_bits; the caller passes it, so the
-    operator runs no count() job), keeping expected bucket population —
-    and therefore candidate volume per row — constant as the corpus
-    grows. Recall per table is p^bits (p = 1 - θ/π), so wider signatures
-    trade recall for candidate discipline; at true web scale the recall
-    curve is the argument for graduating to IVF/multi-probe, which this
-    banded layout is the on-ramp for.
+    The signature width is auto_signature_bits of the corpus row count
+    n_rows (the caller passes it, so the operator runs no count() job),
+    keeping expected bucket population — and therefore candidate volume
+    per row — constant as the corpus grows. Recall per table is p^bits
+    (p = 1 - θ/π), so wider signatures trade recall for candidate
+    discipline; at true web scale the recall curve is the argument for
+    graduating to IVF/multi-probe, which this banded layout is the on-ramp
+    for.
     """
-    if bits_per_table is None:
-        if n_rows is None:
-            raise ValueError("bits_per_table=None needs the corpus row count n_rows")
-        bits_per_table = auto_signature_bits(n_rows)
+    bits_per_table = auto_signature_bits(n_rows)
     by_table = near_duplicate_planes(dim, n_tables, bits_per_table, seed)
     # Arrow-vectorized signature kernel (round 8): the expression form
     # (n_tables × bits_per_table sequential-fold dots per vector through

@@ -15,7 +15,6 @@ from __future__ import annotations
 import functools
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -45,15 +44,16 @@ def _fresh_work_dir(base: str, sf: float | str, wipe: bool = True) -> str:
     dir and not be probe-visible yet, so dirs modified within the last
     REAP_MIN_AGE_S are never reaped even if the pid looks dead; (b) pid
     reuse: a recycled pid owned by an unrelated live process would pin an
-    orphan forever, so dirs older than REAP_MAX_AGE_S are reaped regardless
-    of the probe. Bench scratch only — not a lock protocol for real state."""
+    orphan forever, so dirs older than datagen.fixtures.STALE_AFTER_S are
+    reaped regardless of the probe. Bench scratch only — not a lock
+    protocol for real state."""
+    from ..datagen.fixtures import STALE_AFTER_S, older_than
+
     REAP_MIN_AGE_S = 3600.0  # never reap anything this fresh (race guard)
-    REAP_MAX_AGE_S = 86400.0  # always reap anything this stale (pid reuse)
     work = os.path.join(base, f"sf{sf}_pid{os.getpid()}")
     if wipe:
         shutil.rmtree(work, ignore_errors=True)
     if os.path.isdir(base):
-        now = time.time()
         for name in os.listdir(base):
             pid_part = name.rsplit("_pid", 1)
             if len(pid_part) != 2 or not pid_part[1].isdigit():
@@ -62,13 +62,9 @@ def _fresh_work_dir(base: str, sf: float | str, wipe: bool = True) -> str:
             if pid == os.getpid():
                 continue
             path = os.path.join(base, name)
-            try:
-                age = now - os.stat(path).st_mtime
-            except OSError:
-                continue  # vanished under us (concurrent reaper)
-            if age < REAP_MIN_AGE_S:
-                continue
-            if age > REAP_MAX_AGE_S:
+            if not older_than(path, REAP_MIN_AGE_S):
+                continue  # too fresh, or vanished under a concurrent reaper
+            if older_than(path, STALE_AFTER_S):  # stale whatever the probe says
                 shutil.rmtree(path, ignore_errors=True)
                 continue
             try:
@@ -959,11 +955,6 @@ def streaming_minhash_dedup(spark, sf_dir):
     docs = read_fixture(spark, sf_dir, "documents")
     stream = spark.readStream.schema(docs.schema).parquet(docs_src)
     q = (
-        # max_bucket_ids=None: this wrapper is exactness-gated against the
-        # batch self-join's DuckDB twin, and a trimmed bucket would both
-        # drop and re-emit pairs (the operator would flag it with a
-        # TRIM_SENTINEL row, which the hash compare would then catch — but
-        # unbounded state is the honest configuration for an exact drain)
         streaming_lsh_candidates(
             stream,
             # same corpus-adaptive band family as the batch op and the
@@ -973,7 +964,6 @@ def streaming_minhash_dedup(spark, sf_dir):
                 parquet_rows(os.path.join(sf_dir, "documents.parquet"))
             ),
             bands=8,
-            max_bucket_ids=None,
         )
         .writeStream.format("parquet")
         .option("path", out_dir)
@@ -1003,13 +993,13 @@ def dedup_simhash(spark, sf_dir):
     batch kernel (must agree with simhash_py bit-for-bit) and the pair-join
     machinery.
 
-    max_bucket_size=4096 is the hot-bucket skew guard: it can never trim at
-    the driver's oracle-compare scale (sf0.01 = 500 docs, every bucket ≤
-    corpus size), so the hash gate stays exact, while a degenerate-
-    vocabulary corpus at millions of docs is bounded instead of quadratic
-    (637s / 12.6M pairs measured unguarded at 1.6M docs)."""
+    The operator's hot-bucket guard (dedup.SIMHASH_MAX_BUCKET, 4096) can
+    never trim at the driver's oracle-compare scale (sf0.01 = 500 docs,
+    every bucket ≤ corpus size), so the hash gate stays exact, while a
+    degenerate-vocabulary corpus at millions of docs is bounded instead of
+    quadratic (637s / 12.6M pairs measured unguarded at 1.6M docs)."""
     sim = D.simhash(read_fixture(spark, sf_dir, "documents"), "doc_id", "text")
-    return D.simhash_near_pairs(sim, max_hamming=2, max_bucket_size=4096)
+    return D.simhash_near_pairs(sim, max_hamming=2)
 
 
 def ann_cosine_topk(spark, sf_dir):

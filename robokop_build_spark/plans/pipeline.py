@@ -38,11 +38,7 @@ from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import (
-    LOCAL_CC_MAX_ALIASES,
-    canonical_map,
-    resolve_aliases,
-)
+from ..operators.canonicalize import canonical_map, resolve_aliases
 from ..operators.expand import (
     aggregate_program_triples,
     canonicalize_predicate_map,
@@ -65,14 +61,9 @@ from .query import enumerate_programs, tokenize_path
 DGX_PATH = ["disease", "gene", "genetic_condition"]
 
 # Scale gates, read from parquet footer row counts (metadata only, no job):
-# LOCAL_CC_MAX_ALIASES (operators/canonicalize) for the connected components
-# of the normalization map, COMMIT_INTERMEDIATES_MIN_DOCS below.
+# the normalization map's for canonical_map's LOCAL_CC_MAX_ALIASES
+# (operators/canonicalize), the documents' for COMMIT_INTERMEDIATES_MIN_DOCS.
 
-# Durable commit cadence (rounds) of the distributed CC loop
-# (operators/iterate.LoopCheckpointer): the measured 2.8-5.0%-overhead
-# cadence (BENCH §0h). A preempted canonicalization resumes from the last
-# committed round instead of round zero.
-CC_COMMIT_EVERY = 5
 # doc_entities, triples_base and metrics are committed stages from this many
 # documents on, eager localCheckpoints below. Measured (interleaved A/B, 4
 # executor JVMs x 2 cores, fresh process per run): at 8M docs commit wins
@@ -226,8 +217,6 @@ class KGPipeline:
         t = read_fixtures(spark, cfg.fixture_dir)
         docs_n = fixture_rows(cfg.fixture_dir, "documents")
         commit_inter = docs_n >= COMMIT_INTERMEDIATES_MIN_DOCS
-        aliases_n = fixture_rows(cfg.fixture_dir, "normalization")
-        cc = "local" if aliases_n <= LOCAL_CC_MAX_ALIASES else "distributed"
         # surfaced for tests/operators-report: resumed_from/iterations of
         # the CC loop when the distributed path ran durably this run
         self.cc_stats: dict = {}
@@ -265,10 +254,8 @@ class KGPipeline:
                 "rep_map",
                 lambda: canonical_map(
                     t["normalization"],
-                    cc,
+                    fixture_rows(cfg.fixture_dir, "normalization"),
                     manager=ckpt,
-                    cc_stage="rep_map_cc",
-                    cc_commit_every=CC_COMMIT_EVERY,
                     stats=self.cc_stats,
                 ),
             )

@@ -27,6 +27,8 @@ NODE_CODES: dict[str, str] = {
 }
 
 _EDGE_RE = re.compile(r"\((\d+)-(\d+)\)")
+# blow-up guard: a path that expands to more programs is rejected
+MAX_PROGRAMS = 10_000
 
 
 @dataclass(frozen=True)
@@ -74,9 +76,7 @@ def tokenize_path(path: str) -> list[Step]:
 
 
 def enumerate_programs(
-    steps: list[Step],
-    metagraph: set[tuple[str, str]],
-    max_programs: int = 10_000,
+    steps: list[Step], metagraph: set[tuple[str, str]]
 ) -> list[list[str]]:
     """Expand a typed path with variable-length transitions into every
     concrete node-type chain reachable through the metagraph.
@@ -127,8 +127,8 @@ def enumerate_programs(
             if k not in seen:
                 seen.add(k)
                 chains.append(c)
-        if len(chains) > max_programs:
+        if len(chains) > MAX_PROGRAMS:
             raise ValueError(
-                f"path expands to >{max_programs} programs; tighten the query"
+                f"path expands to >{MAX_PROGRAMS} programs; tighten the query"
             )
     return sorted(chains)

@@ -15,12 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-# sentinel id_a marking a bucket whose state hit max_bucket_ids (see
-# streaming_lsh_candidates docstring); "\x00" can never be a document id
-# from the parquet corpus
-TRIM_SENTINEL = "\x00__BUCKET_TRIMMED__"
-
-
 def streaming_lsh_candidates(
     stream_docs: DataFrame,
     id_col: str = "doc_id",
@@ -28,8 +22,6 @@ def streaming_lsh_candidates(
     k: int = 3,
     num_hashes: int = 16,
     bands: int = 8,
-    state_ttl_ms: int | None = None,
-    max_bucket_ids: int | None = 1024,
 ) -> DataFrame:
     """Streaming MinHash-LSH near-dup candidate detection — the custom
     stateful operator Structured Streaming cannot express with built-ins
@@ -41,27 +33,14 @@ def streaming_lsh_candidates(
     pairs (new×seen + new×new), so a pair is emitted when its second member
     arrives — the incremental twin of the batch self-join, sharing the
     identical banding projection (operators/dedup._banded_keys, parity by
-    construction). State is bounded two ways: an optional processing-time
-    TTL drops buckets idle past state_ttl_ms (candidates then only form
-    within the TTL horizon — the streaming analog of a dedup window), and
-    max_bucket_ids caps any one bucket (hot-bucket skew guard; the batch op
-    bounds the same risk with adaptive band width). State survives restarts
-    through the query's checkpointLocation like any stateful streaming op.
-
-    Trimming is NOT silent: whenever the cap drops ids from a bucket, the
-    operator emits a sentinel row (id_a = TRIM_SENTINEL, id_b =
-    "<band>|<bkey>"), because a trimmed bucket both misses candidate pairs
-    and can re-emit a pair if a trimmed id re-arrives. Exactness-gated
-    callers either pass max_bucket_ids=None (unbounded state — what the
-    oracle-compared batch-parity wrapper does) or assert no sentinel rows
-    came out; throughput-oriented deployments keep the cap and route
-    sentinel buckets to a slow exact path.
-
-    state_ttl_ms applies to CONTINUOUSLY-running queries. Leave it None for
-    Trigger.AvailableNow drains: registered processing-time timeouts keep
-    the drain loop scheduling micro-batches until they fire (measured: a
-    one-file drain spun hundreds of empty batches waiting out a 1h TTL), so
-    a batch-style drain should bound state with max_bucket_ids only.
+    construction). State is unbounded — every id a bucket has seen stays —
+    so the emitted pairs are exact: the declared query drains a file
+    stream with Trigger.AvailableNow and is hash-compared against the batch
+    self-join's DuckDB twin. A bucket's state grows with the bucket, so the
+    caller sizes the band width from the corpus
+    (dedup.auto_minhash_rows_per_band), as the batch op does, to keep
+    buckets small. State survives restarts through the query's
+    checkpointLocation like any stateful streaming op.
 
     Output (id_a string, id_b string) is a candidate MULTISET — a pair
     sharing several band keys emits once per bucket (the batch op's
@@ -79,12 +58,9 @@ def streaming_lsh_candidates(
         F.col("id").cast("string").alias("id"), "band", "bkey"
     )
 
-    def emit(key, pdfs, state):
+    def emit(_key, pdfs, state):
         import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
         seen = list(state.get[0]) if state.exists else []
         new_ids: list[str] = []
         seen_set = set(seen)
@@ -104,29 +80,16 @@ def streaming_lsh_candidates(
                 a, b = (prev, nid) if prev < nid else (nid, prev)
                 pairs_a.append(a)
                 pairs_b.append(b)
-        merged = seen + new_ids
-        if max_bucket_ids is not None and len(merged) > max_bucket_ids:
-            merged = merged[-max_bucket_ids:]
-            # cap hit: make it observable to the caller (see docstring)
-            pairs_a.append(TRIM_SENTINEL)
-            pairs_b.append(f"{key[0]}|{key[1]}")
-        state.update((merged,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
+        state.update((seen + new_ids,))
         if pairs_a:
             yield pd.DataFrame({"id_a": pairs_a, "id_b": pairs_b})
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return banded.groupBy("band", "bkey").applyInPandasWithState(
         emit,
         outputStructType="id_a string, id_b string",
         stateStructType="ids array<string>",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

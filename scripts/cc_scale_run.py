@@ -2,8 +2,9 @@
 """At-size evidence for the DISTRIBUTED connected-components path.
 
 Generates the SF-scalable synthetic synonym graph (datagen/graphs.py) ABOVE
-the 2M-edge local-union-find gate, runs the large-star/small-star fixpoint
-at two parallelism levels, and reports:
+the 2M-edge local-union-find gate (LOCAL_CC_MAX_ALIASES; a graph below it
+takes the union-find and reports no iterations), runs the
+large-star/small-star fixpoint at two parallelism levels, and reports:
 - iterations to fixpoint + per-iteration wall + per-iteration edge counts
   (the contraction curve),
 - closed-form correctness (mismatches vs expected_rep_col — must be 0),
@@ -41,7 +42,7 @@ edges = synonym_graph(spark, n_nodes, block=64, hub_stride=50)
 n_edges = edges.count()
 stats = {{}}
 t0 = time.time()
-reps = connected_components(edges, strategy="distributed", stats=stats)
+reps = connected_components(edges, stats=stats)
 reps = reps.persist()
 n_rows = reps.count()
 wall = round(time.time() - t0, 2)

@@ -3,7 +3,10 @@
 through Spark at sf0.01 and hash-compare against its oracle_sql() DuckDB twin
 (exactly the external driver's compare: sort columns, stringify, sort rows,
 md5). SPARK_GRAFT_ORACLE_SF_DIR, which points the fixture-backed twins at a
-scale, moves the Spark side and the SQL tables there too. Usage:
+scale, moves the Spark side and the SQL tables there too. It first prints
+the md5 of all oracle_sql() texts with the source-keyed oracle and fixture
+directories replaced by placeholders, which changes only when some twin's
+SQL does. Usage:
 
     python scripts/verify_contract.py              # all queries
     python scripts/verify_contract.py q1 dedup_exact   # just these
@@ -22,8 +25,11 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from robokop_build_spark.datagen.fixtures import source_key  # noqa: E402
+from robokop_build_spark.datagen.oracle_fixtures import oracle_dir  # noqa: E402
 from robokop_build_spark.plans.benchmark_queries import (  # noqa: E402
+    DRIVER_SF,
     DRIVER_SF_DIR,
+    _fixture_dir_for,
     _kg_work_dir,
 )
 from robokop_build_spark.session import get_spark  # noqa: E402
@@ -43,6 +49,15 @@ def vhash(df):
     return hashlib.md5(str(rows).encode()).hexdigest()
 
 
+def oracle_texts_md5(oracles: dict[str, str]) -> str:
+    """md5 of the oracle texts, in name order, with this source's keyed
+    oracle and fixture directories replaced by placeholders."""
+    text = "\0".join(f"{name}\0{oracles[name]}" for name in sorted(oracles))
+    text = text.replace(oracle_dir(DRIVER_SF), "<oracle_dir>")
+    text = text.replace(_fixture_dir_for(SF), "<fixture_dir>")
+    return hashlib.md5(text.encode()).hexdigest()
+
+
 def main() -> int:
     only = set(sys.argv[1:])
     print(f"source_key {source_key()}, kg_* workdir {_kg_work_dir(SF)}")
@@ -54,6 +69,10 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
         )
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    print(
+        f"oracle_sql: {len(oracles)} texts, "
+        f"placeholder md5 {oracle_texts_md5(oracles)}"
+    )
     failed = []
     for name, fn in qs.items():
         if only and not any(name.startswith(o) for o in only):

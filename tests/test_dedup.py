@@ -69,10 +69,12 @@ def test_simhash_near_pairs(docs):
     assert ("d1", "d4") not in pairs
 
 
-def test_simhash_hot_bucket_guard(spark):
-    """max_bucket_size drops degenerate (chunk, ckey) buckets before the
+def test_simhash_hot_bucket_guard(spark, monkeypatch):
+    """SIMHASH_MAX_BUCKET drops degenerate (chunk, ckey) buckets before the
     self-join; pairs that also share a NON-degenerate chunk still surface
     (hamming ≤ 2 ⇒ ≥ 2 of 4 chunks equal)."""
+    from robokop_build_spark.operators import dedup as D
+
     # 100 rows all sharing chunk-0 key 0x1111 (a degenerate bucket) but with
     # pairwise-distant upper chunks (unique chunk-1/2/3 keys, hamming >> 2)
     def to_i64(v):  # wrap to signed 64-bit (Spark long)
@@ -87,25 +89,21 @@ def test_simhash_hot_bucket_guard(spark):
     # chunk-1/2/3 buckets (size 2, not hot) must recover it after the drop
     rows += [("a1", 0x00AA00BB00CC0003), ("a2", 0x00AA00BB00CC0000)]
     sim = spark.createDataFrame(rows, "id string, simhash long")
-    unguarded = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_pairs(sim, max_hamming=2).collect()
-    }
-    guarded = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_pairs(
-            sim, max_hamming=2, max_bucket_size=50
-        ).collect()
-    }
+    production_cap = D.SIMHASH_MAX_BUCKET
+
+    def pairs(cap):
+        monkeypatch.setattr(D, "SIMHASH_MAX_BUCKET", cap)
+        return {
+            (r["id_a"], r["id_b"])
+            for r in simhash_near_pairs(sim, max_hamming=2).collect()
+        }
+
+    unguarded = pairs(10**9)
+    guarded = pairs(50)
     assert ("a1", "a2") in guarded  # recovered via chunks 1-3
     assert guarded <= unguarded
-    # a generous cap that no bucket reaches must be a no-op (exact)
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_pairs(
-            sim, max_hamming=2, max_bucket_size=100_000
-        ).collect()
-    }
+    # the production cap, which no bucket here reaches, is a no-op (exact)
+    exact = pairs(production_cap)
     assert exact == unguarded
 
 

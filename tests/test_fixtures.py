@@ -143,10 +143,10 @@ def test_driver_tables_marker_param_mismatch_regenerates(tmp_path):
 def test_driver_tables_spark_generator(spark, tmp_path):
     """The Spark-parallel generator must produce the driver schema, unique
     sequential ids across partition chunks, planted dup classes, and be
-    deterministic for (sf, seed, partitions)."""
+    deterministic for (sf, seed)."""
     from robokop_build_spark.datagen.driver_tables import ensure_driver_tables_spark
 
-    d1 = ensure_driver_tables_spark(spark, str(tmp_path / "a"), 0.05, partitions=4)
+    d1 = ensure_driver_tables_spark(spark, str(tmp_path / "a"), 0.05)
     docs = spark.read.parquet(f"{d1}/documents.parquet")
     assert docs.columns == ["doc_id", "text", "lang", "source", "n_chars"]
     n = docs.count()
@@ -160,8 +160,8 @@ def test_driver_tables_spark_generator(spark, tmp_path):
     assert emb.columns == ["vec_id", "embedding", "label"]
     assert emb.count() == 1000
     # marker no-op, then determinism across dirs
-    assert ensure_driver_tables_spark(spark, str(tmp_path / "a"), 0.05, partitions=4) == d1
-    d2 = ensure_driver_tables_spark(spark, str(tmp_path / "b"), 0.05, partitions=4)
+    assert ensure_driver_tables_spark(spark, str(tmp_path / "a"), 0.05) == d1
+    d2 = ensure_driver_tables_spark(spark, str(tmp_path / "b"), 0.05)
     t1 = sorted(r["text"] for r in docs.collect())
     t2 = sorted(
         r["text"] for r in spark.read.parquet(f"{d2}/documents.parquet").collect()

@@ -8,9 +8,18 @@ import os
 
 import pytest
 
+from robokop_build_spark.operators import canonicalize as C
 from robokop_build_spark.operators.canonicalize import connected_components
 from robokop_build_spark.operators.iterate import LoopCheckpointer
 from robokop_build_spark.sources.checkpoint import CheckpointManager
+
+
+@pytest.fixture(autouse=True)
+def distributed_cc(monkeypatch):
+    """Every edge count is past the size gate, so connected_components
+    (and canonical_map in the pipeline) runs the distributed loop on these
+    small inputs."""
+    monkeypatch.setattr(C, "LOCAL_CC_MAX_ALIASES", -1)
 
 
 def _rows(df):
@@ -36,18 +45,16 @@ def test_loop_checkpointer_rejects_partial_config(spark, tmp_path):
 def test_connected_components_kill_mid_contraction_resumes_and_matches(
     spark, tmp_path
 ):
-    df = _two_chains(spark)  # force the distributed star path below
-    want = _rows(connected_components(df, strategy="distributed"))
+    df = _two_chains(spark)
+    want = _rows(connected_components(df))
     mgr = CheckpointManager(spark, str(tmp_path))
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(
-            df, strategy="distributed", max_iter=1, manager=mgr,
-            stage="cc", commit_every=1,
+            df, max_iter=1, manager=mgr, stage="cc", commit_every=1
         )
     stats: dict = {}
     got = connected_components(
-        df, strategy="distributed", manager=mgr, stage="cc",
-        commit_every=1, stats=stats,
+        df, manager=mgr, stage="cc", commit_every=1, stats=stats
     )
     assert stats["resumed_from"] == 1
     assert _rows(got) == want
@@ -57,8 +64,7 @@ def test_durable_loop_retention_keeps_bounded_snapshots(spark, tmp_path):
     mgr = CheckpointManager(spark, str(tmp_path))
     stats: dict = {}
     connected_components(
-        _two_chains(spark), strategy="distributed", manager=mgr, stage="cc",
-        commit_every=1, stats=stats,
+        _two_chains(spark), manager=mgr, stage="cc", commit_every=1, stats=stats
     )
     assert stats["iterations"] > 2  # more rounds committed than kept
     snap_dirs = [
@@ -78,18 +84,14 @@ def test_connected_components_refuses_resume_under_different_input(
     mgr = CheckpointManager(spark, str(tmp_path))
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(
-            _two_chains(spark), strategy="distributed", max_iter=1,
-            manager=mgr, stage="cc", commit_every=1,
+            _two_chains(spark), max_iter=1, manager=mgr, stage="cc", commit_every=1
         )
     other = spark.createDataFrame(
         [("q1", "q2"), ("q2", "q3"), ("q3", "q1"), ("q3", "q4"), ("q4", "q1")],
         ["src", "dst"],
     )
     with pytest.raises(ValueError, match="loop params"):
-        connected_components(
-            other, strategy="distributed", manager=mgr, stage="cc",
-            commit_every=1,
-        )
+        connected_components(other, manager=mgr, stage="cc", commit_every=1)
 
 
 def _triple_keys(out):
@@ -103,7 +105,7 @@ def _triple_keys(out):
 
 
 def test_pipeline_resumes_mid_cc_with_identical_output(
-    spark, fixture_dir, tmp_path, monkeypatch
+    spark, fixture_dir, tmp_path
 ):
     """Round-6 verdict #7: the KG pipeline's rep_map CC loop is durably
     resumable at the PIPELINE level, not just the operator level. Simulate
@@ -117,8 +119,8 @@ def test_pipeline_resumes_mid_cc_with_identical_output(
     from robokop_build_spark.plans import pipeline as P
     from robokop_build_spark.sources.readers import read_fixtures
 
-    # every alias count is past the threshold: the distributed CC runs
-    monkeypatch.setattr(P, "LOCAL_CC_MAX_ALIASES", 0)
+    # distributed_cc: every alias count is past the gate, so the pipeline's
+    # canonical_map runs the distributed CC
     want = _triple_keys(P.run_pipeline(spark, fixture_dir, str(tmp_path / "w1")))
 
     w2 = str(tmp_path / "w2")
@@ -129,8 +131,8 @@ def test_pipeline_resumes_mid_cc_with_identical_output(
     # exactly a preemption one round into contraction
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(
-            norm, src="alias", dst="canonical", strategy="distributed",
-            max_iter=1, manager=mgr, stage="rep_map_cc", commit_every=1,
+            norm, src="alias", dst="canonical", max_iter=1, manager=mgr,
+            stage="rep_map_cc", commit_every=1,
         )
     assert mgr.current_meta("rep_map_cc")["iteration"] == 0
 

@@ -153,10 +153,12 @@ def test_chemotext_articles_join_not_hint_broadcast(spark, fixture_dir):
     dimension-sized sides (graph_nodes, mesh_terms)."""
     from robokop_build_spark.operators.canonicalize import canonical_map
     from robokop_build_spark.operators.supporters import get_supporter
-    from robokop_build_spark.sources.readers import read_fixtures
+    from robokop_build_spark.sources.readers import fixture_rows, read_fixtures
 
     tables = read_fixtures(spark, fixture_dir)
-    rep_map = canonical_map(tables["normalization"])
+    rep_map = canonical_map(
+        tables["normalization"], fixture_rows(fixture_dir, "normalization")
+    )
     nodes = rep_map.select(F.col("rep").alias("id")).distinct()
     out = get_supporter("chemotext").support(nodes, rep_map, tables)
     analyzed = out._jdf.queryExecution().analyzed().toString()

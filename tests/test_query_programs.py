@@ -79,6 +79,19 @@ def test_cycle_bounded_by_max():
     assert progs == [["a", "b", "a"], ["a", "b", "a", "b", "a"]]
 
 
+def test_program_blow_up_is_rejected(monkeypatch):
+    """A path that expands past MAX_PROGRAMS concrete programs is refused:
+    D(1-3)GX enumerates two, so a cap of one rejects it and a cap of two
+    accepts it."""
+    from robokop_build_spark.plans import query as Q
+
+    monkeypatch.setattr(Q, "MAX_PROGRAMS", 1)
+    with pytest.raises(ValueError, match="tighten the query"):
+        enumerate_programs(tokenize_path("D(1-3)GX"), META)
+    monkeypatch.setattr(Q, "MAX_PROGRAMS", 2)
+    assert len(enumerate_programs(tokenize_path("D(1-3)GX"), META)) == 2
+
+
 # --------------------------------------------------------------------------
 # e2e golden gates (exact match incl. provenance)
 # --------------------------------------------------------------------------

@@ -33,32 +33,14 @@ ALLOWED = {
         "the reference's edge sink semantics (SURVEY S13); wiring it into "
         "the CLI changes the CLI's output"
     ),
-    ("operators/materialize.py", "write_triples"): (
-        "the partitioned edge sink merge_triples writes through (SURVEY S13)"
-    ),
 }
 
 # (module, function, parameter) → why it stays although no call outside the
 # test suites passes it
 ALLOWED_PARAMS = {
-    ("datagen/driver_tables.py", "ensure_driver_tables_spark", "partitions"): (
-        "file count of the generated tables; derived from the doc count "
-        "unless a test pins it small"
-    ),
-    ("operators/similarity.py", "embedding_near_duplicates", "bits_per_table"): (
-        "fixed signature width for callers that know their buckets; the "
-        "query sizes it from n_rows"
-    ),
     ("operators/similarity.py", "embedding_near_duplicates", "max_bucket_size"): (
         "hot-bucket guard no declared input needs yet; the hostile-input "
         "gauntlet is to decide it"
-    ),
-    ("plans/query.py", "enumerate_programs", "max_programs"): (
-        "blow-up guard on variable-length path expansion"
-    ),
-    ("streaming/incremental.py", "streaming_lsh_candidates", "state_ttl_ms"): (
-        "state TTL for continuously running streams; the declared query is "
-        "an AvailableNow drain, which must leave it None"
     ),
 }
 

@@ -132,13 +132,13 @@ def test_auto_signature_bits_tracks_corpus_size():
 
 
 def test_auto_signature_bits_needs_row_count(emb_df):
-    """The auto width is sized from the caller's row count; the operator
-    runs no count() job to find it."""
-    with pytest.raises(ValueError, match="n_rows"):
+    """The auto width is sized from the caller's row count, a required
+    keyword; the operator runs no count() job to find it."""
+    with pytest.raises(TypeError, match="n_rows"):
         embedding_near_duplicates(emb_df, dim=DIM)
 
 
-def test_hyperplane_planes_not_inlined_in_plan(spark):
+def test_hyperplane_planes_not_inlined_in_plan(spark, monkeypatch):
     """Production-dim config (768-d × 20 bits × 4 tables ≈ 61k plane floats)
     must NOT appear as plan literals — the matrix rides in as a one-row
     broadcast DataFrame (VERDICT r3 what's-wrong #3). Plan stays O(1)-sized
@@ -156,8 +156,12 @@ def test_hyperplane_planes_not_inlined_in_plan(spark):
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id bigint, embedding array<double>",
     )
+    from robokop_build_spark.operators import similarity as S
+
+    # 20-bit signatures, the width of a ~4M-row corpus, on 60 rows
+    monkeypatch.setattr(S, "auto_signature_bits", lambda n_rows: 20)
     nd = embedding_near_duplicates(
-        emb, threshold=0.9, dim=768, n_tables=4, bits_per_table=20, n_rows=60
+        emb, threshold=0.9, dim=768, n_tables=4, n_rows=60
     )
     plan = nd._jdf.queryExecution().executedPlan().toString()
     assert len(plan) < 100_000, f"plan blew up to {len(plan)} chars"
@@ -344,7 +348,7 @@ def test_ivf_params_identical_across_processes():
     "bad", [None, [], [1.0, 2.0], [0.0] * DIM], ids=["null", "empty", "short", "zero"]
 )
 def test_degenerate_vector_fails_nothing_and_leaves_other_rows(
-    spark, emb_df, vecs, bad
+    spark, emb_df, vecs, bad, monkeypatch
 ):
     """A null, empty, short or zero-norm vector fails neither ivf_topk (as
     a corpus row or as a query), semantic_dedup, embedding_near_duplicates
@@ -380,10 +384,10 @@ def test_degenerate_vector_fails_nothing_and_leaves_other_rows(
     assert rows(S.semantic_dedup(with_bad, cents, threshold=0.6)) == dedup
 
     # one-bit signatures share a bucket with about half the corpus per table
+    monkeypatch.setattr(S, "auto_signature_bits", lambda n_rows: 1)
+
     def near_dups(corpus):
-        return rows(
-            S.embedding_near_duplicates(corpus, dim=DIM, bits_per_table=1)
-        )
+        return rows(S.embedding_near_duplicates(corpus, dim=DIM, n_rows=N + 1))
 
     assert (0, 1, pytest.approx(1.0, abs=0.01)) in near_dups(emb_df)
     assert near_dups(with_bad) == near_dups(emb_df)

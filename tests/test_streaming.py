@@ -73,53 +73,6 @@ def test_streaming_lsh_candidates_stateful_cross_batch(spark, tmp_path):
     assert cross
 
 
-def test_streaming_lsh_trim_sentinel(spark, tmp_path):
-    """max_bucket_ids trimming is observable: a bucket whose state hits the
-    cap emits a TRIM_SENTINEL row (a trimmed bucket silently misses /
-    re-emits pairs, so exactness-gated callers must be able to detect it);
-    with max_bucket_ids=None no sentinel can appear."""
-    from robokop_build_spark.streaming.incremental import (
-        TRIM_SENTINEL,
-        streaming_lsh_candidates,
-    )
-
-    # 6 identical docs: every (band, bkey) bucket collects all 6 ids
-    rows = [(str(i), "alpha beta gamma delta epsilon zeta eta") for i in range(6)]
-    docs = spark.createDataFrame(rows, "doc_id string, text string")
-    in_dir = str(tmp_path / "in")
-    docs.write.mode("overwrite").parquet(in_dir)
-
-    def drain(tag, cap):
-        stream = spark.readStream.schema(docs.schema).parquet(in_dir)
-        q = (
-            streaming_lsh_candidates(
-                stream, num_hashes=16, bands=8, max_bucket_ids=cap
-            )
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / f"out_{tag}"))
-            .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.schema("id_a string, id_b string").parquet(
-            str(tmp_path / f"out_{tag}")
-        )
-
-    capped = drain("capped", 3)
-    sentinels = capped.filter(capped.id_a == TRIM_SENTINEL).collect()
-    assert sentinels, "cap was hit but no sentinel emitted"
-    assert all("|" in r["id_b"] for r in sentinels)  # names the bucket
-
-    uncapped = drain("uncapped", None)
-    assert uncapped.filter(uncapped.id_a == TRIM_SENTINEL).count() == 0
-    # unbounded state ⇒ exact pair multiset: C(6,2)=15 distinct pairs
-    assert (
-        uncapped.select("id_a", "id_b").distinct().count() == 15
-    )
-
-
 def test_streaming_sessions_merge_across_batches(spark, tmp_path):
     """A session whose events arrive in DIFFERENT micro-batches must come
     out as ONE session (the state-store merge), and the rollup must equal

@@ -7,13 +7,15 @@ from pyspark.sql import functions as F
 
 from robokop_build_spark.operators.canonicalize import canonical_map
 from robokop_build_spark.operators.supporters import get_supporter
-from robokop_build_spark.sources.readers import read_fixtures
+from robokop_build_spark.sources.readers import fixture_rows, read_fixtures
 
 
 @pytest.fixture(scope="module")
 def ctx(spark, fixture_dir):
     tables = read_fixtures(spark, fixture_dir)
-    rep_map = canonical_map(tables["normalization"]).cache()
+    rep_map = canonical_map(
+        tables["normalization"], fixture_rows(fixture_dir, "normalization")
+    ).cache()
     # all canonical entities as graph nodes so sparse shared-PMID pairs exist
     nodes = rep_map.select(F.col("rep").alias("id")).distinct().cache()
     nodes.count()

@@ -171,3 +171,35 @@ def test_source_key_covers_every_package_source(tmp_path):
     with open(tmp_path / "robokop_build_spark/operators/expand.py", "a") as f:
         f.write("# edited\n")
     assert key() != before
+
+
+def test_keyed_cache_dir_reaps_stale_caches_of_other_sources(tmp_path, monkeypatch):
+    """Until this source's cache directory exists, keyed_cache_dir deletes
+    the same-scale directories that other sources or the unkeyed layouts of
+    older versions left, once they are a day old. Fresh ones, other
+    scales, per-process work dirs and unrelated names stay."""
+    from robokop_build_spark.datagen import fixtures
+
+    monkeypatch.setattr(fixtures, "source_key", lambda: "0123456789")
+    base = str(tmp_path / "cache")
+    day = 86400
+    stale = [
+        _mkdir_with_age(base, name, age_s=2 * day)
+        for name in ("sf0.01_aaaaaaaaaa", "sf0.01", "sf0.01_v7_o8")
+    ]
+    kept = [
+        _mkdir_with_age(base, "sf0.01_bbbbbbbbbb", age_s=3600),
+        _mkdir_with_age(base, "sf0.1_aaaaaaaaaa", age_s=2 * day),
+        _mkdir_with_age(base, "sf0.001", age_s=2 * day),
+        _mkdir_with_age(base, "sf0.01_aaaaaaaaaa_pid1", age_s=2 * day),
+        _mkdir_with_age(base, "notes", age_s=2 * day),
+    ]
+    path = fixtures.keyed_cache_dir(base, 0.01)
+    assert path == os.path.join(base, "sf0.01_0123456789")
+    assert [p for p in stale if os.path.exists(p)] == []
+    assert [p for p in kept if not os.path.exists(p)] == []
+    # once this source's directory exists, its lookups reap nothing
+    os.makedirs(path)
+    late = _mkdir_with_age(base, "sf0.01_cccccccccc", age_s=2 * day)
+    assert fixtures.keyed_cache_dir(base, 0.01) == path
+    assert os.path.exists(late)
