@@ -195,10 +195,10 @@ class Vocab:
         seen_edges: set[tuple] = set()
         for ti, (src_t, dst_t, op, pred) in enumerate(EDGE_TEMPLATES):
             oid, olabel = _orig_pred(ti, pred)
-            # dead-end carve-out: ~1/5 of genes get NO gene→genetic_condition
-            # edges, so full-pattern (require_complete) pruning is observable
-            # — without it every reachable gene completes and pruning is a
-            # no-op on the fixture
+            # dead-end carve-out: some genes get NO gene→genetic_condition
+            # edges, so the fixture has DGX paths that stop after the gene
+            # hop — emit-per-hop keeps their edges, and a query bound to
+            # terminal values prunes them
             src_pool = by_type[src_t]
             if (src_t, dst_t) == ("gene", "genetic_condition"):
                 src_pool = [e for e in src_pool if e["idx"] % 40 != 1]

@@ -30,6 +30,7 @@ from collections import defaultdict
 import numpy as np
 import pyarrow.parquet as pq
 
+from .. import schemas
 from ..operators.matching import build_trie, detect, featurize, link_mentions
 
 SUPPORT_PRED = "biolink:correlated_with"
@@ -69,12 +70,10 @@ def build_canonical_map(norm_rows) -> dict[str, str]:
     return rep_map
 
 
-def _edge_dict(
-    subj, pred, obj, source, pubs, inputs, oid, olabel, ctime, properties
-):
-    """Full reference edge schema (export_edge, builder/builder.py:31-41).
-    properties always carries reversed=False: every edge added through
-    add_nonsynonymous_edge sets it (builder/builder.py:217)."""
+def _edge_dict(subj, pred, obj, source, pubs, inputs, oid, olabel, properties):
+    """Full reference edge schema (export_edge, builder/builder.py:31-41),
+    ctime 0. properties always carries reversed=False: every edge added
+    through add_nonsynonymous_edge sets it (builder/builder.py:217)."""
     properties = {"reversed": "False", **properties}
     return dict(
         subj=subj,
@@ -83,7 +82,7 @@ def _edge_dict(
         edge_source=source,
         publications=pubs,
         input_identifiers=inputs,
-        ctime=ctime,
+        ctime=0,
         url=f"op://{source}/{subj}",
         standard_label=pred.split(":")[1],
         original_predicate_id=oid,
@@ -162,10 +161,7 @@ def compute_golden(
     programs: list[list[str]] | None = None,
     start_values: list[str] | None = None,
     end_values: list[str] | None = None,
-    require_complete: bool = False,
     supporters: tuple[str, ...] = ("omnicorp",),
-    publication_cap: int = 10_000,
-    ctime: int = 0,
     support_pair_mode: str = "all",
 ):
     """Returns (nodes, triples): lists of dicts matching schemas.NODES /
@@ -175,9 +171,9 @@ def compute_golden(
 
     programs: list of concrete node-type chains (the output of
     plans.query.enumerate_programs — U1 union semantics across programs).
-    end_values / require_complete replay the end-bound / full-pattern
-    semantics of builder/userquery.py:104-126: an edge is emitted only when
-    it lies on a path that completes to a valid terminal."""
+    end_values replays the end-bound semantics of builder/userquery.py:
+    104-126: an edge is emitted only when it lies on a path that completes
+    to one of them."""
     rep_map, meta, members, doc_ents = _extract_and_link(fixture_dir)
     read = lambda n: pq.read_table(f"{fixture_dir}/{n}.parquet")  # noqa: E731
     pm = read("predicate_map").to_pylist()
@@ -217,12 +213,11 @@ def compute_golden(
 
     def alive_sets(hop_maps) -> list[set[str] | None] | None:
         """Backward terminal-boundedness (mirrors expand._alive_sets)."""
-        if not (require_complete or end_reps is not None):
+        if end_reps is None:
             return None
         n = len(hop_maps)
-        alive: list[set[str] | None] = [None] * (n + 1)
-        if end_reps is not None:
-            alive[n] = set(end_reps)
+        alive: list[set[str]] = [None] * (n + 1)
+        alive[n] = set(end_reps)
         for i in range(n - 1, -1, -1):
             ok: set[str] = set()
             for s, lst in hop_maps[i].items():
@@ -268,11 +263,10 @@ def compute_golden(
             p,
             o,
             src,
-            sorted(pubs)[:publication_cap],
+            sorted(pubs)[: schemas.PUBLICATION_CAP],
             ",".join(sorted(ins)),
             min(oids),
             min(olabels),
-            ctime,
             {},
         )
         for (s, p, o, src), (pubs, ins, oids, olabels) in agg.items()
@@ -328,7 +322,7 @@ def compute_golden(
             triples.extend(
                 _SUPPORTER_ORACLES[name](
                     fixture_dir, graph_nodes, rep_map, members, meta,
-                    publication_cap, ctime, allowed_pairs=allowed_pairs,
+                    allowed_pairs=allowed_pairs,
                 )
             )
 
@@ -377,7 +371,7 @@ def _read_pairs(fixture_dir: str, name: str, cols: tuple[str, str]):
     return list(zip(t.column(cols[0]).to_pylist(), t.column(cols[1]).to_pylist()))
 
 
-def _oracle_omnicorp(fixture_dir, graph_nodes, rep_map, members, meta, cap, ctime,
+def _oracle_omnicorp(fixture_dir, graph_nodes, rep_map, members, meta,
                      allowed_pairs=None):
     pmids: dict[str, set[str]] = defaultdict(set)
     for curie, pmid in _read_pairs(fixture_dir, "term_pmids", ("curie", "pmid")):
@@ -389,20 +383,20 @@ def _oracle_omnicorp(fixture_dir, graph_nodes, rep_map, members, meta, cap, ctim
                 continue  # contexts mode (builder.py:372-407)
             shared = pmids[a] & pmids[b]
             if shared:
-                pubs = sorted(shared)[:cap]
+                pubs = sorted(shared)[: schemas.PUBLICATION_CAP]
                 out.append(
                     # input_id='{a},{b}' + the verbatim 'co-occurence'
                     # misspelling, as in builder/omnicorp.py:27-29
                     _edge_dict(
                         a, SUPPORT_PRED, b, SUPPORT_SOURCE, pubs, f"{a},{b}",
-                        "omnicorp:1", "literature_co-occurence", ctime,
+                        "omnicorp:1", "literature_co-occurence",
                         {"num_publications": str(len(pubs))},
                     )
                 )
     return out
 
 
-def _oracle_chemotext(fixture_dir, graph_nodes, rep_map, members, meta, cap, ctime,
+def _oracle_chemotext(fixture_dir, graph_nodes, rep_map, members, meta,
                       allowed_pairs=None):
     """builder/chemotext.py:8-68: MeSH-synonym shared-article pairs."""
     mesh_terms = dict(_read_pairs(fixture_dir, "mesh_terms", ("mesh_curie", "term_name")))
@@ -425,19 +419,19 @@ def _oracle_chemotext(fixture_dir, graph_nodes, rep_map, members, meta, cap, cti
                 continue
             shared = node_arts[a] & node_arts[b]
             if shared:
-                pubs = sorted(shared)[:cap]
+                pubs = sorted(shared)[: schemas.PUBLICATION_CAP]
                 out.append(
                     _edge_dict(
                         a, "biolink:literature_co-occurrence", b,
                         "chemotext.term_to_term", pubs, f"{a},{b}",
-                        "chemotext:1", "literature_co-occurence", ctime,
+                        "chemotext:1", "literature_co-occurence",
                         {"num_publications": str(len(pubs))},
                     )
                 )
     return out
 
 
-def _oracle_cdw(fixture_dir, graph_nodes, rep_map, members, meta, cap, ctime,
+def _oracle_cdw(fixture_dir, graph_nodes, rep_map, members, meta,
                 allowed_pairs=None):
     """builder/cdw.py:9-103 with the '<11' sentinel fallback."""
     counts = dict(_read_pairs(fixture_dir, "cdw_counts", ("icd9", "count")))
@@ -471,14 +465,14 @@ def _oracle_cdw(fixture_dir, graph_nodes, rep_map, members, meta, cap, ctime,
                 _edge_dict(
                     a, "biolink:occurs_together_in_clinical_records", b,
                     "cdw.term_to_term", [], "",
-                    "cdw:1", "clinical co-occurrence", ctime,
+                    "cdw:1", "clinical co-occurrence",
                     {"c": sentinel, "e": f"{e:.6f}", "p": f"{p:.6f}" if p is not None else None},
                 )
             )
     return out
 
 
-def _oracle_chemotext2(fixture_dir, graph_nodes, rep_map, members, meta, cap, ctime,
+def _oracle_chemotext2(fixture_dir, graph_nodes, rep_map, members, meta,
                        allowed_pairs=None):
     """builder/chemotext2.py:9-70: max token-pair label similarity."""
     node_toks: dict[str, list[str]] = {}
@@ -502,7 +496,7 @@ def _oracle_chemotext2(fixture_dir, graph_nodes, rep_map, members, meta, cap, ct
             out.append(
                 _edge_dict(
                     a, "biolink:similar_to", b, "chemotext2.term_to_term", [], "",
-                    "chemotext2:1", "similarity", ctime,
+                    "chemotext2:1", "similarity",
                     {"similarity": f"{best[0]:.6f}", "terms": f"{best[1]}|{best[2]}"},
                 )
             )

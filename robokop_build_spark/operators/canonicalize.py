@@ -16,16 +16,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .iterate import LoopCheckpointer, input_fingerprint
-
 # Above this many alias edges connected components leave the single-process
 # union-find for the distributed large-star/small-star loop: canonical_map
 # reads the count from the normalization table's parquet footer,
 # connected_components from the count it takes of its deduplicated edges.
 LOCAL_CC_MAX_ALIASES = 2_000_000
-# durable commit cadence (rounds) of canonical_map's distributed CC loop:
-# the measured 2.8-5.0%-overhead cadence (BENCH §0h)
+# durable commit cadence (rounds) of the distributed CC loop: the measured
+# 2.8-5.0%-overhead cadence (BENCH §0h)
 CC_COMMIT_EVERY = 5
+# round cap of the distributed CC loop, which converges in O(log n) rounds
+CC_MAX_ITER = 30
+# committed CC rounds kept on disk, the current one included
+CC_KEEP_SNAPSHOTS = 2
 
 
 def _schema(df: DataFrame, **fields: str) -> StructType:
@@ -99,15 +101,24 @@ def _local_union_find(rows) -> dict[str, str]:
     return rep_map
 
 
+def input_fingerprint(df: DataFrame, cols: list[str]) -> list[int]:
+    """Order-insensitive identity of a frame: (row count, xor of per-row
+    xxhash64 over `cols`), in one agg pass with a commutative combiner.
+    connected_components compares it between rounds as its fixpoint test
+    and, when durable, stamps its input's into every commit."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
+    ).collect()[0]
+    return [int(row["n"]), int(row["h"])]
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 30,
     stats: dict | None = None,
     manager=None,
-    stage: str = "connected_components",
-    commit_every: int = 0,
 ) -> DataFrame:
     """Undirected CC → (curie, rep) with rep = min member of the component.
 
@@ -116,19 +127,26 @@ def connected_components(
     are solved with a driver union-find — the same judgment call as
     broadcasting a small join side; paying ~6 shuffle rounds of scheduler
     latency per iteration for 10^4 edges is pure overhead. Above it,
-    alternating large-star/small-star rounds (O(log n) convergence), each
-    localCheckpointed to cut lineage — the driver fixpoint loop Catalyst
-    cannot express (SURVEY.md §4 custom piece #2). Both paths produce the
-    identical deterministic min-member mapping.
+    alternating large-star/small-star rounds (O(log n) convergence, at most
+    CC_MAX_ITER), each localCheckpointed to cut lineage — the driver
+    fixpoint loop Catalyst cannot express (SURVEY.md §4 custom piece #2).
+    Both paths produce the identical deterministic min-member mapping.
 
-    manager/stage/commit_every: optional durable loop checkpointing for
-    the distributed path (operators/iterate.LoopCheckpointer) — the
-    contracted edge set commits as a CheckpointManager snapshot every
-    commit_every rounds and a relaunched call resumes contraction from
-    there; the star fixpoint is unique, so the resumed output is
-    hash-identical (the resume pays one extra fingerprint round to
-    re-detect convergence).
+    manager: the distributed loop is durable. localCheckpoint blocks live
+    in executor memory with no lineage to rebuild them, so one lost
+    executor would restart the whole contraction. Every CC_COMMIT_EVERY-th
+    round commits the contracted edge set instead, to the manager's stage
+    rep_map_cc (keeping the newest CC_KEEP_SNAPSHOTS), and a relaunched
+    call resumes from the last committed round. The star fixpoint is
+    unique and the state is exact under a parquet round-trip, so the
+    resumed output is hash-identical (the resume pays one extra
+    fingerprint round to re-detect convergence). Each commit carries the
+    input's fingerprint: a stage name does not encode the input, so a
+    resume under a different input raises instead of contracting another
+    input's state.
     """
+    import time
+
     from pyspark import StorageLevel
 
     from ..caching import register_persisted
@@ -157,31 +175,45 @@ def connected_components(
         return e.sparkSession.createDataFrame(
             sorted(rep_map.items()), _schema(e, curie="src", rep="src")
         )
-    params = (
-        {"op": "connected_components", "input": fp}
-        if manager is not None
-        else None
-    )
-    ckpt = LoopCheckpointer(manager, stage, commit_every, params=params)
     all_nodes = e.select(F.col("src").alias("curie")).union(
         e.select(F.col("dst").alias("curie"))
     ).distinct()
 
-    import time
-
+    # perfbench reads the stage name from the workdir layout to tell which
+    # CC path a build took
+    stage = "rep_map_cc"
+    params = {"op": "connected_components", "input": fp}
+    meta = (
+        manager.current_meta(stage)
+        if manager is not None and manager.is_done(stage)
+        else None
+    )
     start = 0
-    resumed = ckpt.resume()
-    if resumed is not None:
-        start, cur = resumed
+    if meta and meta.get("iteration") is not None:
+        if meta.get("loop_params") != params:
+            raise ValueError(
+                f"connected_components stage {stage!r}: committed state was "
+                f"produced under loop params {meta.get('loop_params')!r} but "
+                f"this call runs with {params!r} — resuming would silently "
+                "mix states; wipe the stage"
+            )
+        start, cur = meta["iteration"] + 1, manager.read(stage)
     else:
         cur = e.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
     prev_fp = None
     converged = False
     iter_secs: list[float] = []
     iter_edges: list[int] = []
-    for i in range(start, max_iter):
+    for i in range(start, CC_MAX_ITER):
         t0 = time.time()
-        cur = ckpt.save(i, _small_star(_large_star(cur)))
+        cur = _small_star(_large_star(cur))
+        if manager is not None and (i + 1) % CC_COMMIT_EVERY == 0:
+            cur = manager.commit(
+                stage, cur, extra_meta={"iteration": i, "loop_params": params}
+            )
+            manager.expire_snapshots(stage, keep_last=CC_KEEP_SNAPSHOTS)
+        else:
+            cur = cur.localCheckpoint(eager=True)
         fp = input_fingerprint(cur, ["src", "dst"])
         iter_secs.append(round(time.time() - t0, 3))
         iter_edges.append(fp[0])
@@ -197,9 +229,8 @@ def connected_components(
     if not converged:
         # a partially-contracted mapping is silently wrong — fail loudly
         raise RuntimeError(
-            f"connected_components: no fixpoint after max_iter={max_iter} "
-            "rounds (expected O(log n)); raise max_iter or check for "
-            "pathological edge input"
+            f"connected_components: no fixpoint after CC_MAX_ITER={CC_MAX_ITER} "
+            "rounds (expected O(log n)); check for pathological edge input"
         )
 
     # fixpoint edges form stars (node → component min); orient + dedupe,
@@ -233,13 +264,11 @@ def canonical_map(
     name on every row of the component, so rep-level metadata can ride on
     any alias join.
 
-    manager: durable loop checkpointing of the distributed CC
-    (operators/iterate.LoopCheckpointer) — a preempted 10^12-alias
-    canonicalization resumes contraction from the last round committed to
-    stage rep_map_cc (every CC_COMMIT_EVERY rounds) instead of round zero.
-    Loop params (op + input fingerprint) are validated on resume, so stale
-    state from a different normalization map raises instead of silently
-    resuming."""
+    manager: the distributed CC is durable (connected_components) — a
+    preempted 10^12-alias canonicalization resumes contraction from the
+    last round committed to stage rep_map_cc instead of round zero, and
+    stale state from a different normalization map raises instead of
+    silently resuming."""
     if n_aliases <= LOCAL_CC_MAX_ALIASES:
         rows = normalization.select("alias", "canonical", "node_type", "name").collect()
         rep_map = _local_union_find([(r["alias"], r["canonical"]) for r in rows])
@@ -271,12 +300,8 @@ def canonical_map(
         normalization,
         src="alias",
         dst="canonical",
-        manager=manager,
-        # the loop's stage; perfbench reads the name from the workdir
-        # layout to tell which CC path a build took
-        stage="rep_map_cc",
-        commit_every=CC_COMMIT_EVERY,
         stats=stats,
+        manager=manager,
     )
     meta_df = (
         normalization.select(F.col("alias").alias("curie"), "node_type", "name")

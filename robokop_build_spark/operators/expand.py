@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import schemas
 from .canonicalize import resolve_aliases
 from .topk import NSALT, capped_sorted_set
 
@@ -37,31 +38,24 @@ def canonicalize_predicate_map(pm: DataFrame, rep_map: DataFrame) -> DataFrame:
 def _alive_sets(
     pm_rep: DataFrame,
     path_types: list[str],
-    end_reps: list[str] | None,
-) -> list[DataFrame | None]:
+    end_reps: list[str],
+) -> list[DataFrame]:
     """Backward terminal-boundedness pruning (F5; reference analog: the
     two-terminal `robokop.traversable(nodes(p), ..., [c0,cN])` guard in the
     concept cypher, builder/userquery.py:123-126).
 
     alive[i] = reps at position i from which the remaining hops can complete
-    to a valid terminal (∈ end_reps when bound, any type-correct terminal
-    otherwise). Sets are predicate-map-bounded (dimension-sized) — each is a
-    small DataFrame destined for a broadcast semi-join in the forward pass.
-
-    Returns one entry per position; None means unconstrained (saves the
-    join). With end_reps=None only the *existence* of downstream edges
-    prunes (full-pattern match semantics); the terminal position itself is
-    unconstrained.
+    to a terminal in end_reps, one entry per position. Sets are
+    predicate-map-bounded (dimension-sized) — each is a small DataFrame
+    destined for a broadcast semi-join in the forward pass.
     """
+    if not end_reps:
+        raise ValueError("end_reps must be non-empty when given")
     n = len(path_types)
-    alive: list[DataFrame | None] = [None] * n
-    if end_reps is not None:
-        if not end_reps:
-            raise ValueError("end_reps must be non-empty when given")
-        term = pm_rep.sparkSession.createDataFrame(
-            [(r,) for r in sorted(set(end_reps))], ["rep"]
-        )
-        alive[n - 1] = term
+    alive: list[DataFrame] = [None] * n
+    alive[n - 1] = pm_rep.sparkSession.createDataFrame(
+        [(r,) for r in sorted(set(end_reps))], ["rep"]
+    )
     for i in range(n - 2, -1, -1):
         edges = _typed_edges(
             pm_rep,
@@ -101,15 +95,14 @@ def _path_hops(
     pm_rep: DataFrame,
     path_types: list[str],
     end_reps: list[str] | None,
-    require_complete: bool,
     cols: list,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The hop walk shared by expand_edge_starts and path_constrained_pairs:
     the start frontier (rep, ...) restricted to alive[0], and per hop the
-    typed edges (cols) restricted to alive[h + 1]. Without end_reps or
-    require_complete nothing is pruned (emit-per-hop semantics)."""
+    typed edges (cols) restricted to alive[h + 1]. Without end_reps nothing
+    is pruned (emit-per-hop semantics)."""
     alive: list[DataFrame | None] = [None] * len(path_types)
-    if require_complete or end_reps is not None:
+    if end_reps is not None:
         alive = _alive_sets(pm_rep, path_types, end_reps)
     if alive[0] is not None:
         frontier = frontier.join(F.broadcast(alive[0]), "rep")
@@ -125,7 +118,6 @@ def expand_edge_starts(
     pm_rep: DataFrame,
     path_types: list[str],
     end_reps: list[str] | None = None,
-    require_complete: bool = False,
 ) -> DataFrame:
     """Dimension-level program expansion: one row per (hop edge, start rep)
     for every edge lying on a program path from an OBSERVED start entity.
@@ -144,7 +136,6 @@ def expand_edge_starts(
         pm_rep,
         path_types,
         end_reps,
-        require_complete,
         ["subj_rep", "obj_rep", "pred", "op_name", "orig_pred_id", "orig_pred_label"],
     )
     hops = []
@@ -197,7 +188,6 @@ def program_edge_starts(
     pm_rep: DataFrame,
     programs: list[list[str]],
     end_reps: list[str] | None = None,
-    require_complete: bool = False,
     start_reps: list[str] | None = None,
 ) -> DataFrame:
     """(subj, pred, obj, edge_source, orig_pred_id, orig_pred_label, start):
@@ -217,7 +207,7 @@ def program_edge_starts(
     edge_starts = None
     for prog in programs:
         sr = start_type_reps.filter(F.col("node_type") == prog[0]).select("rep")
-        es = expand_edge_starts(sr, pm_rep, prog, end_reps, require_complete)
+        es = expand_edge_starts(sr, pm_rep, prog, end_reps)
         edge_starts = es if edge_starts is None else edge_starts.unionByName(es)
     return edge_starts.distinct().localCheckpoint(eager=True)
 
@@ -225,7 +215,6 @@ def program_edge_starts(
 def start_publications(
     doc_entities: DataFrame,
     programs: list[list[str]],
-    publication_cap: int = 10_000,
     start_reps: list[str] | None = None,
 ) -> DataFrame:
     """(rep, pubs): the capped sorted publication set of every observed
@@ -237,7 +226,7 @@ def start_publications(
         sd.select("rep", F.concat(F.lit("DOC:"), F.col("doc_id")).alias("pub")),
         ["rep"],
         "pub",
-        publication_cap,
+        schemas.PUBLICATION_CAP,
         out="pubs",
     )
 
@@ -246,8 +235,6 @@ def aggregate_program_triples(
     doc_entities: DataFrame,
     edge_starts: DataFrame,
     programs: list[list[str]],
-    publication_cap: int = 10_000,
-    ctime: int = 0,
     start_reps: list[str] | None = None,
 ) -> DataFrame:
     """Factored expansion+aggregation: the triples of a per-document
@@ -277,7 +264,7 @@ def aggregate_program_triples(
     of JVM time per row — measured via event-log task metrics).
     """
     sd = _start_docs(doc_entities, programs, start_reps)
-    start_pubs = start_publications(doc_entities, programs, publication_cap, start_reps)
+    start_pubs = start_publications(doc_entities, programs, start_reps)
     start_origins = sd.groupBy("rep").agg(
         F.array_sort(F.collect_set("orig")).alias("origs")
     )
@@ -297,7 +284,7 @@ def aggregate_program_triples(
     merge = lambda c: F.slice(  # noqa: E731
         F.array_sort(F.array_distinct(F.flatten(F.collect_list(c)))),
         1,
-        publication_cap,
+        schemas.PUBLICATION_CAP,
     )
     ep = start_pubs.join(
         F.broadcast(edge_starts.select(*key, F.col("start").alias("rep"))), "rep"
@@ -331,7 +318,7 @@ def aggregate_program_triples(
         *key,
         "publications",
         "input_identifiers",
-        F.lit(ctime).cast("long").alias("ctime"),
+        F.lit(0).cast("long").alias("ctime"),
         F.concat(F.lit("op://"), F.col("edge_source"), F.lit("/"), F.col("subj")).alias(
             "url"
         ),
@@ -350,7 +337,6 @@ def path_constrained_pairs(
     pm_rep: DataFrame,
     path_types: list[str],
     end_reps: list[str] | None = None,
-    require_complete: bool = False,
 ) -> DataFrame:
     """Path-constrained support-pair generation — the reference's contexts
     mode (generate_links_from_paths, builder/builder.py:372-407): a pair
@@ -372,7 +358,6 @@ def path_constrained_pairs(
         pm_rep,
         path_types,
         end_reps,
-        require_complete,
         ["subj_rep", "obj_rep"],
     )
     anc: DataFrame | None = None
@@ -410,7 +395,6 @@ def program_support_pairs(
     pm_rep: DataFrame,
     programs: list[list[str]],
     end_reps: list[str] | None = None,
-    require_complete: bool = False,
     start_reps: list[str] | None = None,
 ) -> DataFrame:
     """(rep_a, rep_b): the path-constrained support pairs of every program
@@ -420,6 +404,6 @@ def program_support_pairs(
     pairs = None
     for prog in programs:
         sr = sd.filter(F.col("node_type") == prog[0]).select("rep")
-        p = path_constrained_pairs(sr, pm_rep, prog, end_reps, require_complete)
+        p = path_constrained_pairs(sr, pm_rep, prog, end_reps)
         pairs = p if pairs is None else pairs.unionByName(p)
     return pairs.distinct()

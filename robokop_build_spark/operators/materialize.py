@@ -127,32 +127,19 @@ def build_nodes(
 def enhance_nodes(
     nodes: DataFrame,
     label_lookup: DataFrame | None = None,
-    forbidden_prefixes: tuple[str, ...] = (),
 ) -> DataFrame:
     """Enhance stage (builder/builder.py:309-318 + prepare_node_for_output
-    :424-445): authority labels win over carried names, identifier is the
-    last-resort label, and a forbidden primary-identifier prefix is FATAL
-    (the reference hard-exits on a DOID primary id — its normalizer promises
-    MONDO; here the guard is parameterized because this engine's canonical
-    rep is the deterministic min-CURIE, which legitimately surfaces alias
-    prefixes unless the deployment forbids them).
+    :424-445): authority labels win over carried names, and the identifier
+    is the last-resort label. The reference also hard-exits on a DOID
+    primary id (its normalizer promises MONDO); this engine's canonical rep
+    is the deterministic min-CURIE, which legitimately surfaces alias
+    prefixes, so it has no such guard.
 
     MeSH synonym fold-in (prepare_node_for_output:427) is inherent to the
     component model here: equivalent_identifiers already carries every
     component member including MESH aliases — no extra join needed.
     """
     out = nodes
-    if forbidden_prefixes:
-        bad = F.col("id").startswith(f"{forbidden_prefixes[0]}:")
-        for p in forbidden_prefixes[1:]:
-            bad = bad | F.col("id").startswith(f"{p}:")
-        guard = F.when(
-            bad,
-            F.raise_error(
-                F.concat(F.lit("ForbiddenPrefixError: primary id "), F.col("id"))
-            ),
-        ).otherwise(F.col("id"))
-        out = out.withColumn("id", guard)
     if label_lookup is not None:
         auth = label_lookup.select(
             F.col("curie").alias("id"), F.col("label").alias("__auth_label")

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import schemas
+
 SUPPORT_PRED = "biolink:correlated_with"
 SUPPORT_SOURCE = "omnicorp.term_to_term"
 
@@ -23,7 +25,6 @@ def finalize_support_edges(
     source: str,
     orig_pred_id: str,
     orig_pred_label: str,
-    ctime: int = 0,
     pair_input_id: bool = False,
 ) -> DataFrame:
     """Project supporter rows (subj, obj, publications, properties) onto the
@@ -46,7 +47,7 @@ def finalize_support_edges(
         F.lit(source).alias("edge_source"),
         "publications",
         inputs.alias("input_identifiers"),
-        F.lit(ctime).cast("long").alias("ctime"),
+        F.lit(0).cast("long").alias("ctime"),
         F.concat(F.lit("op://"), F.lit(source), F.lit("/"), F.col("subj")).alias("url"),
         F.lit(pred.split(":")[1]).alias("standard_label"),
         F.lit(orig_pred_id).alias("original_predicate_id"),
@@ -83,8 +84,6 @@ def restrict_pairs(df: DataFrame, pairs: DataFrame | None) -> DataFrame:
 def shared_pmid_support(
     graph_nodes: DataFrame,
     term_pmids_rep: DataFrame,
-    publication_cap: int = 10_000,
-    ctime: int = 0,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Omnicorp analog (builder/omnicorp.py:21-33, SURVEY.md §2.3 J6):
@@ -117,7 +116,7 @@ def shared_pmid_support(
         ),
         ["subj", "obj"],
         "pmid",
-        publication_cap,
+        schemas.PUBLICATION_CAP,
         out="publications",
         skip_dedup=True,  # tp is distinct → (subj,obj,pmid) already unique
     ).withColumn(
@@ -130,7 +129,7 @@ def shared_pmid_support(
     # including the 'co-occurence' misspelling (builder/omnicorp.py:27-29)
     return finalize_support_edges(
         agg, SUPPORT_PRED, SUPPORT_SOURCE, "omnicorp:1", "literature_co-occurence",
-        ctime, pair_input_id=True,
+        pair_input_id=True,
     )
 
 

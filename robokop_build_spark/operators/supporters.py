@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import schemas
 from .support import (
     cdw_pair_lookup,
     finalize_support_edges,
@@ -39,16 +40,13 @@ class OmnicorpSupporter:
         graph_nodes: DataFrame,
         rep_map: DataFrame,
         tables,
-        publication_cap: int = 10_000,
-        ctime: int = 0,
         pairs: DataFrame | None = None,
     ) -> DataFrame:
         from ..operators.canonicalize import resolve_aliases
 
         tp_rep = resolve_aliases(tables["term_pmids"], rep_map, "curie", out="rep")
         return shared_pmid_support(
-            graph_nodes, tp_rep.select("rep", "pmid"), publication_cap, ctime,
-            pairs=pairs,
+            graph_nodes, tp_rep.select("rep", "pmid"), pairs=pairs
         )
 
 
@@ -70,8 +68,6 @@ class ChemotextSupporter:
         graph_nodes: DataFrame,
         rep_map: DataFrame,
         tables,
-        publication_cap: int = 10_000,
-        ctime: int = 0,
         pairs: DataFrame | None = None,
     ) -> DataFrame:
         mesh = (
@@ -100,7 +96,7 @@ class ChemotextSupporter:
             ),
             ["subj", "obj"],
             "pmid",
-            publication_cap,
+            schemas.PUBLICATION_CAP,
             out="publications",
             skip_dedup=True,  # node_pmids is distinct → pair rows unique
         ).withColumn(
@@ -118,7 +114,6 @@ class ChemotextSupporter:
             "chemotext.term_to_term",
             "chemotext:1",
             "literature_co-occurence",
-            ctime,
             pair_input_id=True,
         )
 
@@ -136,8 +131,6 @@ class CdwSupporter:
         graph_nodes: DataFrame,
         rep_map: DataFrame,
         tables,
-        publication_cap: int = 10_000,
-        ctime: int = 0,
         pairs: DataFrame | None = None,
     ) -> DataFrame:
         icd9 = (
@@ -177,7 +170,6 @@ class CdwSupporter:
             "cdw.term_to_term",
             "cdw:1",
             "clinical co-occurrence",
-            ctime,
         )
 
 
@@ -221,8 +213,6 @@ class MaxSimSupporter:
         graph_nodes: DataFrame,
         rep_map: DataFrame,
         tables,
-        publication_cap: int = 10_000,
-        ctime: int = 0,
         pairs: DataFrame | None = None,
     ) -> DataFrame:
         labels = (
@@ -292,7 +282,6 @@ class MaxSimSupporter:
             "chemotext2.term_to_term",
             "chemotext2:1",
             "similarity",
-            ctime,
         )
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -46,7 +47,11 @@ def _fresh_work_dir(base: str, sf: float | str, wipe: bool = True) -> str:
     reuse: a recycled pid owned by an unrelated live process would pin an
     orphan forever, so dirs older than datagen.fixtures.STALE_AFTER_S are
     reaped regardless of the probe. Bench scratch only — not a lock
-    protocol for real state."""
+    protocol for real state.
+
+    The per-version layout of older builds (`sf<sf>_v<n>_o<n>`, no pid)
+    has no owner to probe: it is reaped once STALE_AFTER_S old, the rule
+    datagen.fixtures.keyed_cache_dir applies to the same layout."""
     from ..datagen.fixtures import STALE_AFTER_S, older_than
 
     REAP_MIN_AGE_S = 3600.0  # never reap anything this fresh (race guard)
@@ -55,13 +60,17 @@ def _fresh_work_dir(base: str, sf: float | str, wipe: bool = True) -> str:
         shutil.rmtree(work, ignore_errors=True)
     if os.path.isdir(base):
         for name in os.listdir(base):
+            path = os.path.join(base, name)
+            if re.fullmatch(r"sf[\d.]+_v\d+_o\d+", name):
+                if older_than(path, STALE_AFTER_S):
+                    shutil.rmtree(path, ignore_errors=True)
+                continue
             pid_part = name.rsplit("_pid", 1)
             if len(pid_part) != 2 or not pid_part[1].isdigit():
                 continue
             pid = int(pid_part[1])
             if pid == os.getpid():
                 continue
-            path = os.path.join(base, name)
             if not older_than(path, REAP_MIN_AGE_S):
                 continue  # too fresh, or vanished under a concurrent reaper
             if older_than(path, STALE_AFTER_S):  # stale whatever the probe says

@@ -12,13 +12,21 @@ soon as the stages it reads have finished ("←" = reads):
     rep_map      ← normalization                           (committed)
     query        ← rep_map      compiled programs + canonicalized seeds
     pm_rep       ← rep_map      predicate map in rep space (materialized)
-    doc_entities ← mentions, rep_map
+    doc_entities ← mentions, rep_map                       (materialized)
     edge_starts  ← doc_entities, pm_rep, query (materialized)
     triples_base ← edge_starts, doc_entities   publications + inputs merge
-    support      ← edge_starts, rep_map        supporter edges
+                                                           (materialized)
+    support      ← edge_starts, rep_map        supporter edges (materialized)
     triples      ← triples_base, support       (committed, by pred)
     nodes        ← edge_starts, rep_map        (committed, by node_type)
-    metrics      ← mentions, doc_entities, triples, nodes
+    metrics      ← mentions, doc_entities, triples, nodes  (lazy)
+
+"Committed" stages are CheckpointManager snapshots, which a rerun in the
+same workdir resumes; "materialized" ones are eager localCheckpoints, which
+a rerun recomputes from the committed stages they read. Past
+LOCAL_CC_MAX_ALIASES the rep_map stage also commits its connected-components
+rounds as they run (stage rep_map_cc), so a preempted canonicalization
+resumes mid-loop.
 
 Overlapping: mentions with rep_map, query and pm_rep; triples_base,
 support and nodes (all three start from the graph node set, subj ∪ obj of
@@ -27,6 +35,12 @@ and nodes commits. Every commit stays atomic on its own, so a resume after
 a failure in one of two concurrent commits recomputes only the missing
 stage. Within a stage the only driver-side loops are plan construction and
 the connected-components fixpoint.
+
+The build's settings are those of the reference builder's flags
+(builder/builder.py:566-585): the path, its start and end values, the
+supporters and the support-pair mode. What the reference hard-codes stays
+constant here: the per-edge publication cap (schemas.PUBLICATION_CAP) and
+the edge ctime (0, so runs are reproducible).
 """
 
 from __future__ import annotations
@@ -59,20 +73,6 @@ from ..sources.readers import fixture_rows, read_fixtures
 from .query import enumerate_programs, tokenize_path
 
 DGX_PATH = ["disease", "gene", "genetic_condition"]
-
-# Scale gates, read from parquet footer row counts (metadata only, no job):
-# the normalization map's for canonical_map's LOCAL_CC_MAX_ALIASES
-# (operators/canonicalize), the documents' for COMMIT_INTERMEDIATES_MIN_DOCS.
-
-# doc_entities, triples_base and metrics are committed stages from this many
-# documents on, eager localCheckpoints below. Measured (interleaved A/B, 4
-# executor JVMs x 2 cores, fresh process per run): at 8M docs commit wins
-# decisively — 179/234s vs 283/322s — because doc-scale localCheckpoint
-# blocks live DESERIALIZED in executor heaps (GC-heavy, single-replica
-# fetches) while the parquet round-trip is compressed, columnar-pruned on
-# re-read, and lands on fast local storage; at <=1M docs the two are
-# statistically equal and local avoids the commit floor.
-COMMIT_INTERMEDIATES_MIN_DOCS = 2_000_000
 
 # name prefix of the pipeline's stage threads
 STAGE_THREAD_PREFIX = "kg-stage-"
@@ -156,11 +156,10 @@ class PipelineConfig:
     # feeds generate_query's start_identifiers); canonicalized via the rep map
     start_values: list[str] | None = None
     # terminal values: run as an end-bound two-sided query
-    # (builder/userquery.py:104-113); CURIEs, canonicalized via the rep map
+    # (builder/userquery.py:104-113), which emits only edges on paths that
+    # complete to one of them; CURIEs, canonicalized via the rep map.
+    # Without them every reachable edge is emitted (emit-per-hop)
     end_values: list[str] | None = None
-    # emit only edges on paths matching the FULL pattern (cypher semantics);
-    # default False preserves emit-per-hop (every reachable edge kept)
-    require_complete: bool = False
     # supporter modules to run (reference -s flag, builder/builder.py:320-362);
     # an empty list builds no support edges
     supporters: list[str] = field(default_factory=lambda: ["omnicorp"])
@@ -169,14 +168,6 @@ class PipelineConfig:
     # path); 'paths' = path-constrained contexts mode
     # (generate_links_from_paths, builder/builder.py:372-407)
     support_pair_mode: str = "all"
-    # per-edge provenance cap (reference LIMIT 10000, builder/chemotext.py:53)
-    publication_cap: int = 10_000
-    # edge ctime (unix epoch) — injected, not now(), so runs are reproducible
-    ctime: int = 0
-    # enhance-stage fatal guard (reference hard-exits on a DOID primary id,
-    # builder/builder.py:314-317); empty by default because this engine's
-    # min-CURIE canonical rep legitimately surfaces alias prefixes
-    forbidden_id_prefixes: tuple[str, ...] = ()
 
     def query_key(self, programs: list[list[str]]) -> str:
         """Stage-name suffix for query-dependent stages, so one workdir
@@ -193,11 +184,7 @@ class PipelineConfig:
                 programs,
                 sorted(self.start_values or []),
                 sorted(self.end_values or []),
-                self.require_complete,
                 sorted(self.supporters),
-                self.publication_cap,
-                self.ctime,
-                sorted(self.forbidden_id_prefixes),
                 self.support_pair_mode,
             ]
         )
@@ -215,27 +202,9 @@ class KGPipeline:
         stage is raised from here, after every stage thread has ended."""
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         t = read_fixtures(spark, cfg.fixture_dir)
-        docs_n = fixture_rows(cfg.fixture_dir, "documents")
-        commit_inter = docs_n >= COMMIT_INTERMEDIATES_MIN_DOCS
         # surfaced for tests/operators-report: resumed_from/iterations of
         # the CC loop when the distributed path ran durably this run
         self.cc_stats: dict = {}
-
-        def materialize(stage: str, compute) -> DataFrame:
-            # doc_entities / triples_base are NOT commit points below ~2M
-            # docs: each is re-derivable from the committed frontier, so a parquet write+read-back cycle only taxed the
-            # fixed floor. localCheckpoint (eager) materializes it once and
-            # truncates lineage to a LogicalRDD — every consumer then
-            # carries a leaf-sized plan instead of re-embedding the join
-            # subtree (plain persist was measured SLOWER fresh-JVM: the
-            # re-analyzed subtrees grow optimization + codegen time past
-            # what the skipped commits saved). Durability is unaffected: on
-            # executor loss past the block's lifetime the job restarts from
-            # the committed frontier. From COMMIT_INTERMEDIATES_MIN_DOCS on
-            # they commit.
-            if commit_inter:
-                return ckpt.run_stage(stage, compute)
-            return compute().localCheckpoint(eager=True)
 
         def mentions() -> DataFrame:
             def compute() -> DataFrame:
@@ -300,11 +269,18 @@ class KGPipeline:
                 t["predicate_map"], rep_map
             ).localCheckpoint(eager=True)
 
+        # doc_entities and triples_base are not commit points: each is
+        # re-derivable from the committed frontier, so a parquet
+        # write+read-back cycle would only tax the fixed floor.
+        # localCheckpoint (eager) materializes it once and truncates lineage
+        # to a LogicalRDD — every consumer then carries a leaf-sized plan
+        # instead of re-embedding the join subtree (plain persist was
+        # measured SLOWER fresh-JVM: the re-analyzed subtrees grow
+        # optimization + codegen time past what the skipped commits saved).
+        # On executor loss past the block's lifetime the job restarts from
+        # the committed frontier.
         def doc_entities(mentions: DataFrame, rep_map: DataFrame) -> DataFrame:
-            return materialize(
-                "doc_entities",
-                lambda: link_doc_entities(mentions, rep_map),
-            )
+            return link_doc_entities(mentions, rep_map).localCheckpoint(eager=True)
 
         # on resume, the uncommitted stages that only feed committed ones
         # are skipped (None)
@@ -319,24 +295,15 @@ class KGPipeline:
                 pm_rep,
                 q.programs,
                 q.end_reps,
-                cfg.require_complete,
                 start_reps=q.start_reps,
             )
 
         def triples_base(doc_entities: DataFrame, edge_starts: DataFrame, q: _Query):
             if done(q, "triples"):
                 return None
-            return materialize(
-                f"triples_base{q.key}",
-                lambda: aggregate_program_triples(
-                    doc_entities,
-                    edge_starts,
-                    q.programs,
-                    publication_cap=cfg.publication_cap,
-                    ctime=cfg.ctime,
-                    start_reps=q.start_reps,
-                ),
-            )
+            return aggregate_program_triples(
+                doc_entities, edge_starts, q.programs, start_reps=q.start_reps
+            ).localCheckpoint(eager=True)
 
         def support(
             edge_starts: DataFrame,
@@ -358,7 +325,6 @@ class KGPipeline:
                     pm_rep,
                     q.programs,
                     q.end_reps,
-                    cfg.require_complete,
                     start_reps=q.start_reps,
                 )
             elif cfg.support_pair_mode != "all":
@@ -369,14 +335,7 @@ class KGPipeline:
             ids = graph_nodes(edge_starts)
             out = None
             for name in cfg.supporters:
-                edges = get_supporter(name).support(
-                    ids,
-                    rep_map,
-                    t,
-                    publication_cap=cfg.publication_cap,
-                    ctime=cfg.ctime,
-                    pairs=pairs,
-                )
+                edges = get_supporter(name).support(ids, rep_map, t, pairs=pairs)
                 out = edges if out is None else out.unionByName(edges)
             # node-pair-bounded, not doc-scale: never a commit point
             return out.localCheckpoint(eager=True)
@@ -413,7 +372,6 @@ class KGPipeline:
                         mesh_labels=t.get("mesh_terms"),
                     ),
                     t["label_lookup"],
-                    forbidden_prefixes=cfg.forbidden_id_prefixes,
                 ),
                 partition_by=["node_type"],
             )
@@ -458,20 +416,14 @@ class KGPipeline:
             "nodes": f_nodes.result(),
         }
 
-        def metrics() -> DataFrame:
-            return (
-                stage_metrics(out["mentions"], "mentions")
-                .unionByName(stage_metrics(out["doc_entities"], "doc_entities"))
-                .unionByName(stage_metrics(out["triples"], "triples", by="pred"))
-                .unionByName(stage_metrics(out["nodes"], "nodes", by="node_type"))
-            )
-
-        # lazy, uncommitted below ~2M docs: a dimension-sized rollup over
-        # tables that are either committed (mentions/triples/nodes) or
-        # materialized — computed only when a consumer collects it
-        key = f_query.result().key
+        # lazy: a dimension-sized rollup over tables that are either
+        # committed (mentions/triples/nodes) or materialized — computed only
+        # when a consumer collects it
         out["metrics"] = (
-            ckpt.run_stage(f"metrics{key}", metrics) if commit_inter else metrics()
+            stage_metrics(out["mentions"], "mentions")
+            .unionByName(stage_metrics(out["doc_entities"], "doc_entities"))
+            .unionByName(stage_metrics(out["triples"], "triples", by="pred"))
+            .unionByName(stage_metrics(out["nodes"], "nodes", by="node_type"))
         )
         return out
 

@@ -19,6 +19,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# per-edge publications cap (the reference's per-pair article LIMIT 10000,
+# builder/chemotext.py:53): program edges, support edges and the golden
+# oracle all read it from here
+PUBLICATION_CAP = 10_000
+
 SPAN = StructType(
     [
         StructField("kind", StringType()),

@@ -72,22 +72,30 @@ def test_simhash_near_pairs(docs):
 def test_simhash_hot_bucket_guard(spark, monkeypatch):
     """SIMHASH_MAX_BUCKET drops degenerate (chunk, ckey) buckets before the
     self-join; pairs that also share a NON-degenerate chunk still surface
-    (hamming ≤ 2 ⇒ ≥ 2 of 4 chunks equal)."""
+    (hamming ≤ 2 ⇒ ≥ 2 of 4 chunks equal), and a pair that shares only
+    degenerate buckets is the recall the cap trades away."""
     from robokop_build_spark.operators import dedup as D
 
-    # 100 rows all sharing chunk-0 key 0x1111 (a degenerate bucket) but with
-    # pairwise-distant upper chunks (unique chunk-1/2/3 keys, hamming >> 2)
+    # 100 rows all sharing chunk-0 key 0x1111 and chunk-1 key 0x2222 (two
+    # degenerate buckets) but with pairwise-distant upper chunks (unique
+    # chunk-2/3 keys, hamming >> 2)
     def to_i64(v):  # wrap to signed 64-bit (Spark long)
         v &= (1 << 64) - 1
         return v - (1 << 64) if v >= (1 << 63) else v
 
     rows = [
-        (f"z{i:03d}", to_i64((0x0101010101010101 * (i + 2)) & ~0xFFFF | 0x1111))
+        (
+            f"z{i:03d}",
+            to_i64((0x0101010101010101 * (i + 2)) & ~0xFFFFFFFF | 0x22221111),
+        )
         for i in range(100)
     ]
     # one true near pair: differs only in chunk 0 (hamming 2 there), so its
     # chunk-1/2/3 buckets (size 2, not hot) must recover it after the drop
     rows += [("a1", 0x00AA00BB00CC0003), ("a2", 0x00AA00BB00CC0000)]
+    # one near pair (hamming 2, one bit in each of chunks 2 and 3) that
+    # shares only the two degenerate buckets: the cap drops it
+    rows += [("h1", 0x00F000F022221111), ("h2", 0x00F100F122221111)]
     sim = spark.createDataFrame(rows, "id string, simhash long")
     production_cap = D.SIMHASH_MAX_BUCKET
 
@@ -101,7 +109,8 @@ def test_simhash_hot_bucket_guard(spark, monkeypatch):
     unguarded = pairs(10**9)
     guarded = pairs(50)
     assert ("a1", "a2") in guarded  # recovered via chunks 1-3
-    assert guarded <= unguarded
+    assert ("h1", "h2") in unguarded and ("h1", "h2") not in guarded
+    assert guarded == unguarded - {("h1", "h2")}
     # the production cap, which no bucket here reaches, is a no-op (exact)
     exact = pairs(production_cap)
     assert exact == unguarded

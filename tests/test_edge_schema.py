@@ -2,8 +2,6 @@
 the per-edge publication cap (builder/chemotext.py:53), and the all-supporters
 pipeline — each exact-matched against the pure-Python golden oracle."""
 
-import pytest
-
 from robokop_build_spark.schemas import TRIPLES
 
 ALL_SUPPORTERS = ["omnicorp", "cdw", "chemotext2", "chemotext"]
@@ -86,27 +84,28 @@ def test_all_supporters_exact_vs_golden(spark, fixture_dir, tmp_path_factory):
         assert s in sources, s
 
 
-def test_publication_cap_applied(spark, fixture_dir, tmp_path_factory):
+def test_publication_cap_applied(spark, fixture_dir, tmp_path_factory, monkeypatch):
+    from robokop_build_spark import schemas
     from robokop_build_spark.datagen.oracle import compute_golden
 
+    # the cap bites on this fixture (some edge has >cap docs uncapped)
+    _, uncapped = compute_golden(fixture_dir)
     cap = 3
-    out = _run(spark, fixture_dir, tmp_path_factory, publication_cap=cap)
+    assert any(len(t["publications"]) > cap for t in uncapped)
+    monkeypatch.setattr(schemas, "PUBLICATION_CAP", cap)
+    out = _run(spark, fixture_dir, tmp_path_factory)
     rows = out["triples"].collect()
     assert rows and all(len(r["publications"]) <= cap for r in rows)
     # capped run still exact vs the capped golden (smallest-cap determinism)
-    _, want_triples = compute_golden(fixture_dir, publication_cap=cap)
+    _, want_triples = compute_golden(fixture_dir)
     got = {_all_fields(r.asDict()) for r in rows}
     want = {_all_fields(t) for t in want_triples}
     assert got == want
-    # and the cap bites on this fixture (some edge has >cap docs uncapped)
-    _, uncapped = compute_golden(fixture_dir)
-    assert any(len(t["publications"]) > cap for t in uncapped)
 
 
 def test_enhance_nodes_labels_and_guard(spark):
     """Enhance stage (builder/builder.py:309-318, 424-445): authority label
-    wins, carried name second, identifier last; forbidden primary-id prefix
-    is fatal."""
+    wins, carried name second, identifier last."""
     from robokop_build_spark.operators.materialize import enhance_nodes
 
     nodes = spark.createDataFrame(
@@ -124,20 +123,3 @@ def test_enhance_nodes_labels_and_guard(spark):
         "MONDO:2": "carried",  # carried name second
         "UNREG:3": "UNREG:3",  # identifier fallback
     }
-    bad = spark.createDataFrame(
-        [("DOID:9", "disease", "x", ["DOID:9"])],
-        ["id", "node_type", "name", "equivalent_identifiers"],
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="ForbiddenPrefixError"):
-        enhance_nodes(bad, lookup, forbidden_prefixes=("DOID",)).collect()
-    # the guard only fires on listed prefixes
-    ok = enhance_nodes(bad, lookup, forbidden_prefixes=("HP",)).collect()
-    assert ok[0]["id"] == "DOID:9"
-
-
-def test_ctime_injected(spark, fixture_dir, tmp_path_factory):
-    out = _run(spark, fixture_dir, tmp_path_factory, ctime=1_700_000_000)
-    cts = {r["ctime"] for r in out["triples"].collect()}
-    assert cts == {1_700_000_000}

@@ -10,7 +10,6 @@ import pytest
 
 from robokop_build_spark.operators import canonicalize as C
 from robokop_build_spark.operators.canonicalize import connected_components
-from robokop_build_spark.operators.iterate import LoopCheckpointer
 from robokop_build_spark.sources.checkpoint import CheckpointManager
 
 
@@ -20,6 +19,23 @@ def distributed_cc(monkeypatch):
     (and canonical_map in the pipeline) runs the distributed loop on these
     small inputs."""
     monkeypatch.setattr(C, "LOCAL_CC_MAX_ALIASES", -1)
+
+
+@pytest.fixture
+def commit_every_round(monkeypatch):
+    monkeypatch.setattr(C, "CC_COMMIT_EVERY", 1)
+
+
+def _killed_after_one_round(monkeypatch, edges, **kwargs):
+    """Runs a durable connected_components that commits every round and
+    dies after the first: one round can never observe the fingerprint
+    fixpoint (it needs two matching rounds) — a preemption one round into
+    contraction."""
+    with monkeypatch.context() as m:
+        m.setattr(C, "CC_COMMIT_EVERY", 1)
+        m.setattr(C, "CC_MAX_ITER", 1)
+        with pytest.raises(RuntimeError, match="no fixpoint"):
+            connected_components(edges, **kwargs)
 
 
 def _rows(df):
@@ -34,64 +50,49 @@ def _two_chains(spark):
     return spark.createDataFrame(edges, ["src", "dst"])
 
 
-def test_loop_checkpointer_rejects_partial_config(spark, tmp_path):
-    mgr = CheckpointManager(spark, str(tmp_path))
-    with pytest.raises(ValueError):
-        LoopCheckpointer(mgr, stage=None, commit_every=2)
-    with pytest.raises(ValueError):
-        LoopCheckpointer(mgr, stage="s", commit_every=0)
-
-
 def test_connected_components_kill_mid_contraction_resumes_and_matches(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch, commit_every_round
 ):
     df = _two_chains(spark)
     want = _rows(connected_components(df))
     mgr = CheckpointManager(spark, str(tmp_path))
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            df, max_iter=1, manager=mgr, stage="cc", commit_every=1
-        )
+    _killed_after_one_round(monkeypatch, df, manager=mgr)
     stats: dict = {}
-    got = connected_components(
-        df, manager=mgr, stage="cc", commit_every=1, stats=stats
-    )
+    got = connected_components(df, manager=mgr, stats=stats)
     assert stats["resumed_from"] == 1
     assert _rows(got) == want
 
 
-def test_durable_loop_retention_keeps_bounded_snapshots(spark, tmp_path):
+def test_durable_loop_retention_keeps_bounded_snapshots(
+    spark, tmp_path, commit_every_round
+):
     mgr = CheckpointManager(spark, str(tmp_path))
     stats: dict = {}
-    connected_components(
-        _two_chains(spark), manager=mgr, stage="cc", commit_every=1, stats=stats
-    )
-    assert stats["iterations"] > 2  # more rounds committed than kept
+    connected_components(_two_chains(spark), manager=mgr, stats=stats)
+    assert stats["iterations"] > C.CC_KEEP_SNAPSHOTS  # more rounds committed than kept
     snap_dirs = [
-        d for d in os.listdir(mgr.path("cc")) if d.startswith("snap-")
+        d for d in os.listdir(mgr.path("rep_map_cc")) if d.startswith("snap-")
     ]
-    # expire_snapshots(keep_last=2) runs after every commit: at most the
-    # two newest rounds' data survives however many rounds the loop took
-    assert len(snap_dirs) <= 2
+    # expire_snapshots runs after every commit: at most the
+    # CC_KEEP_SNAPSHOTS newest rounds' data survives however many rounds
+    # the loop took
+    assert len(snap_dirs) <= C.CC_KEEP_SNAPSHOTS
 
 
 def test_connected_components_refuses_resume_under_different_input(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """A stage name does not encode the input identity (round-6 advice):
     the committed loop_params (op, input fingerprint) must be validated on
     resume, raising instead of silently contracting the wrong state."""
     mgr = CheckpointManager(spark, str(tmp_path))
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            _two_chains(spark), max_iter=1, manager=mgr, stage="cc", commit_every=1
-        )
+    _killed_after_one_round(monkeypatch, _two_chains(spark), manager=mgr)
     other = spark.createDataFrame(
         [("q1", "q2"), ("q2", "q3"), ("q3", "q1"), ("q3", "q4"), ("q4", "q1")],
         ["src", "dst"],
     )
     with pytest.raises(ValueError, match="loop params"):
-        connected_components(other, manager=mgr, stage="cc", commit_every=1)
+        connected_components(other, manager=mgr)
 
 
 def _triple_keys(out):
@@ -105,7 +106,7 @@ def _triple_keys(out):
 
 
 def test_pipeline_resumes_mid_cc_with_identical_output(
-    spark, fixture_dir, tmp_path
+    spark, fixture_dir, tmp_path, monkeypatch
 ):
     """Round-6 verdict #7: the KG pipeline's rep_map CC loop is durably
     resumable at the PIPELINE level, not just the operator level. Simulate
@@ -126,14 +127,9 @@ def test_pipeline_resumes_mid_cc_with_identical_output(
     w2 = str(tmp_path / "w2")
     mgr = CheckpointManager(spark, w2)
     norm = read_fixtures(spark, fixture_dir)["normalization"]
-    # max_iter=1 can never observe the fingerprint fixpoint (needs two
-    # matching rounds), so this always dies after committing round 0 —
-    # exactly a preemption one round into contraction
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(
-            norm, src="alias", dst="canonical", max_iter=1, manager=mgr,
-            stage="rep_map_cc", commit_every=1,
-        )
+    _killed_after_one_round(
+        monkeypatch, norm, src="alias", dst="canonical", manager=mgr
+    )
     assert mgr.current_meta("rep_map_cc")["iteration"] == 0
 
     pipe = P.KGPipeline(spark, P.PipelineConfig(fixture_dir, w2))

@@ -36,8 +36,8 @@ def _node_key(n):
 
 
 def _default_key(fixture_dir):
-    """query_key of the default DGX build: the suffix of its triples,
-    triples_base, nodes and metrics stages."""
+    """query_key of the default DGX build: the suffix of its committed
+    triples and nodes stages."""
     from robokop_build_spark.plans.pipeline import DGX_PATH, PipelineConfig
 
     return PipelineConfig(fixture_dir, "").query_key([DGX_PATH])
@@ -141,22 +141,34 @@ def test_resume_skips_completed_stages_and_is_identical(
 
 
 def test_stage_failure_raised_from_run_and_no_stage_thread_survives(
-    spark, fixture_dir, golden, tmp_path
+    spark, fixture_dir, golden, tmp_path, monkeypatch
 ):
-    """A fatal guard in the nodes branch fails run_pipeline with that
+    """A failing job in the nodes branch fails run_pipeline with that
     error; the concurrent triples commit completes on its own, and every
     stage thread has ended when run_pipeline returns."""
     import os
     import threading
 
-    from robokop_build_spark.plans.pipeline import STAGE_THREAD_PREFIX, run_pipeline
+    from pyspark.sql import functions as F
 
-    prefix = min(n["id"] for n in golden["nodes"]).split(":")[0]
-    with pytest.raises(Exception, match="ForbiddenPrefixError"):
-        run_pipeline(
-            spark, fixture_dir, str(tmp_path), forbidden_id_prefixes=(prefix,)
+    from robokop_build_spark.plans import pipeline as P
+
+    enhance_nodes = P.enhance_nodes
+    first = min(n["id"] for n in golden["nodes"])
+
+    def failing_enhance_nodes(nodes, label_lookup):
+        out = enhance_nodes(nodes, label_lookup)
+        bad = F.raise_error(F.concat(F.lit("ForbiddenPrefixError: primary id "), "id"))
+        return out.withColumn(
+            "id", F.when(F.col("id") == first, bad).otherwise(F.col("id"))
         )
-    assert not [t for t in threading.enumerate() if t.name.startswith(STAGE_THREAD_PREFIX)]
+
+    monkeypatch.setattr(P, "enhance_nodes", failing_enhance_nodes)
+    with pytest.raises(Exception, match="ForbiddenPrefixError"):
+        P.run_pipeline(spark, fixture_dir, str(tmp_path))
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith(P.STAGE_THREAD_PREFIX)
+    ]
     committed = {
         d.split("@")[0]
         for d in os.listdir(tmp_path)
@@ -185,7 +197,7 @@ def test_stage_jobs_carry_the_callers_job_group(spark, fixture_dir, tmp_path):
 
 
 def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
-    spark, fixture_dir, pipeline_out
+    spark, fixture_dir, pipeline_out, monkeypatch
 ):
     """The salted publication merge bounds each group by the edge's
     in-degree in edge_starts (start reps per edge, spread over the salts),
@@ -195,6 +207,7 @@ def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
     edge_starts."""
     from pyspark.sql import functions as F
 
+    from robokop_build_spark import schemas
     from robokop_build_spark.operators.expand import (
         canonicalize_predicate_map,
         program_edge_starts,
@@ -205,7 +218,8 @@ def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
 
     out, _ = pipeline_out
     de, programs = out["doc_entities"], [DGX_PATH]
-    start_pubs = start_publications(de, programs, publication_cap=2)
+    monkeypatch.setattr(schemas, "PUBLICATION_CAP", 2)
+    start_pubs = start_publications(de, programs)
     reps = de.filter(F.col("node_type") == DGX_PATH[0]).select("rep").distinct()
     assert start_pubs.count() == reps.count() > 0
     assert start_pubs.groupBy("rep").count().filter("count > 1").count() == 0
@@ -221,35 +235,12 @@ def test_start_pubs_one_row_per_rep_so_gate_bounds_merge(
     assert indeg and buffer == indeg
 
 
-def test_commit_intermediates_branch_matches_golden(
-    spark, fixture_dir, golden, tmp_path, monkeypatch
-):
-    """Past the docs threshold doc_entities, triples_base and metrics are
-    committed stages instead of localCheckpoints; the build's output is
-    unchanged."""
-    from robokop_build_spark.plans import pipeline as P
-    from robokop_build_spark.sources.checkpoint import CheckpointManager
-
-    monkeypatch.setattr(P, "COMMIT_INTERMEDIATES_MIN_DOCS", 0)
-    workdir = str(tmp_path / "commit")
-    out = P.run_pipeline(spark, fixture_dir, workdir)
-    got = {_full_key(r.asDict()) for r in out["triples"].collect()}
-    assert got == {_full_key(t) for t in golden["triples"]}
-    assert {_node_key(r) for r in out["nodes"].collect()} == {
-        _node_key(n) for n in golden["nodes"]
-    }
-    ckpt = CheckpointManager(spark, workdir)
-    key = _default_key(fixture_dir)
-    assert all(
-        ckpt.is_done(s) for s in ("doc_entities", "triples_base" + key, "metrics" + key)
-    )
-
-
-def test_salted_publication_merge_on_a_hub_edge(spark):
+def test_salted_publication_merge_on_a_hub_edge(spark, monkeypatch):
     """A hub edge reached from 70 start reps, more than the NSALT = 16
     salts: the two-phase publication merge salted by start rep must still
     give every edge the cap smallest of the union of its start reps'
     documents."""
+    from robokop_build_spark import schemas
     from robokop_build_spark.operators.expand import (
         aggregate_program_triples,
         program_edge_starts,
@@ -257,6 +248,7 @@ def test_salted_publication_merge_on_a_hub_edge(spark):
     from robokop_build_spark.plans.pipeline import DGX_PATH
 
     n_starts, cap = 70, 3
+    monkeypatch.setattr(schemas, "PUBLICATION_CAP", cap)
     rows = [
         (f"doc{(7 * i + 3 * j) % 101:03d}", f"D:{i:02d}", "disease", f"O:{i}")
         for i in range(n_starts)
@@ -275,7 +267,7 @@ def test_salted_publication_merge_on_a_hub_edge(spark):
         "subj_rep string, obj_rep string, orig_pred_id string, orig_pred_label string",
     )
     es = program_edge_starts(de, pm_rep, [DGX_PATH])
-    triples = aggregate_program_triples(de, es, [DGX_PATH], publication_cap=cap)
+    triples = aggregate_program_triples(de, es, [DGX_PATH])
     plan = triples._jdf.queryExecution().executedPlan().toString()
     # the merge's first phase aggregates per (edge, salt), the second per
     # edge

@@ -11,7 +11,10 @@ word match counts there.
 
 The same holds one level down: a parameter with a default that selects a
 branch of its function (tested in an if, while or conditional expression)
-must be passed by some call outside the test suites."""
+must be passed by some call outside the test suites, and so must every
+field with a default of a dataclass (a constructor parameter: by position
+in field order, or by name). A keyword passed to a function that forwards
+its **kwargs to another function counts as passed to that one too."""
 
 import ast
 import os
@@ -166,22 +169,50 @@ def _call_name(func):
     return None
 
 
-def _params_only_tests_pass():
-    """(module, function, parameter) of every package function parameter
-    that has a default, that the function's body tests in an if, while or
-    conditional expression, and that no call outside the test suites
-    passes, by keyword or by position. Calls match by function name, as
+def _calls(node, fn=None):
+    """(call, the innermost function definition around it or None) for
+    every call under node."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        fn = node
+    if isinstance(node, ast.Call):
+        yield node, fn
+    for child in ast.iter_child_nodes(node):
+        yield from _calls(child, fn)
+
+
+def _annotation_nodes(tree):
+    """ids of the nodes inside type annotations, where a name is not a
+    value."""
+    out = set()
+    for node in ast.walk(tree):
+        anns = []
+        if isinstance(node, ast.arg):
+            anns = [node.annotation]
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            anns = [node.returns]
+        elif isinstance(node, ast.AnnAssign):
+            anns = [node.annotation]
+        out.update(id(n) for a in anns if a is not None for n in ast.walk(a))
+    return out
+
+
+def _passed_args():
+    """What the calls outside the test suites pass, by callee name: (most
+    positional args any call passes, keyword names, names some call passes
+    a **mapping that cannot be resolved, names also used as values).
+
+    A call f(..., **kw) inside g, where kw is g's own **kwargs, forwards:
+    the keywords passed to g count for f. Calls match by function name, as
     above; a function whose name is also used as a value (a dict of
-    callables, a callback) has call sites that cannot be resolved and is
-    left out."""
-    n_pos: dict[str, float] = {}  # most positional args any call passes
+    callables, a callback) has call sites that cannot be resolved."""
+    n_pos: dict[str, float] = {}
     kws: dict[str, set] = {}
+    opaque = set()
+    forwards = set()  # (g, f): g forwards its **kwargs to f
     values = set()
     for tree in _caller_trees():
         funcs = set()
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
+        for node, fn in _calls(tree):
             funcs.add(id(node.func))
             name = _call_name(node.func)
             if name is None:
@@ -189,19 +220,68 @@ def _params_only_tests_pass():
             pos = len(node.args)
             if any(isinstance(a, ast.Starred) for a in node.args):
                 pos = float("inf")
-            if any(k.arg is None for k in node.keywords):
-                pos = float("inf")  # **kwargs: any parameter may be in it
             n_pos[name] = max(n_pos.get(name, 0), pos)
-            kws.setdefault(name, set()).update(k.arg for k in node.keywords)
+            kws.setdefault(name, set())
+            for k in node.keywords:
+                if k.arg is not None:
+                    kws[name].add(k.arg)
+                elif (
+                    fn is not None
+                    and fn.args.kwarg is not None
+                    and isinstance(k.value, ast.Name)
+                    and k.value.id == fn.args.kwarg.arg
+                ):
+                    forwards.add((fn.name, name))
+                else:
+                    opaque.add(name)  # **mapping: any parameter may be in it
+        annotations = _annotation_nodes(tree)
         for node in ast.walk(tree):
-            if id(node) not in funcs and isinstance(node, (ast.Name, ast.Attribute)):
-                if isinstance(node.ctx, ast.Load):
+            if id(node) not in funcs and id(node) not in annotations:
+                if isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
+                    node.ctx, ast.Load
+                ):
                     values.add(_call_name(node))
+    changed = True
+    while changed:
+        changed = False
+        for g, f in forwards:
+            more = kws.get(g, set()) - kws.setdefault(f, set())
+            if more or (g in opaque and f not in opaque):
+                kws[f] |= more
+                if g in opaque:
+                    opaque.add(f)
+                changed = True
+    return n_pos, kws, opaque, values
+
+
+def _is_dataclass(cls):
+    return any(
+        _call_name(d.func if isinstance(d, ast.Call) else d) == "dataclass"
+        for d in cls.decorator_list
+    )
+
+
+def _params_only_tests_pass():
+    """(module, function, parameter) of every package function parameter
+    that has a default, that the function's body tests in an if, while or
+    conditional expression, and that no call outside the test suites
+    passes, by keyword or by position; and (module, class, field) of every
+    dataclass field with a default that no such call passes."""
+    n_pos, kws, opaque, values = _passed_args()
+
+    def passed(name, param, index):
+        """index: the parameter's position, None for keyword-only."""
+        return (
+            name in opaque
+            or param in kws.get(name, ())
+            or (index is not None and n_pos.get(name, 0) > index)
+        )
 
     pkg = os.path.join(ROOT, PACKAGE)
     found = []
     for path in _py_files(pkg):
         tree = _parse(path)
+        mod = os.path.relpath(path, pkg)
         methods = {}  # method → the class it is defined in
         for c in ast.walk(tree):
             if isinstance(c, ast.ClassDef):
@@ -210,6 +290,16 @@ def _params_only_tests_pass():
                         _call_name(d) for d in f.decorator_list
                     }:
                         methods[id(f)] = c.name
+                if _is_dataclass(c) and c.name not in values:
+                    fields = [
+                        f
+                        for f in c.body
+                        if isinstance(f, ast.AnnAssign)
+                        and isinstance(f.target, ast.Name)
+                    ]
+                    for i, f in enumerate(fields):
+                        if f.value is not None and not passed(c.name, f.target.id, i):
+                            found.append((mod, c.name, f.target.id))
         for fn in ast.walk(tree):
             if not isinstance(fn, ast.FunctionDef):
                 continue
@@ -220,8 +310,11 @@ def _params_only_tests_pass():
             a = fn.args
             positional = a.posonlyargs + a.args
             first_default = len(positional) - len(a.defaults)
+            shift = 1 if id(fn) in methods else 0  # self/cls is never passed
             defaulted = {
-                p.arg: i for i, p in enumerate(positional) if i >= first_default
+                p.arg: i - shift
+                for i, p in enumerate(positional)
+                if i >= first_default
             }
             defaulted.update(
                 (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
@@ -233,13 +326,9 @@ def _params_only_tests_pass():
                 for n in ast.walk(node.test)
                 if isinstance(n, ast.Name)
             }
-            shift = 1 if id(fn) in methods else 0  # self/cls is never passed
             for p, i in defaulted.items():
-                if p not in tested or p in kws.get(name, ()):
-                    continue
-                if i is not None and n_pos.get(name, 0) > i - shift:
-                    continue
-                found.append((os.path.relpath(path, pkg), name, p))
+                if p in tested and not passed(name, p, i):
+                    found.append((mod, name, p))
     return sorted(found)
 
 
@@ -247,9 +336,9 @@ def test_no_package_parameter_only_tests_pass():
     orphans = _params_only_tests_pass()
     unexplained = [o for o in orphans if o not in ALLOWED_PARAMS]
     assert not unexplained, (
-        "a parameter that picks a branch but only tests pass it (delete it "
-        f"with its branch, pass it in production, or allowlist it with a "
-        f"reason): {unexplained}"
+        "a parameter that picks a branch, or a dataclass field, that only "
+        "tests pass (delete it with its branch, pass it in production, or "
+        f"allowlist it with a reason): {unexplained}"
     )
     stale = sorted(set(ALLOWED_PARAMS) - set(orphans))
     assert not stale, f"allowlisted but passed outside tests: {stale}"

@@ -5,8 +5,9 @@ the module-level import — every streaming/bucketed query died on NameError
 and no test exercised the helper. These tests (a) call the helper directly
 so a missing import can never ship silently again, and (b) pin the reaping
 contract: dead-pid siblings older than the race-guard window are reaped,
-fresh dirs are never touched (pid reuse / startup race), and stale dirs
-are reaped regardless of what the pid probe says.
+fresh dirs are never touched (pid reuse / startup race), stale dirs
+are reaped regardless of what the pid probe says, and so are day-old
+dirs of the unkeyed per-version layout.
 """
 
 from __future__ import annotations
@@ -97,6 +98,21 @@ def test_non_pid_dirs_never_touched(tmp_path):
     other = _mkdir_with_age(base, "unrelated_dir", age_s=10 * 86400)
     _fresh_work_dir(base, "0.01")
     assert os.path.exists(other)
+
+
+def test_unkeyed_versioned_dirs_reaped_once_a_day_old(tmp_path):
+    # the per-version layout of older builds has no pid to probe: it goes
+    # at the same age as keyed_cache_dir's stale siblings, at any scale
+    base = str(tmp_path / "scratch")
+    stale = [
+        _mkdir_with_age(base, name, age_s=2 * 86400)
+        for name in ("sf0.01_v7_o8", "sf0.1_v12_o3")
+    ]
+    fresh = _mkdir_with_age(base, "sf0.01_v9_o9", age_s=2 * 3600)
+    unrelated = _mkdir_with_age(base, "sf0.01_v7_o8_notes", age_s=2 * 86400)
+    _fresh_work_dir(base, "0.01")
+    assert [p for p in stale if os.path.exists(p)] == []
+    assert os.path.exists(fresh) and os.path.exists(unrelated)
 
 
 def _committed(workdir: str) -> list[str]:
