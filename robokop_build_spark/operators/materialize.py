@@ -124,10 +124,7 @@ def build_nodes(
     )
 
 
-def enhance_nodes(
-    nodes: DataFrame,
-    label_lookup: DataFrame | None = None,
-) -> DataFrame:
+def enhance_nodes(nodes: DataFrame, label_lookup: DataFrame) -> DataFrame:
     """Enhance stage (builder/builder.py:309-318 + prepare_node_for_output
     :424-445): authority labels win over carried names, and the identifier
     is the last-resort label. The reference also hard-exits on a DOID
@@ -139,16 +136,11 @@ def enhance_nodes(
     component model here: equivalent_identifiers already carries every
     component member including MESH aliases — no extra join needed.
     """
-    out = nodes
-    if label_lookup is not None:
-        auth = label_lookup.select(
-            F.col("curie").alias("id"), F.col("label").alias("__auth_label")
-        )
-        # authority labels are entity-scale at web size: no hint
-        out = out.join(auth, "id", "left")
-    else:
-        out = out.withColumn("__auth_label", F.lit(None).cast("string"))
-    named = out.withColumn(
+    auth = label_lookup.select(
+        F.col("curie").alias("id"), F.col("label").alias("__auth_label")
+    )
+    # authority labels are entity-scale at web size: no hint
+    named = nodes.join(auth, "id", "left").withColumn(
         "name",
         F.coalesce(
             F.nullif(F.col("__auth_label"), F.lit("")),
